@@ -14,7 +14,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import evict_superseded_memo, f6, load_table
+from ..session import f6, load_table, shared_frame
 
 TOKENS_SQL = r"""
     SELECT doc_id, lang, unnest(string_split_regex(lower(text), '\s+')) AS word
@@ -5584,11 +5584,6 @@ def t_edit_distance_dedup(spark, sf_dir):
     )
 
 
-# t_textrank_keywords' cached co-occurrence edge frame, memoized per
-# (app_id, sf_dir) so repeated invocations in one session reuse ONE
-# cached frame (round-14 advice pattern).
-_TR_EDGES_SHARED: dict = {}
-
 _TR_ITER_SQL = """
     s{next} AS (
         SELECT e.dst AS word,
@@ -5721,23 +5716,17 @@ def t_textrank_keywords(spark, sf_dir):
         .groupBy("src", "dst")
         .agg(F.count("*").cast("long").alias("w"))
     )
-    # memoized per (app_id, sf_dir) like modern._SCRIPT_HIST_SHARED:
-    # the cached edge frame feeds six references (wdeg + 3 iterations'
-    # joins); re-invocations must reuse ONE cached frame instead of
-    # accumulating orphans (the round-14 q_sql_scripting_hist advice
-    # applied at birth).
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    evict_superseded_memo(_TR_EDGES_SHARED, memo_key[0], sf_dir)
-    edges = _TR_EDGES_SHARED.get(memo_key)
-    if edges is None:
-        edges = pairs.select("src", "dst", "w").unionByName(
+    # shared: the cached edge frame feeds six references (wdeg + 3
+    # iterations' joins), and re-invocations must reuse ONE cached frame
+    # instead of accumulating orphans (round-14 advice).
+    edges = shared_frame(
+        spark, sf_dir, "textrank_edges",
+        lambda: pairs.select("src", "dst", "w").unionByName(
             pairs.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
             )
-        ).cache()
-        _TR_EDGES_SHARED[memo_key] = edges
-    elif not edges.storageLevel.useMemory:
-        edges.cache()
+        ),
+    )
     wdeg = edges.groupBy(F.col("src").alias("word")).agg(
         F.sum("w").cast("long").alias("wd")
     )

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import evict_superseded_memo, f6, load_table
+from ..session import f6, load_table, shared_frame
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -88,40 +88,21 @@ def _cos_pairs(spark, sf_dir, query_pred, cand_pred=None):
     return pairs.select("query_id", "cand_id", "label", f6(cos).alias("cos"))
 
 
-# Shared-intermediate cache for the retrieval stack (round-10 verdict
-# item 7): v_nsw_greedy, v_hnsw_layered, v_rerank_mmr and
-# v_matryoshka_topk each need the identical brute-force query→candidate
-# cosine frame for the 3 fixed query ids (the honesty-rank ground truth,
-# ~2 s each to rebuild at sf0.1). Memoize ONE cached DataFrame per
-# (application, sf_dir) — same pattern as recommender.core._cached —
-# so the suite materializes it once. Semantics untouched: every consumer
-# selects from the same (query_id, cand_id, cos) rows it built before.
-_QCOS_SHARED: dict[tuple[str, str], DataFrame] = {}
-
-
+# Shared intermediate for the retrieval stack (round-10 verdict item 7):
+# v_nsw_greedy, v_hnsw_layered, v_rerank_mmr and v_matryoshka_topk each
+# need the identical brute-force query→candidate cosine frame for the 3
+# fixed query ids (the honesty-rank ground truth, ~2 s each to rebuild at
+# sf0.1), so the suite materializes it once. Re-registered after a
+# clearCache (the default): the greedy-hop loops consume it ~10x per key,
+# and recomputing the pair join per hop costs far more than one cache
+# write.
 def _qcos_012(spark, sf_dir) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    # Evict other-app entries (stopped contexts, round-11 advice) AND
-    # same-app other-sf_dir frames (ladder runs, round-15 verdict item 2)
-    # — bounds the dict to one live frame.
-    evict_superseded_memo(_QCOS_SHARED, app_id, sf_dir)
-    key = (app_id, sf_dir)
-    df = _QCOS_SHARED.get(key)
-    if df is None:
-        df = (
-            _cos_pairs(spark, sf_dir, F.col("vec_id").isin(0, 1, 2))
-            .select("query_id", "cand_id", "cos")
-            .cache()
-        )
-        _QCOS_SHARED[key] = df
-    elif not df.storageLevel.useMemory:
-        # bench.py clearCache()s between headline keys (storage-leak
-        # hygiene), which UNREGISTERS the plan from the CacheManager —
-        # measured: a cleared DataFrame never re-caches on its own, so
-        # the greedy-hop loops would recompute the pair join per hop.
-        # Re-register so each consumer pays materialization at most once.
-        df.cache()
-    return df
+    return shared_frame(
+        spark, sf_dir, "qcos_012",
+        lambda: _cos_pairs(
+            spark, sf_dir, F.col("vec_id").isin(0, 1, 2)
+        ).select("query_id", "cand_id", "cos"),
+    )
 
 
 @register(
@@ -3546,28 +3527,15 @@ def _band_knn_adj(spark, sf_dir, node_pred, degree) -> DataFrame:
     )
 
 
-# Shared-intermediate cache for the degree-8 base graph (same policy as
-# _QCOS_SHARED): v_nsw_greedy, v_hnsw_layered's base layer and
-# v_graph_reachability build the IDENTICAL adjacency (~1.5 s at sf0.1);
-# the cache write is <= 8N rows of two BIGINTs, so rebuild_cost x
-# consumers >> cache-write — the round-12 re-register criterion holds,
-# unlike recommender.core._cached where it was reverted.
-_ADJ8_SHARED: dict[tuple[str, str], DataFrame] = {}
-
-
+# The degree-8 base graph is shared by v_nsw_greedy, v_hnsw_layered's
+# base layer and v_graph_reachability (~1.5 s to rebuild at sf0.1). It
+# keeps the default recache=True: the cache write is <= 8N rows of two
+# BIGINTs, so rebuild cost x consumers far exceeds it — unlike
+# recommender.core._cached, where re-registration was reverted.
 def _nsw_adj8(spark, sf_dir) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    evict_superseded_memo(_ADJ8_SHARED, app_id, sf_dir)
-    key = (app_id, sf_dir)
-    df = _ADJ8_SHARED.get(key)
-    if df is None:
-        df = _band_knn_adj(spark, sf_dir, None, 8).cache()
-        _ADJ8_SHARED[key] = df
-    elif not df.storageLevel.useMemory:
-        # bench.py clearCache()s between headline keys; re-register so
-        # each consumer pays materialization at most once per session.
-        df.cache()
-    return df
+    return shared_frame(
+        spark, sf_dir, "nsw_adj8", lambda: _band_knn_adj(spark, sf_dir, None, 8)
+    )
 
 
 @register(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import load_table, money2
+from ..session import load_table, money2, views
 
 _PIVOT_STATUSES = ["F", "O", "P"]
 
@@ -65,11 +65,6 @@ def a_unpivot(spark, sf_dir):
     )
 
 
-def _views(spark, sf_dir, *names):
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(f"v_{n}")
-
-
 @register(
     "q_scalar_subquery",
     """
@@ -78,7 +73,7 @@ def _views(spark, sf_dir, *names):
     """,
 )
 def q_scalar_subquery(spark, sf_dir):
-    _views(spark, sf_dir, "orders")
+    views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderkey, round(o_totalprice, 2) AS total
@@ -100,7 +95,7 @@ def q_scalar_subquery(spark, sf_dir):
     """,
 )
 def q_exists_correlated(spark, sf_dir):
-    _views(spark, sf_dir, "customer", "orders")
+    views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, c_name FROM v_customer c
@@ -122,7 +117,7 @@ def q_exists_correlated(spark, sf_dir):
     """,
 )
 def q_in_subquery(spark, sf_dir):
-    _views(spark, sf_dir, "part", "lineitem")
+    views(spark, sf_dir, "part", "lineitem")
     return spark.sql(
         """
         SELECT p_partkey, p_name FROM v_part

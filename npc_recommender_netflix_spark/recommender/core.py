@@ -23,44 +23,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import (evict_superseded_memo, f6, load_table, money2,
-                       tables, widen_narrow_scan)
+from ..session import (f6, load_table, money2, shared_frame, tables,
+                       widen_narrow_scan)
 
-# Shared-intermediate cache. Without it the ratings-matrix subplan (an
+# Shared intermediates. Without the memo the ratings-matrix subplan (an
 # orders⋈lineitem join + groupBy) is replicated up to 10x inside one
 # prediction plan (measured: 10 lineitem scans, 0 ReusedExchange at sf0.01).
-# Spark's CacheManager matches by analyzed plan, but caching explicitly and
-# memoizing the DataFrame guarantees one materialization per (sf_dir, key).
-# This is exactly the "persist the matrix between jobs" decision the MR
-# reference makes by writing HDFS files — here it's an in-memory columnar
-# cache (spill-safe, partition-local) instead of a disk round-trip.
-_shared: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _cached(spark, sf_dir: str, name: str, build) -> DataFrame:
-    # keyed by applicationId too: never hand back a DataFrame bound to a
-    # different (possibly stopped) SparkSession in the same process.
-    # Other-app entries drop (dead contexts); same-app other-sf_dir
-    # entries unpersist (ladder runs, round-15 verdict item 2).
-    app_id = spark.sparkContext.applicationId
-    evict_superseded_memo(_shared, app_id, sf_dir)
-    key = (app_id, sf_dir, name)
-    df = _shared.get(key)
-    if df is None:
-        df = build().cache()
-        _shared[key] = df
-    # Deliberately NOT re-registering after an external
-    # spark.catalog.clearCache() (round-12 bisect): these frames are
-    # cheap to rebuild (~0.3 s) and feed 1-3 consumers per key, so the
-    # round-11 `df.cache()` re-registration made every post-clearCache
-    # key pay a full cache-write materialization it never amortized —
-    # measured +0.6 s on r_predict and +0.4 s on r_adamic_adar at sf0.1,
-    # the two "sub-2 s movers" the round-11 verdict flagged. The cleared
-    # frame recomputes lazily per consumer instead, which is strictly
-    # cheaper at this fan-out. Contrast vectors._qcos_012, which KEEPS
-    # re-registration: its frame costs ~2 s and the greedy hop loops
-    # consume it ~10x per key.
-    return df
+    # recache=False (round-12 bisect): these frames are cheap to rebuild
+    # (~0.3 s) and feed 1-3 consumers per key, so re-registering after an
+    # external clearCache() made every post-clearCache key pay a cache
+    # write it never amortized — measured +0.6 s on r_predict and +0.4 s
+    # on r_adamic_adar at sf0.1. A cleared frame recomputes lazily per
+    # consumer instead, which is cheaper at this fan-out.
+    return shared_frame(spark, sf_dir, name, build, recache=False)
 
 
 def ratings_matrix(spark, sf_dir, max_item: int | None = None) -> DataFrame:

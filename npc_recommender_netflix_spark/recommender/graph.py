@@ -20,7 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import evict_superseded_memo, f6, load_table
+from ..session import f6, load_table, shared_frame
 from .core import ratings_matrix
 
 # co-purchase edges: items (l_partkey % 500) sharing an order, symmetric,
@@ -47,27 +47,16 @@ _PR_ITER_SQL = """
 
 
 
-# Shared-intermediate cache for the co-purchase graph family: 8 keys
-# (r_pagerank, r_ppr, r_kcore_peel, r_node_features, r_shortest_path,
-# r_degree_assortativity, r_attack_tolerance, r_label_propagation) build
-# the IDENTICAL symmetric (l_partkey % 500) edge list from a lineitem
-# self-join and each used to cache a private copy. Memoize ONE cached
-# DataFrame per (application, sf_dir) — the vectors._qcos_012 pattern —
-# so a full-registry sweep materializes the join once for all consumers,
-# and the "same construction, no divergence possible" argument holds
-# across the whole family. Re-register after an external clearCache: the
-# rebuild (lineitem self-join + two distincts) x 8 consumers clears the
-# _qcos_012 re-register criterion (rebuild_cost x consumers >> one
-# cache write).
-_EDGES_SHARED: dict[tuple[str, str], "DataFrame"] = {}
-
-
+# The co-purchase graph family — 8 keys (r_pagerank, r_ppr,
+# r_kcore_peel, r_node_features, r_shortest_path,
+# r_degree_assortativity, r_attack_tolerance, r_label_propagation) —
+# reads ONE shared edge list, so a full-registry sweep materializes the
+# lineitem self-join once for all consumers and no two keys can diverge
+# in construction. Re-registered after a clearCache (the default): the
+# rebuild (lineitem self-join + two distincts) x 8 consumers is far more
+# than one cache write.
 def _copurchase_edges(spark, sf_dir):
-    app_id = spark.sparkContext.applicationId
-    evict_superseded_memo(_EDGES_SHARED, app_id, sf_dir)
-    key = (app_id, sf_dir)
-    df = _EDGES_SHARED.get(key)
-    if df is None:
+    def build():
         li = load_table(spark, sf_dir, "lineitem")
         # r17 optimization (guide §2.4): one collect_set per order + an
         # in-plan double explode replaces the old distinct(orderkey, item)
@@ -79,17 +68,14 @@ def _copurchase_edges(spark, sf_dir):
         sets = li.groupBy("l_orderkey").agg(
             F.collect_set(F.col("l_partkey") % 500).alias("items")
         )
-        df = (
+        return (
             sets.select(F.explode("items").alias("src"), "items")
             .select("src", F.explode("items").alias("dst"))
             .where(F.col("src") != F.col("dst"))
             .distinct()
-            .cache()
         )
-        _EDGES_SHARED[key] = df
-    elif not df.storageLevel.useMemory:
-        df.cache()
-    return df
+
+    return shared_frame(spark, sf_dir, "copurchase_edges", build)
 
 
 @register(
@@ -891,30 +877,34 @@ _LPA_VOTE_SQL = """
 
 
 
-# Shared-intermediate cache #2: the seeded 2-round LPA labels over the
-# memoized co-purchase edges. r_label_propagation (the operator) and
-# r_modularity (its quality audit) build the IDENTICAL (node, lab, rnd)
-# frame; memoizing it per (application, sf_dir) — and caching each
-# round's lab INSIDE the loop — removes the nested-lineage recompute
-# (round 2 references round 1 three times; the audit referenced the
-# final frame five more times: measured ~21 s -> ~5 s for r_modularity).
-_LPA_SHARED: dict[tuple[str, str], "DataFrame"] = {}
+# LPA label alphabet: seeds are node % _LPA_LABELS, and the in-row vote
+# argmax below counts exactly these labels. Both derive from this one
+# constant so a seed change cannot silently drop votes.
+_LPA_LABELS = 5
+_LPA_COUNTS = ",".join(f"c{k}" for k in range(_LPA_LABELS))
 
 
+# The seeded 2-round LPA labels over the shared co-purchase edges.
+# r_label_propagation (the operator) and r_modularity (its quality audit)
+# read the IDENTICAL (node, lab, rnd) frame; sharing it — and caching
+# each round's lab INSIDE the loop — removes the nested-lineage
+# recompute (round 2 references round 1 three times; the audit
+# referenced the final frame five more times: measured ~21 s -> ~5 s for
+# r_modularity).
 def _lpa_labels(spark, sf_dir):
-    app_id = spark.sparkContext.applicationId
-    evict_superseded_memo(_LPA_SHARED, app_id, sf_dir)
-    memo_key = (app_id, sf_dir)
-    memo = _LPA_SHARED.get(memo_key)
-    if memo is not None:
-        if not memo.storageLevel.useMemory:
-            memo.cache()
-        return memo
+    return shared_frame(
+        spark, sf_dir, "lpa_labels", lambda: _lpa_build(spark, sf_dir)
+    )
+
+
+def _lpa_build(spark, sf_dir):
     edges = _copurchase_edges(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     lab = nodes.select(
         "node",
-        F.when(F.col("node") % 7 == 0, F.col("node") % 5).alias("lab"),
+        F.when(F.col("node") % 7 == 0, F.col("node") % _LPA_LABELS).alias(
+            "lab"
+        ),
         F.when(F.col("node") % 7 == 0, F.lit(0)).alias("rnd"),
     )
     round1 = None
@@ -926,11 +916,11 @@ def _lpa_labels(spark, sf_dir):
         unlabeled = lab.where(F.col("lab").isNull()).select(
             F.col("node").alias("u_node")
         )
-        # In-row argmax over the bounded 5-label alphabet (r18, guide
-        # §2.4): labels are node % 5 by construction, so the per-node
-        # vote argmax is 5 conditional counts in ONE aggregation and an
-        # array_position(max) projection — this drops the old
-        # (v_node, v_lab) groupBy + row_number window, i.e. one
+        # In-row argmax over the bounded label alphabet (r18, guide
+        # §2.4): labels are node % _LPA_LABELS by construction, so the
+        # per-node vote argmax is one conditional count per label in ONE
+        # aggregation and an array_position(max) projection — this drops
+        # the old (v_node, v_lab) groupBy + row_number window, i.e. one
         # Exchange+Sort per LPA round. Tiebreak identical: the window
         # ordered (c DESC, v_lab ASC); array_position returns the FIRST
         # max, which is the smallest label. A node only appears with
@@ -944,7 +934,7 @@ def _lpa_labels(spark, sf_dir):
             .agg(
                 *[
                     F.count(F.when(F.col("l_lab") == k, True)).alias(f"c{k}")
-                    for k in range(5)
+                    for k in range(_LPA_LABELS)
                 ]
             )
         )
@@ -952,8 +942,8 @@ def _lpa_labels(spark, sf_dir):
             "v_node",
             (
                 F.expr(
-                    "array_position(array(c0,c1,c2,c3,c4),"
-                    " array_max(array(c0,c1,c2,c3,c4)))"
+                    f"array_position(array({_LPA_COUNTS}),"
+                    f" array_max(array({_LPA_COUNTS})))"
                 )
                 - 1
             ).cast("long").alias("v_lab"),
@@ -988,7 +978,6 @@ def _lpa_labels(spark, sf_dir):
     lab.count()
     if round1 is not None:
         round1.unpersist()
-    _LPA_SHARED[memo_key] = lab
     return lab
 
 
@@ -997,7 +986,7 @@ def _lpa_labels(spark, sf_dir):
     f"""
     WITH {_GRAPH_SQL},
     l0 AS (SELECT node,
-                  CASE WHEN node % 7 = 0 THEN node % 5 END AS lab,
+                  CASE WHEN node % 7 = 0 THEN node % {_LPA_LABELS} END AS lab,
                   CASE WHEN node % 7 = 0 THEN 0 END AS rnd
            FROM nodes),
     {_LPA_VOTE_SQL.format(cur=0, next=1)},
@@ -1040,7 +1029,7 @@ def r_label_propagation(spark, sf_dir):
     f"""
     WITH {_GRAPH_SQL},
     l0 AS (SELECT node,
-                  CASE WHEN node % 7 = 0 THEN node % 5 END AS lab,
+                  CASE WHEN node % 7 = 0 THEN node % {_LPA_LABELS} END AS lab,
                   CASE WHEN node % 7 = 0 THEN 0 END AS rnd
            FROM nodes),
     {_LPA_VOTE_SQL.format(cur=0, next=1)},

@@ -60,202 +60,6 @@ def register(key: str, oracle: str | None = None):
     return deco
 
 
-# Keys whose rows+schema+hash all passed the driver oracle in rounds 1-2
-# (CORRECTNESS_r01.json + CORRECTNESS_r02.json; includes
-# a_approx_distinct's rows-only pass). The driver's per-round sweep caps at
-# the FIRST 50 registration-order keys, so these banked keys are pushed to
-# the BACK of the registry to let not-yet-verified keys into the window.
-# Keep appending each round's newly verified keys here.
-#
-# NOTE (round-2 advice): the seven roundtrip source keys (s_csv_roundtrip,
-# s_json_roundtrip, s_orc_roundtrip, s_text_source, s_save_as_table,
-# s_bucketed_table, s_partitioned_write) were rewritten after their round-1
-# verification (lazy read-backs, shared scratch root); tools/check.py was
-# re-run on all seven this round (see PROGRESS.jsonl) so their banked
-# status reflects the current code.
-DRIVER_VERIFIED = (
-    # round 1 (CORRECTNESS_r01.json)
-    "s_parquet_scan", "s_pruned_scan", "s_pushdown_scan", "s_csv_roundtrip",
-    "s_json_roundtrip", "s_partitioned_write", "s_ns_timestamp_read",
-    "s_orc_roundtrip", "s_text_source", "s_save_as_table", "s_bucketed_table",
-    "p_select_alias", "p_computed_expr", "p_case_when", "f_where_and_or",
-    "f_in_list", "f_between", "f_like", "f_null_checks", "j_inner_equi",
-    "j_broadcast", "j_sortmerge", "j_left_outer", "j_right_outer",
-    "j_full_outer", "j_left_semi", "j_left_anti", "j_cross", "j_theta_range",
-    "j_asof", "j_multiway", "j_self_pairs", "a_global", "a_groupby",
-    "a_count_distinct", "a_multi_distinct", "a_having", "a_stats", "a_median",
-    "a_grouping_sets", "a_rollup", "a_cube", "a_approx_distinct", "a_argmax",
-    "a_string_agg", "a_bool_agg", "w_row_number", "w_rank_dense",
-    # round 2 (CORRECTNESS_r02.json, all 50/50 green)
-    "p_cast", "a_collect_sorted",
-    "t_exact_dedup_digest", "t_simhash_pairs", "t_jaccard_neardup_capped",
-    "t_exact_dedup", "t_tokenize_wc", "t_doc_stats", "t_tfidf",
-    "t_ngram_bigram", "t_lang_id", "t_quality_score", "t_token_count",
-    "t_canonical_dedup", "t_jaccard_neardup", "t_simhash", "t_fingerprint",
-    "t_pipeline_e2e",
-    "v_norm", "v_cosine_topk", "v_knn_label", "v_centroid",
-    "v_embed_neardup", "v_ann_ivf",
-    "m_multimodal_join", "m_binary_meta", "m_image_pipeline",
-    "r_ratings_matrix", "r_events_matrix", "r_item_stats", "r_mean_center",
-    "r_cooccurrence", "r_cosine_sim", "r_topk_neighbors", "r_predict",
-    "r_topn_recs", "r_rmse", "r_rdd_mapreduce",
-    "w_ntile", "w_lag_lead", "w_running_sum", "w_moving_avg",
-    "w_range_frame", "w_first_last", "w_pct_rank", "w_topk_group",
-    "o_topk", "o_sort_nulls", "a_pivot", "a_unpivot",
-    # round 3/4 (CORRECTNESS_r03/r04.json — identical windows; the 45 green
-    # keys of the 50. The 5 events-ts failures stay OUT and lead the round-5
-    # window below. The round-1/2 events keys above (s_ns_timestamp_read,
-    # j_theta_range, j_asof, w_row_number, w_lag_lead, w_running_sum,
-    # w_moving_avg, w_first_last, r_events_matrix) predate the testdata's
-    # ts dtype change; all re-verified hash-green via tools/check.py at
-    # sf0.01 this round under the dtype-adaptive loader (220 ok, 0 failed).
-    "q_pricing_summary", "q_shipping_priority", "q_local_supplier_volume",
-    "q_forecast_revenue", "q_volume_shipping", "q_returned_items",
-    "q_customer_distribution", "q_promo_revenue", "q_top_supplier",
-    "q_discounted_revenue", "q_large_volume_customer", "q_dormant_customers",
-    "q_yoy_growth", "q_pareto_brands",
-    "j_skew_salted", "j_dpp_partitioned", "j_bloom_runtime_filter",
-    "a_skew_twophase",
-    "set_union_all", "set_union_distinct", "set_intersect", "set_except",
-    "set_intersect_all", "set_except_all",
-    "q_scalar_subquery", "q_exists_correlated", "q_in_subquery",
-    "q_basket_rules", "a_hist_bins",
-    "q_upsert_merge", "q_scd2_intervals", "q_point_in_time",
-    "t_minhash_lsh", "t_pipeline_e2e_lsh", "t_pipeline_e2e_scale",
-    "t_dup_clusters", "t_decontaminate", "t_pack_sequences",
-    "fn_hash", "fn_bitwise", "fn_url", "fn_try_arith", "fn_date_trunc",
-    "fn_struct_basic", "u_map_in_arrow",
-)
-
-# Round-3 oracle window: exactly the 50 keys the driver will check this
-# round, ordered first — all SQL-oracle-backed, none ever inside a driver
-# window before (VERDICT r2 "Next round" item 1). Composition: every TPC-H
-# composite, the five advanced-join strategies, all set operators,
-# subqueries, sessionization/streaks/funnel analytics, the lakehouse
-# emulations (MERGE/SCD2/point-in-time), the LSH dedup + decontamination
-# pipeline, and the highest-value fn_*/u_* surfaces.
-#
-# Round-4+ window schedule (VERDICT r2 item 5), in priority order once this
-# window banks: (a) remaining SQL-backed unchecked keys — fn_string_*,
-# fn_date_parts/arith/format, fn_math, fn_array_*, fn_explode/posexplode,
-# fn_json, fn_map_basic, fn_conditional, fn_fuzzy, a_mode_deterministic,
-# a_weighted_median, a_mad_outliers, j_bucketed_colocated, s_cached_table,
-# s_schema_merge, s_csv_malformed, s_compaction, o_limit_offset,
-# w_cume_dist, a_corr_regr, q_recursive_cte, t_chunk_docs,
-# t_stratified_sample, t_repetition_filter, t_scrub_pii, t_unigram_nll,
-# t_bigram_nll, t_winnowing, t_lsh_recall, t_shuffle_shard, t_domain_mix,
-# t_gopher_quality, v_int8_quantize, v_recall_at_k, m_audio_pipeline,
-# m_video_pipeline, r_precision_at_k, r_baseline_bias, r_coverage,
-# r_pagerank, st_tumbling/sliding/session/dedup/static_join/foreach_batch/
-# stream_join, u_py_udf, u_pandas_udf, u_grouped_agg, u_apply_in_pandas,
-# u_udtf, fn_url already here; then (b) rows-only keys for the weak
-# rows+schema signal: r_als, r_als_recs, r_kmeans, r_pca, v_lsh_neardup,
-# v_ann_ivf_kmeans, t_minhash_dedup, st_watermark, st_stateful,
-# st_funnel_stateful, a_sketch_merge, a_approx_quantile.
-ORACLE_WINDOW = (
-    # Round-5 window. First: the 5 keys that erred in r3/r4 (events-ts
-    # dtype drift, fixed in session.load_table this round) — they need a
-    # green driver row before banking.
-    "j_range_bucketed", "w_sessionize", "w_streaks", "q_event_funnel",
-    "q_retention_cohort",
-    # Everyday scalar-function surface (never driver-checked before)
-    "fn_string_basic", "fn_string_regex", "fn_string_search", "fn_fuzzy",
-    "fn_date_parts", "fn_date_arith", "fn_date_format", "fn_math",
-    "fn_array_basic", "fn_array_lambda", "fn_explode", "fn_posexplode",
-    "fn_json", "fn_json_corrupt", "fn_map_basic", "fn_conditional",
-    # UDF surface
-    "u_py_udf", "u_pandas_udf", "u_grouped_agg", "u_apply_in_pandas",
-    "u_udtf",
-    # Streaming keys with batch-equivalent SQL oracles
-    "st_tumbling", "st_sliding", "st_session", "st_dedup",
-    "st_static_join", "st_foreach_batch", "st_stream_join",
-    # Sources / aggregates / misc never driver-checked
-    "j_bucketed_colocated", "s_cached_table", "s_schema_merge",
-    "s_csv_malformed", "s_compaction", "s_sample_hash",
-    "a_mode_deterministic", "a_weighted_median", "a_mad_outliers",
-    "q_recursive_cte", "o_limit_offset", "w_cume_dist", "a_corr_regr",
-    # Training-data pipeline text ops
-    "t_chunk_docs", "t_stratified_sample", "t_repetition_filter",
-    "t_scrub_pii",
-)
-# Remaining never-checked keys for the round-6 window: v_embed_neardup_lsh,
-# v_semantic_dedup, t_incremental_dedup, t_boilerplate_ngrams,
-# t_span_dedup, t_zipf_fit, q_order_priority, q_market_share,
-# q_priority_lines, q_small_qty_revenue, q_waiting_suppliers, r_ndcg,
-# r_mrr, t_quality_survivor, w_gap_fill, v_matryoshka_recall,
-# t_ccnet_bucket, a_entropy, w_rolling_zscore, v_pq_quantize,
-# r_covisitation, j_asof_nearest, w_ewma, v_cluster_balance,
-# q_order_gaps, r_user_cosine, a_ks_drift, a_psi_drift,
-# w_backfill_ffill, v_ann_ivf_nprobe, a_benford_fit, a_gini,
-# t_sentence_split, w_ohlc_bars, w_ltv_deciles, a_cramers_v,
-# q_ship_latency, t_dsir_score, t_fertility, r_item_jaccard,
-# v_dim_variance, q_rfm_segments, a_jackknife_ci, t_dedup_yield_curve,
-# t_lang_confusion, q_dau_wau, q_new_vs_returning, r_novelty,
-# t_trigram_lid, q_cohort_ltv, v_hamming_topk, t_jsd_sources,
-# a_hill_tail, r_triangle_count, t_symspell_join, q_event_transitions,
-# a_autocorr_daily, u_cogroup_pandas, w_seasonality,
-# q_discount_elasticity, r_serendipity, a_mann_whitney,
-# a_winsorized_mean, q_running_backlog, v_topk_mips, v_centroid_matrix,
-# r_bpr_triplets, q_supplier_hhi, fn_make_datetime, q_product_profit,
-# q_min_cost_supplier, q_parts_supplier_relation, a_spearman_corr,
-# a_theil_index, w_cusum, q_conversion_lag, t_char_entropy, r_wilson_lcb,
-# r_adamic_adar, w_rolling_median, a_cohens_d, t_code_detect,
-# r_popularity_recency, a_log_histogram, q_abc_analysis, m_frame_dedup,
-# st_topk_per_window, j_null_safe_eq, s_json_nested, a_count_min,
-# v_pq_adc, a_kll_quantiles, a_ttest_welch, a_theta_set_ops, a_hist2d,
-# q_survival_curve, r_shrunk_cosine, r_hits, t_kfold_split,
-# a_key_skew_census, a_pythagorean_means, a_ratio_ci_delta,
-# v_knn_loo_accuracy, fn_variant, u_py_datasource, v_hamming_rerank,
-# q_revenue_retention, q_attribution_last_touch, a_diff_in_diff,
-# m_modality_router, a_cuped, v_kmeans_step, fn_map_lambda,
-# t_bm25_score, w_activity_islands, s_dynamic_overwrite,
-# q_skyline_parts, fn_aes_roundtrip, a_chi2_uniform, t_sft_format,
-# t_vocab_coverage, w_rank_movers, v_similarity_calibration,
-# st_incremental_checkpoint, fn_xpath, s_analyze_stats,
-# r_intralist_diversity, w_control_chart, t_crosslingual_dups,
-# w_peak_days, s_glob_read, u_arrow_udf, q_price_volume_bridge,
-# r_candidate_rerank, q_duplicate_charges, r_two_hop_reach,
-# w_seasonal_naive_mape, fn_round_modes, t_collocations_pmi,
-# fn_calendar_edges, a_permutation_test, r_rank_fusion, a_anova_f,
-# t_split_leakage, q_xyz_variability, t_template_detect, fn_collation,
-# t_quality_length_bias, w_max_drawdown, w_p_chart, st_session_dynamic,
-# a_capture_recapture, fn_uuid5, fn_multiformat_ts, t_bpe_merge_step,
-# t_dataset_card, w_burn_rate, w_twap, s_file_metadata, t_freq_spectrum,
-# t_stopword_discovery, j_interval_overlap, r_cooc_pmi,
-# fn_json_schema_infer, a_bimodality, q_join_hints, v_power_iteration,
-# m_checksum_audit, t_source_signature, r_epsilon_slate, q_reorder_rate,
-# s_prefix_compression, q_kaplan_meier, q_abc_xyz_matrix, a_bh_fdr,
-# w_rolling_corr, q_bounce_rate, v_medoid_select, t_compressibility,
-# a_sample_size, a_markov_entropy_rate, s_manifest_diff,
-# q_peak_concurrency, q_hazard_curve, fn_string_transform,
-# q_reorder_point, w_mtd_pace, q_sequence_inversions, a_qte,
-# v_quant_error, fn_inline_stack, t_source_overlap,
-# q_revenue_waterfall, v_mmr_rerank, a_record_test,
-# a_seasonal_strength
-# (added round 5), r_precision_at_k,
-# r_baseline_bias, r_coverage, r_pagerank, t_unigram_nll, t_bigram_nll,
-# v_recall_at_k, t_winnowing, t_lsh_recall, m_audio_pipeline,
-# m_video_pipeline, t_shuffle_shard, t_domain_mix, t_gopher_quality,
-# v_int8_quantize (SQL-backed), then the rows-only tier: a_sketch_merge,
-# a_approx_quantile, r_als, r_als_recs, r_kmeans, r_pca, v_lsh_neardup,
-# v_ann_ivf_kmeans, t_minhash_dedup, st_watermark, st_stateful,
-# st_funnel_stateful.
-
-
-def _apply_order() -> None:
-    """Reorder QUERIES/ORACLE: window first, unverified remainder, banked last."""
-    window = [k for k in ORACLE_WINDOW if k in QUERIES]
-    banked = set(DRIVER_VERIFIED)
-    placed = set(window)
-    remainder = [k for k in QUERIES if k not in placed and k not in banked]
-    tail = [k for k in QUERIES if k in banked and k not in placed]
-    order = window + remainder + tail
-    for d in (QUERIES, ORACLE):
-        snapshot = dict(d)
-        d.clear()
-        d.update({k: snapshot[k] for k in order if k in snapshot})
-
-
 def load_all() -> None:
     """Import every operator module so registration side effects run."""
     from .sources import scans  # noqa: F401
@@ -265,5 +69,3 @@ def load_all() -> None:
     from .llm import text, vectors, dedup, multimodal, contamination, pipeline  # noqa: F401
     from .streaming import stream_windows, stateful  # noqa: F401
     from .udfs import surface  # noqa: F401
-
-    _apply_order()

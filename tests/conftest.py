@@ -6,12 +6,25 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from npc_recommender_netflix_spark import registry
+from npc_recommender_netflix_spark import registry, session
 from npc_recommender_netflix_spark.session import TABLES, build_session
 
 registry.load_all()
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+
+def memo(name):
+    """session.shared_frame's live entries for ``name``: {key: frame},
+    key = (applicationId, sf_dir, name)."""
+    return {k: f for k, f in session._MEMO.items() if k[2] == name}
+
+
+def forget(*names):
+    """Drop ``names`` from the memo (no unpersist) for a fresh build."""
+    for name in names:
+        for k in memo(name):
+            del session._MEMO[k]
 
 
 @pytest.fixture(scope="session")

@@ -7,7 +7,7 @@ from collections import Counter, defaultdict
 from pyspark.sql import functions as F
 
 from npc_recommender_netflix_spark import registry
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, forget
 
 
 def _md5(s: str) -> str:
@@ -196,20 +196,17 @@ def test_shared_caches_reregister_after_clearcache(spark):
     made every post-clearCache bench key pay an unamortized cache-write —
     the r_predict/r_adamic_adar regressions the round-11 verdict
     flagged)."""
-    from npc_recommender_netflix_spark.llm import vectors
     from npc_recommender_netflix_spark.llm.vectors import _qcos_012
-    from npc_recommender_netflix_spark.recommender import core
     from npc_recommender_netflix_spark.recommender.core import (
         _cached,
         ratings_matrix,
     )
 
-    # Fresh memoizer state: an earlier test's clearCache leaves memoized
+    # Fresh memo state: an earlier test's clearCache leaves memoized
     # frames unregistered, and core._cached deliberately does NOT
     # re-register them (the round-12 policy below) — so the "cached on
     # first build" phase only holds if this test builds first.
-    core._shared.clear()
-    vectors._QCOS_SHARED.clear()
+    forget("matrix_200", "cosine_sims", "qcos_012")
 
     q = _qcos_012(spark, SF_SMALL)
     q.count()

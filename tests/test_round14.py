@@ -9,7 +9,7 @@ twin bit-equal to its 12-scan sibling.
 import pyspark.sql.functions as F
 
 from npc_recommender_netflix_spark import registry
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, memo
 
 
 def test_sql_scripting_hist_twin_equals_twelve_scan_key(spark):
@@ -146,11 +146,9 @@ def test_lpa_superseded_round_frame_not_left_cached(spark):
     """ADVICE r13: only the FINAL label frame may stay cached in the LPA
     memo — the superseded round-1 frame must have been unpersisted.
     Materialize the shared frame, then count cached label-shaped RDDs."""
-    from npc_recommender_netflix_spark.recommender import graph as g
-
     registry.QUERIES["r_label_propagation"](spark, SF_SMALL).collect()
     live = [
-        f for key, f in g._LPA_SHARED.items() if key[1] == SF_SMALL
+        f for key, f in memo("lpa_labels").items() if key[1] == SF_SMALL
     ]
     assert live, "memo must hold the final frame"
     for f in live:

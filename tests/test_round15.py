@@ -10,7 +10,7 @@ import pyspark.sql.functions as F
 
 from npc_recommender_netflix_spark import registry
 from npc_recommender_netflix_spark.recommender.graph import _katz_truncated
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, forget, memo
 
 
 def test_katz_sink_node_ranks_instead_of_vanishing(spark):
@@ -62,7 +62,7 @@ def test_lpa_round1_cache_survives_until_final_materialization(spark):
     already cached AND materialized (cachedRowCount present)."""
     from npc_recommender_netflix_spark.recommender import graph as G
 
-    G._LPA_SHARED.clear()
+    forget("lpa_labels")
     lab = G._lpa_labels(spark, SF_SMALL)
     assert lab.storageLevel.useMemory
     # materialized eagerly inside the builder: a recount is served from
@@ -75,15 +75,13 @@ def test_script_hist_reinvocation_reuses_one_cached_frame(spark):
     """r14 ADVICE (low): each q_sql_scripting_hist call cached a NEW
     histogram frame; repeated bench/sweep runs accumulated orphaned
     cache entries. The memo must hand back the same cached frame."""
-    from npc_recommender_netflix_spark.operators import modern as M
-
-    M._SCRIPT_HIST_SHARED.clear()
+    forget("script_hist")
     registry.QUERIES["q_sql_scripting_hist"](spark, SF_SMALL).collect()
-    assert len(M._SCRIPT_HIST_SHARED) == 1
-    frame1 = next(iter(M._SCRIPT_HIST_SHARED.values()))
+    assert len(memo("script_hist")) == 1
+    frame1 = next(iter(memo("script_hist").values()))
     registry.QUERIES["q_sql_scripting_hist"](spark, SF_SMALL).collect()
-    assert len(M._SCRIPT_HIST_SHARED) == 1
-    assert next(iter(M._SCRIPT_HIST_SHARED.values())) is frame1
+    assert len(memo("script_hist")) == 1
+    assert next(iter(memo("script_hist").values())) is frame1
     assert frame1.storageLevel.useMemory
 
 

@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from npc_recommender_netflix_spark import registry
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, forget, memo
 
 
 @pytest.fixture(scope="module")
@@ -965,13 +965,11 @@ def test_textrank_reinvocation_reuses_one_cached_edge_frame(spark):
     """The cached co-occurrence edge frame is memoized per
     (app, sf_dir): repeated calls must reuse one cached frame, not
     accumulate orphans (the q_sql_scripting_hist advice pattern)."""
-    from npc_recommender_netflix_spark.llm import text as T
-
-    T._TR_EDGES_SHARED.clear()
+    forget("textrank_edges")
     registry.QUERIES["t_textrank_keywords"](spark, SF_SMALL).collect()
-    assert len(T._TR_EDGES_SHARED) == 1
-    frame1 = next(iter(T._TR_EDGES_SHARED.values()))
+    assert len(memo("textrank_edges")) == 1
+    frame1 = next(iter(memo("textrank_edges").values()))
     registry.QUERIES["t_textrank_keywords"](spark, SF_SMALL).collect()
-    assert len(T._TR_EDGES_SHARED) == 1
-    assert next(iter(T._TR_EDGES_SHARED.values())) is frame1
+    assert len(memo("textrank_edges")) == 1
+    assert next(iter(memo("textrank_edges").values())) is frame1
     assert frame1.storageLevel.useMemory

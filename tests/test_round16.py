@@ -25,7 +25,7 @@ import pyspark.sql.functions as F
 
 from npc_recommender_netflix_spark import registry
 from npc_recommender_netflix_spark.session import TABLES
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, forget, memo
 
 
 # --- degenerate-fixture machinery (round-15 temp-fixture idiom) -------
@@ -222,44 +222,42 @@ def test_check_slice_validates_range():
 def test_memo_evicts_superseded_sf_dir(spark):
     """r15 verdict item 2: a ladder run (two sf_dirs in one app) must
     not accumulate cached frames — on lookup at a NEW sf_dir, the old
-    sf_dir's frame is unpersisted and dropped from every per-(app, sf)
-    memo dict."""
-    from npc_recommender_netflix_spark.llm import text as T
-    from npc_recommender_netflix_spark.operators import modern as M
+    sf_dir's frame is unpersisted and dropped from the memo."""
     from npc_recommender_netflix_spark.recommender import core as C
     from npc_recommender_netflix_spark.recommender import graph as G
 
     alt = _degen_dir("const")  # any second sf_dir works
     # --- script-hist memo
-    M._SCRIPT_HIST_SHARED.clear()
+    forget("script_hist")
     registry.QUERIES["q_sql_scripting_hist"](spark, SF_SMALL).collect()
-    frame_old = next(iter(M._SCRIPT_HIST_SHARED.values()))
+    frame_old = next(iter(memo("script_hist").values()))
     registry.QUERIES["q_sql_scripting_hist"](spark, alt).collect()
-    assert len(M._SCRIPT_HIST_SHARED) == 1
-    assert next(iter(M._SCRIPT_HIST_SHARED))[1] == alt
+    assert len(memo("script_hist")) == 1
+    assert next(iter(memo("script_hist")))[1] == alt
     assert not frame_old.storageLevel.useMemory  # unpersisted, not leaked
     # --- textrank edge memo
-    T._TR_EDGES_SHARED.clear()
+    forget("textrank_edges")
     registry.QUERIES["t_textrank_keywords"](spark, SF_SMALL).collect()
-    old_tr = next(iter(T._TR_EDGES_SHARED.values()))
+    old_tr = next(iter(memo("textrank_edges").values()))
     registry.QUERIES["t_textrank_keywords"](spark, alt).collect()
-    assert len(T._TR_EDGES_SHARED) == 1
-    assert next(iter(T._TR_EDGES_SHARED))[1] == alt
+    assert len(memo("textrank_edges")) == 1
+    assert next(iter(memo("textrank_edges")))[1] == alt
     assert not old_tr.storageLevel.useMemory
-    # --- recommender _cached (multi-name memo: all names for the stale
-    # sf_dir must go, names for the new sf_dir may coexist)
-    C._shared.clear()
-    C.ratings_matrix(spark, SF_SMALL).count()
-    C.ratings_matrix(spark, alt).count()
-    assert all(k[1] == alt for k in C._shared)
-    # --- LPA label memo (graph family; exercises _EDGES_SHARED too)
-    G._LPA_SHARED.clear()
-    G._EDGES_SHARED.clear()
+    # --- recommender _cached (max_item=200 is the memoized matrix)
+    forget("matrix_200")
+    m_old = C.ratings_matrix(spark, SF_SMALL, max_item=200)
+    m_old.count()
+    C.ratings_matrix(spark, alt, max_item=200).count()
+    assert len(memo("matrix_200")) == 1
+    assert next(iter(memo("matrix_200")))[1] == alt
+    assert not m_old.storageLevel.useMemory
+    # --- LPA label memo (nested: also looks up the co-purchase edges)
+    forget("lpa_labels", "copurchase_edges")
     lab_old = G._lpa_labels(spark, SF_SMALL)
     G._lpa_labels(spark, alt)
-    assert len(G._LPA_SHARED) == 1
-    assert next(iter(G._LPA_SHARED))[1] == alt
-    assert all(k[1] == alt for k in G._EDGES_SHARED)
+    assert len(memo("lpa_labels")) == 1
+    assert next(iter(memo("lpa_labels")))[1] == alt
+    assert [k[1] for k in memo("copurchase_edges")] == [alt]
     assert not lab_old.storageLevel.useMemory
 
 

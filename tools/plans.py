@@ -326,10 +326,7 @@ def main() -> None:
         sys.exit(1 if missing else 0)
     keys = sys.argv[1:] or None
     spark = build_session(app="npc-plans")
-    try:
-        from bench import HEADLINE
-    except Exception:
-        HEADLINE = list(registry.QUERIES)[:20]
+    from bench import HEADLINE
     targets = keys or [k for k in HEADLINE if not k.startswith("st_") and k != "r_als"]
     out = []
     for k in targets:
