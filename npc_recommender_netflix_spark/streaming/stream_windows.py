@@ -21,7 +21,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import prepare
+from ..session import prepare, read_parquet
 
 def read_events_stream(spark, sf_dir):
     """Streaming file source over the events parquet; dtype-adaptive ts.
@@ -29,14 +29,15 @@ def read_events_stream(spark, sf_dir):
     The file source monitors a DIRECTORY; the fixture is a single file, so
     expose it via a symlink in a temp dir (testdata stays untouched).
 
-    The stream schema is taken from a batch scan of the same file, so the
-    fixture's ts dtype (TIMESTAMP(NANOS)-as-long under nanosAsLong, or
-    native timestamp[us]) is honored; a long ts is rebuilt to a
-    microsecond timestamp in-stream (§1.3 recipe).
+    The stream schema is the file's batch schema (``read_parquet``: one
+    inference per file per process), so the fixture's ts dtype
+    (TIMESTAMP(NANOS)-as-long under nanosAsLong, or native timestamp[us])
+    is honored; a long ts is rebuilt to a microsecond timestamp in-stream
+    (§1.3 recipe).
     """
     prepare(spark)
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     stream_dir = tempfile.mkdtemp(prefix="npc_stream_")
     os.symlink(path, f"{stream_dir}/events.parquet")
     raw = spark.readStream.schema(schema).parquet(stream_dir)
@@ -352,7 +353,7 @@ def st_stream_join_outer(spark, sf_dir):
     not O(stream).
     """
     prepare(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     feed_dir = tempfile.mkdtemp(prefix="npc_outer_feed_")
     ckpt = tempfile.mkdtemp(prefix="npc_outer_ckpt_")
     # expose the checkpoint for state-size measurement (tools/scalecheck.py
@@ -525,7 +526,7 @@ def st_incremental_checkpoint(spark, sf_dir):
     sink.
     """
     prepare(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     feed_dir = tempfile.mkdtemp(prefix="npc_incr_feed_")
     ckpt = tempfile.mkdtemp(prefix="npc_incr_ckpt_")
     name = "snk_incr_" + uuid.uuid4().hex[:12]
@@ -579,7 +580,7 @@ def st_idempotent_sink(spark, sf_dir):
     on a batch watermark column) is O(batch) regardless of table size.
     """
     prepare(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     feed_dir = tempfile.mkdtemp(prefix="npc_idem_feed_")
     out_dir = tempfile.mkdtemp(prefix="npc_idem_out_")
     batch.coalesce(1).write.mode("append").parquet(feed_dir)
@@ -643,7 +644,7 @@ def st_rocksdb_state(spark, sf_dir):
     prepare(spark)
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(conf_key, None)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     feed_dir = tempfile.mkdtemp(prefix="npc_rocks_feed_")
     ckpt = tempfile.mkdtemp(prefix="npc_rocks_ckpt_")
     # expose the checkpoint path for the artifact-level pytest and for
@@ -1060,7 +1061,7 @@ def st_rate_limited_backfill(spark, sf_dir):
     no code change, which is the whole point of the unified API.
     """
     prepare(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_is_long = dict(batch.dtypes).get("ts") == "bigint"
     feed_dir = tempfile.mkdtemp(prefix="npc_backfill_feed_")
     for part in range(4):
@@ -1142,7 +1143,7 @@ def st_cdc_apply(spark, sf_dir):
     passes their sequence horizon, exactly like Kafka log compaction.
     """
     prepare(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     ch = orders.select(
         (F.col("o_orderkey") % 500).alias("k"),
         F.col("o_orderkey").alias("seq"),

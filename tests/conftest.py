@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -25,6 +26,22 @@ def forget(*names):
     for name in names:
         for k in memo(name):
             del session._MEMO[k]
+
+
+def jobs_fired(spark, fn):
+    """Run ``fn()`` under a fresh job group; return ``(fn(), job ids it
+    fired)``, read from the status tracker once the listener bus drains."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")
