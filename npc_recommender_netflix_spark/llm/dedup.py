@@ -17,7 +17,7 @@ Scale story (the whole point of the ladder):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
@@ -748,11 +748,14 @@ def t_dup_clusters(spark, sf_dir):
     Spark side is iterative min-label propagation: each round joins labels
     to the edge list and takes min(own, neighbors'); converges in
     O(component diameter) rounds (dup clusters are tiny — 2-3 rounds
-    here). The convergence test reads ONE scalar per round (changed-row
-    count) — that driver-side scalar is how every iterative Spark graph
-    algorithm terminates, not a data collect. At real scale you checkpoint
-    labels every few rounds to truncate lineage. The oracle is a DuckDB
-    recursive CTE computing the same components exactly.
+    here). Each round pays ONE action, the localCheckpoint that
+    materializes its labels and truncates lineage; the convergence
+    test's changed-row count rides on that action as an observed metric
+    (``DataFrame.observe``) instead of a count() job of its own — a
+    driver-side scalar is how every iterative Spark graph algorithm
+    terminates, not a data collect.
+    The oracle is a DuckDB recursive CTE computing the same components
+    exactly.
     """
     edges = _jaccard05_edges(spark, sf_dir)
     labels = _minlabel_components(edges)
@@ -815,51 +818,45 @@ def _minlabel_components(edges) -> DataFrame:
     """Converged min-label connected components (doc_id, label) over a
     symmetric cached edge list — t_dup_clusters' iterative propagation,
     factored so every survivor-selection variant runs the identical
-    clustering. Result is localCheckpoint'd off the edge lineage."""
-    labels = edges.select(F.col("a").alias("doc_id")).distinct().withColumn(
-        "label", F.col("doc_id")
-    ).cache()
-    pinned = labels  # the round's cached/checkpointed frame (unpersist target)
-    for rnd in range(20):  # cap >> any real component diameter here
+    clustering. Each round is ONE action: its eager localCheckpoint
+    materializes the round's labels off the growing join lineage, and an
+    Observation counts the round's changed rows inside that same action,
+    so the convergence test adds no job. The converged round's
+    checkpoint is the result; the caller may release the edge list."""
+    # Round 0 from the initial labels (each doc its own) is one aggregate:
+    # the edge list is symmetric, so every doc has a neighbour.
+    new = (
+        edges.groupBy(F.col("a").alias("doc_id"))
+        .agg(F.min("b").alias("nlabel"))
+        .select(
+            "doc_id",
+            F.least("doc_id", "nlabel").alias("label"),
+            F.col("doc_id").alias("_prev"),
+        )
+    )
+    for _ in range(20):  # cap >> any real component diameter here
+        changed = Observation()
+        labels = (
+            new.observe(
+                changed,
+                F.count_if(F.col("label") != F.col("_prev")).alias("n"),
+            )
+            .localCheckpoint()
+            .select("doc_id", "label")
+        )
+        if changed.get["n"] == 0:
+            break
         neigh = (
             edges.join(labels, edges.b == labels.doc_id)
             .groupBy(F.col("a").alias("doc_id"))
             .agg(F.min("label").alias("nlabel"))
         )
-        # Carry the pre-round label as _prev so the convergence check is
-        # a filter over THIS cached frame instead of a second join back
-        # to the superseded labels (r17: one less join per check round).
-        new = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
-                F.col("label").alias("_prev"),
-            )
+        new = labels.join(neigh, "doc_id", "left").select(
+            "doc_id",
+            F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
+            F.col("label").alias("_prev"),
         )
-        # Every 4th round, localCheckpoint (materializes the small label
-        # frame and truncates the growing join lineage — the standard
-        # iterative-graph hygiene); plain cache otherwise.
-        new = new.localCheckpoint() if (rnd + 1) % 4 == 0 else new.cache()
-        # Dup-cluster diameters are tiny: most components are PAIRS
-        # (converged after round 0) with the odd triple (round 1), so
-        # check from round 1 on (r17; was round 2 — the measured corpus
-        # converges at the round-1 check, saving a full round's lineage).
-        # Earlier rounds run WITHOUT a convergence job — the per-round
-        # changed-count is a Spark job each, and paying it before
-        # convergence is even possible just serializes the loop.
-        if rnd >= 1:
-            changed = new.where(F.col("label") != F.col("_prev")).count()
-        else:
-            changed = -1
-        pinned.unpersist()  # superseded label frame; executor memory back
-        pinned = new
-        labels = new.select("doc_id", "label")
-        if changed == 0:
-            break
-    # Pin the converged labels off the edge lineage; the caller releases
-    # the cached edge list — nothing downstream recomputes it.
-    return labels.localCheckpoint()
+    return labels
 
 
 # --- MinHash-LSH with an exact cross-engine oracle -------------------------

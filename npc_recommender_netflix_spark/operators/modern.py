@@ -5357,6 +5357,71 @@ def q_join_card_est(spark, sf_dir):
     ).orderBy("estimator")
 
 
+# The revenue-median bisection both scripting keys run over a (cents, w)
+# view, w being the revenue a row carries: the smallest cents value P
+# with sum(w where cents <= P) >= half the total, bracketed by 12 exact
+# bisection steps, 3 per WHILE pass. A pass is ONE statement and one
+# aggregate scan: it sums w at or below each of the 7 probe points the
+# next 3 steps can visit (p1..p7 in heap order: node k's children are 2k
+# and 2k+1, and each probe is the midpoint of the interval the walk
+# reaches its node with), then aggregate() walks the 3 steps, moving lo
+# or hi to the visited node's probe. The (lo, hi) trajectory is the
+# one-step-per-scan loop's, so the 12-step oracle pins it. Every script
+# statement runs its own Spark jobs, so a pass is one statement.
+_BISECT_SCRIPT = """
+BEGIN
+  DECLARE lo BIGINT DEFAULT 0;
+  DECLARE hi BIGINT DEFAULT 0;
+  DECLARE half BIGINT DEFAULT 0;
+  DECLARE i INT DEFAULT 0;
+  SET (hi, half) = (SELECT max(cents), (sum(w) + 1) DIV 2 FROM {view});
+  WHILE i < 12 DO
+    SET (lo, hi, i) = (
+      SELECT r.l, r.h, i + 3
+      FROM (
+        SELECT aggregate(
+                 sequence(1, 3),
+                 named_struct('l', lo, 'h', hi, 'k', 1),
+                 (a, x) -> IF(s[a.k - 1] >= half,
+                              named_struct('l', a.l, 'h', p[a.k - 1],
+                                           'k', 2 * a.k),
+                              named_struct('l', p[a.k - 1], 'h', a.h,
+                                           'k', 2 * a.k + 1))) AS r
+        FROM (
+          SELECT any_value(array(p1, p2, p3, p4, p5, p6, p7)) AS p,
+                 array(sum(IF(cents <= p1, w, 0)), sum(IF(cents <= p2, w, 0)),
+                       sum(IF(cents <= p3, w, 0)), sum(IF(cents <= p4, w, 0)),
+                       sum(IF(cents <= p5, w, 0)), sum(IF(cents <= p6, w, 0)),
+                       sum(IF(cents <= p7, w, 0))) AS s
+          FROM (
+            SELECT cents, w,
+                   (lo + hi) DIV 2 AS p1,
+                   (lo + p1) DIV 2 AS p2, (p1 + hi) DIV 2 AS p3,
+                   (lo + p2) DIV 2 AS p4, (p2 + p1) DIV 2 AS p5,
+                   (p1 + p3) DIV 2 AS p6, (p3 + hi) DIV 2 AS p7
+            FROM {view}
+          )
+        )
+      )
+    );
+  END WHILE;
+  SELECT lo AS lo_cents, hi AS hi_cents, CAST(i AS BIGINT) AS n_iter;
+END
+"""
+
+
+def _bisect(spark, frame, view):
+    """Run ``_BISECT_SCRIPT`` over ``frame`` (cents, w) registered as the
+    temp view ``view``. A script's result is local — every statement ran
+    inside ``spark.sql()`` — so the view is dropped once it returns."""
+    spark.conf.set("spark.sql.scripting.enabled", "true")
+    frame.createOrReplaceTempView(view)
+    try:
+        return spark.sql(_BISECT_SCRIPT.format(view=view))
+    finally:
+        spark.catalog.dropTempView(view)
+
+
 @register(
     "q_sql_scripting",
     """
@@ -5388,7 +5453,7 @@ def q_join_card_est(spark, sf_dir):
     """,
 )
 def q_sql_scripting(spark, sf_dir):
-    """Spark 4 SQL scripting (SPARK-48338 BEGIN/DECLARE/WHILE/IF) driving
+    """Spark 4 SQL scripting (SPARK-48338 BEGIN/DECLARE/WHILE/SET) driving
     a data-dependent control loop entirely inside the engine: a 12-step
     bisection for the revenue-median price cutoff (the smallest cents
     value P with revenue-at-or-below-P >= half the total). Each loop
@@ -5399,51 +5464,19 @@ def q_sql_scripting(spark, sf_dir):
     the two control-flow dialects are pinned against each other
     bit-for-bit (q_pipe_syntax's treatment applied to scripting).
 
-    Scale: each iteration is one pushed-predicate aggregate scan —
-    12 passes total, independent of row count; the production shortcut
-    (one pre-aggregated cents histogram, then bisect the 1e4-bucket
-    frame) drops it to 1 scan + 12 metadata steps, same script shape.
-    The script runs where the data lives; no driver-side loop state.
+    Scale: each WHILE pass is one aggregate scan that resolves 3
+    bisection steps (``_BISECT_SCRIPT``) — 4 scans for the 12 steps,
+    plus one for the bounds, independent of row count; the production
+    shortcut (one pre-aggregated cents histogram, then bisect the
+    1e4-bucket frame) drops it to 1 scan, same script
+    (q_sql_scripting_hist). The script runs where the data lives; no
+    driver-side loop state.
     """
-    from ..session import load_table as _lt
-
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    _lt(spark, sf_dir, "orders").createOrReplaceTempView(
-        "npc_script_orders"
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    orders = load_table(spark, sf_dir, "orders").select(
+        cents.alias("cents"), cents.alias("w")
     )
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE lo BIGINT DEFAULT 0;
-          DECLARE hi BIGINT DEFAULT 0;
-          DECLARE mid BIGINT DEFAULT 0;
-          DECLARE below BIGINT DEFAULT 0;
-          DECLARE half BIGINT DEFAULT 0;
-          DECLARE i INT DEFAULT 0;
-          SET hi = (SELECT max(CAST(round(o_totalprice * 100) AS BIGINT))
-                    FROM npc_script_orders);
-          SET half = (SELECT (sum(CAST(round(o_totalprice * 100)
-                                       AS BIGINT)) + 1) DIV 2
-                      FROM npc_script_orders);
-          WHILE i < 12 DO
-            SET mid = (lo + hi) DIV 2;
-            SET below = (SELECT coalesce(sum(CAST(round(o_totalprice * 100)
-                                                  AS BIGINT)), 0)
-                         FROM npc_script_orders
-                         WHERE CAST(round(o_totalprice * 100) AS BIGINT)
-                               <= mid);
-            IF below >= half THEN
-              SET hi = mid;
-            ELSE
-              SET lo = mid;
-            END IF;
-            SET i = i + 1;
-          END WHILE;
-          SELECT lo AS lo_cents, hi AS hi_cents,
-                 CAST(i AS BIGINT) AS n_iter;
-        END
-        """
-    )
+    return _bisect(spark, orders, "npc_script_orders")
 
 
 @register(
@@ -5478,34 +5511,32 @@ def q_sql_scripting(spark, sf_dir):
     """,
 )
 def q_sql_scripting_hist(spark, sf_dir):
-    """Production twin of ``q_sql_scripting``: the SAME 12-step
-    BEGIN/WHILE bisection script, but against a pre-aggregated cents
-    histogram instead of the raw orders table — 1 full scan instead of
-    12 at 100 TB. The histogram (``cents -> cnt``) is built once,
-    cached, and exposed as a temp view; every WHILE iteration's
-    ``below`` aggregate is then a metadata-sized in-memory scan of a
-    bounded frame (|distinct cents| <= the price-grid cardinality,
-    ~1e4 on TPC-H-shaped prices — an axis that does NOT grow with row
-    count). ``sum(cents*cnt)`` over the histogram is bit-identical to
+    """Production twin of ``q_sql_scripting``: the SAME bisection script
+    (``_BISECT_SCRIPT``), but against a pre-aggregated cents histogram
+    instead of the raw orders table — 1 full scan instead of 5 at
+    100 TB. The histogram (``cents -> cnt``) is built once, cached, and
+    exposed as a (cents, w = cents*cnt) temp view; every WHILE pass's
+    aggregate is then a metadata-sized in-memory scan of a bounded frame
+    (|distinct cents| <= the price-grid cardinality, ~1e4 on
+    TPC-H-shaped prices — an axis that does NOT grow with row count).
+    ``sum(cents*cnt)`` over the histogram is bit-identical to
     ``sum(cents)`` over orders, so the bisection trajectory — and the
-    final (lo, hi) bracket — equals the 12-scan key's exactly;
+    final (lo, hi) bracket — equals the scan key's exactly;
     tests/test_round14.py pins the two keys' results against each
     other the way the ``*_capped`` twins pin their audit tiers.
 
-    Scale: this is the plan the 12-scan key's docstring designs. The
-    histogram groupBy is the only data-sized shuffle; the 12 script
-    iterations cost O(distinct-cents) each against the cached frame,
-    independent of table size. At 1000 executors the cached histogram
-    is a few KB per core — the control loop becomes driver-latency
-    bound, which is the floor for any data-dependent loop.
+    Scale: the histogram groupBy is the only data-sized shuffle; the
+    script's passes cost O(distinct-cents) each against the cached
+    frame, independent of table size. At 1000 executors the cached
+    histogram is a few KB per core — the control loop becomes
+    driver-latency bound, which is the floor for any data-dependent
+    loop.
     """
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     # Shared, not cached per call: re-invocations (bench warm passes,
-    # sweep re-runs) must reuse the cached histogram — temp-view
-    # replacement does not unpersist the prior frame, so caching a NEW
+    # sweep re-runs) must reuse the cached histogram — caching a NEW
     # frame each call accumulated orphaned cache entries (round-14
-    # advice). Tiny bounded frame (price-grid axis): cached so the 12
-    # WHILE iterations hit memory, not the table scan.
+    # advice). Tiny bounded frame (price-grid axis): cached so the
+    # script's passes hit memory, not the table scan.
     hist = shared_frame(
         spark, sf_dir, "script_hist",
         lambda: load_table(spark, sf_dir, "orders")
@@ -5514,35 +5545,13 @@ def q_sql_scripting_hist(spark, sf_dir):
         )
         .agg(F.count("*").cast("long").alias("cnt")),
     )
-    hist.createOrReplaceTempView("npc_script_hist")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE lo BIGINT DEFAULT 0;
-          DECLARE hi BIGINT DEFAULT 0;
-          DECLARE mid BIGINT DEFAULT 0;
-          DECLARE below BIGINT DEFAULT 0;
-          DECLARE half BIGINT DEFAULT 0;
-          DECLARE i INT DEFAULT 0;
-          SET hi = (SELECT max(cents) FROM npc_script_hist);
-          SET half = (SELECT (sum(cents * cnt) + 1) DIV 2
-                      FROM npc_script_hist);
-          WHILE i < 12 DO
-            SET mid = (lo + hi) DIV 2;
-            SET below = (SELECT coalesce(sum(cents * cnt), 0)
-                         FROM npc_script_hist
-                         WHERE cents <= mid);
-            IF below >= half THEN
-              SET hi = mid;
-            ELSE
-              SET lo = mid;
-            END IF;
-            SET i = i + 1;
-          END WHILE;
-          SELECT lo AS lo_cents, hi AS hi_cents,
-                 CAST(i AS BIGINT) AS n_iter;
-        END
-        """
+    # The view is a projection OF the cached frame, so dropping it after
+    # the script leaves the histogram cached (only an exact plan match
+    # would be uncached with it).
+    return _bisect(
+        spark,
+        hist.select("cents", (F.col("cents") * F.col("cnt")).alias("w")),
+        "npc_script_hist",
     )
 
 

@@ -4,6 +4,10 @@ A key's first build may still infer each input file's parquet schema
 (once per process, session.read_parquet); a second build of the same key
 must fire zero jobs. LAZY_BUILD_KEYS lists the keys held to this; extend
 it as eager build-time jobs are removed from more keys.
+
+EAGER_BUILD_KEYS is the allowlist of keys whose build runs jobs by
+design, each with a written reason and a job budget for its first build,
+so a loop that goes back to more jobs per round fails here.
 """
 
 import pytest
@@ -20,6 +24,14 @@ LAZY_BUILD_KEYS = (
     "u_apply_in_pandas",
 )
 
+# {key: (max jobs on the first build at SF_SMALL, reason)}; each budget is
+# the count measured at local[8] plus 2.
+EAGER_BUILD_KEYS = {
+    "t_dup_clusters": (13, "convergence loop"),
+    "r_shortest_path": (21, "fixed-depth BFS, checkpointed per level"),
+    "q_sql_scripting": (19, "SQL script runs inside spark.sql()"),
+}
+
 
 @pytest.mark.parametrize("key", LAZY_BUILD_KEYS)
 def test_second_build_fires_no_job(spark, key):
@@ -27,4 +39,15 @@ def test_second_build_fires_no_job(spark, key):
     build(spark, SF_SMALL)
     df, jobs = jobs_fired(spark, lambda: build(spark, SF_SMALL))
     assert jobs == [], f"{key}: building fired jobs {jobs}"
+    assert df.columns
+
+
+@pytest.mark.parametrize("key", sorted(EAGER_BUILD_KEYS))
+def test_first_build_stays_in_job_budget(spark, key):
+    budget, reason = EAGER_BUILD_KEYS[key]
+    df, jobs = jobs_fired(spark, lambda: registry.QUERIES[key](spark, SF_SMALL))
+    assert len(jobs) <= budget, (
+        f"{key} ({reason}): first build fired {len(jobs)} jobs, "
+        f"budget {budget}"
+    )
     assert df.columns

@@ -25,10 +25,10 @@ def test_sql_scripting_hist_twin_equals_twelve_scan_key(spark):
 
 def test_sql_scripting_hist_caches_bounded_histogram(spark):
     """The twin's whole point is ONE data-sized scan: the cents histogram
-    temp view must be cached (so the 12 WHILE iterations hit memory) and
+    frame must be cached (so the script's passes hit memory) and
     bounded by the price grid, not the row count."""
     registry.QUERIES["q_sql_scripting_hist"](spark, SF_SMALL).collect()
-    hist = spark.table("npc_script_hist")
+    (hist,) = memo("script_hist").values()
     assert hist.storageLevel.useMemory
     n_orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").count()
     assert hist.count() <= n_orders  # grid-bounded, never wider than rows

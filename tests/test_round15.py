@@ -103,7 +103,8 @@ def test_script_scalar_sum_matches_raw_orders(spark):
     equality rests on — even when served from the memo."""
     from npc_recommender_netflix_spark.session import load_table
 
-    hist = spark.table("npc_script_hist")
+    registry.QUERIES["q_sql_scripting_hist"](spark, SF_SMALL)
+    (hist,) = memo("script_hist").values()
     h = hist.select(
         F.sum(F.col("cents") * F.col("cnt")).cast("long").alias("s")
     ).collect()[0]["s"]

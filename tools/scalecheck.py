@@ -556,13 +556,13 @@ ITERATIVE_KEYS = {
     "r_modularity": "lineitem",  # round 13 s2: 2 unrolled LPA rounds
     # over the shared edge frame + one label-keyed edge join; per-round
     # cost = frontier-incident edges (the r_pagerank bound)
-    "q_sql_scripting": "orders",  # round 13 s2: 12 bisection iterations,
-    # each ONE pushed-predicate aggregate scan — linear per iteration,
-    # iteration count fixed by the bracket width (data-independent)
+    "q_sql_scripting": "orders",  # 12 bisection steps, 3 per WHILE
+    # pass, each pass ONE aggregate scan — linear per pass, pass count
+    # fixed by the bracket width (data-independent)
     "q_sql_scripting_hist": "orders",  # round 14: production twin —
-    # ONE histogram groupBy is the only data-sized pass; the 12 WHILE
-    # steps scan the cached price-grid-bounded frame, so wall time
-    # should stay near-FLAT as orders grow (the 12-scan key's cost
+    # ONE histogram groupBy is the only data-sized pass; the WHILE
+    # passes scan the cached price-grid-bounded frame, so wall time
+    # should stay near-FLAT as orders grow (the scan key's cost
     # moves to the single shuffle)
     "r_katz_centrality": "lineitem",  # round 14: two degree-table joins
     # over the memoized edge frame — 2/3 of a PageRank's unrolled cost
