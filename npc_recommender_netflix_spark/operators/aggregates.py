@@ -10422,34 +10422,13 @@ def a_survival_rmst(spark, sf_dir):
     fold + windows on the calendar-bounded event-time axis); the
     integral adds one lag window and a 1-row sum.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    bounds = orders.agg(F.max("o_orderdate").alias("tmax"))
-    life = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.min("o_orderdate").alias("t0"),
-            F.max("o_orderdate").alias("t1"),
-        )
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            F.datediff(F.col("t1"), F.col("t0")).cast("long").alias("t"),
-            F.when(F.datediff(F.col("tmax"), F.col("t1")) > 90, 1)
-            .otherwise(0)
-            .alias("died"),
-        )
-    )
-    counts = life.groupBy("t").agg(
-        F.count("*").cast("long").alias("c"),
-        F.sum("died").cast("long").alias("d"),
-    )
-    w_rev = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    at_risk = counts.select(
-        "t", "d", F.sum("c").over(w_rev).alias("n")
-    )
+    # imported here: a module-level import would register modern's keys
+    # ahead of this module's and reorder the registry
+    from .modern import churn_lifetimes, churn_risk_set
+
+    life = churn_lifetimes(spark, sf_dir)
     w_fwd = Window.orderBy("t")
-    km = at_risk.where((F.col("d") > 0) & (F.col("d") < F.col("n"))).select(
+    km = churn_risk_set(life).select(
         "t",
         F.sum(
             F.round(F.log(1.0 - F.col("d") * 1.0 / F.col("n")) * 1e12).cast(
@@ -14059,31 +14038,9 @@ def a_nelson_aalen(spark, sf_dir):
     (map-side combinable), one reverse cumulative window over the
     calendar-bounded lifetime axis, no new data-sized pass.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    bounds = orders.agg(F.max("o_orderdate").alias("tmax"))
-    life = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.min("o_orderdate").alias("t0"),
-            F.max("o_orderdate").alias("t1"),
-        )
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            F.datediff(F.col("t1"), F.col("t0")).cast("long").alias("t"),
-            F.when(F.datediff(F.col("tmax"), F.col("t1")) > 90, 1)
-            .otherwise(0)
-            .alias("died"),
-        )
-    )
-    counts = life.groupBy("t").agg(
-        F.count("*").cast("long").alias("c"),
-        F.sum("died").cast("long").alias("d"),
-    )
-    w_rev = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    at_risk = counts.select("t", "d", F.sum("c").over(w_rev).alias("n"))
-    risk = at_risk.where((F.col("d") > 0) & (F.col("d") < F.col("n")))
+    from .modern import churn_lifetimes, churn_risk_set
+
+    risk = churn_risk_set(churn_lifetimes(spark, sf_dir))
     h12 = F.round(F.col("d") * 1e12 / F.col("n")).cast("long")
     log12 = F.round(
         F.log(1.0 - F.col("d") * 1.0 / F.col("n")) * 1e12
@@ -15083,31 +15040,9 @@ def a_greenwood_ci(spark, sf_dir):
     rollup + one reverse-cumulative window on the bounded lifetime
     axis; the extra column rides the same window.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    bounds = orders.agg(F.max("o_orderdate").alias("tmax"))
-    life = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.min("o_orderdate").alias("t0"),
-            F.max("o_orderdate").alias("t1"),
-        )
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            F.datediff(F.col("t1"), F.col("t0")).cast("long").alias("t"),
-            F.when(F.datediff(F.col("tmax"), F.col("t1")) > 90, 1)
-            .otherwise(0)
-            .alias("died"),
-        )
-    )
-    counts = life.groupBy("t").agg(
-        F.count("*").cast("long").alias("c"),
-        F.sum("died").cast("long").alias("d"),
-    )
-    w_rev = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    at_risk = counts.select("t", "d", F.sum("c").over(w_rev).alias("n"))
-    risk = at_risk.where((F.col("d") > 0) & (F.col("d") < F.col("n")))
+    from .modern import churn_lifetimes, churn_risk_set
+
+    risk = churn_risk_set(churn_lifetimes(spark, sf_dir))
     log12 = F.round(
         F.log(1.0 - F.col("d") * 1.0 / F.col("n")) * 1e12
     ).cast("long")

@@ -2186,6 +2186,43 @@ def q_join_hints(spark, sf_dir):
     )
 
 
+def churn_lifetimes(spark, sf_dir):
+    """One (t, died) row per customer: t is the lifetime in days from
+    first to last order; died = 1 when the last order precedes the data's
+    last order date by more than 90 days, else the customer is censored
+    at t. The one copy of this churn policy, shared by q_kaplan_meier,
+    a_survival_rmst, a_nelson_aalen and a_greenwood_ci.
+    """
+    orders = load_table(spark, sf_dir, "orders")
+    bounds = orders.agg(F.max("o_orderdate").alias("tmax"))
+    return (
+        orders.groupBy("o_custkey")
+        .agg(F.min("o_orderdate").alias("t0"), F.max("o_orderdate").alias("t1"))
+        .crossJoin(F.broadcast(bounds))
+        .select(
+            F.datediff(F.col("t1"), F.col("t0")).cast("long").alias("t"),
+            F.when(F.datediff(F.col("tmax"), F.col("t1")) > 90, 1)
+            .otherwise(0)
+            .alias("died"),
+        )
+    )
+
+
+def churn_risk_set(life):
+    """The survival table of ``churn_lifetimes`` at its event times: one
+    row (t, d, n) per lifetime t with d deaths among the n customers still
+    at risk, kept where 0 < d < n."""
+    counts = life.groupBy("t").agg(
+        F.count("*").cast("long").alias("c"),
+        F.sum("died").cast("long").alias("d"),
+    )
+    w_rev = Window.orderBy(F.col("t").desc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    at_risk = counts.select("t", "d", F.sum("c").over(w_rev).alias("n"))
+    return at_risk.where((F.col("d") > 0) & (F.col("d") < F.col("n")))
+
+
 @register(
     "q_kaplan_meier",
     """
@@ -2243,30 +2280,8 @@ def q_kaplan_meier(spark, sf_dir):
     trick) with one exp() per output row. The event-time axis is
     calendar-bounded at any order volume.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    bounds = orders.agg(F.max("o_orderdate").alias("tmax"))
-    life = (
-        orders.groupBy("o_custkey")
-        .agg(F.min("o_orderdate").alias("t0"), F.max("o_orderdate").alias("t1"))
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            F.datediff(F.col("t1"), F.col("t0")).cast("long").alias("t"),
-            F.when(F.datediff(F.col("tmax"), F.col("t1")) > 90, 1)
-            .otherwise(0)
-            .alias("died"),
-        )
-    )
-    counts = life.groupBy("t").agg(
-        F.count("*").cast("long").alias("c"),
-        F.sum("died").cast("long").alias("d"),
-    )
-    w_rev = Window.orderBy(F.col("t").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    at_risk = counts.select("t", "d", F.sum("c").over(w_rev).alias("n"))
-    risk = at_risk.where((F.col("d") > 0) & (F.col("d") < F.col("n")))
     log12 = F.round(F.log(1.0 - F.col("d") * 1.0 / F.col("n")) * 1e12).cast("long")
-    km = risk.select(
+    km = churn_risk_set(churn_lifetimes(spark, sf_dir)).select(
         "t", "d", "n", F.sum(log12).over(Window.orderBy("t")).alias("logs12")
     )
     return (

@@ -8,7 +8,10 @@ ONE lazy Catalyst plan instead of N disk-materialized MR jobs.
 
 Ratings proxy on the TPC-H-ish fixtures (SURVEY §2.8): implicit rating =
 sum(l_quantity) per (o_custkey "user", l_partkey "item") via orders⋈lineitem.
-The similarity pipeline restricts to item_id < 200 to keep the pair
+`interactions` is the one definition of a rating interaction and `split`
+the one holdout policy (orders with l_orderkey % 5 == 0 are held out);
+every evaluation key reads its train/holdout rows from them. The
+similarity pipeline restricts to item_id < 200 to keep the pair
 explosion bounded at test scale; at 100 TB you'd bound it instead by
 minhash-prefiltering or top-M-per-user sampling before the self-join, and
 the self-join shuffles on user_id (co-partitioned with the matrix).
@@ -37,6 +40,27 @@ def _cached(spark, sf_dir: str, name: str, build) -> DataFrame:
     # on r_adamic_adar at sf0.1. A cleared frame recomputes lazily per
     # consumer instead, which is cheaper at this fan-out.
     return shared_frame(spark, sf_dir, name, build, recache=False)
+
+
+def interactions(spark, sf_dir) -> DataFrame:
+    """The one definition of a rating interaction: each lineitem of an
+    order is a (user_id = o_custkey, item_id = l_partkey, qty = l_quantity)
+    event, tagged with its order key ``ok`` and order date ``od``. Lazy;
+    column pruning drops the columns a consumer does not read."""
+    orders, li = tables(spark, sf_dir, "orders", "lineitem")
+    return orders.join(li, orders.o_orderkey == li.l_orderkey).select(
+        F.col("o_custkey").alias("user_id"),
+        F.col("l_partkey").alias("item_id"),
+        F.col("l_quantity").alias("qty"),
+        F.col("l_orderkey").alias("ok"),
+        F.col("o_orderdate").alias("od"),
+    )
+
+
+def split(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The one holdout policy: an order with ``ok % 5 == 0`` is held out.
+    Returns ``(train_rows, hold_rows)`` of an ``interactions`` frame."""
+    return base.where(F.col("ok") % 5 != 0), base.where(F.col("ok") % 5 == 0)
 
 
 def ratings_matrix(spark, sf_dir, max_item: int | None = None) -> DataFrame:
@@ -368,23 +392,9 @@ def r_topn_recs(spark, sf_dir):
 )
 def r_rmse(spark, sf_dir):
     """Holdout evaluation: item-mean predictor RMSE on an orderkey%5 split."""
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-    )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("rating"))
-    )
-    hold = (
-        base.where(F.col("ok") % 5 == 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("rating"))
-    )
+    train_rows, hold_rows = split(interactions(spark, sf_dir))
+    train = train_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("rating"))
+    hold = hold_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("rating"))
     im = train.groupBy("item_id").agg(F.avg("rating").alias("mean_i"))
     g = train.agg(F.avg("rating").alias("gm"))
     err = (
@@ -444,34 +454,7 @@ def r_precision_at_k(spark, sf_dir):
     Popularity sums are FP-exact (integer quantities in doubles), rankings
     end in item_id, so the result is deterministic cross-engine.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-    )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("rating"))
-    )
-    hold = base.where(F.col("ok") % 5 == 0).select("user_id", "item_id").distinct()
-    pop = train.groupBy("item_id").agg(F.sum("rating").alias("pop"))
-    # top-k from the item catalog via orderBy().limit -> TakeOrderedAndProject
-    # (per-partition heap, no single-task catalog-wide window; identical rows
-    # to the old rn<=20 row_number form under the same (pop desc, id) order)
-    top20 = pop.orderBy(F.col("pop").desc(), "item_id").limit(20)
-    users = hold.select("user_id").distinct()
-    cand = users.crossJoin(F.broadcast(top20)).join(
-        train.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
-    )
-    wrec = Window.partitionBy("user_id").orderBy(F.col("pop").desc(), "item_id")
-    recs = (
-        cand.withColumn("rn", F.row_number().over(wrec))
-        .where(F.col("rn") <= 3)
-        .select("user_id", "item_id")
-    )
+    recs, hold = _rank_eval_recs(spark, sf_dir, 3)
     hits = (
         recs.alias("r")
         .join(
@@ -539,24 +522,11 @@ def r_baseline_bias(spark, sf_dir):
     back (item/user tables ≪ fact), one final avg. At 100 TB this is the
     shape ALS initialization uses; lambda controls cold-start shrinkage.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-    )
+    train_rows, hold_rows = split(interactions(spark, sf_dir))
     train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("r"))
-        .cache()
+        train_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("r")).cache()
     )
-    hold = (
-        base.where(F.col("ok") % 5 == 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("r"))
-    )
+    hold = hold_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("r"))
     g = train.agg((F.sum("r").cast("double") / F.count(F.lit(1))).alias("mu"))
     bi = (
         train.join(F.broadcast(g))
@@ -692,22 +662,13 @@ def _rank_eval_recs(spark, sf_dir, k: int):
 
     recs = top-k popularity recommendations per holdout user with their
     1-based rank, candidates anti-joined against the user's training items;
-    hold = the user's held-out (orderkey%5) items. Same split and candidate
-    policy as r_precision_at_k so the three eval metrics agree.
+    hold = the user's held-out (orderkey%5) items. r_precision_at_k (k=3),
+    r_ndcg (5), r_mrr (10) and r_map_at_k (5) all rank with it, so the
+    four eval metrics score the same recommendations.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-    )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("rating"))
-    )
-    hold = base.where(F.col("ok") % 5 == 0).select("user_id", "item_id").distinct()
+    train_rows, hold_rows = split(interactions(spark, sf_dir))
+    train = train_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("rating"))
+    hold = hold_rows.select("user_id", "item_id").distinct()
     pop = train.groupBy("item_id").agg(F.sum("rating").alias("pop"))
     # top-k from the item catalog via orderBy().limit -> TakeOrderedAndProject
     # (per-partition heap, no single-task catalog-wide window; identical rows
@@ -2477,33 +2438,7 @@ def r_map_at_k(spark, sf_dir):
     axis sharing the user_id partitioning; precisions are exact-integer
     ratios summed then divided once under the 6dp snap.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-    )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("rating"))
-    )
-    hold = base.where(F.col("ok") % 5 == 0).select("user_id", "item_id").distinct()
-    pop = train.groupBy("item_id").agg(F.sum("rating").alias("pop"))
-    # TakeOrderedAndProject top-20 (see _rank_eval_recs: no catalog-wide window)
-    top20 = pop.orderBy(F.col("pop").desc(), "item_id").limit(20)
-    users = hold.select("user_id").distinct()
-    cand = (
-        users.crossJoin(F.broadcast(top20))
-        .join(train.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti")
-    )
-    w_rec = Window.partitionBy("user_id").orderBy(F.col("pop").desc(), "item_id")
-    recs = (
-        cand.withColumn("rn", F.row_number().over(w_rec).cast("long"))
-        .where(F.col("rn") <= 5)
-        .select("user_id", "item_id", "rn")
-    )
+    recs, hold = _rank_eval_recs(spark, sf_dir, 5)
     hn = hold.groupBy("user_id").agg(F.count("*").cast("long").alias("holdout_n"))
     flags = recs.join(
         hold.withColumn("rel1", F.lit(1)), ["user_id", "item_id"], "left"
@@ -2969,19 +2904,12 @@ def r_auc(spark, sf_dir):
     per-user AUCs (exact in doubles at 1e-6 granularity). Evaluation
     users are a 1/59 deterministic sample, scale-proportional.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
+    base = interactions(spark, sf_dir).withColumn("qty", F.col("qty").cast("long"))
+    train_rows, hold_rows = split(base)
+    train = train_rows.groupBy("user_id", "item_id").agg(
+        F.sum("qty").cast("long").alias("rating")
     )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").cast("long").alias("rating"))
-    )
-    hold = base.where(F.col("ok") % 5 == 0).select("user_id", "item_id").distinct()
+    hold = hold_rows.select("user_id", "item_id").distinct()
     pop = train.groupBy("item_id").agg(
         F.sum("rating").cast("long").alias("score")
     )
@@ -3097,22 +3025,13 @@ def r_calibration_bins(spark, sf_dir):
     tables join onto the holdout in one pass; the rollup is a ≤10-key
     aggregate. Same orderkey%5 split as the rest of the eval family.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
+    base = interactions(spark, sf_dir).withColumn("qty", F.col("qty").cast("long"))
+    train_rows, hold_rows = split(base)
+    train = train_rows.groupBy("user_id", "item_id").agg(
+        F.sum("qty").cast("long").alias("r")
     )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").cast("long").alias("r"))
-    )
-    hold = (
-        base.where(F.col("ok") % 5 == 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").cast("long").alias("actual"))
+    hold = hold_rows.groupBy("user_id", "item_id").agg(
+        F.sum("qty").cast("long").alias("actual")
     )
     mu = train.agg(
         F.round(F.avg("r") * 1e6).cast("long").alias("mu6")
@@ -3208,23 +3127,14 @@ def r_ips_eval(spark, sf_dir):
     the holdout clicks + a single-row census — linear at any scale,
     same orderkey%5 split as the rest of the eval family.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").cast("long").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-    )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("item_id")
-        .agg(F.sum("qty").cast("long").alias("pop"))
-    )
+    base = interactions(spark, sf_dir).withColumn("qty", F.col("qty").cast("long"))
+    train_rows, hold_rows = split(base)
+    train = train_rows.groupBy("item_id").agg(F.sum("qty").cast("long").alias("pop"))
     tot = train.agg(
         F.sum("pop").cast("long").alias("s"),
         F.count("*").cast("long").alias("c"),
     )
-    clicks = base.where(F.col("ok") % 5 == 0).select("user_id", "item_id").distinct()
+    clicks = hold_rows.select("user_id", "item_id").distinct()
     wtd = (
         clicks.join(train, "item_id")
         .crossJoin(F.broadcast(tot))
@@ -3489,23 +3399,9 @@ def r_rmse_by_activity(spark, sf_dir):
     (reduction-order-free RMSE); activity tiering is one extra
     broadcast-scale aggregate joined user-keyed.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-    )
-    train = (
-        base.where(F.col("ok") % 5 != 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("rating"))
-    )
-    hold = (
-        base.where(F.col("ok") % 5 == 0)
-        .groupBy("user_id", "item_id")
-        .agg(F.sum("qty").alias("rating"))
-    )
+    train_rows, hold_rows = split(interactions(spark, sf_dir))
+    train = train_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("rating"))
+    hold = hold_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("rating"))
     activity = train.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_train")
     )
@@ -4221,21 +4117,10 @@ def r_temporal_split_rmse(spark, sf_dir):
     CHEAPER than the random one there — there is no efficiency excuse
     for leaking time.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    base = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_orderkey").alias("ok"),
-        F.col("o_orderdate").alias("od"),
-    )
+    base = interactions(spark, sf_dir)
 
-    def rated(pred):
-        return (
-            base.where(pred)
-            .groupBy("user_id", "item_id")
-            .agg(F.sum("qty").alias("rating"))
-        )
+    def rated(rows):
+        return rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("rating"))
 
     def eval_split(name, train, hold):
         im = train.groupBy("item_id").agg(F.avg("rating").alias("mean_i"))
@@ -4264,11 +4149,12 @@ def r_temporal_split_rmse(spark, sf_dir):
         )
 
     cut = F.lit("2000-06-01").cast("date")
-    return eval_split(
-        "random", rated(F.col("ok") % 5 != 0), rated(F.col("ok") % 5 == 0)
-    ).unionByName(
+    train, hold = split(base)
+    return eval_split("random", rated(train), rated(hold)).unionByName(
         eval_split(
-            "temporal", rated(F.col("od") < cut), rated(F.col("od") >= cut)
+            "temporal",
+            rated(base.where(F.col("od") < cut)),
+            rated(base.where(F.col("od") >= cut)),
         )
     ).orderBy("split")
 

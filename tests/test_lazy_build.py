@@ -22,6 +22,23 @@ LAZY_BUILD_KEYS = (
     "w_sessionize",
     "a_theil_sen",
     "u_apply_in_pandas",
+    # CF evaluation keys built from core.interactions / core.split
+    "r_rmse",
+    "r_precision_at_k",
+    "r_baseline_bias",
+    "r_ndcg",
+    "r_mrr",
+    "r_map_at_k",
+    "r_auc",
+    "r_calibration_bins",
+    "r_ips_eval",
+    "r_rmse_by_activity",
+    "r_temporal_split_rmse",
+    # survival keys built from modern.churn_lifetimes / churn_risk_set
+    "q_kaplan_meier",
+    "a_survival_rmst",
+    "a_nelson_aalen",
+    "a_greenwood_ci",
 )
 
 # {key: (max jobs on the first build at SF_SMALL, reason)}; each budget is
