@@ -10,6 +10,20 @@ query set is tiny — it's a broadcast of Q against a scan of N).
 centroids) prunes the candidate set to one cell before scoring — the IVF
 pattern; on 100 TB you'd store vectors bucketed by cell id so the probe is
 a partition-pruned scan, and generate cells with KMeans instead of labels.
+
+Each retrieval stage has one owner here, and every key that uses the
+stage is built on it (the oracle SQL twins sit beside each owner):
+- sign-band LSH candidates and their exact rescore: `_fixed_bands` /
+  `_adaptive_bands` -> `_band_pairs` -> `_rescored` (v_embed_neardup_lsh,
+  v_lsh_multiprobe, `_banded_scored_pairs`, `_band_knn_adj`);
+- IVF cell routing: `_label_centroids` + `_route` (v_ann_ivf and
+  v_ann_ivf_nprobe through `_ivf_topk`, v_ivf_ingest_assign,
+  v_recall_cost_frontier, v_centroid_outliers);
+- the greedy rerank pair matrix: `_rerank_pairs` (v_rerank_mmr,
+  v_kcenter_rerank);
+- the kNN base graph: `_band_knn_adj` / `_nsw_adj8` (v_nsw_greedy,
+  v_hnsw_layered, v_graph_reachability, which runs its BFS on
+  recommender.graph's `_bfs_levels`).
 """
 
 from __future__ import annotations
@@ -17,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..recommender.graph import _bfs_levels
 from ..registry import register
 from ..session import f6, load_table, shared_frame
 
@@ -330,19 +345,22 @@ _LSH_STRICT_BANDS_SQL = "\n        UNION ALL ".join(
 )
 
 
-@register(
-    "v_embed_neardup_lsh",
-    f"""
-    WITH bands AS (
-        {_LSH_BANDS_SQL}
-    ),
-    cand AS (
+# --- Sign-band LSH candidates and their exact rescore -----------------
+# One owner for the retrieval front of v_embed_neardup_lsh,
+# v_lsh_multiprobe, _banded_scored_pairs and _band_knn_adj. Callers pick
+# the bucket family (fixed 4-bit or in-plan nbits), any extra probes, the
+# pair predicate and the output id names.
+
+# Oracle twins of _band_pairs + _rescored for the unordered vec_a < vec_b
+# pair keys, spliced into each oracle as whole CTEs.
+_LSH_CAND_SQL = """cand AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
         GROUP BY 1, 2
-    ),
-    scored AS (
+    )"""
+
+_LSH_SCORED_SQL = f"""scored AS (
         SELECT c.vec_a, c.vec_b,
                round({_DUCK_DOT.format(a='qa.embedding', b='qb.embedding')}
                      / ({_DUCK_NRM.format(a='qa.embedding')}
@@ -350,7 +368,98 @@ _LSH_STRICT_BANDS_SQL = "\n        UNION ALL ".join(
         FROM cand c
         JOIN embeddings qa ON qa.vec_id = c.vec_a
         JOIN embeddings qb ON qb.vec_id = c.vec_b
+    )"""
+
+def _sign_bands(rows, bucket_sql) -> DataFrame:
+    """(vec_id, band, bucket) for the 4 sign bands of each row of
+    ``rows``; ``bucket_sql(b)`` is band b's bucket SQL over its columns."""
+    band_struct = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), F.expr(bucket_sql(b)).alias("bucket"))
+            for b in range(4)
+        ]
     )
+    return rows.select("vec_id", F.explode(band_struct).alias("bb")).select(
+        "vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
+
+
+def _fixed_bands(emb) -> DataFrame:
+    """4 bands x 4 sign bits over the first 16 dims (_LSH_BANDS_SQL)."""
+    return _sign_bands(
+        emb, lambda b: _sign_bucket_sql(b, elem="element_at(embedding, {i})")
+    )
+
+
+def _adaptive_bands(rows) -> DataFrame:
+    """4 bands x 16 sign bits masked to nbits = clamp(ceil(log2 N), 4, 16)
+    low bits, N = count(rows) computed in-plan (_LSH_STRICT_BANDS_SQL)."""
+    params = rows.agg(
+        F.least(
+            F.lit(16),
+            F.greatest(F.lit(4), F.ceil(F.log2(F.count(F.lit(1))) - 1e-9)),
+        )
+        .cast("int")
+        .alias("nbits")
+    )
+    return _sign_bands(
+        rows.crossJoin(F.broadcast(params)),
+        lambda b: _sign_bucket_wide_sql(b, 16, elem="element_at(embedding, {i})")
+        + " % (CAST(1 AS BIGINT) << nbits)",
+    )
+
+
+def _band_pairs(probes, bands, ids, keep, probe_bucket="bucket") -> DataFrame:
+    """Distinct candidate pairs ``ids`` = (probe vec_id, band vec_id) that
+    share a (band, bucket), kept where ``keep(a.vec_id, b.vec_id)``."""
+    a, b = probes.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col(f"a.{probe_bucket}") == F.col("b.bucket"))
+            & keep(F.col("a.vec_id"), F.col("b.vec_id")),
+        )
+        .select(F.col("a.vec_id").alias(ids[0]), F.col("b.vec_id").alias(ids[1]))
+        .distinct()
+    )
+
+
+def _normed_join(pairs, emb, x, y) -> DataFrame:
+    """``pairs`` joined on its id columns ``x`` and ``y`` to each side's
+    embedding (ea, eb) and L2 norm (na, nb). Each norm is folded once per
+    vector (O(N)), not per pair: Catalyst can evaluate a pair expression
+    twice (a filter pushed into the join keeps the projection too), so
+    only the dot fold (_side_cos) is left per pair."""
+
+    def side(id_col, e, n):
+        return emb.select(
+            F.col("vec_id").alias(id_col),
+            F.col("embedding").alias(e),
+            F.expr(_NRM.format(a="embedding")).alias(n),
+        )
+
+    return pairs.join(side(x, "ea", "na"), x).join(side(y, "eb", "nb"), y)
+
+
+def _side_cos():
+    """Cosine of a _normed_join row, in the oracle's dot/(na*nb) order."""
+    return F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
+
+
+def _rescored(pairs, emb, x, y) -> DataFrame:
+    """(x, y, cos): each candidate pair's exact cosine, rounded 6dp."""
+    return _normed_join(pairs, emb, x, y).select(x, y, f6(_side_cos()).alias("cos"))
+
+
+@register(
+    "v_embed_neardup_lsh",
+    f"""
+    WITH bands AS (
+        {_LSH_BANDS_SQL}
+    ),
+    {_LSH_CAND_SQL},
+    {_LSH_SCORED_SQL}
     SELECT vec_a, vec_b, cos FROM scored WHERE cos >= 0.35
     """,
 )
@@ -374,53 +483,9 @@ def v_embed_neardup_lsh(spark, sf_dir):
     rescore in DuckDB, so correctness covers prefilter AND rescore.
     """
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(
-                    _sign_bucket_sql(b, elem="element_at(embedding, {i})")
-                ).alias("bucket"),
-            )
-            for b in range(4)
-        ]
-    )
-    bands = emb.select("vec_id", F.explode(band_struct).alias("bb")).select(
-        "vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    # Precompute each vector's norm ONCE (O(N) folds) instead of inside the
-    # per-candidate cosine (O(candidates) folds x2: Catalyst pushes the
-    # >= 0.35 filter into the join condition AND keeps the projection, so
-    # whatever sits in `cos` is evaluated twice per candidate — keep only
-    # the unavoidable dot fold there).
-    qa = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.expr(_NRM.format(a="embedding")).alias("na"),
-    )
-    qb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.expr(_NRM.format(a="embedding")).alias("nb"),
-    )
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(qa, "vec_a")
-        .join(qb, "vec_b")
-        .select("vec_a", "vec_b", f6(cos).alias("cos"))
-        .where(F.col("cos") >= 0.35)
-    )
+    bands = _fixed_bands(emb)
+    cand = _band_pairs(bands, bands, ("vec_a", "vec_b"), lambda a, b: a < b)
+    return _rescored(cand, emb, "vec_a", "vec_b").where(F.col("cos") >= 0.35)
 
 
 @register(
@@ -430,21 +495,8 @@ def v_embed_neardup_lsh(spark, sf_dir):
     bands AS (
         {_LSH_STRICT_BANDS_SQL}
     ),
-    cand AS (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-        GROUP BY 1, 2
-    ),
-    scored AS (
-        SELECT c.vec_a, c.vec_b,
-               round({_DUCK_DOT.format(a='qa.embedding', b='qb.embedding')}
-                     / ({_DUCK_NRM.format(a='qa.embedding')}
-                        * {_DUCK_NRM.format(a='qb.embedding')}), 6) + 0 AS cos
-        FROM cand c
-        JOIN embeddings qa ON qa.vec_id = c.vec_a
-        JOIN embeddings qb ON qb.vec_id = c.vec_b
-    )
+    {_LSH_CAND_SQL},
+    {_LSH_SCORED_SQL}
     SELECT vec_a, vec_b, cos FROM scored WHERE cos >= 0.9
     """,
 )
@@ -485,60 +537,9 @@ def _banded_scored_pairs(spark, sf_dir) -> DataFrame:
     construction so the band rule can't silently diverge between the
     production dedup key and its sensitivity curve."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    params = emb.agg(
-        F.least(
-            F.lit(16),
-            F.greatest(F.lit(4), F.ceil(F.log2(F.count(F.lit(1))) - 1e-9)),
-        )
-        .cast("int")
-        .alias("nbits")
-    )
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(
-                    _sign_bucket_wide_sql(b, 16, elem="element_at(embedding, {i})")
-                    + " % (CAST(1 AS BIGINT) << nbits)"
-                ).alias("bucket"),
-            )
-            for b in range(4)
-        ]
-    )
-    bands = (
-        emb.crossJoin(F.broadcast(params))
-        .select("vec_id", F.explode(band_struct).alias("bb"))
-        .select(
-            "vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    qa = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.expr(_NRM.format(a="embedding")).alias("na"),
-    )
-    qb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.expr(_NRM.format(a="embedding")).alias("nb"),
-    )
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(qa, "vec_a")
-        .join(qb, "vec_b")
-        .select("vec_a", "vec_b", f6(cos).alias("cos"))
-    )
+    bands = _adaptive_bands(emb)
+    cand = _band_pairs(bands, bands, ("vec_a", "vec_b"), lambda a, b: a < b)
+    return _rescored(cand, emb, "vec_a", "vec_b")
 
 
 @register(
@@ -716,15 +717,20 @@ def v_semantic_dedup_capped(spark, sf_dir):
     )
 
 
-@register(
-    "v_ann_ivf",
-    f"""
-    WITH cent AS (
+# --- IVF cell routing -------------------------------------------------
+# One owner for the coarse quantizer of v_ann_ivf, v_ann_ivf_nprobe,
+# v_ivf_ingest_assign, v_recall_cost_frontier and v_centroid_outliers:
+# per-label centroids (labels x 64 rows, broadcast at any corpus size)
+# and the query -> centroid cosine with its rank.
+
+# Oracle twins of _label_centroids and _route for queries 0-2.
+_IVF_CENT_SQL = """cent AS (
         SELECT e.label, t.i AS i, avg(CAST(e.embedding[t.i] AS DOUBLE)) AS cv
         FROM embeddings e CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t
         GROUP BY e.label, t.i
-    ),
-    qcomp AS (
+    )"""
+
+_IVF_ROUTE_SQL = """qcomp AS (
         SELECT q.vec_id AS query_id, t.i AS i, CAST(q.embedding[t.i] AS DOUBLE) AS qv
         FROM embeddings q CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t
         WHERE q.vec_id IN (0, 1, 2)
@@ -736,7 +742,78 @@ def v_semantic_dedup_capped(spark, sf_dir):
                    + 0 AS ccos
         FROM qcomp JOIN cent ON qcomp.i = cent.i
         GROUP BY 1, 2
-    ),
+    )"""
+
+
+def _label_centroids(rows) -> DataFrame:
+    """(label, pos, cv): each label's mean embedding component over rows."""
+    return (
+        rows.select("label", F.posexplode("embedding").alias("pos", "v"))
+        .groupBy("label", "pos")
+        .agg(F.avg(F.col("v").cast("double")).alias("cv"))
+    )
+
+
+def _route(queries, cent, qid, rank) -> DataFrame:
+    """(qid, label, ccos, rank): the 6dp cosine of each query row's
+    embedding to every centroid of ``cent``, and the cell's rank by it
+    per query (ccos desc, label asc)."""
+    qcomp = queries.select(
+        F.col("vec_id").alias(qid), F.posexplode("embedding").alias("pos", "qv")
+    ).withColumn("qv", F.col("qv").cast("double"))
+    bw = Window.partitionBy(qid).orderBy(F.col("ccos").desc(), F.col("label"))
+    return (
+        qcomp.join(F.broadcast(cent), "pos")
+        .groupBy(qid, "label")
+        .agg(
+            f6(
+                F.sum(F.col("qv") * F.col("cv"))
+                / (
+                    F.sqrt(F.sum(F.col("qv") * F.col("qv")))
+                    * F.sqrt(F.sum(F.col("cv") * F.col("cv")))
+                )
+            ).alias("ccos")
+        )
+        .withColumn(rank, F.row_number().over(bw))
+    )
+
+
+def _ivf_topk(spark, sf_dir, nprobe) -> DataFrame:
+    """IVF top-5 for queries 0-2: route each query to its ``nprobe``
+    nearest cells, then exact-score only the candidates inside them
+    (v_ann_ivf's prune-before-score plan)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id").isin(0, 1, 2))
+    best = (
+        _route(queries, _label_centroids(emb), "query_id", "rn")
+        .where(F.col("rn") <= nprobe)
+        .select("query_id", F.col("label").alias("probe_label"))
+    )
+    cand = emb.select(
+        F.col("vec_id").alias("cand_id"), F.col("label"), F.col("embedding").alias("ce")
+    )
+    probed = cand.join(F.broadcast(best), cand.label == F.col("probe_label"))
+    q = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"))
+    joined = probed.join(F.broadcast(q), F.col("query_id") == F.col("qid")).where(
+        F.col("cand_id") != F.col("query_id")
+    )
+    cos = F.expr(_DOT.format(a="qe", b="ce")) / (
+        F.expr(_NRM.format(a="qe")) * F.expr(_NRM.format(a="ce"))
+    )
+    scored = joined.select("query_id", "probe_label", "cand_id", f6(cos).alias("cos"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("long"))
+        .where(F.col("rn") <= 5)
+        .select("query_id", "probe_label", "cand_id", "cos", "rn")
+    )
+
+
+@register(
+    "v_ann_ivf",
+    f"""
+    WITH {_IVF_CENT_SQL},
+    {_IVF_ROUTE_SQL},
     best AS (
         SELECT query_id, label AS probe_label FROM (
             SELECT *, row_number() OVER (PARTITION BY query_id
@@ -767,61 +844,7 @@ def v_ann_ivf(spark, sf_dir):
     routes on r_kmeans clusters) and vectors are stored partitioned by cell
     id so the probe is a partition-pruned scan.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("v").cast("double")).alias("cv"))
-    )
-    qcomp = (
-        emb.where(F.col("vec_id").isin(0, 1, 2))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode("embedding").alias("pos", "qv"),
-        )
-        .withColumn("qv", F.col("qv").cast("double"))
-    )
-    qc = (
-        qcomp.join(F.broadcast(cent), "pos")
-        .groupBy("query_id", "label")
-        .agg(
-            f6(
-                F.sum(F.col("qv") * F.col("cv"))
-                / (
-                    F.sqrt(F.sum(F.col("qv") * F.col("qv")))
-                    * F.sqrt(F.sum(F.col("cv") * F.col("cv")))
-                )
-            ).alias("ccos")
-        )
-    )
-    bw = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("label"))
-    best = (
-        qc.withColumn("rn", F.row_number().over(bw))
-        .where(F.col("rn") == 1)
-        .select("query_id", F.col("label").alias("probe_label"))
-    )
-    # prune first: only candidates inside each query's probed cell survive
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"), F.col("label"), F.col("embedding").alias("ce")
-    )
-    probed_cand = cand.join(F.broadcast(best), cand.label == F.col("probe_label"))
-    q = emb.where(F.col("vec_id").isin(0, 1, 2)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    joined = probed_cand.join(F.broadcast(q), F.col("query_id") == F.col("qid")).where(
-        F.col("cand_id") != F.col("query_id")
-    )
-    # ...and only then score the surviving (query, candidate) pairs
-    cos = F.expr(_DOT.format(a="qe", b="ce")) / (
-        F.expr(_NRM.format(a="qe")) * F.expr(_NRM.format(a="ce"))
-    )
-    scored = joined.select("query_id", "probe_label", "cand_id", f6(cos).alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "probe_label", "cand_id", "cos", "rn")
-    )
+    return _ivf_topk(spark, sf_dir, 1)
 
 
 @register("v_lsh_neardup")  # rows-only: LSH bucketing is MLlib-internal
@@ -1161,24 +1184,8 @@ def v_cluster_balance(spark, sf_dir):
 @register(
     "v_ann_ivf_nprobe",
     f"""
-    WITH cent AS (
-        SELECT e.label, t.i AS i, avg(CAST(e.embedding[t.i] AS DOUBLE)) AS cv
-        FROM embeddings e CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t
-        GROUP BY e.label, t.i
-    ),
-    qcomp AS (
-        SELECT q.vec_id AS query_id, t.i AS i, CAST(q.embedding[t.i] AS DOUBLE) AS qv
-        FROM embeddings q CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t
-        WHERE q.vec_id IN (0, 1, 2)
-    ),
-    qc AS (
-        SELECT qcomp.query_id, cent.label,
-               round(sum(qcomp.qv * cent.cv)
-                     / (sqrt(sum(qcomp.qv * qcomp.qv)) * sqrt(sum(cent.cv * cent.cv))), 6)
-                   + 0 AS ccos
-        FROM qcomp JOIN cent ON qcomp.i = cent.i
-        GROUP BY 1, 2
-    ),
+    WITH {_IVF_CENT_SQL},
+    {_IVF_ROUTE_SQL},
     best2 AS (
         SELECT query_id, label AS probe_label FROM (
             SELECT *, row_number() OVER (PARTITION BY query_id
@@ -1206,59 +1213,7 @@ def v_ann_ivf_nprobe(spark, sf_dir):
     BEFORE the cosine projection, so scoring touches ~2/n_cells of the
     data; ranking spans the union of both cells' candidates.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("v").cast("double")).alias("cv"))
-    )
-    qcomp = (
-        emb.where(F.col("vec_id").isin(0, 1, 2))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode("embedding").alias("pos", "qv"),
-        )
-        .withColumn("qv", F.col("qv").cast("double"))
-    )
-    qc = (
-        qcomp.join(F.broadcast(cent), "pos")
-        .groupBy("query_id", "label")
-        .agg(
-            f6(
-                F.sum(F.col("qv") * F.col("cv"))
-                / (
-                    F.sqrt(F.sum(F.col("qv") * F.col("qv")))
-                    * F.sqrt(F.sum(F.col("cv") * F.col("cv")))
-                )
-            ).alias("ccos")
-        )
-    )
-    bw = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("label"))
-    best2 = (
-        qc.withColumn("rn", F.row_number().over(bw))
-        .where(F.col("rn") <= 2)
-        .select("query_id", F.col("label").alias("probe_label"))
-    )
-    cand = emb.select(
-        F.col("vec_id").alias("cand_id"), F.col("label"), F.col("embedding").alias("ce")
-    )
-    probed = cand.join(F.broadcast(best2), cand.label == F.col("probe_label"))
-    q = emb.where(F.col("vec_id").isin(0, 1, 2)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-    )
-    joined = probed.join(F.broadcast(q), F.col("query_id") == F.col("qid")).where(
-        F.col("cand_id") != F.col("query_id")
-    )
-    cos = F.expr(_DOT.format(a="qe", b="ce")) / (
-        F.expr(_NRM.format(a="qe")) * F.expr(_NRM.format(a="ce"))
-    )
-    scored = joined.select("query_id", "cand_id", f6(cos).alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "cand_id", "cos", "rn")
-    )
+    return _ivf_topk(spark, sf_dir, 2).drop("probe_label")
 
 
 @register(
@@ -2771,15 +2726,7 @@ _PROBES_SQL = "\n        UNION ALL ".join(
          AND a.vec_id < b.vec_id
         GROUP BY 1, 2
     ),
-    scored AS (
-        SELECT c.vec_a, c.vec_b,
-               round({_DUCK_DOT.format(a='qa.embedding', b='qb.embedding')}
-                     / ({_DUCK_NRM.format(a='qa.embedding')}
-                        * {_DUCK_NRM.format(a='qb.embedding')}), 6) + 0 AS cos
-        FROM cand c
-        JOIN embeddings qa ON qa.vec_id = c.vec_a
-        JOIN embeddings qb ON qb.vec_id = c.vec_b
-    )
+    {_LSH_SCORED_SQL}
     SELECT vec_a, vec_b, cos FROM scored WHERE cos >= 0.35
     """,
 )
@@ -2803,20 +2750,7 @@ def v_lsh_multiprobe(spark, sf_dir):
     cosine. The oracle mirrors probes and rescore end to end.
     """
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(
-                    _sign_bucket_sql(b, elem="element_at(embedding, {i})")
-                ).alias("bucket"),
-            )
-            for b in range(4)
-        ]
-    )
-    bands = emb.select("vec_id", F.explode(band_struct).alias("bb")).select(
-        "vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
+    bands = _fixed_bands(emb)
     probes = bands.select("vec_id", "band", F.col("bucket").alias("pbucket"))
     for flip in _MULTIPROBE_FLIPS:
         probes = probes.unionByName(
@@ -2824,34 +2758,10 @@ def v_lsh_multiprobe(spark, sf_dir):
                 "vec_id", "band", F.expr(f"bucket ^ {flip}").alias("pbucket")
             )
         )
-    a, b = probes.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.pbucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
+    cand = _band_pairs(
+        probes, bands, ("vec_a", "vec_b"), lambda a, b: a < b, probe_bucket="pbucket"
     )
-    qa = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.expr(_NRM.format(a="embedding")).alias("na"),
-    )
-    qb = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.expr(_NRM.format(a="embedding")).alias("nb"),
-    )
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(qa, "vec_a")
-        .join(qb, "vec_b")
-        .select("vec_a", "vec_b", f6(cos).alias("cos"))
-        .where(F.col("cos") >= 0.35)
-    )
+    return _rescored(cand, emb, "vec_a", "vec_b").where(F.col("cos") >= 0.35)
 
 
 @register(
@@ -3426,6 +3336,55 @@ def v_hybrid_retrieval_overlap(spark, sf_dir):
 # clamp(ceil(log2 N), 4, 16) computed IN-PLAN keeps candidates O(N).
 _NSW_BANDS_SQL = _LSH_STRICT_BANDS_SQL
 
+# Oracle twins of _band_knn_adj's stages, spliced into the graph keys'
+# oracles as whole CTEs: candidates from one bands CTE, their exact
+# cosines, and the per-src degree cap.
+_KNN_CAND_SQL = """{name} AS (
+        SELECT a.vec_id AS src, b.vec_id AS dst
+        FROM {bands} a JOIN {bands} b
+          ON a.band = b.band AND a.bucket = b.bucket
+         AND a.vec_id <> b.vec_id
+        GROUP BY 1, 2
+    )"""
+
+_KNN_COS_SQL = f"""SELECT c.src, c.dst,
+               round({_DUCK_DOT.format(a='e1.embedding', b='e2.embedding')}
+                     / ({_DUCK_NRM.format(a='e1.embedding')}
+                        * {_DUCK_NRM.format(a='e2.embedding')}), 6) + 0
+                   AS cos
+        FROM {{cand}} c
+        JOIN embeddings e1 ON e1.vec_id = c.src
+        JOIN embeddings e2 ON e2.vec_id = c.dst"""
+
+_KNN_ADJ_SQL = """{name} AS (
+        SELECT src, dst FROM (
+            SELECT src, dst,
+                   row_number() OVER (PARTITION BY src
+                                      ORDER BY cos DESC, dst) AS rn
+            FROM {cosd}
+        ) WHERE rn <= {degree}
+    )"""
+
+# The graph walk keys' ground truth: the 6dp query cosines of queries
+# 0-2 (the oracle twin of _qcos_012) and their true brute-force ranks.
+_WALK_QCOS_SQL = f"""qcos AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+               round({_DUCK_DOT.format(a='q.embedding', b='c.embedding')}
+                     / ({_DUCK_NRM.format(a='q.embedding')}
+                        * {_DUCK_NRM.format(a='c.embedding')}), 6) + 0
+                   AS cos
+        FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+        WHERE q.vec_id IN (0, 1, 2)
+    )"""
+
+_WALK_RANKS_SQL = """ranks AS (
+        SELECT query_id, cand_id, cos,
+               CAST(row_number() OVER (PARTITION BY query_id
+                                       ORDER BY cos DESC, cand_id)
+                    AS BIGINT) AS true_rank
+        FROM qcos
+    )"""
+
 _NSW_HOP_SQL = """
     h{next} AS (
         SELECT query_id, cand AS cur FROM (
@@ -3453,72 +3412,9 @@ def _band_knn_adj(spark, sf_dir, node_pred, degree) -> DataFrame:
     exact 6dp cosine rescore, one per-src WindowGroupLimit."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     sub = emb.where(node_pred) if node_pred is not None else emb
-    params = sub.agg(
-        F.least(
-            F.lit(16),
-            F.greatest(F.lit(4), F.ceil(F.log2(F.count(F.lit(1))) - 1e-9)),
-        )
-        .cast("int")
-        .alias("nbits")
-    )
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(
-                    _sign_bucket_wide_sql(
-                        b, 16, elem="element_at(embedding, {i})"
-                    )
-                    + " % (CAST(1 AS BIGINT) << nbits)"
-                ).alias("bucket"),
-            )
-            for b in range(4)
-        ]
-    )
-    bands = (
-        sub.crossJoin(F.broadcast(params))
-        .select("vec_id", F.explode(band_struct).alias("bb"))
-        .select(
-            "vec_id",
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-        .distinct()
-    )
-    e1 = sub.select(
-        F.col("vec_id").alias("src"),
-        F.col("embedding").alias("ea"),
-        F.expr(_NRM.format(a="embedding")).alias("na"),
-    )
-    e2 = sub.select(
-        F.col("vec_id").alias("dst"),
-        F.col("embedding").alias("eb"),
-        F.expr(_NRM.format(a="embedding")).alias("nb"),
-    )
-    cosd = (
-        cand.join(e1, "src")
-        .join(e2, "dst")
-        .select(
-            "src",
-            "dst",
-            f6(
-                F.expr(_DOT.format(a="ea", b="eb"))
-                / (F.col("na") * F.col("nb"))
-            ).alias("cos"),
-        )
-    )
+    bands = _adaptive_bands(sub)
+    cand = _band_pairs(bands, bands, ("src", "dst"), lambda a, b: a != b)
+    cosd = _rescored(cand, sub, "src", "dst")
     wadj = Window.partitionBy("src").orderBy(F.col("cos").desc(), "dst")
     return (
         cosd.withColumn("rn", F.row_number().over(wadj))
@@ -3529,12 +3425,25 @@ def _band_knn_adj(spark, sf_dir, node_pred, degree) -> DataFrame:
 
 # The degree-8 base graph is shared by v_nsw_greedy, v_hnsw_layered's
 # base layer and v_graph_reachability (~1.5 s to rebuild at sf0.1). It
-# keeps the default recache=True: the cache write is <= 8N rows of two
-# BIGINTs, so rebuild cost x consumers far exceeds it — unlike
-# recommender.core._cached, where re-registration was reverted.
+# keeps shared_frame's default recache=True: the cache write is <= 8N
+# rows of two BIGINTs, so rebuild cost x consumers far exceeds it.
+# (recommender.core._cached passes recache=False instead: its frames
+# rebuild in ~0.3 s and feed 1-3 consumers per key.)
 def _nsw_adj8(spark, sf_dir) -> DataFrame:
     return shared_frame(
         spark, sf_dir, "nsw_adj8", lambda: _band_knn_adj(spark, sf_dir, None, 8)
+    )
+
+
+def _true_ranks(qcos) -> DataFrame:
+    """(r_qid, r_cid, cos, true_rank): each candidate's brute-force rank
+    per query (cos desc, cand_id asc) — the walk keys' honesty column."""
+    wrank = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "cand_id")
+    return qcos.select(
+        F.col("query_id").alias("r_qid"),
+        F.col("cand_id").alias("r_cid"),
+        "cos",
+        F.row_number().over(wrank).cast("long").alias("true_rank"),
     )
 
 
@@ -3545,40 +3454,12 @@ def _nsw_adj8(spark, sf_dir) -> DataFrame:
     bands AS (
         {_NSW_BANDS_SQL}
     ),
-    cand AS (
-        SELECT a.vec_id AS src, b.vec_id AS dst
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket
-         AND a.vec_id <> b.vec_id
-        GROUP BY 1, 2
-    ),
+    {_KNN_CAND_SQL.format(name='cand', bands='bands')},
     cosd AS (
-        SELECT c.src, c.dst,
-               round({_DUCK_DOT.format(a='e1.embedding', b='e2.embedding')}
-                     / ({_DUCK_NRM.format(a='e1.embedding')}
-                        * {_DUCK_NRM.format(a='e2.embedding')}), 6) + 0
-                   AS cos
-        FROM cand c
-        JOIN embeddings e1 ON e1.vec_id = c.src
-        JOIN embeddings e2 ON e2.vec_id = c.dst
+        {_KNN_COS_SQL.format(cand='cand')}
     ),
-    adj AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   row_number() OVER (PARTITION BY src
-                                      ORDER BY cos DESC, dst) AS rn
-            FROM cosd
-        ) WHERE rn <= 8
-    ),
-    qcos AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-               round({_DUCK_DOT.format(a='q.embedding', b='c.embedding')}
-                     / ({_DUCK_NRM.format(a='q.embedding')}
-                        * {_DUCK_NRM.format(a='c.embedding')}), 6) + 0
-                   AS cos
-        FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        WHERE q.vec_id IN (0, 1, 2)
-    ),
+    {_KNN_ADJ_SQL.format(name='adj', cosd='cosd', degree=8)},
+    {_WALK_QCOS_SQL},
     h0 AS (
         SELECT DISTINCT query_id, CAST(3 AS BIGINT) AS cur FROM qcos
     ),
@@ -3587,13 +3468,7 @@ def _nsw_adj8(spark, sf_dir) -> DataFrame:
     {_NSW_HOP_SQL.format(cur=2, next=3)},
     {_NSW_HOP_SQL.format(cur=3, next=4)},
     {_NSW_HOP_SQL.format(cur=4, next=5)},
-    ranks AS (
-        SELECT query_id, cand_id, cos,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos DESC, cand_id)
-                    AS BIGINT) AS true_rank
-        FROM qcos
-    )
+    {_WALK_RANKS_SQL}
     SELECT h5.query_id, CAST(h5.cur AS BIGINT) AS found_id,
            r.cos AS found_cos, r.true_rank
     FROM h5 JOIN ranks r
@@ -3695,15 +3570,7 @@ def v_nsw_greedy(spark, sf_dir):
     found = walkin.groupBy("query_id").applyInPandas(
         _greedy_walk, "query_id long, found_id long"
     )
-    wrank = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), "cand_id"
-    )
-    ranks = qcos.select(
-        F.col("query_id").alias("r_qid"),
-        F.col("cand_id").alias("r_cid"),
-        "cos",
-        F.row_number().over(wrank).cast("long").alias("true_rank"),
-    )
+    ranks = _true_ranks(qcos)
     return (
         found.join(
             ranks,
@@ -3764,65 +3631,17 @@ _HNSW_TOP_BANDS_SQL = "\n        UNION ALL ".join(
     bands_top AS (
         {_HNSW_TOP_BANDS_SQL}
     ),
-    cand AS (
-        SELECT a.vec_id AS src, b.vec_id AS dst
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket
-         AND a.vec_id <> b.vec_id
-        GROUP BY 1, 2
-    ),
-    cand_top AS (
-        SELECT a.vec_id AS src, b.vec_id AS dst
-        FROM bands_top a JOIN bands_top b
-          ON a.band = b.band AND a.bucket = b.bucket
-         AND a.vec_id <> b.vec_id
-        GROUP BY 1, 2
-    ),
+    {_KNN_CAND_SQL.format(name='cand', bands='bands')},
+    {_KNN_CAND_SQL.format(name='cand_top', bands='bands_top')},
     cosd AS (
-        SELECT c.src, c.dst,
-               round({_DUCK_DOT.format(a='e1.embedding', b='e2.embedding')}
-                     / ({_DUCK_NRM.format(a='e1.embedding')}
-                        * {_DUCK_NRM.format(a='e2.embedding')}), 6) + 0
-                   AS cos
-        FROM cand c
-        JOIN embeddings e1 ON e1.vec_id = c.src
-        JOIN embeddings e2 ON e2.vec_id = c.dst
+        {_KNN_COS_SQL.format(cand='cand')}
     ),
     cosd_top AS (
-        SELECT c.src, c.dst,
-               round({_DUCK_DOT.format(a='e1.embedding', b='e2.embedding')}
-                     / ({_DUCK_NRM.format(a='e1.embedding')}
-                        * {_DUCK_NRM.format(a='e2.embedding')}), 6) + 0
-                   AS cos
-        FROM cand_top c
-        JOIN embeddings e1 ON e1.vec_id = c.src
-        JOIN embeddings e2 ON e2.vec_id = c.dst
+        {_KNN_COS_SQL.format(cand='cand_top')}
     ),
-    adj AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   row_number() OVER (PARTITION BY src
-                                      ORDER BY cos DESC, dst) AS rn
-            FROM cosd
-        ) WHERE rn <= 8
-    ),
-    adj_top AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   row_number() OVER (PARTITION BY src
-                                      ORDER BY cos DESC, dst) AS rn
-            FROM cosd_top
-        ) WHERE rn <= 4
-    ),
-    qcos AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-               round({_DUCK_DOT.format(a='q.embedding', b='c.embedding')}
-                     / ({_DUCK_NRM.format(a='q.embedding')}
-                        * {_DUCK_NRM.format(a='c.embedding')}), 6) + 0
-                   AS cos
-        FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        WHERE q.vec_id IN (0, 1, 2)
-    ),
+    {_KNN_ADJ_SQL.format(name='adj', cosd='cosd', degree=8)},
+    {_KNN_ADJ_SQL.format(name='adj_top', cosd='cosd_top', degree=4)},
+    {_WALK_QCOS_SQL},
     entry AS (
         SELECT CAST(min(vec_id) AS BIGINT) AS cur FROM embeddings
         WHERE vec_id % 16 = 0 AND vec_id NOT IN (0, 1, 2)
@@ -3836,13 +3655,7 @@ _HNSW_TOP_BANDS_SQL = "\n        UNION ALL ".join(
     {_HNSW_HOP_SQL.format(adj='adj', cur='h0', next='h1')},
     {_HNSW_HOP_SQL.format(adj='adj', cur='h1', next='h2')},
     {_HNSW_HOP_SQL.format(adj='adj', cur='h2', next='h3')},
-    ranks AS (
-        SELECT query_id, cand_id, cos,
-               CAST(row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos DESC, cand_id)
-                    AS BIGINT) AS true_rank
-        FROM qcos
-    )
+    {_WALK_RANKS_SQL}
     SELECT h3.query_id,
            CAST(d.cur AS BIGINT) AS drop_id,
            CAST(h3.cur AS BIGINT) AS found_id,
@@ -3981,15 +3794,7 @@ def v_hnsw_layered(spark, sf_dir):
     walked = walkin.groupBy("query_id").applyInPandas(
         _layered_walk, "query_id long, drop_id long, found_id long"
     )
-    wrank = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), "cand_id"
-    )
-    ranks = qcos.select(
-        F.col("query_id").alias("r_qid"),
-        F.col("cand_id").alias("r_cid"),
-        "cos",
-        F.row_number().over(wrank).cast("long").alias("true_rank"),
-    )
+    ranks = _true_ranks(qcos)
     return (
         walked.join(
             ranks,
@@ -4012,37 +3817,95 @@ _MMR_REL6 = (
 )
 
 
-@register(
-    "v_rerank_mmr",
-    f"""
-    WITH qcos AS (
+# --- Greedy rerank pair matrix ----------------------------------------
+# One owner for the candidate rows of v_rerank_mmr (k=8) and
+# v_kcenter_rerank (k=12); each key keeps its own greedy step.
+
+
+def _rerank_pairs_sql(k: int) -> str:
+    """Oracle twin of _rerank_pairs: the qcos, t{k} and sims CTEs."""
+    rel6 = _MMR_REL6.format(
+        dot=_DUCK_DOT.format(a="q.embedding", b="c.embedding"),
+        na=_DUCK_NRM.format(a="q.embedding"),
+        nb=_DUCK_NRM.format(a="c.embedding"),
+    )
+    sim6 = _MMR_REL6.format(
+        dot=_DUCK_DOT.format(a="e1.embedding", b="e2.embedding"),
+        na=_DUCK_NRM.format(a="e1.embedding"),
+        nb=_DUCK_NRM.format(a="e2.embedding"),
+    )
+    return f"""qcos AS (
         SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-               {_MMR_REL6.format(
-                   dot=_DUCK_DOT.format(a='q.embedding', b='c.embedding'),
-                   na=_DUCK_NRM.format(a='q.embedding'),
-                   nb=_DUCK_NRM.format(a='c.embedding'))} AS rel6
+               {rel6} AS rel6
         FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
         WHERE q.vec_id IN (0, 1, 2)
     ),
-    t8 AS (
+    t{k} AS (
         SELECT query_id, cand_id, rel6 FROM (
             SELECT query_id, cand_id, rel6,
                    row_number() OVER (PARTITION BY query_id
                                       ORDER BY rel6 DESC, cand_id) AS rn
             FROM qcos
-        ) WHERE rn <= 8
+        ) WHERE rn <= {k}
     ),
     sims AS (
         SELECT a.query_id, a.cand_id AS ca, b.cand_id AS cb,
-               {_MMR_REL6.format(
-                   dot=_DUCK_DOT.format(a='e1.embedding', b='e2.embedding'),
-                   na=_DUCK_NRM.format(a='e1.embedding'),
-                   nb=_DUCK_NRM.format(a='e2.embedding'))} AS sim6
-        FROM t8 a
-        JOIN t8 b ON a.query_id = b.query_id AND a.cand_id <> b.cand_id
+               {sim6} AS sim6
+        FROM t{k} a
+        JOIN t{k} b ON a.query_id = b.query_id AND a.cand_id <> b.cand_id
         JOIN embeddings e1 ON e1.vec_id = a.cand_id
         JOIN embeddings e2 ON e2.vec_id = b.cand_id
-    ),
+    )"""
+
+
+def _rerank_pairs(spark, sf_dir, k) -> DataFrame:
+    """Input of the per-query greedy rerankers (v_rerank_mmr k=8,
+    v_kcenter_rerank k=12): each query's top-k candidates by rel6 (the
+    1e-6 BIGINT of the 6dp query cosine, cand-id tiebreak) as
+    (query_id, ca, cb, rel6_a, sim6) rows, sim6 the 1e-6 BIGINT of the
+    6dp pair cosine, for every ordered candidate pair ca != cb.
+
+    Self-rows (ca == cb, sim6 NULL) keep single-candidate queries in the
+    grouped frame — the ca != cb pair join alone would drop them,
+    silently losing the pos-1 row the oracle's p1 (a plain top-k argmax)
+    still emits (round-12 advice item 1). <= k extra rows per query."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    rel = _qcos_012(spark, sf_dir).select(
+        "query_id",
+        "cand_id",
+        F.round(F.col("cos") * 1e6).cast("long").alias("rel6"),
+    )
+    wk = Window.partitionBy("query_id").orderBy(F.col("rel6").desc(), "cand_id")
+    topk = (
+        rel.withColumn("rn", F.row_number().over(wk))
+        .where(F.col("rn") <= k)
+        .select("query_id", "cand_id", "rel6")
+    )
+    # b aliases its join columns (qb/cb) so the top-k self-join never
+    # emits Spark's "trivially true equals" lineage warning (round-10
+    # item 2).
+    a = topk.select(
+        "query_id", F.col("cand_id").alias("ca"), F.col("rel6").alias("rel6_a")
+    )
+    b = topk.select(F.col("query_id").alias("qb"), F.col("cand_id").alias("cb"))
+    sim6 = F.round(f6(_side_cos()) * 1e6).cast("long")
+    pairs = _normed_join(
+        a.join(b, (a.query_id == b.qb) & (F.col("ca") != F.col("cb"))), emb, "ca", "cb"
+    ).select("query_id", "ca", "cb", "rel6_a", sim6.alias("sim6"))
+    selfrows = topk.select(
+        "query_id",
+        F.col("cand_id").alias("ca"),
+        F.col("cand_id").alias("cb"),
+        F.col("rel6").alias("rel6_a"),
+        F.lit(None).cast("long").alias("sim6"),
+    )
+    return pairs.unionByName(selfrows)
+
+
+@register(
+    "v_rerank_mmr",
+    f"""
+    WITH {_rerank_pairs_sql(8)},
     p1 AS (
         SELECT query_id, cand_id, rel6, 7 * rel6 AS score7 FROM (
             SELECT query_id, cand_id, rel6,
@@ -4152,57 +4015,7 @@ def v_rerank_mmr(spark, sf_dir):
     tower's analysis/codegen constant was ~6 s for 12 output rows and
     14 KB of shuffle).
     """
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    raw = _qcos_012(spark, sf_dir)
-    rel = raw.select(
-        "query_id",
-        "cand_id",
-        F.round(F.col("cos") * 1e6).cast("long").alias("rel6"),
-    )
-    w8 = Window.partitionBy("query_id").orderBy(F.col("rel6").desc(), "cand_id")
-    t8 = (
-        rel.withColumn("rn", F.row_number().over(w8))
-        .where(F.col("rn") <= 8)
-        .select("query_id", "cand_id", "rel6")
-    )
-    e1 = emb.select(
-        F.col("vec_id").alias("ca"),
-        F.col("embedding").alias("ea"),
-        F.expr(_NRM.format(a="embedding")).alias("na"),
-    )
-    e2 = emb.select(
-        F.col("vec_id").alias("cb"),
-        F.col("embedding").alias("eb"),
-        F.expr(_NRM.format(a="embedding")).alias("nb"),
-    )
-    # b aliases its join columns (qb/cb) so the t8 self-join never emits
-    # Spark's "trivially true equals" lineage warning (round-10 item 2).
-    a = t8.select(
-        "query_id", F.col("cand_id").alias("ca"), F.col("rel6").alias("rel6_a")
-    )
-    b = t8.select(F.col("query_id").alias("qb"), F.col("cand_id").alias("cb"))
-    sim6 = F.round(
-        f6(F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")))
-        * 1e6
-    ).cast("long")
-    pairs = (
-        a.join(b, (a.query_id == b.qb) & (F.col("ca") != F.col("cb")))
-        .join(e1, "ca")
-        .join(e2, "cb")
-        .select("query_id", "ca", "cb", "rel6_a", sim6.alias("sim6"))
-    )
-    # Self-rows (ca == cb, sim6 NULL) keep single-candidate queries in
-    # the grouped frame — the ca != cb pair join alone would drop them,
-    # silently losing the pos-1 row the oracle's p1 (a plain t8 argmax)
-    # still emits (round-12 advice item 1). ≤8 extra rows per query.
-    selfrows = t8.select(
-        "query_id",
-        F.col("cand_id").alias("ca"),
-        F.col("cand_id").alias("cb"),
-        F.col("rel6").alias("rel6_a"),
-        F.lit(None).cast("long").alias("sim6"),
-    )
-    pairs = pairs.unionByName(selfrows)
+    pairs = _rerank_pairs(spark, sf_dir, 8)
 
     def _mmr_greedy(pdf):
         # Defined inside the query fn: worker pickling must not require
@@ -5118,12 +4931,8 @@ def v_maxsim_pruned(spark, sf_dir):
 
 @register(
     "v_centroid_outliers",
-    """
-    WITH cent AS (
-        SELECT e.label, t.i AS i, avg(CAST(e.embedding[t.i] AS DOUBLE)) AS cv
-        FROM embeddings e CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t
-        GROUP BY e.label, t.i
-    ),
+    f"""
+    WITH {_IVF_CENT_SQL},
     vc AS (
         SELECT e.vec_id, e.label, t.i,
                CAST(e.embedding[t.i] AS DOUBLE) AS v
@@ -5162,11 +4971,7 @@ def v_centroid_outliers(spark, sf_dir):
     tiebreaks; top-20 ascending is a TakeOrderedAndProject.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("v").cast("double")).alias("cv"))
-    )
+    cent = _label_centroids(emb)
     vcomp = (
         emb.select(
             "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
@@ -5382,16 +5187,9 @@ def v_filtered_ann_depth(spark, sf_dir):
     )
 
 
-_REACH_SCORED_SQL = f"""
-        SELECT c.src, c.dst,
-               round({_DUCK_DOT.format(a='e1.embedding', b='e2.embedding')}
-                     / ({_DUCK_NRM.format(a='e1.embedding')}
-                        * {_DUCK_NRM.format(a='e2.embedding')}), 6) + 0
-                   AS cos
-        FROM cand c
-        JOIN embeddings e1 ON e1.vec_id = c.src
-        JOIN embeddings e2 ON e2.vec_id = c.dst
-"""
+# v_graph_reachability's oracle has always framed its cosd body with
+# extra newlines; kept so the oracle text stays byte-identical.
+_REACH_SCORED_SQL = f"\n        {_KNN_COS_SQL.format(cand='cand')}\n"
 
 
 @register(
@@ -5401,24 +5199,11 @@ _REACH_SCORED_SQL = f"""
     bands AS (
         {_NSW_BANDS_SQL}
     ),
-    cand AS (
-        SELECT a.vec_id AS src, b.vec_id AS dst
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket
-         AND a.vec_id <> b.vec_id
-        GROUP BY 1, 2
-    ),
+    {_KNN_CAND_SQL.format(name='cand', bands='bands')},
     cosd AS (
         {_REACH_SCORED_SQL}
     ),
-    adj AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   row_number() OVER (PARTITION BY src
-                                      ORDER BY cos DESC, dst) AS rn
-            FROM cosd
-        ) WHERE rn <= 8
-    ),
+    {_KNN_ADJ_SQL.format(name='adj', cosd='cosd', degree=8)},
     r0 AS (SELECT CAST(3 AS BIGINT) AS id),
     f1 AS (
         SELECT DISTINCT a.dst AS id FROM adj a JOIN r0 ON a.src = r0.id
@@ -5468,50 +5253,34 @@ def v_graph_reachability(spark, sf_dir):
     counted reached by fiat at hop 0 (the fixed-entry convention of
     v_nsw_greedy).
 
-    Scale: each hop is one frontier-to-adjacency equi-join + anti-join
-    against the reached set — the r_shortest_path iterative idiom; hops
-    are bounded (4) so the plan is fixed-depth. At 100 TB the frontier
-    and reached sets are id-only frames partitioned on the join key, and
-    the adjacency (8N rows of two BIGINTs) is the shared cached base
-    graph (_nsw_adj8), built once for the whole retrieval stack.
+    Scale: the BFS is r_shortest_path's graph._bfs_levels — each of the
+    4 levels is one aggregate over the (node, dist) visited set,
+    localCheckpointed, so every level plans one join deep — and the
+    per-hop counts are one aggregate over the visited set's per-dist
+    counts. At 100 TB the visited set is an id-only frame partitioned on
+    the join key, and the adjacency (8N rows of two BIGINTs) is the
+    shared cached base graph (_nsw_adj8), built once for the whole
+    retrieval stack.
     """
     adj = _nsw_adj8(spark, sf_dir)
-    frontier = spark.range(1).select(F.lit(3).cast("long").alias("id"))
-    reached = frontier
-    stats = [
-        spark.range(1).select(
-            F.lit(0).cast("long").alias("hop"),
-            F.lit(1).cast("long").alias("n_new"),
-            F.lit(1).cast("long").alias("n_reached"),
+    entry = spark.range(1).select(F.lit(3).cast("long").alias("node"))
+    per_dist = (
+        _bfs_levels(adj, entry, 4).groupBy("dist").agg(F.count("*").alias("n"))
+    )
+    # Hop h: new nodes are those at dist == h, reached ones those at
+    # dist <= h; a join on the 5-row hop axis keeps empty hops at 0.
+    hops = spark.range(5).select(F.col("id").alias("hop"))
+    return (
+        hops.join(F.broadcast(per_dist), F.col("dist") <= F.col("hop"))
+        .groupBy("hop")
+        .agg(
+            F.sum(F.when(F.col("dist") == F.col("hop"), F.col("n")).otherwise(0))
+            .cast("long")
+            .alias("n_new"),
+            F.sum("n").cast("long").alias("n_reached"),
         )
-    ]
-    for h in range(1, 5):
-        nxt = (
-            frontier.join(adj, frontier.id == adj.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        # localCheckpoint each level: the reached set is a union-of-unions
-        # and each hop's anti-join embeds every previous hop's plan, so
-        # without lineage truncation the 4-level tree costs ~10 s of pure
-        # driver-side analysis (measured at sf0.001 — data-independent,
-        # the unrolled-tower disease). Checkpointing the two id-only
-        # frames per hop keeps every plan one join deep; the frames are
-        # tiny at any corpus size.
-        newf = nxt.join(reached, "id", "left_anti").localCheckpoint()
-        reached = reached.unionByName(newf).localCheckpoint()
-        frontier = newf
-        stats.append(
-            newf.agg(F.count("*").cast("long").alias("n_new"))
-            .crossJoin(
-                reached.agg(F.count("*").cast("long").alias("n_reached"))
-            )
-            .select(F.lit(h).cast("long").alias("hop"), "n_new", "n_reached")
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("hop")
+        .orderBy("hop")
+    )
 
 
 @register(
@@ -5521,21 +5290,8 @@ def v_graph_reachability(spark, sf_dir):
     bands AS (
         {_LSH_STRICT_BANDS_SQL}
     ),
-    cand AS (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-        GROUP BY 1, 2
-    ),
-    scored AS (
-        SELECT c.vec_a, c.vec_b,
-               round({_DUCK_DOT.format(a='qa.embedding', b='qb.embedding')}
-                     / ({_DUCK_NRM.format(a='qa.embedding')}
-                        * {_DUCK_NRM.format(a='qb.embedding')}), 6) + 0 AS cos
-        FROM cand c
-        JOIN embeddings qa ON qa.vec_id = c.vec_a
-        JOIN embeddings qb ON qb.vec_id = c.vec_b
-    ),
+    {_LSH_CAND_SQL},
+    {_LSH_SCORED_SQL},
     thr AS (SELECT unnest([8500, 9000, 9500]) AS thr_bp),
     qual AS (
         SELECT t.thr_bp, s.vec_a, s.vec_b
@@ -5622,34 +5378,7 @@ def v_neardup_threshold_sensitivity(spark, sf_dir):
 @register(
     "v_kcenter_rerank",
     f"""
-    WITH qcos AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-               {_MMR_REL6.format(
-                   dot=_DUCK_DOT.format(a='q.embedding', b='c.embedding'),
-                   na=_DUCK_NRM.format(a='q.embedding'),
-                   nb=_DUCK_NRM.format(a='c.embedding'))} AS rel6
-        FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        WHERE q.vec_id IN (0, 1, 2)
-    ),
-    t12 AS (
-        SELECT query_id, cand_id, rel6 FROM (
-            SELECT query_id, cand_id, rel6,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY rel6 DESC, cand_id) AS rn
-            FROM qcos
-        ) WHERE rn <= 12
-    ),
-    sims AS (
-        SELECT a.query_id, a.cand_id AS ca, b.cand_id AS cb,
-               {_MMR_REL6.format(
-                   dot=_DUCK_DOT.format(a='e1.embedding', b='e2.embedding'),
-                   na=_DUCK_NRM.format(a='e1.embedding'),
-                   nb=_DUCK_NRM.format(a='e2.embedding'))} AS sim6
-        FROM t12 a
-        JOIN t12 b ON a.query_id = b.query_id AND a.cand_id <> b.cand_id
-        JOIN embeddings e1 ON e1.vec_id = a.cand_id
-        JOIN embeddings e2 ON e2.vec_id = b.cand_id
-    ),
+    WITH {_rerank_pairs_sql(12)},
     p1 AS (
         SELECT query_id, cand_id FROM (
             SELECT query_id, cand_id,
@@ -5748,51 +5477,7 @@ def v_kcenter_rerank(spark, sf_dir):
     Self-rows keep <2-candidate queries emitting their prefix exactly
     as the oracle's pk CTEs go empty (round-12 advice pattern).
     """
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    raw = _qcos_012(spark, sf_dir)
-    rel = raw.select(
-        "query_id",
-        "cand_id",
-        F.round(F.col("cos") * 1e6).cast("long").alias("rel6"),
-    )
-    w12 = Window.partitionBy("query_id").orderBy(F.col("rel6").desc(), "cand_id")
-    t12 = (
-        rel.withColumn("rn", F.row_number().over(w12))
-        .where(F.col("rn") <= 12)
-        .select("query_id", "cand_id", "rel6")
-    )
-    e1 = emb.select(
-        F.col("vec_id").alias("ca"),
-        F.col("embedding").alias("ea"),
-        F.expr(_NRM.format(a="embedding")).alias("na"),
-    )
-    e2 = emb.select(
-        F.col("vec_id").alias("cb"),
-        F.col("embedding").alias("eb"),
-        F.expr(_NRM.format(a="embedding")).alias("nb"),
-    )
-    a = t12.select(
-        "query_id", F.col("cand_id").alias("ca"), F.col("rel6").alias("rel6_a")
-    )
-    b = t12.select(F.col("query_id").alias("qb"), F.col("cand_id").alias("cb"))
-    sim6 = F.round(
-        f6(F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")))
-        * 1e6
-    ).cast("long")
-    pairs = (
-        a.join(b, (a.query_id == b.qb) & (F.col("ca") != F.col("cb")))
-        .join(e1, "ca")
-        .join(e2, "cb")
-        .select("query_id", "ca", "cb", "rel6_a", sim6.alias("sim6"))
-    )
-    selfrows = t12.select(
-        "query_id",
-        F.col("cand_id").alias("ca"),
-        F.col("cand_id").alias("cb"),
-        F.col("rel6").alias("rel6_a"),
-        F.lit(None).cast("long").alias("sim6"),
-    )
-    pairs = pairs.unionByName(selfrows)
+    pairs = _rerank_pairs(spark, sf_dir, 12)
 
     def _kcenter_greedy(pdf):
         # Defined inside the query fn: worker pickling must not require
@@ -5908,31 +5593,8 @@ def v_ivf_ingest_assign(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     bank = emb.where(F.col("vec_id") % 20 != 7)
     ingest = emb.where(F.col("vec_id") % 20 == 7)
-    cent = (
-        bank.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("v").cast("double")).alias("cv"))
-    )
-    icomp = (
-        ingest.select("vec_id", F.posexplode("embedding").alias("pos", "qv"))
-        .withColumn("qv", F.col("qv").cast("double"))
-    )
-    qc = (
-        icomp.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "label")
-        .agg(
-            f6(
-                F.sum(F.col("qv") * F.col("cv"))
-                / (
-                    F.sqrt(F.sum(F.col("qv") * F.col("qv")))
-                    * F.sqrt(F.sum(F.col("cv") * F.col("cv")))
-                )
-            ).alias("ccos")
-        )
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "label")
     assigned = (
-        qc.withColumn("rn", F.row_number().over(wa))
+        _route(ingest, _label_centroids(bank), "vec_id", "rn")
         .where(F.col("rn") == 1)
         .select("vec_id", "label", "ccos")
     )
@@ -6063,11 +5725,7 @@ def v_shard_fanout_recall(spark, sf_dir):
 @register(
     "v_recall_cost_frontier",
     f"""
-    WITH cent AS (
-        SELECT e.label, t.i AS i, avg(CAST(e.embedding[t.i] AS DOUBLE)) AS cv
-        FROM embeddings e CROSS JOIN (SELECT unnest(range(1, 65)) AS i) t
-        GROUP BY e.label, t.i
-    ),
+    WITH {_IVF_CENT_SQL},
     qcomp AS (
         SELECT q.vec_id AS query_id, t.i AS i,
                CAST(q.embedding[t.i] AS DOUBLE) AS qv
@@ -6151,34 +5809,11 @@ def v_recall_cost_frontier(spark, sf_dir):
     already maintains (shared cached _qcos frame here).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.avg(F.col("v").cast("double")).alias("cv"))
-    )
-    qcomp = (
-        emb.where(F.col("vec_id").isin(0, 1, 2))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode("embedding").alias("pos", "qv"),
-        )
-        .withColumn("qv", F.col("qv").cast("double"))
-    )
-    ccos = f6(
-        F.sum(F.col("qv") * F.col("cv"))
-        / (
-            F.sqrt(F.sum(F.col("qv") * F.col("qv")))
-            * F.sqrt(F.sum(F.col("cv") * F.col("cv")))
-        )
-    )
-    bw = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("label")
-    )
-    qc = (
-        qcomp.join(F.broadcast(cent), "pos")
-        .groupBy("query_id", "label")
-        .agg(ccos.alias("ccos"))
-        .withColumn("crank", F.row_number().over(bw))
+    qc = _route(
+        emb.where(F.col("vec_id").isin(0, 1, 2)),
+        _label_centroids(emb),
+        "query_id",
+        "crank",
     )
     nps = spark.range(1).select(
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(4))).alias("np")

@@ -59,9 +59,12 @@ def build_session(
     driver benches at 8 cores too) still planned 32-way shuffles AND
     pinned streaming state stores at 32 partitions. Cores-scaled is the
     cluster-correct parameterization; at the 32-core bench it is
-    value-identical to the old constant.
+    value-identical to the old constant. An explicit ``local[N]`` master
+    sets that core count; otherwise it comes from ``SPARK_GRAFT_CPUS``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if master and master.startswith("local[") and master[6:-1].isdigit():
+        cpus = master[6:-1]
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32

@@ -39,6 +39,20 @@ LAZY_BUILD_KEYS = (
     "a_survival_rmst",
     "a_nelson_aalen",
     "a_greenwood_ci",
+    # retrieval keys built from vectors.py's stage owners
+    "v_embed_neardup_lsh",
+    "v_embed_neardup_strict",
+    "v_neardup_threshold_sensitivity",
+    "v_lsh_multiprobe",
+    "v_nsw_greedy",
+    "v_hnsw_layered",
+    "v_ann_ivf",
+    "v_ann_ivf_nprobe",
+    "v_ivf_ingest_assign",
+    "v_recall_cost_frontier",
+    "v_centroid_outliers",
+    "v_rerank_mmr",
+    "v_kcenter_rerank",
 )
 
 # {key: (max jobs on the first build at SF_SMALL, reason)}; each budget is
@@ -47,6 +61,7 @@ EAGER_BUILD_KEYS = {
     "t_dup_clusters": (13, "convergence loop"),
     "r_shortest_path": (21, "fixed-depth BFS, checkpointed per level"),
     "q_sql_scripting": (19, "SQL script runs inside spark.sql()"),
+    "v_graph_reachability": (23, "fixed-depth BFS, checkpointed per level"),
 }
 
 

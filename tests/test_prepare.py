@@ -1,6 +1,11 @@
 """session.prepare() sizes spark.sql.shuffle.partitions to the core count
-only on a local master; a cluster master keeps the deployment's value."""
+only on a local master; a cluster master keeps the deployment's value.
+build_session() takes its default width from an explicit local[N] master."""
 
+import os
+import subprocess
+import sys
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -39,3 +44,21 @@ def test_local_master_sizes_shuffle_to_cores(master, cores):
     spark = _stub(master, cores, "200")
     prepare(spark)
     assert spark.conf[SHUFFLE] == str(cores)
+
+
+def test_build_session_width_follows_local_master():
+    # A fresh process: the shared test session must not be reconfigured,
+    # and getOrCreate() would return it unchanged anyway.
+    code = (
+        "from npc_recommender_netflix_spark.session import build_session\n"
+        "s = build_session(app='width-probe', master='local[3]')\n"
+        f"print('width', s.conf.get('{SHUFFLE}'))\n"
+        "s.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "512m"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=Path(__file__).resolve().parent.parent,
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert "width 3" in out.stdout.splitlines(), out.stdout + out.stderr[-2000:]

@@ -4,6 +4,9 @@ with an automated shape summary (shuffles, joins, codegen spans, pushdown).
 Usage:
     python tools/plans.py                # headline keys -> PLANS.md
     python tools/plans.py a_groupby ...  # subset, print to stdout
+    python tools/plans.py --optimized a_groupby ...
+                                         # optimized logical plans with
+                                         # expression ids stripped
 
 The snapshot is the artifact of the 'explain until it's the plan you want'
 loop: re-generate after optimizer-relevant changes and diff — a new
@@ -312,7 +315,22 @@ def window_inventory(spark, sf_dir: str, keys=None) -> dict[str, list[str]]:
     return out
 
 
+def optimized_plan(df) -> str:
+    """df's optimized logical plan with ``#NNN`` expression ids and the
+    ``plan_id=NNN`` of cached subplans stripped, so the same key built by
+    two commits prints the same text whenever Catalyst produced the same
+    plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"#\d+|(?<=plan_id=)\d+", "", plan)
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--optimized"]:
+        spark = build_session(app="npc-plans")
+        for k in sys.argv[2:]:
+            spark.catalog.clearCache()
+            print(f"## {k}\n{optimized_plan(registry.QUERIES[k](spark, SF_DIR)).rstrip()}\n")
+        return
     if sys.argv[1:2] == ["--windows"]:
         spark = build_session(app="npc-windowcheck")
         sf = os.environ.get("SPARK_GRAFT_WINDOW_SF", "/root/testdata/sf0.001")
