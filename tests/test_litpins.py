@@ -603,6 +603,54 @@ def test_litpin_pettitt_step_change(spark, tmp_path):
     )
 
 
+def _sorted_median_slope(ys):
+    """Median of all pairwise slopes by a plain sorted list."""
+    s = sorted(
+        (ys[j] - ys[i]) / (j - i)
+        for i in range(len(ys))
+        for j in range(i + 1, len(ys))
+    )
+    if not s:
+        return None
+    k = len(s) // 2
+    return s[k] if len(s) % 2 else (s[k - 1] + s[k]) / 2
+
+
+@pytest.mark.parametrize(
+    "ys, expected",
+    [
+        # slopes -1, 0.5, 1, 2, 2, 2: the 2 is tied three ways and the
+        # median blends the 3rd and 4th, (1 + 2) / 2
+        ([10.0, 12.0, 14.0, 13.0], 1.5),
+        # slopes -25, 2.5, 30: the middle one
+        ([10.0, 40.0, 15.0], 2.5),
+        # one pair
+        ([5.0, 8.0], 3.0),
+        # no pair: the median of an empty slope set is NULL
+        ([7.0], None),
+    ],
+    ids=["4-day", "3-day", "2-day", "1-day"],
+)
+def test_litpin_theil_sen(spark, tmp_path, ys, expected):
+    """Hand-worked Theil-Sen (Sen 1968): the median of the
+    n(n-1)/2 pairwise slopes of one order per day, in dollars/day."""
+    import datetime
+
+    base = datetime.date(2000, 1, 1)
+    rows = [
+        (t, 1, str(base + datetime.timedelta(days=t)), y, "1-URGENT")
+        for t, y in enumerate(ys)
+    ]
+    _orders(spark, tmp_path, rows)
+    (r,) = _run(spark, tmp_path, "a_theil_sen")
+    assert _sorted_median_slope(ys) == expected
+    assert r["n_pairs"] == len(ys) * (len(ys) - 1) // 2
+    if expected is None:
+        assert r["slope_usd_per_day"] is None
+    else:
+        assert r["slope_usd_per_day"] == pytest.approx(expected, abs=2e-6)
+
+
 def test_litpin_newey_west_exact_fit(spark, tmp_path):
     """Sandwich-estimator identity: an exactly linear daily revenue
     series has zero residuals, so HC0 and HAC standard errors are both

@@ -1557,3 +1557,11 @@ def test_rank_stats_avoid_row_level_global_sort(spark):
     for key in ("a_hill_tail", "r_precision_at_k", "r_mrr", "r_map_at_k",
                 "t_weighted_sample_aes"):
         assert "TakeOrderedAndProject" in _plan(spark, key), key
+
+
+def test_theil_sen_median_sorts_the_slope_set(spark):
+    """a_theil_sen takes its median by one sort of the bounded slope
+    set, not through percentile's hash map, over one pair join."""
+    plan = _plan(spark, "a_theil_sen")
+    assert "percentile(" not in plan
+    assert plan.count("NestedLoopJoin") + plan.count("CartesianProduct") == 1
