@@ -6,6 +6,43 @@ cardinality (all groupings here are low-cardinality → tiny shuffles) and
 (b) skew, which AQE's skew-join/partition-coalescing handles at runtime.
 `a_approx_distinct` is the scale path for COUNT DISTINCT (HLL sketch merges
 map-side; exact distinct shuffles the full key set).
+
+Each statistics input that several keys read has one owner here, and
+every key that reads it is built on it (the oracle SQL twin sits beside
+each owner, and repeated oracle CTEs are built from it byte for byte):
+- whole-dollar daily revenue and its OLS trend: `_usd_sum`, `_daily_rev`
+  and `_daily_fit` / `_DAILY_REV_SQL`, `_DAILY_SUMS_SQL`, `_OLS_FIT_SQL`,
+  `_DAILY_FIT_SQL` (a_durbin_watson, a_cooks_distance, a_breusch_pagan,
+  a_newey_west; the rollup alone in a_granger_1lag, a_chow_test, w_pacf,
+  a_pettitt);
+- the kilodollar day index: `_kd_index` and `_kd_dev` / `_KD_DAILY_SQL`,
+  `_KD_DEV_SQL` (a_ljung_box, a_hurst_exponent, a_ar2_yule_walker);
+- per-event-type cent moments: `_type_moments` / `_TYPE_MOMENTS_SQL`
+  (a_anova_f, a_power_sample_size, a_tukey_hsd, a_welch_anova);
+- day x event-type mid-rank sums: `_type_daily` -> `_mid_rank_sums` ->
+  `_dunn_pairs`, with `_tie_census` / `_MID_RANKS_SQL`, `_RANK_SUMS_SQL`,
+  `_TIE_SQL` (a_kruskal_wallis, a_dunn_test, a_by_fdr_pairs; the tie
+  census also in a_wilcoxon_signed_rank);
+- the R/N returnflag quantity census: `_rn_census` / `_RN_CENSUS_SQL`
+  (a_cliffs_delta, a_cvm_twosample, a_ansari_bradley, a_brunner_munzel);
+- per-nation order-price moments: `_by_nation`, `_nation_moments` /
+  `_NATION_MOMENTS_SQL` (a_meta_fixed_effect, a_james_stein,
+  a_neyman_allocation);
+- zero-filled weekday x priority cells: `_prio_cells0` -> `_zero_filled`
+  / `_PRIO_CELLS_SQL` (a_page_trend, a_quade_test);
+- purchase/view moments and daily purchase/click pairs:
+  `_purchase_view_moments` / `_PV_MOMENTS_SQL` (a_cohens_d,
+  a_ttest_welch) and `_purchase_click_days` / `_PC_DAILY_SQL`
+  (a_wilcoxon_signed_rank, a_sign_test);
+- the month percent-rank return forecaster: `_month_scored` /
+  `_MONTH_SCORED_SQL` (a_brier_decomposition, a_isotonic_pav);
+- the IRLS step: `_irls_moments` + `_cramer3` (a_logistic_irls,
+  a_poisson_irls);
+- the churn risk set oracle: `_CHURN_RISK_SQL` (a_survival_rmst,
+  a_nelson_aalen, a_greenwood_ci; their DataFrames use
+  modern.churn_lifetimes).
+Where a key caches a frame partway through a family, the owner is split
+at that frame so the key keeps its cache.
 """
 
 from __future__ import annotations
@@ -1336,10 +1373,7 @@ def a_theil_index(spark, sf_dir):
     )
 
 
-@register(
-    "a_cohens_d",
-    """
-    WITH s AS (
+_PV_MOMENTS_SQL = """s AS (
         SELECT
             CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS n1,
             sum(CASE WHEN event_type = 'purchase'
@@ -1355,7 +1389,31 @@ def a_theil_index(spark, sf_dir):
                           * CAST(round(value * 100) AS BIGINT) END) AS q2
         FROM events
         WHERE event_type IN ('purchase', 'view')
+    )"""
+
+
+def _purchase_view_moments(spark, sf_dir):
+    """Exact cent moments of purchase (1) and view (2) event values in
+    one conditional scan (the `_PV_MOMENTS_SQL` twin): one row
+    (n1, s1, q1, n2, s2, q2) of counts, Σcents and Σcents²."""
+    ev = load_table(spark, sf_dir, "events")
+    v6 = F.round(F.col("value") * 100).cast("long")
+    is1 = F.col("event_type") == "purchase"
+    is2 = F.col("event_type") == "view"
+    return ev.where(F.col("event_type").isin("purchase", "view")).agg(
+        F.count(F.when(is1, 1)).cast("long").alias("n1"),
+        F.sum(F.when(is1, v6)).alias("s1"),
+        F.sum(F.when(is1, v6 * v6)).alias("q1"),
+        F.count(F.when(is2, 1)).cast("long").alias("n2"),
+        F.sum(F.when(is2, v6)).alias("s2"),
+        F.sum(F.when(is2, v6 * v6)).alias("q2"),
     )
+
+
+@register(
+    "a_cohens_d",
+    f"""
+    WITH {_PV_MOMENTS_SQL}
     SELECT n1, n2,
            round((s1 * 1.0 / n1 - s2 * 1.0 / n2)
                  / sqrt(((q1 - s1 * 1.0 * s1 / n1) + (q2 - s2 * 1.0 * s2 / n2))
@@ -1378,18 +1436,7 @@ def a_cohens_d(spark, sf_dir):
     single float association written identically on both engines. The
     unit scaling cancels in the ratio, so d is unit-free as defined.
     """
-    ev = load_table(spark, sf_dir, "events")
-    v6 = F.round(F.col("value") * 100).cast("long")
-    is1 = F.col("event_type") == "purchase"
-    is2 = F.col("event_type") == "view"
-    s = ev.where(F.col("event_type").isin("purchase", "view")).agg(
-        F.count(F.when(is1, 1)).cast("long").alias("n1"),
-        F.sum(F.when(is1, v6)).alias("s1"),
-        F.sum(F.when(is1, v6 * v6)).alias("q1"),
-        F.count(F.when(is2, 1)).cast("long").alias("n2"),
-        F.sum(F.when(is2, v6)).alias("s2"),
-        F.sum(F.when(is2, v6 * v6)).alias("q2"),
-    )
+    s = _purchase_view_moments(spark, sf_dir)
     mean_diff = F.col("s1") * 1.0 / F.col("n1") - F.col("s2") * 1.0 / F.col("n2")
     ss1 = F.col("q1") - F.col("s1") * 1.0 * F.col("s1") / F.col("n1")
     ss2 = F.col("q2") - F.col("s2") * 1.0 * F.col("s2") / F.col("n2")
@@ -1558,24 +1605,8 @@ def a_kll_quantiles(spark, sf_dir):
 
 @register(
     "a_ttest_welch",
-    """
-    WITH s AS (
-        SELECT
-            CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS n1,
-            sum(CASE WHEN event_type = 'purchase'
-                     THEN CAST(round(value * 100) AS BIGINT) END) AS s1,
-            sum(CASE WHEN event_type = 'purchase'
-                     THEN CAST(round(value * 100) AS BIGINT)
-                          * CAST(round(value * 100) AS BIGINT) END) AS q1,
-            CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS n2,
-            sum(CASE WHEN event_type = 'view'
-                     THEN CAST(round(value * 100) AS BIGINT) END) AS s2,
-            sum(CASE WHEN event_type = 'view'
-                     THEN CAST(round(value * 100) AS BIGINT)
-                          * CAST(round(value * 100) AS BIGINT) END) AS q2
-        FROM events
-        WHERE event_type IN ('purchase', 'view')
-    ),
+    f"""
+    WITH {_PV_MOMENTS_SQL},
     v AS (
         SELECT n1, n2,
                (q1 - s1 * 1.0 * s1 / n1) / (n1 - 1) / n1 AS se1,
@@ -1604,18 +1635,7 @@ def a_ttest_welch(spark, sf_dir):
     in df, which is scale-free); standard errors and the df ratio evaluate in one
     float association written identically on both engines.
     """
-    ev = load_table(spark, sf_dir, "events")
-    v6 = F.round(F.col("value") * 100).cast("long")
-    is1 = F.col("event_type") == "purchase"
-    is2 = F.col("event_type") == "view"
-    s = ev.where(F.col("event_type").isin("purchase", "view")).agg(
-        F.count(F.when(is1, 1)).cast("long").alias("n1"),
-        F.sum(F.when(is1, v6)).alias("s1"),
-        F.sum(F.when(is1, v6 * v6)).alias("q1"),
-        F.count(F.when(is2, 1)).cast("long").alias("n2"),
-        F.sum(F.when(is2, v6)).alias("s2"),
-        F.sum(F.when(is2, v6 * v6)).alias("q2"),
-    )
+    s = _purchase_view_moments(spark, sf_dir)
     se1 = (F.col("q1") - F.col("s1") * 1.0 * F.col("s1") / F.col("n1")) / (
         F.col("n1") - 1
     ) / F.col("n1")
@@ -2221,17 +2241,35 @@ def a_permutation_test(spark, sf_dir):
     )
 
 
-@register(
-    "a_anova_f",
-    """
-    WITH g AS (
+_TYPE_MOMENTS_SQL = """g AS (
         SELECT event_type,
                CAST(count(*) AS BIGINT) AS n,
                sum(CAST(round(value * 100) AS BIGINT)) AS s,
                sum(CAST(round(value * 100) AS BIGINT)
                    * CAST(round(value * 100) AS BIGINT)) AS q
         FROM events GROUP BY event_type
-    ),
+    )"""
+
+
+def _type_moments(spark, sf_dir):
+    """Per-event-type exact cent moments (the `_TYPE_MOMENTS_SQL` twin):
+    (event_type, n, s = Σcents, q = Σcents²), BIGINT throughout."""
+    c = F.round(F.col("value") * 100).cast("long")
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum(c).alias("s"),
+            F.sum(c * c).alias("q"),
+        )
+    )
+
+
+@register(
+    "a_anova_f",
+    f"""
+    WITH {_TYPE_MOMENTS_SQL},
     t AS (
         SELECT CAST(sum(n) AS BIGINT) AS nt, sum(s) AS st,
                CAST(count(*) AS BIGINT) AS k,
@@ -2258,13 +2296,7 @@ def a_anova_f(spark, sf_dir):
     The same plan shape computes F for ANY grouping column at O(k)
     shuffle bytes from a 100 TB scan.
     """
-    ev = load_table(spark, sf_dir, "events")
-    c = F.round(F.col("value") * 100).cast("long")
-    g = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(c).alias("s"),
-        F.sum(c * c).alias("q"),
-    )
+    g = _type_moments(spark, sf_dir)
     t = g.agg(
         F.sum("n").cast("long").alias("nt"),
         F.sum("s").alias("st"),
@@ -4395,15 +4427,8 @@ def a_ab_srm_check(spark, sf_dir):
 
 @register(
     "a_power_sample_size",
-    """
-    WITH g AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               sum(CAST(round(value * 100) AS BIGINT)) AS s,
-               sum(CAST(round(value * 100) AS BIGINT)
-                   * CAST(round(value * 100) AS BIGINT)) AS q
-        FROM events GROUP BY event_type
-    )
+    f"""
+    WITH {_TYPE_MOMENTS_SQL}
     SELECT event_type, n,
            round(s * 1.0 / n / 100, 6) + 0 AS mean_usd,
            round(sqrt((q - s * 1.0 * s / n) / (n - 1)) / 100, 6) + 0 AS sd_usd,
@@ -4430,13 +4455,7 @@ def a_power_sample_size(spark, sf_dir):
     output, float math only in the final 1-row-per-group expressions
     with shared association.
     """
-    ev = load_table(spark, sf_dir, "events")
-    c = F.round(F.col("value") * 100).cast("long")
-    g = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(c).alias("s"),
-        F.sum(c * c).alias("q"),
-    )
+    g = _type_moments(spark, sf_dir)
     var = (F.col("q") - F.col("s") * 1.0 * F.col("s") / F.col("n")) / (
         F.col("n") - 1
     )
@@ -5384,10 +5403,7 @@ def a_log_rank_test(spark, sf_dir):
     )
 
 
-@register(
-    "a_kruskal_wallis",
-    """
-    WITH daily AS (
+_MID_RANKS_SQL = """daily AS (
         SELECT CAST(ts AS DATE) AS day, event_type,
                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
         FROM events GROUP BY 1, 2
@@ -5400,12 +5416,70 @@ def a_log_rank_test(spark, sf_dir):
                CAST(2 * rank() OVER (ORDER BY d.x) + tt.t - 1 AS BIGINT)
                    AS mr2
         FROM daily d JOIN tt ON tt.x = d.x
-    ),
-    sums AS (
+    )"""
+
+_RANK_SUMS_SQL = """sums AS (
         SELECT event_type, CAST(sum(mr2) AS BIGINT) AS r2,
                CAST(count(*) AS BIGINT) AS nj
         FROM ranked GROUP BY event_type
-    ),
+    )"""
+
+_TIE_SQL = """tie AS (
+        SELECT CAST(coalesce(sum(t * t * t - t), 0) AS BIGINT) AS tc
+        FROM tt WHERE t > 1
+    )"""
+
+
+def _tie_census(tt):
+    """Tie correction Σ(t³ − t) over the tie groups of tt's size column t
+    (0 when nothing ties): one row, tc."""
+    return tt.where(F.col("t") > 1).agg(
+        F.coalesce(
+            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")),
+            F.lit(0),
+        )
+        .cast("long")
+        .alias("tc")
+    )
+
+
+def _type_daily(spark, sf_dir):
+    """Exact daily cents per (day, event type): (day, event_type, x)."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.to_date("ts").alias("day"), "event_type")
+        .agg(
+            F.sum(F.round(F.col("value") * 100).cast("long"))
+            .cast("long")
+            .alias("x")
+        )
+    )
+
+
+def _mid_rank_sums(daily):
+    """(sums, tie) over `_type_daily` cells pooled across event types (the
+    `_MID_RANKS_SQL` + `_RANK_SUMS_SQL` + `_TIE_SQL` twin): doubled
+    midranks mr2 = 2·rank + t − 1 stay integral, sums = (event_type,
+    r2 = Σmr2, nj), and tie is the census of tied x values."""
+    tt = daily.groupBy("x").agg(F.count("*").cast("long").alias("t"))
+    ranked = daily.join(tt, "x").select(
+        "event_type",
+        (2 * F.rank().over(Window.orderBy("x")) + F.col("t") - 1)
+        .cast("long")
+        .alias("mr2"),
+    )
+    sums = ranked.groupBy("event_type").agg(
+        F.sum("mr2").cast("long").alias("r2"),
+        F.count("*").cast("long").alias("nj"),
+    )
+    return sums, _tie_census(tt)
+
+
+@register(
+    "a_kruskal_wallis",
+    f"""
+    WITH {_MID_RANKS_SQL},
+    {_RANK_SUMS_SQL},
     c AS (
         SELECT CAST(sum(nj) AS BIGINT) AS n,
                CAST(count(*) AS BIGINT) AS k,
@@ -5414,10 +5488,7 @@ def a_log_rank_test(spark, sf_dir):
                ) AS BIGINT)) AS BIGINT) AS sterm
         FROM sums
     ),
-    tie AS (
-        SELECT CAST(coalesce(sum(t * t * t - t), 0) AS BIGINT) AS tc
-        FROM tt WHERE t > 1
-    )
+    {_TIE_SQL}
     SELECT n AS n_obs, k AS k_groups,
            round(12.0 / (n * (n + 1.0)) * (sterm / 1e6)
                  - 3.0 * (n + 1.0), 6) + 0 AS h_stat,
@@ -5449,25 +5520,7 @@ def a_kruskal_wallis(spark, sf_dir):
     reduction-order-free.  The data-scale pass is the daily rollup
     (map-side combined); ranking runs on the bounded day×type axis.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("x")
-    )
-    tt = daily.groupBy("x").agg(F.count("*").cast("long").alias("t"))
-    ranked = daily.join(tt, "x").select(
-        "event_type",
-        (
-            2 * F.rank().over(Window.orderBy("x")) + F.col("t") - 1
-        )
-        .cast("long")
-        .alias("mr2"),
-    )
-    sums = ranked.groupBy("event_type").agg(
-        F.sum("mr2").cast("long").alias("r2"),
-        F.count("*").cast("long").alias("nj"),
-    )
+    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir))
     c = sums.agg(
         F.sum("nj").cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
@@ -5482,14 +5535,6 @@ def a_kruskal_wallis(spark, sf_dir):
         .cast("long")
         .alias("sterm"),
     )
-    tie = tt.where(F.col("t") > 1).agg(
-        F.coalesce(
-            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("tc")
-    )
     n, k = F.col("n"), F.col("k")
     h = (12.0 / (n * (n + 1.0))) * (F.col("sterm") / 1e6) - 3.0 * (n + 1.0)
     corr = 1.0 - F.col("tc") / (n.cast("double") * n * n - n)
@@ -5503,15 +5548,14 @@ def a_kruskal_wallis(spark, sf_dir):
     )
 
 
-@register(
-    "a_ljung_box",
-    """
-    WITH daily AS (
+_KD_DAILY_SQL = """daily AS (
         SELECT CAST(o_orderdate AS DATE) AS d,
                CAST(round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                           / 1e5) AS BIGINT) AS kd
         FROM orders GROUP BY 1
-    ),
+    )"""
+
+_KD_DEV_SQL = f"""{_KD_DAILY_SQL},
     idx AS (
         SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, kd
         FROM daily
@@ -5524,7 +5568,50 @@ def a_kruskal_wallis(spark, sf_dir):
     dev AS (
         SELECT t, CAST(tot.n * kd - tot.s AS BIGINT) AS dv
         FROM idx CROSS JOIN tot
-    ),
+    )"""
+
+
+def _kd_index(spark, sf_dir, t="t"):
+    """Daily order revenue in whole kilodollars, indexed 1..n in date
+    order by a dense row_number named `t`: (t, kd)."""
+    daily = (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(F.to_date("o_orderdate").alias("d"))
+        .agg(
+            F.round(
+                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+                / 1e5
+            )
+            .cast("long")
+            .alias("kd")
+        )
+    )
+    return daily.select(
+        F.row_number().over(Window.orderBy("d")).cast("long").alias(t), "kd"
+    )
+
+
+def _kd_dev(spark, sf_dir):
+    """(tot, dev) over `_kd_index` (the `_KD_DEV_SQL` twin): tot = one row
+    (n, s = Σkd), dev = (t, dv, n) with the pre-scaled integer deviation
+    dv = n·kd − s, so lag products never see a float mean."""
+    idx = _kd_index(spark, sf_dir)
+    tot = idx.agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("kd").cast("long").alias("s"),
+    )
+    dev = idx.crossJoin(F.broadcast(tot)).select(
+        "t",
+        (F.col("n") * F.col("kd") - F.col("s")).cast("long").alias("dv"),
+        "n",
+    )
+    return tot, dev
+
+
+@register(
+    "a_ljung_box",
+    f"""
+    WITH {_KD_DEV_SQL},
     c0 AS (
         SELECT sum(CAST(dv AS HUGEINT) * CAST(dv AS HUGEINT)) AS den
         FROM dev
@@ -5573,28 +5660,10 @@ def a_ljung_box(spark, sf_dir):
     day axis via a dense row_number index (calendar gaps close up
     rather than dropping pairs).
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 1e5
-        )
-        .cast("long")
-        .alias("kd")
-    )
-    idx = daily.select(
-        F.row_number().over(Window.orderBy("d")).cast("long").alias("t"),
-        "kd",
-    )
-    tot = idx.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("kd").cast("long").alias("s"),
-    )
+    tot, dev = _kd_dev(spark, sf_dir)
     # r17 (guide §2.4/§5): dev feeds the denominator and both lag-join
     # sides uncached — day-axis bounded, cache it (a_period_detect shape).
-    dev = idx.crossJoin(F.broadcast(tot)).select(
-        "t",
-        (F.col("n") * F.col("kd") - F.col("s")).cast("long").alias("dv"),
-    ).cache()
+    dev = dev.select("t", "dv").cache()
     c0 = dev.agg(
         F.sum(
             F.col("dv").cast("decimal(19,0)")
@@ -5788,10 +5857,7 @@ def a_levene_test(spark, sf_dir):
     )
 
 
-@register(
-    "a_wilcoxon_signed_rank",
-    """
-    WITH daily AS (
+_PC_DAILY_SQL = """daily AS (
         SELECT CAST(ts AS DATE) AS day,
                CAST(sum(CASE WHEN event_type = 'purchase'
                              THEN CAST(round(value * 100) AS BIGINT)
@@ -5800,7 +5866,28 @@ def a_levene_test(spark, sf_dir):
                              THEN CAST(round(value * 100) AS BIGINT)
                              ELSE 0 END) AS BIGINT) AS y
         FROM events GROUP BY 1
-    ),
+    )"""
+
+
+def _purchase_click_days(spark, sf_dir):
+    """Exact purchase cents x and click cents y per day, paired on the
+    same day (the `_PC_DAILY_SQL` twin): (day, x, y)."""
+    ev = load_table(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100).cast("long")
+    return ev.groupBy(F.to_date("ts").alias("day")).agg(
+        F.sum(F.when(F.col("event_type") == "purchase", cents).otherwise(0))
+        .cast("long")
+        .alias("x"),
+        F.sum(F.when(F.col("event_type") == "click", cents).otherwise(0))
+        .cast("long")
+        .alias("y"),
+    )
+
+
+@register(
+    "a_wilcoxon_signed_rank",
+    f"""
+    WITH {_PC_DAILY_SQL},
     diffs AS (
         SELECT day, CAST(x - y AS BIGINT) AS d,
                CAST(abs(x - y) AS BIGINT) AS ad
@@ -5819,10 +5906,7 @@ def a_levene_test(spark, sf_dir):
                    AS w2
         FROM ranked
     ),
-    tie AS (
-        SELECT CAST(coalesce(sum(t * t * t - t), 0) AS BIGINT) AS tc
-        FROM tt WHERE t > 1
-    )
+    {_TIE_SQL}
     SELECT n AS n_pairs, CAST(w2 / 2.0 AS DOUBLE) + 0 AS w_plus,
            round((w2 - n * (n + 1.0) / 2.0)
                  / sqrt(4.0 * (n * (n + 1.0) * (2.0 * n + 1.0) / 24.0
@@ -5852,16 +5936,7 @@ def a_wilcoxon_signed_rank(spark, sf_dir):
     ×4).  Daily pairing is the data-scale pass; ranking runs on the
     bounded day axis.
     """
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", cents).otherwise(0))
-        .cast("long")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "click", cents).otherwise(0))
-        .cast("long")
-        .alias("y"),
-    )
+    daily = _purchase_click_days(spark, sf_dir)
     diffs = daily.where(F.col("x") != F.col("y")).select(
         (F.col("x") - F.col("y")).cast("long").alias("d"),
         F.abs(F.col("x") - F.col("y")).cast("long").alias("ad"),
@@ -5879,14 +5954,7 @@ def a_wilcoxon_signed_rank(spark, sf_dir):
         .cast("long")
         .alias("w2"),
     )
-    tie = tt.where(F.col("t") > 1).agg(
-        F.coalesce(
-            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("tc")
-    )
+    tie = _tie_census(tt)
     n, w2, tc = F.col("n"), F.col("w2"), F.col("tc")
     z = (w2 - n * (n + 1.0) / 2.0) / F.sqrt(
         4.0
@@ -5967,6 +6035,66 @@ _IRLS_ITER_SQL = """
         FROM d{cur} CROSS JOIN it{cur} b
     )
 """
+
+
+def _irls_moments(p, w, g):
+    """One IRLS pass over p's (x1, x2) cells, grouped by the current
+    (b0, b1, b2): the weighted normal matrix a00..a22 = Σw·xᵢxⱼ (w a
+    DECIMAL column, so the sums are exact) and the gradient g0..g2 =
+    Σg·xᵢ, each cast to double."""
+    dec = lambda col: col.cast("decimal(19,0)")  # noqa: E731
+    return p.groupBy("b0", "b1", "b2").agg(
+        F.sum(w).cast("double").alias("a00"),
+        F.sum(w * dec(F.col("x1"))).cast("double").alias("a01"),
+        F.sum(w * dec(F.col("x2"))).cast("double").alias("a02"),
+        F.sum(w * dec(F.col("x1")) * dec(F.col("x1")))
+        .cast("double")
+        .alias("a11"),
+        F.sum(w * dec(F.col("x1")) * dec(F.col("x2")))
+        .cast("double")
+        .alias("a12"),
+        F.sum(w * dec(F.col("x2")) * dec(F.col("x2")))
+        .cast("double")
+        .alias("a22"),
+        F.sum(g).cast("double").alias("g0"),
+        F.sum(g * F.col("x1")).cast("double").alias("g1"),
+        F.sum(g * F.col("x2")).cast("double").alias("g2"),
+    )
+
+
+def _cramer3():
+    """The Newton step of `_irls_moments`' 3x3 system by Cramer's rule:
+    the increments (d0, d1, d2) = A⁻¹g, as columns over a00..a22 and
+    g0..g2."""
+    a00, a01, a02 = F.col("a00"), F.col("a01"), F.col("a02")
+    a11, a12, a22 = F.col("a11"), F.col("a12"), F.col("a22")
+    g0, g1, g2 = F.col("g0"), F.col("g1"), F.col("g2")
+    det = (
+        a00 * (a11 * a22 - a12 * a12)
+        - a01 * (a01 * a22 - a12 * a02)
+        + a02 * (a01 * a12 - a11 * a02)
+    )
+    return (
+        (
+            g0 * (a11 * a22 - a12 * a12)
+            - g1 * (a01 * a22 - a02 * a12)
+            + g2 * (a01 * a12 - a02 * a11)
+        )
+        / det,
+        (
+            F.lit(0.0)
+            - g0 * (a01 * a22 - a12 * a02)
+            + g1 * (a00 * a22 - a02 * a02)
+            - g2 * (a00 * a12 - a02 * a01)
+        )
+        / det,
+        (
+            g0 * (a01 * a12 - a11 * a02)
+            - g1 * (a00 * a12 - a01 * a02)
+            + g2 * (a00 * a11 - a01 * a01)
+        )
+        / det,
+    )
 
 
 @register(
@@ -6074,6 +6202,7 @@ def a_logistic_irls(spark, sf_dir):
             )
         ).cast("long")
 
+    d0, d1, d2 = _cramer3()
     for _ in range(4):
         p = cells.crossJoin(F.broadcast(beta)).select(
             "n",
@@ -6091,72 +6220,10 @@ def a_logistic_irls(spark, sf_dir):
         g = F.col("sy") * F.lit(1000000000).cast("long") - F.col("n") * F.col(
             "p9"
         )
-        m = p.groupBy("b0", "b1", "b2").agg(
-            F.sum(w).cast("double").alias("a00"),
-            F.sum(w * dec(F.col("x1"))).cast("double").alias("a01"),
-            F.sum(w * dec(F.col("x2"))).cast("double").alias("a02"),
-            F.sum(w * dec(F.col("x1")) * dec(F.col("x1")))
-            .cast("double")
-            .alias("a11"),
-            F.sum(w * dec(F.col("x1")) * dec(F.col("x2")))
-            .cast("double")
-            .alias("a12"),
-            F.sum(w * dec(F.col("x2")) * dec(F.col("x2")))
-            .cast("double")
-            .alias("a22"),
-            F.sum(g).cast("double").alias("g0"),
-            F.sum(g * F.col("x1")).cast("double").alias("g1"),
-            F.sum(g * F.col("x2")).cast("double").alias("g2"),
-        )
-        a00, a01, a02 = F.col("a00"), F.col("a01"), F.col("a02")
-        a11, a12, a22 = F.col("a11"), F.col("a12"), F.col("a22")
-        g0, g1, g2 = F.col("g0"), F.col("g1"), F.col("g2")
-        det = (
-            a00 * (a11 * a22 - a12 * a12)
-            - a01 * (a01 * a22 - a12 * a02)
-            + a02 * (a01 * a12 - a11 * a02)
-        )
-        beta = m.select(
-            F.round(
-                F.col("b0")
-                + 1e9
-                * (
-                    (
-                        g0 * (a11 * a22 - a12 * a12)
-                        - g1 * (a01 * a22 - a02 * a12)
-                        + g2 * (a01 * a12 - a02 * a11)
-                    )
-                    / det
-                ),
-                9,
-            ).alias("b0"),
-            F.round(
-                F.col("b1")
-                + 1e9
-                * (
-                    (
-                        F.lit(0.0)
-                        - g0 * (a01 * a22 - a12 * a02)
-                        + g1 * (a00 * a22 - a02 * a02)
-                        - g2 * (a00 * a12 - a02 * a01)
-                    )
-                    / det
-                ),
-                9,
-            ).alias("b1"),
-            F.round(
-                F.col("b2")
-                + 1e9
-                * (
-                    (
-                        g0 * (a01 * a12 - a11 * a02)
-                        - g1 * (a00 * a12 - a01 * a02)
-                        + g2 * (a00 * a11 - a01 * a01)
-                    )
-                    / det
-                ),
-                9,
-            ).alias("b2"),
+        beta = _irls_moments(p, w, g).select(
+            F.round(F.col("b0") + 1e9 * d0, 9).alias("b0"),
+            F.round(F.col("b1") + 1e9 * d1, 9).alias("b1"),
+            F.round(F.col("b2") + 1e9 * d2, 9).alias("b2"),
         )
     pf = cells.crossJoin(F.broadcast(beta)).select(
         "n",
@@ -6290,33 +6357,55 @@ _DUNN_THR_SQL = """CASE r WHEN 1 THEN 2.807034 WHEN 2 THEN 2.575829
                    WHEN 9 THEN 2.004654 ELSE 1.959964 END"""
 
 
+def _dunn_pairs(sums, tie, *cols):
+    """Dunn's pairwise z on `_mid_rank_sums`' pooled midranks (never
+    re-ranked per pair), one row per event-type pair ta < tb, numbered
+    r = 1.. by |z| descending: (ta, tb, *cols, z, r). cols may read each
+    side's rank sum and size as r2a/na and r2b/nb."""
+    c = sums.agg(F.sum("nj").cast("long").alias("n"))
+    a = sums.select(
+        F.col("event_type").alias("ta"),
+        F.col("r2").alias("r2a"),
+        F.col("nj").alias("na"),
+    )
+    b = sums.select(
+        F.col("event_type").alias("tb"),
+        F.col("r2").alias("r2b"),
+        F.col("nj").alias("nb"),
+    )
+    n, tc = F.col("n"), F.col("tc")
+    zexpr = (
+        (
+            F.col("r2a").cast("double") / F.col("na")
+            - F.col("r2b").cast("double") / F.col("nb")
+        )
+        / 2.0
+    ) / F.sqrt(
+        (n * (n + 1.0) / 12.0 - tc / (12.0 * (n - 1.0)))
+        * (1.0 / F.col("na") + 1.0 / F.col("nb"))
+    )
+    zs = (
+        a.join(b, F.col("ta") < F.col("tb"))
+        .crossJoin(F.broadcast(c))
+        .crossJoin(F.broadcast(tie))
+        .select("ta", "tb", *cols, zexpr.alias("z"))
+    )
+    return zs.select(
+        "*",
+        F.row_number()
+        .over(Window.orderBy(F.abs(F.col("z")).desc(), "ta", "tb"))
+        .cast("long")
+        .alias("r"),
+    )
+
+
 @register(
     "a_dunn_test",
     f"""
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day, event_type,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
-    tt AS (
-        SELECT x, CAST(count(*) AS BIGINT) AS t FROM daily GROUP BY x
-    ),
-    ranked AS (
-        SELECT d.event_type,
-               CAST(2 * rank() OVER (ORDER BY d.x) + tt.t - 1 AS BIGINT)
-                   AS mr2
-        FROM daily d JOIN tt ON tt.x = d.x
-    ),
-    sums AS (
-        SELECT event_type, CAST(sum(mr2) AS BIGINT) AS r2,
-               CAST(count(*) AS BIGINT) AS nj
-        FROM ranked GROUP BY event_type
-    ),
+    WITH {_MID_RANKS_SQL},
+    {_RANK_SUMS_SQL},
     c AS (SELECT CAST(sum(nj) AS BIGINT) AS n FROM sums),
-    tie AS (
-        SELECT CAST(coalesce(sum(t * t * t - t), 0) AS BIGINT) AS tc
-        FROM tt WHERE t > 1
-    ),
+    {_TIE_SQL},
     zs AS (
         SELECT a.event_type AS ta, b.event_type AS tb,
                CAST(a.r2 AS DOUBLE) / (2.0 * a.nj) AS mra,
@@ -6363,80 +6452,17 @@ def a_dunn_test(spark, sf_dir):
     5-row rank-sum table; the only data-scale pass is the daily
     rollup.
     """
-    ev = load_table(spark, sf_dir, "events")
     # r17 (guide §2.4/§5): the daily rollup is the only data pass and
     # feeds tt, the rank join, and the tie census; bounded at
     # |days|×|event types| cells.
-    daily = ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("x")
-    ).cache()
-    tt = daily.groupBy("x").agg(F.count("*").cast("long").alias("t"))
-    ranked = daily.join(tt, "x").select(
-        "event_type",
-        (2 * F.rank().over(Window.orderBy("x")) + F.col("t") - 1)
-        .cast("long")
-        .alias("mr2"),
-    )
+    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir).cache())
     # r17 (guide §2.4/§5): same multi-consumer shape as a_by_fdr_pairs —
     # sums (≤|event types| rows) feeds the census and both pair sides.
-    sums = ranked.groupBy("event_type").agg(
-        F.sum("mr2").cast("long").alias("r2"),
-        F.count("*").cast("long").alias("nj"),
-    ).cache()
-    c = sums.agg(F.sum("nj").cast("long").alias("n"))
-    tie = tt.where(F.col("t") > 1).agg(
-        F.coalesce(
-            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("tc")
-    )
-    a = sums.select(
-        F.col("event_type").alias("ta"),
-        F.col("r2").alias("r2a"),
-        F.col("nj").alias("na"),
-    )
-    b = sums.select(
-        F.col("event_type").alias("tb"),
-        F.col("r2").alias("r2b"),
-        F.col("nj").alias("nb"),
-    )
-    n, tc = F.col("n"), F.col("tc")
-    zexpr = (
-        (
-            F.col("r2a").cast("double") / F.col("na")
-            - F.col("r2b").cast("double") / F.col("nb")
-        )
-        / 2.0
-    ) / F.sqrt(
-        (n * (n + 1.0) / 12.0 - tc / (12.0 * (n - 1.0)))
-        * (1.0 / F.col("na") + 1.0 / F.col("nb"))
-    )
-    zs = (
-        a.join(b, F.col("ta") < F.col("tb"))
-        .crossJoin(F.broadcast(c))
-        .crossJoin(F.broadcast(tie))
-        .select(
-            "ta",
-            "tb",
-            (F.col("r2a").cast("double") / (2.0 * F.col("na"))).alias(
-                "mra"
-            ),
-            (F.col("r2b").cast("double") / (2.0 * F.col("nb"))).alias(
-                "mrb"
-            ),
-            zexpr.alias("z"),
-        )
-    )
-    rk = zs.select(
-        "*",
-        F.row_number()
-        .over(Window.orderBy(F.abs(F.col("z")).desc(), "ta", "tb"))
-        .cast("long")
-        .alias("r"),
+    rk = _dunn_pairs(
+        sums.cache(),
+        tie,
+        (F.col("r2a").cast("double") / (2.0 * F.col("na"))).alias("mra"),
+        (F.col("r2b").cast("double") / (2.0 * F.col("nb"))).alias("mrb"),
     )
     thr = rk.select("*", F.expr(_DUNN_THR_SQL).alias("zthr"))
     cut = thr.agg(
@@ -7002,12 +7028,7 @@ _HURST_BLOCK_SQL = """
 @register(
     "a_hurst_exponent",
     f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                          / 1e5) AS BIGINT) AS kd
-        FROM orders GROUP BY 1
-    ),
+    WITH {_KD_DAILY_SQL},
     idx0 AS (
         SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn, kd
         FROM daily
@@ -7097,18 +7118,7 @@ def a_hurst_exponent(spark, sf_dir):
     the ln/OLS fit runs on the 3-point bounded axis with every term
     snapped pre-sum.  Daily rollup is the only data-scale pass.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 1e5
-        )
-        .cast("long")
-        .alias("kd")
-    )
-    idx = daily.select(
-        F.row_number().over(Window.orderBy("d")).cast("long").alias("rn"),
-        "kd",
-    )
+    idx = _kd_index(spark, sf_dir, "rn")
     n_days = idx.agg(F.count("*").cast("long").alias("n_days"))
     # r17 (guide §2.4/§5): the day-axis frame fed the 3-size union twice
     # over (block stats + deviations) — ~8 replays of the daily rollup
@@ -7387,8 +7397,8 @@ def a_poisson_irls(spark, sf_dir):
         ).alias("b0")
     ).select("b0", F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2"))
 
-    dec = lambda col: col.cast("decimal(19,0)")  # noqa: E731
     beta = init
+    d0, d1, d2 = _cramer3()
     for _ in range(4):
         p = pcells.crossJoin(F.broadcast(beta)).select(
             "y",
@@ -7409,67 +7419,10 @@ def a_poisson_irls(spark, sf_dir):
             "b2",
         )
         g = F.col("y") * F.lit(1000000).cast("long") - F.col("mu6")
-        m = p.groupBy("b0", "b1", "b2").agg(
-            F.sum(dec(F.col("mu6"))).cast("double").alias("a00"),
-            F.sum(dec(F.col("mu6")) * dec(F.col("x1")))
-            .cast("double")
-            .alias("a01"),
-            F.sum(dec(F.col("mu6")) * dec(F.col("x2")))
-            .cast("double")
-            .alias("a02"),
-            F.sum(dec(F.col("mu6")) * dec(F.col("x1")) * dec(F.col("x1")))
-            .cast("double")
-            .alias("a11"),
-            F.sum(dec(F.col("mu6")) * dec(F.col("x1")) * dec(F.col("x2")))
-            .cast("double")
-            .alias("a12"),
-            F.sum(dec(F.col("mu6")) * dec(F.col("x2")) * dec(F.col("x2")))
-            .cast("double")
-            .alias("a22"),
-            F.sum(g).cast("double").alias("g0"),
-            F.sum(g * F.col("x1")).cast("double").alias("g1"),
-            F.sum(g * F.col("x2")).cast("double").alias("g2"),
-        )
-        a00, a01, a02 = F.col("a00"), F.col("a01"), F.col("a02")
-        a11, a12, a22 = F.col("a11"), F.col("a12"), F.col("a22")
-        g0, g1, g2 = F.col("g0"), F.col("g1"), F.col("g2")
-        det = (
-            a00 * (a11 * a22 - a12 * a12)
-            - a01 * (a01 * a22 - a12 * a02)
-            + a02 * (a01 * a12 - a11 * a02)
-        )
-        beta = m.select(
-            F.round(
-                F.col("b0")
-                + (
-                    g0 * (a11 * a22 - a12 * a12)
-                    - g1 * (a01 * a22 - a02 * a12)
-                    + g2 * (a01 * a12 - a02 * a11)
-                )
-                / det,
-                9,
-            ).alias("b0"),
-            F.round(
-                F.col("b1")
-                + (
-                    F.lit(0.0)
-                    - g0 * (a01 * a22 - a12 * a02)
-                    + g1 * (a00 * a22 - a02 * a02)
-                    - g2 * (a00 * a12 - a02 * a01)
-                )
-                / det,
-                9,
-            ).alias("b1"),
-            F.round(
-                F.col("b2")
-                + (
-                    g0 * (a01 * a12 - a11 * a02)
-                    - g1 * (a00 * a12 - a01 * a02)
-                    + g2 * (a00 * a11 - a01 * a01)
-                )
-                / det,
-                9,
-            ).alias("b2"),
+        beta = _irls_moments(p, F.col("mu6").cast("decimal(19,0)"), g).select(
+            F.round(F.col("b0") + d0, 9).alias("b0"),
+            F.round(F.col("b1") + d1, 9).alias("b1"),
+            F.round(F.col("b2") + d2, 9).alias("b2"),
         )
     nn = pcells.agg(F.count("*").cast("long").alias("n_days"))
     return nn.crossJoin(F.broadcast(beta)).select(
@@ -8637,26 +8590,8 @@ def a_mde_curve(spark, sf_dir):
 
 @register(
     "a_ar2_yule_walker",
-    """
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                          / 1e5) AS BIGINT) AS kd
-        FROM orders GROUP BY 1
-    ),
-    idx AS (
-        SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t, kd
-        FROM daily
-    ),
-    tot AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(kd) AS BIGINT) AS s
-        FROM idx
-    ),
-    dev AS (
-        SELECT t, CAST(tot.n * kd - tot.s AS BIGINT) AS dv
-        FROM idx CROSS JOIN tot
-    ),
+    f"""
+    WITH {_KD_DEV_SQL},
     moms AS (
         SELECT
             (SELECT sum(CAST(a.dv AS HUGEINT) * a.dv) FROM dev a) AS c0,
@@ -8698,28 +8633,9 @@ def a_ar2_yule_walker(spark, sf_dir):
     products, autocorrelations as single divisions of exact integers,
     one shared float association for each coefficient.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 1e5
-        )
-        .cast("long")
-        .alias("kd")
-    )
-    idx = daily.select(
-        F.row_number().over(Window.orderBy("d")).cast("long").alias("t"),
-        "kd",
-    )
-    tot = idx.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("kd").cast("long").alias("s"),
-    )
+    _, dev = _kd_dev(spark, sf_dir)
     # r17 (guide §2.4/§5): same dev fan-out as a_ljung_box — cached.
-    dev = idx.crossJoin(F.broadcast(tot)).select(
-        "t",
-        (F.col("n") * F.col("kd") - F.col("s")).cast("long").alias("dv"),
-        "n",
-    ).cache()
+    dev = dev.cache()
     dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
     c0 = dev.agg(
         F.sum(dec(F.col("dv")) * dec(F.col("dv"))).alias("c0"),
@@ -9398,10 +9314,7 @@ def a_hll_window_merge(spark, sf_dir):
     )
 
 
-@register(
-    "a_brier_decomposition",
-    """
-    WITH ret AS (
+_MONTH_SCORED_SQL = """ret AS (
         SELECT l_orderkey,
                max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS y
         FROM lineitem GROUP BY 1
@@ -9412,7 +9325,35 @@ def a_hll_window_merge(spark, sf_dir):
                    ORDER BY o_totalprice, o_orderkey), 1) AS p,
                ret.y
         FROM orders JOIN ret ON ret.l_orderkey = o_orderkey
-    ),
+    )"""
+
+
+def _month_scored(spark, sf_dir):
+    """The 11-bin return forecaster (the `_MONTH_SCORED_SQL` twin): per
+    order, p = its within-month total-price percent rank rounded to 0.1,
+    and y = 1 when any of its lineitems was returned: (p, y)."""
+    ret = (
+        load_table(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(
+            F.max(
+                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
+            ).alias("y")
+        )
+    )
+    orders = load_table(spark, sf_dir, "orders")
+    w = Window.partitionBy(
+        F.year("o_orderdate") * 12 + F.month("o_orderdate")
+    ).orderBy("o_totalprice", "o_orderkey")
+    return orders.join(ret, orders.o_orderkey == ret.l_orderkey).select(
+        F.round(F.percent_rank().over(w), 1).alias("p"), "y"
+    )
+
+
+@register(
+    "a_brier_decomposition",
+    f"""
+    WITH {_MONTH_SCORED_SQL},
     g AS (
         SELECT p, CAST(count(*) AS BIGINT) AS nk, avg(y) AS ybar_k,
                sum((p - y) * (p - y)) AS sq
@@ -9459,23 +9400,7 @@ def a_brier_decomposition(spark, sf_dir):
     frame is 11 rows regardless of data size, so the decomposition
     costs one shuffle more than the Brier score itself.
     """
-    ret = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.max(
-                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-            ).alias("y")
-        )
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy(
-        F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    ).orderBy("o_totalprice", "o_orderkey")
-    scored = (
-        orders.join(ret, orders.o_orderkey == ret.l_orderkey)
-        .select(F.round(F.percent_rank().over(w), 1).alias("p"), "y")
-    )
+    scored = _month_scored(spark, sf_dir)
     g = scored.groupBy("p").agg(
         F.count("*").cast("long").alias("nk"),
         F.avg("y").alias("ybar_k"),
@@ -9523,18 +9448,39 @@ def a_brier_decomposition(spark, sf_dir):
     )
 
 
-@register(
-    "a_cliffs_delta",
-    """
-    WITH vals AS (
-        SELECT l_quantity AS v,
+_RN_CENSUS_SQL = """vals AS (
+        SELECT {v} AS v,
                CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
                     AS BIGINT) AS a,
                CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END)
                     AS BIGINT) AS b
         FROM lineitem WHERE l_returnflag IN ('R', 'N')
         GROUP BY 1
-    ),
+    )"""
+
+
+def _rn_census(spark, sf_dir, v):
+    """Returned (R) and kept (N) lineitem counts per quantity value v
+    (the `_RN_CENSUS_SQL` twin): (v, a, b), one row per distinct v."""
+    return (
+        load_table(spark, sf_dir, "lineitem")
+        .where(F.col("l_returnflag").isin("R", "N"))
+        .groupBy(v.alias("v"))
+        .agg(
+            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
+            .cast("long")
+            .alias("a"),
+            F.sum(F.when(F.col("l_returnflag") == "N", 1).otherwise(0))
+            .cast("long")
+            .alias("b"),
+        )
+    )
+
+
+@register(
+    "a_cliffs_delta",
+    f"""
+    WITH {_RN_CENSUS_SQL.format(v='l_quantity')},
     cum AS (
         SELECT v, a, b,
                coalesce(sum(b) OVER (ORDER BY v
@@ -9583,19 +9529,7 @@ def a_cliffs_delta(spark, sf_dir):
     measure, and for continuous ones you bucket first (the delta of
     the binned distribution bounds the true delta within bin mass).
     """
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_returnflag").isin("R", "N"))
-        .groupBy(F.col("l_quantity").alias("v"))
-        .agg(
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("long")
-            .alias("a"),
-            F.sum(F.when(F.col("l_returnflag") == "N", 1).otherwise(0))
-            .cast("long")
-            .alias("b"),
-        )
-    )
+    li = _rn_census(spark, sf_dir, F.col("l_quantity"))
     w = (
         Window.orderBy("v")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -9634,19 +9568,8 @@ def a_cliffs_delta(spark, sf_dir):
 
 @register(
     "a_isotonic_pav",
-    """
-    WITH ret AS (
-        SELECT l_orderkey,
-               max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS y
-        FROM lineitem GROUP BY 1
-    ),
-    scored AS (
-        SELECT round(percent_rank() OVER (
-                   PARTITION BY year(o_orderdate) * 12 + month(o_orderdate)
-                   ORDER BY o_totalprice, o_orderkey), 1) AS p,
-               ret.y
-        FROM orders JOIN ret ON ret.l_orderkey = o_orderkey
-    ),
+    f"""
+    WITH {_MONTH_SCORED_SQL},
     bins AS (
         SELECT p, CAST(count(*) AS BIGINT) AS k,
                CAST(sum(y) AS BIGINT) AS s
@@ -9691,22 +9614,7 @@ def a_isotonic_pav(spark, sf_dir):
     monotone output, weighted-mean preservation, and fixed-point on
     already-monotone prefixes.
     """
-    ret = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.max(
-                F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-            ).alias("y")
-        )
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy(
-        F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    ).orderBy("o_totalprice", "o_orderkey")
-    scored = orders.join(ret, orders.o_orderkey == ret.l_orderkey).select(
-        F.round(F.percent_rank().over(w), 1).alias("p"), "y"
-    )
+    scored = _month_scored(spark, sf_dir)
     # r17 (guide §2.4/§5): the 11-row bin frame fed all three lattice
     # aliases uncached — 3 replays of the orders⋈returns rank chain.
     bins = scored.groupBy("p").agg(
@@ -9950,12 +9858,6 @@ def a_pinball_eval(spark, sf_dir):
     train = daily_b.where(F.col("d") < F.date_sub(F.col("maxd"), 27))
     holdout = daily_b.where(F.col("d") >= F.date_sub(F.col("maxd"), 27))
     tau_arr = F.array(F.lit(0.1), F.lit(0.5), F.lit(0.9)).alias("tau")
-
-    def explode_q(df, keys):
-        q = df.agg(
-            *[F.first(k).alias(k) for k in keys] if keys else [],
-        )
-        return q
 
     dowq = (
         train.groupBy("dow")
@@ -10363,10 +10265,10 @@ def a_mcc_confusion(spark, sf_dir):
     ).orderBy("rule")
 
 
-@register(
-    "a_survival_rmst",
-    """
-    WITH bounds AS (SELECT max(o_orderdate) AS tmax FROM orders),
+# The customer-churn risk set (oracle twin of modern.churn_lifetimes +
+# churn_risk_set): a customer dies when its last order is over 90 days
+# before the corpus end; n is the number still at risk at lifetime t.
+_CHURN_RISK_SQL = """bounds AS (SELECT max(o_orderdate) AS tmax FROM orders),
     life AS (
         SELECT o_custkey,
                CAST(datediff('day', min(o_orderdate), max(o_orderdate))
@@ -10387,7 +10289,13 @@ def a_mcc_confusion(spark, sf_dir):
                             ROWS BETWEEN UNBOUNDED PRECEDING
                                      AND CURRENT ROW) AS n
         FROM counts
-    ),
+    )"""
+
+
+@register(
+    "a_survival_rmst",
+    f"""
+    WITH {_CHURN_RISK_SQL},
     km AS (
         SELECT t,
                sum(CAST(round(ln(1.0 - d * 1.0 / n) * 1e12) AS BIGINT))
@@ -10972,15 +10880,14 @@ def a_pr_auc(spark, sf_dir):
     )
 
 
-@register(
-    "a_durbin_watson",
-    """
-    WITH daily AS (
+_DAILY_REV_SQL = """daily AS (
         SELECT o_orderdate AS d,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) // 100 AS rev
         FROM orders GROUP BY 1
-    ),
+    )"""
+
+_DAILY_SUMS_SQL = f"""{_DAILY_REV_SQL},
     tx AS (
         SELECT d, rev,
                CAST(date_diff('day', (SELECT min(d) FROM daily), d)
@@ -10994,10 +10901,10 @@ def a_pr_auc(spark, sf_dir):
                CAST(sum(t * t) AS BIGINT) AS sxx,
                CAST(sum(t * rev) AS BIGINT) AS sxy
         FROM tx
-    ),
-    fit AS (
-        SELECT n,
-               (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
+    )"""
+
+# slope and intercept of the closed-form fit over s
+_OLS_FIT_SQL = """(CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
                    / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
                    AS slope,
                (CAST(sy AS DOUBLE)
@@ -11005,7 +10912,88 @@ def a_pr_auc(spark, sf_dir):
                    / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx))
                   * sx) / n AS icept
         FROM s
-    ),
+    )"""
+
+_DAILY_FIT_SQL = f"""
+    {_DAILY_SUMS_SQL},
+    fit AS (
+        SELECT n, CAST(sx AS DOUBLE) / n AS xbar,
+               CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n AS sxx_c,
+               {_OLS_FIT_SQL},
+    resid AS (
+        SELECT d, t,
+               CAST(round(rev - f.icept - f.slope * t) AS BIGINT) AS e,
+               f.n, f.xbar, f.sxx_c
+        FROM tx, fit f
+    )
+"""
+
+
+def _usd_sum():
+    """Whole-dollar sum of o_totalprice: exact BIGINT cents, // 100."""
+    return (
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long")
+        / F.lit(100)
+    ).cast("long")
+
+
+def _daily_rev(spark, sf_dir):
+    """Whole-dollar order revenue per order date: (d, rev)."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(F.col("o_orderdate").alias("d"))
+        .agg(_usd_sum().alias("rev"))
+    )
+
+
+def _daily_fit(spark, sf_dir):
+    """The daily-revenue OLS trend (the `_DAILY_FIT_SQL` twin):
+    (tx, fit) with tx = (d, t, rev), t the day offset from the first
+    date, and fit = one row (n, xbar, sxx_c, slope, icept) from the
+    closed-form 5-sum moments, all BIGINT until the slope division."""
+    daily = _daily_rev(spark, sf_dir)
+    d0 = daily.agg(F.min("d").alias("d0"))
+    tx = daily.crossJoin(F.broadcast(d0)).select(
+        "d", F.datediff(F.col("d"), F.col("d0")).cast("long").alias("t"), "rev"
+    )
+    s = tx.agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("t").cast("long").alias("sx"),
+        F.sum("rev").cast("long").alias("sy"),
+        F.sum(F.col("t") * F.col("t")).cast("long").alias("sxx"),
+        F.sum(F.col("t") * F.col("rev")).cast("long").alias("sxy"),
+    )
+    # try_divide: a single-day corpus has zero time variance
+    # (n*sxx - sx^2 = 0) -> NULL fit like DuckDB's /0, no ANSI crash
+    # (round-16 degenerate back-sweep)
+    slope = F.try_divide(
+        F.col("n").cast("double") * F.col("sxy")
+        - F.col("sx").cast("double") * F.col("sy"),
+        F.col("n").cast("double") * F.col("sxx")
+        - F.col("sx").cast("double") * F.col("sx"),
+    )
+    fit = s.select(
+        "n",
+        (F.col("sx").cast("double") / F.col("n")).alias("xbar"),
+        (
+            F.col("sxx").cast("double")
+            - F.col("sx").cast("double") * F.col("sx") / F.col("n")
+        ).alias("sxx_c"),
+        slope.alias("slope"),
+        (
+            (F.col("sy").cast("double") - slope * F.col("sx")) / F.col("n")
+        ).alias("icept"),
+    )
+    return tx, fit
+
+
+@register(
+    "a_durbin_watson",
+    f"""
+    WITH {_DAILY_SUMS_SQL},
+    fit AS (
+        SELECT n,
+               {_OLS_FIT_SQL},
     resid AS (
         SELECT t,
                CAST(round(rev - f.icept - f.slope * t) AS BIGINT) AS e
@@ -11048,47 +11036,7 @@ def a_durbin_watson(spark, sf_dir):
     the slope/intercept division (same BIGINT operands → same IEEE
     result) and the final two 6dp ratios.
     """
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("rev")
-        )
-    )
-    d0 = daily.agg(F.min("d").alias("d0"))
-    tx = daily.crossJoin(F.broadcast(d0)).select(
-        F.datediff(F.col("d"), F.col("d0")).cast("long").alias("t"),
-        "rev",
-    )
-    s = tx.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("t").cast("long").alias("sx"),
-        F.sum("rev").cast("long").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("sxx"),
-        F.sum(F.col("t") * F.col("rev")).cast("long").alias("sxy"),
-    )
-    # try_divide: a single-day corpus has zero time variance
-    # (n*sxx - sx^2 = 0) -> NULL fit like DuckDB's /0, no ANSI crash
-    # (round-16 degenerate back-sweep, shared by the daily-fit family)
-    slope = F.try_divide(
-        F.col("n").cast("double") * F.col("sxy")
-        - F.col("sx").cast("double") * F.col("sy"),
-        F.col("n").cast("double") * F.col("sxx")
-        - F.col("sx").cast("double") * F.col("sx"),
-    )
-    fit = s.select(
-        "n",
-        slope.alias("slope"),
-        (
-            (F.col("sy").cast("double") - slope * F.col("sx")) / F.col("n")
-        ).alias("icept"),
-    )
+    tx, fit = _daily_fit(spark, sf_dir)
     resid = tx.crossJoin(F.broadcast(fit)).select(
         "t",
         "n",
@@ -11126,48 +11074,6 @@ def a_durbin_watson(spark, sf_dir):
             1.0 - F.try_divide(F.col("num"), F.col("den")) / 2.0
         ).alias("rho_hat"),
     )
-
-
-_DAILY_FIT_SQL = """
-    daily AS (
-        SELECT o_orderdate AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) // 100 AS rev
-        FROM orders GROUP BY 1
-    ),
-    tx AS (
-        SELECT d, rev,
-               CAST(date_diff('day', (SELECT min(d) FROM daily), d)
-                    AS BIGINT) AS t
-        FROM daily
-    ),
-    s AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(t) AS BIGINT) AS sx,
-               CAST(sum(rev) AS BIGINT) AS sy,
-               CAST(sum(t * t) AS BIGINT) AS sxx,
-               CAST(sum(t * rev) AS BIGINT) AS sxy
-        FROM tx
-    ),
-    fit AS (
-        SELECT n, CAST(sx AS DOUBLE) / n AS xbar,
-               CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx / n AS sxx_c,
-               (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-                   / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-                   AS slope,
-               (CAST(sy AS DOUBLE)
-                - ((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-                   / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx))
-                  * sx) / n AS icept
-        FROM s
-    ),
-    resid AS (
-        SELECT d, t,
-               CAST(round(rev - f.icept - f.slope * t) AS BIGINT) AS e,
-               f.n, f.xbar, f.sxx_c
-        FROM tx, fit f
-    )
-"""
 
 
 @register(
@@ -11209,51 +11115,7 @@ def a_cooks_distance(spark, sf_dir):
     window at all), top-10 is TakeOrdered. Residuals snap to whole
     dollars before squaring; only s² and the final 9dp ratios float.
     """
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("rev")
-        )
-    )
-    d0 = daily.agg(F.min("d").alias("d0"))
-    tx = daily.crossJoin(F.broadcast(d0)).select(
-        "d", F.datediff(F.col("d"), F.col("d0")).cast("long").alias("t"), "rev"
-    )
-    s = tx.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("t").cast("long").alias("sx"),
-        F.sum("rev").cast("long").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("sxx"),
-        F.sum(F.col("t") * F.col("rev")).cast("long").alias("sxy"),
-    )
-    # try_divide: a single-day corpus has zero time variance
-    # (n*sxx - sx^2 = 0) -> NULL fit like DuckDB's /0, no ANSI crash
-    # (round-16 degenerate back-sweep, shared by the daily-fit family)
-    slope = F.try_divide(
-        F.col("n").cast("double") * F.col("sxy")
-        - F.col("sx").cast("double") * F.col("sy"),
-        F.col("n").cast("double") * F.col("sxx")
-        - F.col("sx").cast("double") * F.col("sx"),
-    )
-    fit = s.select(
-        "n",
-        (F.col("sx").cast("double") / F.col("n")).alias("xbar"),
-        (
-            F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx") / F.col("n")
-        ).alias("sxx_c"),
-        slope.alias("slope"),
-        (
-            (F.col("sy").cast("double") - slope * F.col("sx")) / F.col("n")
-        ).alias("icept"),
-    )
+    tx, fit = _daily_fit(spark, sf_dir)
     resid = tx.crossJoin(F.broadcast(fit)).select(
         "d",
         "t",
@@ -11330,45 +11192,7 @@ def a_breusch_pagan(spark, sf_dir):
     the bounded calendar axis (whole-dollar residuals squared — exact
     integers into the aggregate on both engines). Two shuffles total.
     """
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("rev")
-        )
-    )
-    d0 = daily.agg(F.min("d").alias("d0"))
-    tx = daily.crossJoin(F.broadcast(d0)).select(
-        F.datediff(F.col("d"), F.col("d0")).cast("long").alias("t"), "rev"
-    )
-    s = tx.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("t").cast("long").alias("sx"),
-        F.sum("rev").cast("long").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("sxx"),
-        F.sum(F.col("t") * F.col("rev")).cast("long").alias("sxy"),
-    )
-    # try_divide: a single-day corpus has zero time variance
-    # (n*sxx - sx^2 = 0) -> NULL fit like DuckDB's /0, no ANSI crash
-    # (round-16 degenerate back-sweep, shared by the daily-fit family)
-    slope = F.try_divide(
-        F.col("n").cast("double") * F.col("sxy")
-        - F.col("sx").cast("double") * F.col("sy"),
-        F.col("n").cast("double") * F.col("sxx")
-        - F.col("sx").cast("double") * F.col("sx"),
-    )
-    fit = s.select(
-        slope.alias("slope"),
-        (
-            (F.col("sy").cast("double") - slope * F.col("sx")) / F.col("n")
-        ).alias("icept"),
-    )
+    tx, fit = _daily_fit(spark, sf_dir)
     resid = tx.crossJoin(F.broadcast(fit)).select(
         "t",
         F.round(
@@ -11452,51 +11276,7 @@ def a_newey_west(spark, sf_dir):
     count. Whole-dollar residuals keep the scores engine-comparable
     under the 6dp snap.
     """
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("rev")
-        )
-    )
-    d0 = daily.agg(F.min("d").alias("d0"))
-    tx = daily.crossJoin(F.broadcast(d0)).select(
-        F.datediff(F.col("d"), F.col("d0")).cast("long").alias("t"), "rev"
-    )
-    s = tx.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("t").cast("long").alias("sx"),
-        F.sum("rev").cast("long").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("sxx"),
-        F.sum(F.col("t") * F.col("rev")).cast("long").alias("sxy"),
-    )
-    # try_divide: a single-day corpus has zero time variance
-    # (n*sxx - sx^2 = 0) -> NULL fit like DuckDB's /0, no ANSI crash
-    # (round-16 degenerate back-sweep, shared by the daily-fit family)
-    slope = F.try_divide(
-        F.col("n").cast("double") * F.col("sxy")
-        - F.col("sx").cast("double") * F.col("sy"),
-        F.col("n").cast("double") * F.col("sxx")
-        - F.col("sx").cast("double") * F.col("sx"),
-    )
-    fit = s.select(
-        "n",
-        (F.col("sx").cast("double") / F.col("n")).alias("xbar"),
-        (
-            F.col("sxx").cast("double")
-            - F.col("sx").cast("double") * F.col("sx") / F.col("n")
-        ).alias("sxx_c"),
-        slope.alias("slope"),
-        (
-            (F.col("sy").cast("double") - slope * F.col("sx")) / F.col("n")
-        ).alias("icept"),
-    )
+    tx, fit = _daily_fit(spark, sf_dir)
     u = tx.crossJoin(F.broadcast(fit)).select(
         "t",
         "n",
@@ -11634,13 +11414,7 @@ def a_granger_1lag(spark, sf_dir):
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").alias("d"))
         .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("y"),
+            _usd_sum().alias("y"),
             F.count("*").cast("long").alias("x"),
         )
     )
@@ -11745,13 +11519,8 @@ def a_granger_1lag(spark, sf_dir):
 
 @register(
     "a_chow_test",
-    """
-    WITH daily AS (
-        SELECT o_orderdate AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) // 100 AS rev
-        FROM orders GROUP BY 1
-    ),
+    f"""
+    WITH {_DAILY_REV_SQL},
     tx AS (
         SELECT CAST(date_diff('day', (SELECT min(d) FROM daily), d)
                     AS BIGINT) AS t,
@@ -11810,19 +11579,7 @@ def a_chow_test(spark, sf_dir):
     pass plus one global pass; no windows, no joins, and the k-break
     generalization adds groups, not scans.
     """
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("rev")
-        )
-    )
+    daily = _daily_rev(spark, sf_dir)
     d0 = daily.agg(F.min("d").alias("d0"))
     tx = daily.crossJoin(F.broadcast(d0)).select(
         F.datediff(F.col("d"), F.col("d0")).cast("long").alias("t"),
@@ -12105,16 +11862,8 @@ def a_gpd_pot(spark, sf_dir):
 
 @register(
     "a_cvm_twosample",
-    """
-    WITH vals AS (
-        SELECT l_quantity AS v,
-               CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS a,
-               CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS b
-        FROM lineitem WHERE l_returnflag IN ('R', 'N')
-        GROUP BY 1
-    ),
+    f"""
+    WITH {_RN_CENSUS_SQL.format(v='l_quantity')},
     cum AS (
         SELECT v, a, b,
                CAST(sum(a) OVER (ORDER BY v
@@ -12163,19 +11912,7 @@ def a_cvm_twosample(spark, sf_dir):
     BIGINT until the two final 6dp statistics. Continuous measures
     bucket first, same argument as the delta.
     """
-    vals = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_returnflag").isin("R", "N"))
-        .groupBy(F.col("l_quantity").alias("v"))
-        .agg(
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("long")
-            .alias("a"),
-            F.sum(F.when(F.col("l_returnflag") == "N", 1).otherwise(0))
-            .cast("long")
-            .alias("b"),
-        )
-    )
+    vals = _rn_census(spark, sf_dir, F.col("l_quantity"))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = vals.select(
         "a",
@@ -12274,13 +12011,7 @@ def w_pacf(spark, sf_dir):
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").alias("d"))
         .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("y")
+            _usd_sum().alias("y")
         )
     )
     wl = Window.orderBy("d")
@@ -12358,13 +12089,8 @@ def w_pacf(spark, sf_dir):
 
 @register(
     "a_pettitt",
-    """
-    WITH daily AS (
-        SELECT o_orderdate AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) // 100 AS rev
-        FROM orders GROUP BY 1
-    ),
+    f"""
+    WITH {_DAILY_REV_SQL},
     census AS (
         SELECT rev AS v, CAST(count(*) AS BIGINT) AS c
         FROM daily GROUP BY 1
@@ -12418,19 +12144,7 @@ def a_pettitt(spark, sf_dir):
     time order, and the argmax is an aggregate. Nothing row-grain
     ever sorts; the same two-window shape serves any rank-based CUSUM.
     """
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_orderdate").alias("d"))
-        .agg(
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-                .cast("long")
-                / F.lit(100)
-            )
-            .cast("long")
-            .alias("rev")
-        )
-    )
+    daily = _daily_rev(spark, sf_dir)
     census = daily.groupBy(F.col("rev").alias("v")).agg(
         F.count("*").cast("long").alias("c")
     )
@@ -12831,17 +12545,8 @@ def a_mood_median(spark, sf_dir):
 
 @register(
     "a_sign_test",
-    """
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day,
-               CAST(sum(CASE WHEN event_type = 'purchase'
-                             THEN CAST(round(value * 100) AS BIGINT)
-                             ELSE 0 END) AS BIGINT) AS x,
-               CAST(sum(CASE WHEN event_type = 'click'
-                             THEN CAST(round(value * 100) AS BIGINT)
-                             ELSE 0 END) AS BIGINT) AS y
-        FROM events GROUP BY 1
-    ),
+    f"""
+    WITH {_PC_DAILY_SQL},
     c AS (
         SELECT CAST(sum(CASE WHEN x <> y THEN 1 ELSE 0 END) AS BIGINT)
                    AS n,
@@ -12873,16 +12578,7 @@ def a_sign_test(spark, sf_dir):
     (map-side combinable) and a two-counter reduction — strictly
     cheaper than Wilcoxon (no rank window at all).
     """
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", cents).otherwise(0))
-        .cast("long")
-        .alias("x"),
-        F.sum(F.when(F.col("event_type") == "click", cents).otherwise(0))
-        .cast("long")
-        .alias("y"),
-    )
+    daily = _purchase_click_days(spark, sf_dir)
     c = daily.agg(
         F.sum(F.when(F.col("x") != F.col("y"), 1).otherwise(0))
         .cast("long")
@@ -13278,10 +12974,7 @@ def a_robust_location(spark, sf_dir):
     )
 
 
-@register(
-    "a_meta_fixed_effect",
-    """
-    WITH grp AS (
+_NATION_MOMENTS_SQL = """grp AS (
         SELECT n.n_name AS nation,
                CAST(count(*) AS BIGINT) AS nj,
                avg(o.o_totalprice) AS xbar,
@@ -13290,7 +12983,39 @@ def a_robust_location(spark, sf_dir):
         JOIN customer c ON c.c_custkey = o.o_custkey
         JOIN nation n ON n.n_nationkey = c.c_nationkey
         GROUP BY 1
-    ),
+    )"""
+
+
+def _by_nation(spark, sf_dir, *aggs):
+    """Orders joined to their customer's nation, grouped by nation name:
+    (nation, *aggs)."""
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    return (
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
+        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(*aggs)
+    )
+
+
+def _nation_moments(spark, sf_dir):
+    """Per-nation order-price moments (the `_NATION_MOMENTS_SQL` twin):
+    (nation, nj, xbar, s2)."""
+    return _by_nation(
+        spark,
+        sf_dir,
+        F.count("*").cast("long").alias("nj"),
+        F.avg("o_totalprice").alias("xbar"),
+        F.var_samp("o_totalprice").alias("s2"),
+    )
+
+
+@register(
+    "a_meta_fixed_effect",
+    f"""
+    WITH {_NATION_MOMENTS_SQL},
     pool AS (
         SELECT CAST(count(*) AS BIGINT) AS k,
                CAST(sum(nj) AS BIGINT) AS n,
@@ -13337,19 +13062,7 @@ def a_meta_fixed_effect(spark, sf_dir):
     "studies" are shards/регions/experiments and this exact plan
     pools them without moving row-grain data twice.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    grp = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count("*").cast("long").alias("nj"),
-            F.avg("o_totalprice").alias("xbar"),
-            F.var_samp("o_totalprice").alias("s2"),
-        )
-    )
+    grp = _nation_moments(spark, sf_dir)
     w = F.col("nj") / F.col("s2")
     pool = grp.agg(
         F.count("*").cast("long").alias("k"),
@@ -13386,17 +13099,8 @@ def a_meta_fixed_effect(spark, sf_dir):
 
 @register(
     "a_james_stein",
-    """
-    WITH grp AS (
-        SELECT n.n_name AS nation,
-               CAST(count(*) AS BIGINT) AS nj,
-               avg(o.o_totalprice) AS xbar,
-               var_samp(o.o_totalprice) AS s2
-        FROM orders o
-        JOIN customer c ON c.c_custkey = o.o_custkey
-        JOIN nation n ON n.n_nationkey = c.c_nationkey
-        GROUP BY 1
-    ),
+    f"""
+    WITH {_NATION_MOMENTS_SQL},
     g AS (
         SELECT CAST(count(*) AS BIGINT) AS k,
                avg(xbar) AS grand,
@@ -13437,19 +13141,7 @@ def a_james_stein(spark, sf_dir):
     25-row frame + a broadcast scalar join back; segments add rows to
     a tiny frame.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    grp = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count("*").cast("long").alias("nj"),
-            F.avg("o_totalprice").alias("xbar"),
-            F.var_samp("o_totalprice").alias("s2"),
-        )
-    )
+    grp = _nation_moments(spark, sf_dir)
     grand = grp.agg(F.avg("xbar").alias("grand"))
     g = (
         grp.crossJoin(F.broadcast(grand))
@@ -13952,18 +13644,12 @@ def a_neyman_allocation(spark, sf_dir):
     frame, and the sample EXECUTION stays a hash-threshold scan
     (t_weighted_sample_aes) fed by these counts.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    grp = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count("*").cast("long").alias("nh"),
-            F.stddev_samp("o_totalprice").alias("sh"),
-            F.avg("o_totalprice").alias("mh"),
-        )
+    grp = _by_nation(
+        spark,
+        sf_dir,
+        F.count("*").cast("long").alias("nh"),
+        F.stddev_samp("o_totalprice").alias("sh"),
+        F.avg("o_totalprice").alias("mh"),
     )
     tot = grp.agg(
         F.sum("nh").cast("long").alias("n"),
@@ -13998,29 +13684,8 @@ def a_neyman_allocation(spark, sf_dir):
 
 @register(
     "a_nelson_aalen",
-    """
-    WITH bounds AS (SELECT max(o_orderdate) AS tmax FROM orders),
-    life AS (
-        SELECT o_custkey,
-               CAST(datediff('day', min(o_orderdate), max(o_orderdate))
-                    AS BIGINT) AS t,
-               CASE WHEN datediff('day', max(o_orderdate),
-                                  (SELECT tmax FROM bounds)) > 90
-                    THEN 1 ELSE 0 END AS died
-        FROM orders GROUP BY o_custkey
-    ),
-    counts AS (
-        SELECT t, CAST(count(*) AS BIGINT) AS c,
-               CAST(sum(died) AS BIGINT) AS d
-        FROM life GROUP BY t
-    ),
-    at_risk AS (
-        SELECT t, d,
-               sum(c) OVER (ORDER BY t DESC
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS n
-        FROM counts
-    ),
+    f"""
+    WITH {_CHURN_RISK_SQL},
     na AS (
         SELECT t, d, n,
                sum(CAST(round(d * 1e12 / n) AS BIGINT))
@@ -14435,16 +14100,8 @@ def a_cronbach_alpha(spark, sf_dir):
 
 @register(
     "a_ansari_bradley",
-    """
-    WITH vals AS (
-        SELECT CAST(l_quantity AS BIGINT) AS v,
-               CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS a,
-               CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS b
-        FROM lineitem WHERE l_returnflag IN ('R', 'N')
-        GROUP BY 1
-    ),
+    f"""
+    WITH {_RN_CENSUS_SQL.format(v='CAST(l_quantity AS BIGINT)')},
     cum AS (
         SELECT v, a, b, a + b AS c,
                CAST(coalesce(sum(a + b) OVER (ORDER BY v
@@ -14538,19 +14195,7 @@ def a_ansari_bradley(spark, sf_dir):
     Scale: one map-side-combinable census groupBy is the only data
     pass; the block closed forms run on ~50 rows.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    vals = (
-        li.where(F.col("l_returnflag").isin("R", "N"))
-        .groupBy(F.col("l_quantity").cast("long").alias("v"))
-        .agg(
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("long")
-            .alias("a"),
-            F.sum(F.when(F.col("l_returnflag") == "N", 1).otherwise(0))
-            .cast("long")
-            .alias("b"),
-        )
-    )
+    vals = _rn_census(spark, sf_dir, F.col("l_quantity").cast("long"))
     wb = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     wall = Window.partitionBy()
     cum = vals.select(
@@ -14766,10 +14411,7 @@ def a_conover_squared_ranks(spark, sf_dir):
     )
 
 
-@register(
-    "a_page_trend",
-    """
-    WITH cells0 AS (
+_PRIO_CELLS_SQL = """cells0 AS (
         SELECT CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS blk,
                CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS trt,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
@@ -14785,7 +14427,44 @@ def a_conover_squared_ranks(spark, sf_dir):
         SELECT s.blk, s.trt, coalesce(c.cents, 0) AS cents
         FROM scaffold s LEFT JOIN cells0 c
           ON c.blk = s.blk AND c.trt = s.trt
-    ),
+    )"""
+
+
+def _prio_cells0(spark, sf_dir):
+    """Exact order cents per (weekday block, priority treatment):
+    (blk, trt, cents), at most 7 x 5 cells."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .groupBy(
+            F.dayofweek("o_orderdate").cast("long").alias("blk"),
+            F.substring("o_orderpriority", 1, 1).cast("long").alias("trt"),
+        )
+        .agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            .cast("long")
+            .alias("cents")
+        )
+    )
+
+
+def _zero_filled(cells0):
+    """(blks, cells): the distinct blocks of `_prio_cells0`, and its cells
+    on the full block x treatment scaffold with quiet cells at 0 cents
+    (the `_PRIO_CELLS_SQL` twin)."""
+    blks = cells0.select("blk").distinct()
+    trts = cells0.select("trt").distinct()
+    cells = (
+        blks.crossJoin(trts)
+        .join(cells0, ["blk", "trt"], "left")
+        .select("blk", "trt", F.coalesce("cents", F.lit(0)).alias("cents"))
+    )
+    return blks, cells
+
+
+@register(
+    "a_page_trend",
+    f"""
+    WITH {_PRIO_CELLS_SQL},
     ranked AS (
         SELECT blk, trt,
                CAST(row_number() OVER (PARTITION BY blk
@@ -14832,25 +14511,10 @@ def a_page_trend(spark, sf_dir):
     Scale: one map-side-combinable cents groupBy; ranking runs on the
     35-cell frame.
     """
-    orders = load_table(spark, sf_dir, "orders")
     # r17 (guide §2.4/§5): the 35-cell census is the only data pass and
     # feeds both scaffold axes plus the zero-fill join — cache it so the
     # orders scan runs once, not once per consumer.
-    cells0 = orders.groupBy(
-        F.dayofweek("o_orderdate").cast("long").alias("blk"),
-        F.substring("o_orderpriority", 1, 1).cast("long").alias("trt"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("cents")
-    ).cache()
-    blks = cells0.select("blk").distinct()
-    trts = cells0.select("trt").distinct()
-    cells = (
-        blks.crossJoin(trts)
-        .join(cells0, ["blk", "trt"], "left")
-        .select("blk", "trt", F.coalesce("cents", F.lit(0)).alias("cents"))
-    )
+    blks, cells = _zero_filled(_prio_cells0(spark, sf_dir).cache())
     wr = Window.partitionBy("blk").orderBy("cents", "trt")
     ranked = cells.select(
         "trt", F.row_number().over(wr).cast("long").alias("r")
@@ -14996,29 +14660,8 @@ def a_horvitz_thompson(spark, sf_dir):
 
 @register(
     "a_greenwood_ci",
-    """
-    WITH bounds AS (SELECT max(o_orderdate) AS tmax FROM orders),
-    life AS (
-        SELECT o_custkey,
-               CAST(datediff('day', min(o_orderdate), max(o_orderdate))
-                    AS BIGINT) AS t,
-               CASE WHEN datediff('day', max(o_orderdate),
-                                  (SELECT tmax FROM bounds)) > 90
-                    THEN 1 ELSE 0 END AS died
-        FROM orders GROUP BY o_custkey
-    ),
-    counts AS (
-        SELECT t, CAST(count(*) AS BIGINT) AS c,
-               CAST(sum(died) AS BIGINT) AS d
-        FROM life GROUP BY t
-    ),
-    at_risk AS (
-        SELECT t, d,
-               sum(c) OVER (ORDER BY t DESC
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS n
-        FROM counts
-    ),
+    f"""
+    WITH {_CHURN_RISK_SQL},
     km AS (
         SELECT t, d, n,
                sum(CAST(round(ln(1.0 - d * 1.0 / n) * 1e12) AS BIGINT))
@@ -15092,16 +14735,8 @@ def a_greenwood_ci(spark, sf_dir):
 
 @register(
     "a_brunner_munzel",
-    """
-    WITH vals AS (
-        SELECT CAST(l_quantity AS BIGINT) AS v,
-               CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS a,
-               CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS b
-        FROM lineitem WHERE l_returnflag IN ('R', 'N')
-        GROUP BY 1
-    ),
+    f"""
+    WITH {_RN_CENSUS_SQL.format(v='CAST(l_quantity AS BIGINT)')},
     cum AS (
         SELECT v, a, b,
                coalesce(sum(a + b) OVER (ORDER BY v
@@ -15162,19 +14797,7 @@ def a_brunner_munzel(spark, sf_dir):
     Scale: one census groupBy is the only data pass; three cumulative
     windows run on ≤50 census rows.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    vals = (
-        li.where(F.col("l_returnflag").isin("R", "N"))
-        .groupBy(F.col("l_quantity").cast("long").alias("v"))
-        .agg(
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-            .cast("long")
-            .alias("a"),
-            F.sum(F.when(F.col("l_returnflag") == "N", 1).otherwise(0))
-            .cast("long")
-            .alias("b"),
-        )
-    )
+    vals = _rn_census(spark, sf_dir, F.col("l_quantity").cast("long"))
     wb = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     cum = vals.select(
         "a",
@@ -15225,15 +14848,8 @@ def a_brunner_munzel(spark, sf_dir):
 
 @register(
     "a_tukey_hsd",
-    """
-    WITH g AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               sum(CAST(round(value * 100) AS BIGINT)) AS s,
-               sum(CAST(round(value * 100) AS BIGINT)
-                   * CAST(round(value * 100) AS BIGINT)) AS q
-        FROM events GROUP BY event_type
-    ),
+    f"""
+    WITH {_TYPE_MOMENTS_SQL},
     t AS (
         SELECT CAST(sum(n) AS BIGINT) AS nt,
                CAST(count(*) AS BIGINT) AS k,
@@ -15272,13 +14888,7 @@ def a_tukey_hsd(spark, sf_dir):
     Scale: the a_anova_f plan + a ≤k² broadcast pair join on the
     group frame — groups add frame rows, never passes.
     """
-    ev = load_table(spark, sf_dir, "events")
-    c = F.round(F.col("value") * 100).cast("long")
-    g = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(c).alias("s"),
-        F.sum(c * c).alias("q"),
-    )
+    g = _type_moments(spark, sf_dir)
     t = g.agg(
         # try_divide: an all-singleton-group corpus has nt == k, so the
         # MSW denominator is 0 — NULL like DuckDB's /0, no ANSI crash
@@ -15343,16 +14953,9 @@ _BY_THR_SQL = """CASE r WHEN 1 THEN 3.136961 WHEN 2 THEN 2.927757
                    AS mr2
         FROM daily d JOIN tt t ON t.x = d.x
     ),
-    sums AS (
-        SELECT event_type, CAST(sum(mr2) AS BIGINT) AS r2,
-               CAST(count(*) AS BIGINT) AS nj
-        FROM ranked GROUP BY event_type
-    ),
+    {_RANK_SUMS_SQL},
     c AS (SELECT CAST(sum(nj) AS BIGINT) AS n FROM sums),
-    tie AS (
-        SELECT CAST(coalesce(sum(t * t * t - t), 0) AS BIGINT) AS tc
-        FROM tt WHERE t > 1
-    ),
+    {_TIE_SQL},
     zs AS (
         SELECT a.event_type AS ta, b.event_type AS tb,
                ((a.r2 * 1.0 / a.nj - b.r2 * 1.0 / b.nj) / 2.0)
@@ -15401,70 +15004,12 @@ def a_by_fdr_pairs(spark, sf_dir):
     a_kruskal_wallis frame); the 10-pair step-ups are bounded-frame
     arithmetic.
     """
-    ev = load_table(spark, sf_dir, "events")
     # r17 (guide §2.4/§5): daily is the only data pass and fed every
     # downstream frame uncached (14 parquet-scan subtrees in the plan);
     # bounded at |days|×|event types| cells. sums (≤|event types| rows)
     # feeds the census and both pair-join sides.
-    daily = ev.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-        F.sum(F.round(F.col("value") * 100).cast("long"))
-        .cast("long")
-        .alias("x")
-    ).cache()
-    tt = daily.groupBy("x").agg(F.count("*").cast("long").alias("t"))
-    ranked = daily.join(tt, "x").select(
-        "event_type",
-        (2 * F.rank().over(Window.orderBy("x")) + F.col("t") - 1)
-        .cast("long")
-        .alias("mr2"),
-    )
-    sums = ranked.groupBy("event_type").agg(
-        F.sum("mr2").cast("long").alias("r2"),
-        F.count("*").cast("long").alias("nj"),
-    ).cache()
-    c = sums.agg(F.sum("nj").cast("long").alias("n"))
-    tie = tt.where(F.col("t") > 1).agg(
-        F.coalesce(
-            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("tc")
-    )
-    a = sums.select(
-        F.col("event_type").alias("ta"),
-        F.col("r2").alias("r2a"),
-        F.col("nj").alias("na"),
-    )
-    b = sums.select(
-        F.col("event_type").alias("tb"),
-        F.col("r2").alias("r2b"),
-        F.col("nj").alias("nb"),
-    )
-    n, tc = F.col("n"), F.col("tc")
-    zexpr = (
-        (
-            F.col("r2a").cast("double") / F.col("na")
-            - F.col("r2b").cast("double") / F.col("nb")
-        )
-        / 2.0
-    ) / F.sqrt(
-        (n * (n + 1.0) / 12.0 - tc / (12.0 * (n - 1.0)))
-        * (1.0 / F.col("na") + 1.0 / F.col("nb"))
-    )
-    zs = (
-        a.join(b, F.col("ta") < F.col("tb"))
-        .crossJoin(F.broadcast(c))
-        .crossJoin(F.broadcast(tie))
-        .select("ta", "tb", zexpr.alias("z"))
-    )
-    rk = zs.select(
-        "*",
-        F.row_number()
-        .over(Window.orderBy(F.abs(F.col("z")).desc(), "ta", "tb"))
-        .cast("long")
-        .alias("r"),
-    )
+    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir).cache())
+    rk = _dunn_pairs(sums.cache(), tie)
     thr = rk.select(
         "*",
         F.expr(_DUNN_THR_SQL).alias("zbh"),
@@ -15649,24 +15194,8 @@ def a_bass_diffusion(spark, sf_dir):
 
 @register(
     "a_quade_test",
-    """
-    WITH cells0 AS (
-        SELECT CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS blk,
-               CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS trt,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
-        FROM orders GROUP BY 1, 2
-    ),
-    scaffold AS (
-        SELECT b.blk, t.trt
-        FROM (SELECT DISTINCT blk FROM cells0) b
-        CROSS JOIN (SELECT DISTINCT trt FROM cells0) t
-    ),
-    cells AS (
-        SELECT s.blk, s.trt, coalesce(c.cents, 0) AS cents
-        FROM scaffold s LEFT JOIN cells0 c
-          ON c.blk = s.blk AND c.trt = s.trt
-    ),
+    f"""
+    WITH {_PRIO_CELLS_SQL},
     ranked AS (
         SELECT blk, trt, cents,
                CAST(row_number() OVER (PARTITION BY blk
@@ -15723,25 +15252,10 @@ def a_quade_test(spark, sf_dir):
     Scale: one map-side cents groupBy; everything else is 35-cell
     arithmetic.
     """
-    orders = load_table(spark, sf_dir, "orders")
     # r17 (guide §2.4/§5): the 35-cell census is the only data pass and
     # feeds both scaffold axes plus the zero-fill join — cache it so the
     # orders scan runs once, not once per consumer.
-    cells0 = orders.groupBy(
-        F.dayofweek("o_orderdate").cast("long").alias("blk"),
-        F.substring("o_orderpriority", 1, 1).cast("long").alias("trt"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("cents")
-    ).cache()
-    blks = cells0.select("blk").distinct()
-    trts = cells0.select("trt").distinct()
-    cells = (
-        blks.crossJoin(trts)
-        .join(cells0, ["blk", "trt"], "left")
-        .select("blk", "trt", F.coalesce("cents", F.lit(0)).alias("cents"))
-    )
+    _, cells = _zero_filled(_prio_cells0(spark, sf_dir).cache())
     wr = Window.partitionBy("blk").orderBy("cents", "trt")
     ranked = cells.select(
         "blk", "trt", F.row_number().over(wr).cast("long").alias("r")
@@ -16067,15 +15581,8 @@ def a_yuen_trimmed_t(spark, sf_dir):
 
 @register(
     "a_welch_anova",
-    """
-    WITH g AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               sum(CAST(round(value * 100) AS BIGINT)) AS s,
-               sum(CAST(round(value * 100) AS BIGINT)
-                   * CAST(round(value * 100) AS BIGINT)) AS q
-        FROM events GROUP BY event_type
-    ),
+    f"""
+    WITH {_TYPE_MOMENTS_SQL},
     m AS (
         SELECT event_type, n,
                s * 1.0 / n AS mean,
@@ -16127,13 +15634,7 @@ def a_welch_anova(spark, sf_dir):
     Scale: the a_anova_f plan verbatim — one map-side-combinable
     moment groupBy; groups add frame rows, never passes.
     """
-    ev = load_table(spark, sf_dir, "events")
-    c = F.round(F.col("value") * 100).cast("long")
-    g = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(c).alias("s"),
-        F.sum(c * c).alias("q"),
-    )
+    g = _type_moments(spark, sf_dir)
     m = g.select(
         "n",
         (F.col("s") * 1.0 / F.col("n")).alias("mean"),

@@ -1,0 +1,36 @@
+"""Ratchet: tools/dupscan.py's count of repeated package lines may only fall.
+
+The ceilings below are the counts left once every shared statistics
+input in operators/aggregates.py got one owner: 587 repeated lines in
+the package and 0 in aggregates.py. A change that copies a block back
+anywhere in the package fails here, not just in a hand-run scan.
+
+To lower a ceiling: remove repeats, run ``python tools/dupscan.py`` and
+write its new per-file and total counts here in the same commit.
+"""
+
+import os
+
+from tools.dupscan import ROOT, package_files, scan
+
+PACKAGE_CEILING = 587
+AGGREGATES_CEILING = 0
+AGGREGATES = os.path.join(
+    ROOT, "npc_recommender_netflix_spark", "operators", "aggregates.py"
+)
+
+
+def test_package_repeats_do_not_rise():
+    total = sum(len(lines) for lines in scan(package_files()).values())
+    assert total <= PACKAGE_CEILING, (
+        f"{total} repeated package lines, ceiling {PACKAGE_CEILING}; "
+        "run `python tools/dupscan.py --show <file>` to find the copy"
+    )
+
+
+def test_aggregates_repeats_do_not_rise():
+    lines = scan(package_files())[AGGREGATES]
+    assert len(lines) <= AGGREGATES_CEILING, (
+        f"aggregates.py repeats {len(lines)} lines, ceiling "
+        f"{AGGREGATES_CEILING}: {lines}"
+    )

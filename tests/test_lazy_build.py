@@ -53,6 +53,43 @@ LAZY_BUILD_KEYS = (
     "v_centroid_outliers",
     "v_rerank_mmr",
     "v_kcenter_rerank",
+    # statistics keys built from aggregates.py's shared-input owners
+    "a_durbin_watson",
+    "a_cooks_distance",
+    "a_breusch_pagan",
+    "a_newey_west",
+    "a_granger_1lag",
+    "a_chow_test",
+    "w_pacf",
+    "a_pettitt",
+    "a_ljung_box",
+    "a_hurst_exponent",
+    "a_ar2_yule_walker",
+    "a_anova_f",
+    "a_power_sample_size",
+    "a_tukey_hsd",
+    "a_welch_anova",
+    "a_kruskal_wallis",
+    "a_dunn_test",
+    "a_by_fdr_pairs",
+    "a_cliffs_delta",
+    "a_cvm_twosample",
+    "a_ansari_bradley",
+    "a_brunner_munzel",
+    "a_meta_fixed_effect",
+    "a_james_stein",
+    "a_neyman_allocation",
+    "a_page_trend",
+    "a_quade_test",
+    "a_cohens_d",
+    "a_ttest_welch",
+    "a_wilcoxon_signed_rank",
+    "a_sign_test",
+    "a_brier_decomposition",
+    "a_isotonic_pav",
+    "a_logistic_irls",
+    "a_poisson_irls",
+    "a_pinball_eval",
 )
 
 # {key: (max jobs on the first build at SF_SMALL, reason)}; each budget is
