@@ -13,6 +13,26 @@ Scale story (the whole point of the ladder):
 - SimHash: one 64-bit fingerprint per doc, near-dups = small Hamming
   distance; candidate generation via banded fingerprint prefixes = equi-join.
 - MinHash+LSH: band-bucket equi-join, the classic web-dedup design.
+
+Each near-dup stage several keys share has one owner here, and the keys
+build on it (tests/test_dedup_owners.py fails when a copy comes back):
+- the bigram array: `bigram_array` (also text.py's plain bigram keys),
+  with the per-doc distinct set `_bigram_set` under `shingles` and the
+  map-side sizes `bigram_sizes`;
+- the pipeline front, quality filter + canonical exact dedup:
+  `_quality_exact`, with `_quality_sql` / `_DIGEST_FRONT_SQL`; the
+  near-dup losers and per-language survivor stats: `_survivor_stats`,
+  with `_losers_sql` / `_SURVIVOR_STATS_SQL`;
+- the df <= 64 posting cap: `_df_capped` / `_CAPPED_SQL`;
+- the posting-pair count and Jaccard filter: `_shares_shingle`,
+  `_pair_counts`, `_counts`, `_jaccard_pairs`, with `_sizes_inter_sql`,
+  `_jaccard_select_sql` and the components oracle `_CLUSTERS_SQL`;
+- MinHash signatures, bands and band candidates: `_minhash_sig`,
+  `_minhash_bands`, `_band_candidates`, with `_sig_cols_sql`,
+  `_bands_sql`, `_SIG_BANDS_SQL` and `_band_cand_sql`;
+- the candidate-driven exact rescore: `_rescore` / `_rescore_sql`;
+- idf-weighted lexical hits: `lexical_hits` (also
+  v_hybrid_retrieval_overlap in vectors.py).
 """
 
 from __future__ import annotations
@@ -20,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..registry import ORACLE as _ORACLE
 from ..registry import register
 from ..session import f6, load_table, widen_narrow_scan
 
@@ -46,13 +67,41 @@ SHINGLES_FULL_SQL = r"""
 """
 
 
+def bigram_array() -> Column:
+    """The positional 2-word shingles of the token-array column ``w``,
+    in order and with repeats — the one spelling of the bigram transform
+    every dedup key (and text.py's plain bigram keys) builds on.
+
+    A document of fewer than 2 tokens has none, as in the oracles'
+    ``range(1, len(w))``: the two-arg sequence(0, -1) would step -1 and
+    yield [0, -1], and the w[1] lookup raises INVALID_ARRAY_INDEX under
+    ANSI mode."""
+    return F.expr(
+        "CASE WHEN size(w) >= 2 THEN "
+        "transform(sequence(0, size(w) - 2, 1),"
+        " i -> concat(w[i], ' ', w[i + 1])) "
+        "ELSE array() END"
+    )
+
+
+def _words(docs: DataFrame) -> DataFrame:
+    return docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
+
+
+def _bigram_set(docs: DataFrame) -> DataFrame:
+    """(doc_id, s): each (doc_id, text) row's DISTINCT bigram set.
+    Per-doc dedup happens BEFORE the explode with array_distinct (r17
+    optimization, guide §2.4): the old explode().distinct() paid a full
+    (doc_id, s) Exchange in every consumer for a dedup that is local to
+    one document — one row, one array — by construction. Same row set
+    (array_distinct keeps one NULL like DISTINCT), zero shuffles."""
+    return _words(docs).select(
+        "doc_id", F.explode(F.array_distinct(bigram_array())).alias("s")
+    )
+
+
 def shingles(spark, sf_dir, bounded=True, wide=False):
     # bigrams via array transform — map-side only, no self-join shuffle.
-    # Per-doc dedup happens BEFORE the explode with array_distinct (r17
-    # optimization, guide §2.4): the old explode().distinct() paid a full
-    # (doc_id, s) Exchange in every consumer for a dedup that is local to
-    # one document — one row, one array — by construction. Same row set
-    # (array_distinct keeps one NULL like DISTINCT), zero shuffles.
     #
     # wide=True (r18, guide §2.6): callers that CACHE this frame inherit
     # the map-side lineage's width = the documents SCAN width, which is 1
@@ -68,20 +117,7 @@ def shingles(spark, sf_dir, bounded=True, wide=False):
         docs = docs.where(F.col("doc_id") < 1000)
     if wide:
         docs = widen_narrow_scan(spark, docs)
-    return (
-        docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(0, size(w) - 2),"
-                        " i -> concat(w[i], ' ', w[i + 1]))"
-                    )
-                )
-            ).alias("s"),
-        )
-    )
+    return _bigram_set(docs)
 
 
 def bigram_sizes(docs: DataFrame) -> DataFrame:
@@ -93,78 +129,113 @@ def bigram_sizes(docs: DataFrame) -> DataFrame:
     shingle set is per-doc-distinct by construction; only valid for sizes
     over the UNCAPPED shingle set (a df-capped set must count after the
     cap, which is a real aggregate)."""
-    return (
-        docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-        .select(
-            "doc_id",
-            F.size(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(0, size(w) - 2),"
-                        " i -> concat(w[i], ' ', w[i + 1]))"
-                    )
-                )
-            ).cast("long").alias("n"),
-        )
+    return _words(docs).select(
+        "doc_id",
+        F.size(F.array_distinct(bigram_array())).cast("long").alias("n"),
     )
+
+
+def _counts(sh: DataFrame) -> DataFrame:
+    """(doc_id, n): shingle count per document of a materialized set."""
+    return sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+
+
+def _df_capped(sh0: DataFrame, *keep: str) -> DataFrame:
+    """The postings of ``sh0`` whose shingle occurs in at most 64
+    documents, with the ``keep`` columns of the df table joined on. A hot
+    shingle's join output is quadratic in its document frequency while
+    carrying ~zero dedup signal (it's a stopword bigram); the cap bounds
+    every shingle's pair fan-out at 64^2 regardless of corpus size."""
+    freq = sh0.groupBy("s").agg(F.count("*").alias("df"))
+    return sh0.join(freq.where(F.col("df") <= 64).select("s", *keep), "s")
+
+
+def _shares_shingle() -> Column:
+    """Posting-pair predicate over the ``a``/``b`` aliases of a shingle
+    frame: same shingle, ordered pair."""
+    return (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+
+
+def _pair_counts(sh: DataFrame, da: str = "doc_a", db: str = "doc_b") -> DataFrame:
+    """(da, db, i): shared-shingle count of every ordered doc pair with at
+    least one shingle in common — the posting-list self-join (no O(n²)
+    cross join: candidate pairs only exist where a shingle is shared)."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        a.join(b, _shares_shingle())
+        .groupBy(F.col("a.doc_id").alias(da), F.col("b.doc_id").alias(db))
+        .agg(F.count("*").alias("i"))
+    )
+
+
+def _jaccard_pairs(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """(da, db, jaccard): the pairs of a _pair_counts frame whose Jaccard
+    i / (na + nb - i) over the (doc_id, n) ``sizes`` reaches
+    ``threshold``; jaccard is unrounded. Callers that know ``sizes`` is
+    bounded pass it broadcast-hinted; an unbounded one (one row per doc
+    at corpus scale) goes unhinted so AQE picks broadcast when it
+    measures small and SMJ otherwise."""
+    da, db, _ = inter.columns
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
+    return (
+        inter.join(sa, F.col(da) == F.col("sa.doc_id"))
+        .join(sb, F.col(db) == F.col("sb.doc_id"))
+        .where(jac >= threshold)
+        .select(da, db, jac.alias("jaccard"))
+    )
+
+
+def _sizes_inter_sql(inter: str, da: str, db: str) -> str:
+    """Oracle twin of _counts + _pair_counts over the ``sh`` CTE."""
+    return f"""sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    {inter} AS (SELECT a.doc_id AS {da}, b.doc_id AS {db}, count(*) AS i
+              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+              GROUP BY 1, 2)"""
+
+
+def _jaccard_select_sql(threshold: float) -> str:
+    """Oracle twin of _jaccard_pairs over the ``inter``/``sizes`` CTEs,
+    jaccard rounded to 6 places."""
+    return f"""SELECT doc_a, doc_b, round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
+    FROM inter JOIN sizes sa ON sa.doc_id = doc_a
+               JOIN sizes sb ON sb.doc_id = doc_b
+    WHERE i * 1.0 / (sa.n + sb.n - i) >= {threshold}"""
+
+
+# oracle twin of _df_capped over the ``sh0`` CTE
+_CAPPED_SQL = """freq AS (SELECT s, count(*) AS df FROM sh0 GROUP BY s),
+    sh AS (SELECT sh0.doc_id, sh0.s FROM sh0 JOIN freq ON freq.s = sh0.s
+           WHERE freq.df <= 64)"""
 
 
 @register(
     "t_jaccard_neardup",
     f"""
     WITH sh AS ({SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT doc_a, doc_b, round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
-    FROM inter JOIN sizes sa ON sa.doc_id = doc_a
-               JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.12
+    {_sizes_inter_sql("inter", "doc_a", "doc_b")}
+    {_jaccard_select_sql(0.12)}
     """,
 )
 def t_jaccard_neardup(spark, sf_dir):
     """Exact n-gram-Jaccard near-dup pairs via shingle equi-join (no O(n²)
     cross join — candidate pairs only exist where a shingle is shared)."""
-    sh = shingles(spark, sf_dir)
     sizes = bigram_sizes(
         load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
     )
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("i"))
+    pairs = _jaccard_pairs(
+        _pair_counts(shingles(spark, sf_dir)), F.broadcast(sizes), 0.12
     )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    return (
-        inter.join(F.broadcast(sa), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(F.broadcast(sb), F.col("doc_b") == F.col("sb.doc_id"))
-        .where(jac >= 0.12)
-        .select("doc_a", "doc_b", f6(jac).alias("jaccard"))
-    )
+    return pairs.select("doc_a", "doc_b", f6(F.col("jaccard")).alias("jaccard"))
 
 
 @register(
     "t_jaccard_neardup_capped",
     f"""
     WITH sh0 AS ({SHINGLES_FULL_SQL}),
-    freq AS (SELECT s, count(*) AS df FROM sh0 GROUP BY s),
-    sh AS (SELECT sh0.doc_id, sh0.s FROM sh0 JOIN freq ON freq.s = sh0.s
-           WHERE freq.df <= 64),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT doc_a, doc_b, round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
-    FROM inter JOIN sizes sa ON sa.doc_id = doc_a
-               JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.12
+    {_CAPPED_SQL},
+    {_sizes_inter_sql("inter", "doc_a", "doc_b")}
+    {_jaccard_select_sql(0.12)}
     """,
 )
 def t_jaccard_neardup_capped(spark, sf_dir):
@@ -172,43 +243,21 @@ def t_jaccard_neardup_capped(spark, sf_dir):
     100 TB shape of t_jaccard_neardup.
 
     No doc_id bound: instead, shingles appearing in more than 64 documents
-    are dropped before the posting-list self-join. A hot shingle's join
-    output is quadratic in its document frequency while carrying ~zero dedup
-    signal (it's a stopword bigram); the cap bounds every shingle's pair
-    fan-out at 64^2 regardless of corpus size, which is what makes the
-    equi-join plan survive a 100x scale-up. Jaccard is computed over the
-    capped shingle sets on BOTH engines, so the oracle is exact.
+    are dropped before the posting-list self-join (_df_capped), which is
+    what makes the equi-join plan survive a 100x scale-up. Jaccard is
+    computed over the capped shingle sets on BOTH engines, so the oracle
+    is exact.
     """
-    sh0 = shingles(spark, sf_dir, bounded=False)
-    freq = sh0.groupBy("s").agg(F.count("*").alias("df"))
     # cache the capped postings: they feed THREE consumers (sizes + both
     # self-join sides), and Spark replays the whole shingle-distinct +
     # df-cap-join subtree per consumer without it (round-12: x30 ladder
     # shuffle was 43x input from the replays). The df-join leaves sh
     # hash-partitioned by s, and InMemoryRelation preserves that
     # clustering, so the a<->b self-join below stays exchange-free.
-    sh = sh0.join(freq.where(F.col("df") <= 64).select("s"), "s").cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("i"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    # no broadcast hint: sizes is one row per doc — unbounded at corpus
-    # scale. AQE picks broadcast when it measures small, SMJ otherwise.
-    return (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .where(jac >= 0.12)
-        .select("doc_a", "doc_b", f6(jac).alias("jaccard"))
-    )
+    sh = _df_capped(shingles(spark, sf_dir, bounded=False)).cache()
+    # sizes unhinted: one row per doc, unbounded at corpus scale
+    pairs = _jaccard_pairs(_pair_counts(sh), _counts(sh), 0.12)
+    return pairs.select("doc_a", "doc_b", f6(F.col("jaccard")).alias("jaccard"))
 
 
 # --- SimHash: md5-derived, engine-portable ---------------------------------
@@ -522,17 +571,78 @@ def t_minhash_dedup(spark, sf_dir):
     )
 
 
-@register(
-    "t_pipeline_e2e",
-    r"""
-    WITH scored AS (
+# --- the training-data pipeline: quality front and survivor stats ---------
+
+
+def _quality_sql(where: str = "") -> str:
+    """Oracle twin of _quality_exact's quality filter over ``documents``
+    (optionally restricted by ``where``): the ``scored``/``quality`` CTEs."""
+    return rf"""scored AS (
         SELECT doc_id, lang, text,
                len(string_split_regex(lower(text), '\s+')) AS n_tokens,
                len(list_distinct(string_split_regex(lower(text), '\s+'))) * 1.0
                    / len(string_split_regex(lower(text), '\s+')) AS distinct_ratio
-        FROM documents WHERE doc_id < 1000
+        FROM documents{where}
     ),
-    quality AS (SELECT * FROM scored WHERE n_tokens >= 20 AND distinct_ratio > 0.3),
+    quality AS (SELECT * FROM scored WHERE n_tokens >= 20 AND distinct_ratio > 0.3)"""
+
+
+# quality filter + digest-keyed canonical dedup (min doc_id per md5)
+_DIGEST_FRONT_SQL = f"""{_quality_sql()},
+    canon AS (SELECT md5(text) AS d, min(doc_id) AS keep FROM quality GROUP BY 1),
+    exact AS (SELECT q.* FROM quality q
+              JOIN canon c ON md5(q.text) = c.d AND q.doc_id = c.keep)"""
+
+def _losers_sql(pairs: str) -> str:
+    """The ``losers`` CTE: the higher doc_id of each Jaccard >= 0.5 pair
+    of the (da, db, i) CTE ``pairs``."""
+    return f"""losers AS (SELECT DISTINCT db AS doc_id FROM {pairs}
+               JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
+               WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5)"""
+
+
+# per-language stats of the exact-dedup survivors that are no near-dup loser
+_SURVIVOR_STATS_SQL = """SELECT lang, count(*) AS n_docs, round(avg(n_tokens), 6) AS avg_tokens
+    FROM exact WHERE doc_id NOT IN (SELECT doc_id FROM losers)
+    GROUP BY lang"""
+
+
+def _quality_exact(docs: DataFrame, key) -> DataFrame:
+    """The pipeline front: quality filter (>= 20 tokens, distinct-token
+    ratio > 0.3) -> canonical exact dedup, keeping the min doc_id per
+    ``key`` (the text itself, or its md5 digest so text never becomes a
+    shuffle key). Carries n_tokens for the per-language stats."""
+    w = F.split(F.lower("text"), r"\s+")
+    scored = docs.select(
+        "doc_id",
+        "lang",
+        "text",
+        F.size(w).alias("n_tokens"),
+        (F.expr("size(array_distinct(split(lower(text), '\\\\s+')))") * 1.0 / F.size(w)).alias(
+            "distinct_ratio"
+        ),
+    )
+    quality = scored.where((F.col("n_tokens") >= 20) & (F.col("distinct_ratio") > 0.3))
+    wmin = Window.partitionBy(key)
+    return (
+        quality.withColumn("min_id", F.min("doc_id").over(wmin))
+        .where(F.col("doc_id") == F.col("min_id"))
+        .drop("min_id")
+    )
+
+
+def _survivor_stats(exact: DataFrame, losers: DataFrame) -> DataFrame:
+    """(lang, n_docs, avg_tokens) over ``exact`` minus the ``losers``."""
+    kept = exact.join(losers, "doc_id", "left_anti")
+    return kept.groupBy("lang").agg(
+        F.count("*").alias("n_docs"), f6(F.avg("n_tokens")).alias("avg_tokens")
+    )
+
+
+@register(
+    "t_pipeline_e2e",
+    rf"""
+    WITH {_quality_sql(" WHERE doc_id < 1000")},
     exact AS (
         SELECT * FROM quality q WHERE NOT EXISTS (
             SELECT 1 FROM quality q2 WHERE q2.text = q.text AND q2.doc_id < q.doc_id)
@@ -540,16 +650,9 @@ def t_minhash_dedup(spark, sf_dir):
     toks AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM exact),
     sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i + 1] AS s
            FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i FROM toks)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-    losers AS (SELECT DISTINCT db AS doc_id FROM pairs
-               JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
-               WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5)
-    SELECT lang, count(*) AS n_docs, round(avg(n_tokens), 6) AS avg_tokens
-    FROM exact WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-    GROUP BY lang
+    {_sizes_inter_sql("pairs", "da", "db")},
+    {_losers_sql("pairs")}
+    {_SURVIVOR_STATS_SQL}
     """,
 )
 def t_pipeline_e2e(spark, sf_dir):
@@ -560,93 +663,26 @@ def t_pipeline_e2e(spark, sf_dir):
     Catalyst plans the chain with no materialization between stages.
     Scale variant without the doc_id<1000 bound: t_pipeline_e2e_scale."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
-    w = F.split(F.lower("text"), r"\s+")
-    scored = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        F.size(w).alias("n_tokens"),
-        (F.expr("size(array_distinct(split(lower(text), '\\\\s+')))") * 1.0 / F.size(w)).alias(
-            "distinct_ratio"
-        ),
-    )
-    quality = scored.where((F.col("n_tokens") >= 20) & (F.col("distinct_ratio") > 0.3))
-    # canonical exact dedup: min doc_id per text
-    wmin = Window.partitionBy("text")
-    exact = (
-        quality.withColumn("min_id", F.min("doc_id").over(wmin))
-        .where(F.col("doc_id") == F.col("min_id"))
-        .drop("min_id")
-    )
+    exact = _quality_exact(docs, "text")
     # near-dup losers among the survivors (jaccard >= 0.5 over 2-shingles)
-    sh = (
-        exact.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(
-                # per-doc distinct map-side (r17, guide §2.4) — one less
-                # Exchange than explode().distinct(), identical row set
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(0, size(w) - 2),"
-                        " i -> concat(w[i], ' ', w[i + 1]))"
-                    )
-                )
-            ).alias("s"),
-        )
+    pairs = _jaccard_pairs(
+        _pair_counts(_bigram_set(exact), "da", "db"), F.broadcast(bigram_sizes(exact)), 0.5
     )
-    sizes = bigram_sizes(exact)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("i"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    losers = (
-        inter.join(F.broadcast(sa), F.col("da") == F.col("sa.doc_id"))
-        .join(F.broadcast(sb), F.col("db") == F.col("sb.doc_id"))
-        .where(jac >= 0.5)
-        .select(F.greatest("da", "db").alias("doc_id"))
-        .distinct()
-    )
-    kept = exact.join(losers, "doc_id", "left_anti")
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"), f6(F.avg("n_tokens")).alias("avg_tokens")
-    )
+    losers = pairs.select(F.greatest("da", "db").alias("doc_id")).distinct()
+    return _survivor_stats(exact, losers)
 
 
 @register(
     "t_pipeline_e2e_scale",
-    r"""
-    WITH scored AS (
-        SELECT doc_id, lang, text,
-               len(string_split_regex(lower(text), '\s+')) AS n_tokens,
-               len(list_distinct(string_split_regex(lower(text), '\s+'))) * 1.0
-                   / len(string_split_regex(lower(text), '\s+')) AS distinct_ratio
-        FROM documents
-    ),
-    quality AS (SELECT * FROM scored WHERE n_tokens >= 20 AND distinct_ratio > 0.3),
-    canon AS (SELECT md5(text) AS d, min(doc_id) AS keep FROM quality GROUP BY 1),
-    exact AS (SELECT q.* FROM quality q
-              JOIN canon c ON md5(q.text) = c.d AND q.doc_id = c.keep),
+    rf"""
+    WITH {_DIGEST_FRONT_SQL},
     toks AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM exact),
     sh0 AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i + 1] AS s
             FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i FROM toks)),
-    freq AS (SELECT s, count(*) AS df FROM sh0 GROUP BY s),
-    sh AS (SELECT sh0.doc_id, sh0.s FROM sh0 JOIN freq ON freq.s = sh0.s
-           WHERE freq.df <= 64),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-    losers AS (SELECT DISTINCT db AS doc_id FROM pairs
-               JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
-               WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5)
-    SELECT lang, count(*) AS n_docs, round(avg(n_tokens), 6) AS avg_tokens
-    FROM exact WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-    GROUP BY lang
+    {_CAPPED_SQL},
+    {_sizes_inter_sql("pairs", "da", "db")},
+    {_losers_sql("pairs")}
+    {_SURVIVOR_STATS_SQL}
     """,
 )
 def t_pipeline_e2e_scale(spark, sf_dir):
@@ -657,74 +693,19 @@ def t_pipeline_e2e_scale(spark, sf_dir):
     t_jaccard_neardup_capped bound) -> per-language stats. Still one lazy
     Catalyst plan; every shuffle key is either a digest, a shingle, or a
     doc_id — never the document text as a join key."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = F.split(F.lower("text"), r"\s+")
-    scored = docs.select(
-        "doc_id",
-        "lang",
-        "text",
-        F.size(w).alias("n_tokens"),
-        (F.expr("size(array_distinct(split(lower(text), '\\\\s+')))") * 1.0 / F.size(w)).alias(
-            "distinct_ratio"
-        ),
-    )
-    quality = scored.where((F.col("n_tokens") >= 20) & (F.col("distinct_ratio") > 0.3))
-    wmin = Window.partitionBy(F.md5("text"))
-    exact = (
-        quality.withColumn("min_id", F.min("doc_id").over(wmin))
-        .where(F.col("doc_id") == F.col("min_id"))
-        .drop("min_id")
-    )
-    sh0 = (
-        exact.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(
-                # per-doc distinct map-side (r17, guide §2.4) — one less
-                # Exchange than explode().distinct(), identical row set
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(0, size(w) - 2),"
-                        " i -> concat(w[i], ' ', w[i + 1]))"
-                    )
-                )
-            ).alias("s"),
-        )
-    )
-    freq = sh0.groupBy("s").agg(F.count("*").alias("df"))
-    sh = sh0.join(freq.where(F.col("df") <= 64).select("s"), "s")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("i"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
+    exact = _quality_exact(load_table(spark, sf_dir, "documents"), F.md5("text"))
+    sh = _df_capped(_bigram_set(exact))
     # no broadcast hint on the unbounded sizes table (cf.
     # t_jaccard_neardup_capped) -- AQE decides from measured size
-    losers = (
-        inter.join(sa, F.col("da") == F.col("sa.doc_id"))
-        .join(sb, F.col("db") == F.col("sb.doc_id"))
-        .where(jac >= 0.5)
-        .select(F.greatest("da", "db").alias("doc_id"))
-        .distinct()
-    )
-    kept = exact.join(losers, "doc_id", "left_anti")
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"), f6(F.avg("n_tokens")).alias("avg_tokens")
-    )
+    pairs = _jaccard_pairs(_pair_counts(sh, "da", "db"), _counts(sh), 0.5)
+    losers = pairs.select(F.greatest("da", "db").alias("doc_id")).distinct()
+    return _survivor_stats(exact, losers)
 
 
-@register(
-    "t_dup_clusters",
-    f"""
-    WITH RECURSIVE sh AS ({SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
+# Jaccard>=0.5 components as a recursive reachability closure: asg maps
+# each clustered doc to its component's min doc_id
+_CLUSTERS_SQL = f"""WITH RECURSIVE sh AS ({SHINGLES_SQL}),
+    {_sizes_inter_sql("inter", "da", "db")},
     pairs AS (SELECT da, db FROM inter
               JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
               WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5),
@@ -732,7 +713,13 @@ def t_pipeline_e2e_scale(spark, sf_dir):
           UNION SELECT db, da FROM pairs),
     reach AS (SELECT a, b FROM e UNION SELECT DISTINCT a, a FROM e
               UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-    asg AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a)
+    asg AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a)"""
+
+
+@register(
+    "t_dup_clusters",
+    f"""
+    {_CLUSTERS_SQL}
     SELECT asg.doc_id, asg.cluster_id, CAST(cs.cnt AS BIGINT) AS cluster_size
     FROM asg JOIN (SELECT cluster_id, count(*) AS cnt FROM asg GROUP BY 1) cs
          ON cs.cluster_id = asg.cluster_id
@@ -776,23 +763,11 @@ def _jaccard05_edges(spark, sf_dir) -> DataFrame:
     — the shared front of t_dup_clusters and t_dup_keep_best (one
     construction so the survivor-selection keys can't diverge from the
     clustering key's pair rule). Returned CACHED; callers unpersist."""
-    sh = shingles(spark, sf_dir)
     sizes = bigram_sizes(
         load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
     )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("i"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
-    pairs = (
-        inter.join(F.broadcast(sa), F.col("da") == F.col("sa.doc_id"))
-        .join(F.broadcast(sb), F.col("db") == F.col("sb.doc_id"))
-        .where(jac >= 0.5)
-        .select("da", "db")
+    pairs = _jaccard_pairs(
+        _pair_counts(shingles(spark, sf_dir), "da", "db"), F.broadcast(sizes), 0.5
     )
     # Both orientations via ONE map-side explode instead of
     # pairs UNION pairs-flipped (r17, guide §2.4): the union form re-ran
@@ -861,37 +836,117 @@ def _minlabel_components(edges) -> DataFrame:
 
 # --- MinHash-LSH with an exact cross-engine oracle -------------------------
 
-_MINHASH_SIG_COLS = ",\n           ".join(
-    f"min(md5('{j}:' || s)) AS h{j}" for j in range(8)
-)
 
-_MINHASH_BANDS_SQL = "\n      UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band, md5(h{2 * b} || h{2 * b + 1}) AS bkey FROM sig"
-    for b in range(4)
-)
+def _sig_cols_sql(k: int) -> str:
+    """Oracle twin of _minhash_sig's k salted-md5 min columns."""
+    return ",\n           ".join(f"min(md5('{j}:' || s)) AS h{j}" for j in range(k))
+
+
+def _bands_sql(nb: int, sig: str = "sig") -> str:
+    """Oracle twin of _minhash_bands over the ``sig`` CTE."""
+    return "\n      UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, md5(h{2 * b} || h{2 * b + 1}) AS bkey"
+        f" FROM {sig}"
+        for b in range(nb)
+    )
+
+
+# k=8 signatures of the ``sh`` CTE, banded 4 x 2
+_SIG_BANDS_SQL = f"""sig AS (SELECT doc_id,
+           {_sig_cols_sql(8)}
+           FROM sh GROUP BY doc_id),
+    bands AS ({_bands_sql(4)})"""
+
+
+def _band_cand_sql(da: str, db: str) -> str:
+    """Oracle twin of _band_candidates over the ``bands`` CTE."""
+    return f"""cand AS (SELECT DISTINCT a.doc_id AS {da}, b.doc_id AS {db}
+             FROM bands a JOIN bands b
+               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)"""
+
+
+def _rescore_sql(c: str, da: str, db: str) -> str:
+    """Oracle twin of _rescore's sizes and candidate-pair intersections."""
+    return f"""sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    inter AS (SELECT {c}.{da}, {c}.{db}, count(*) AS i
+              FROM cand {c}
+              JOIN sh x ON x.doc_id = {c}.{da}
+              JOIN sh y ON y.doc_id = {c}.{db} AND y.s = x.s
+              GROUP BY 1, 2)"""
+
+
+def _minhash_sig(sh: DataFrame, k: int) -> DataFrame:
+    """(doc_id, h0..h{k-1}): k salted-md5 minhashes of each shingle set —
+    one map-combinable min-aggregate, constant 32 chars per hash per doc."""
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("s")))).alias(f"h{j}")
+            for j in range(k)
+        ]
+    )
+
+
+def _minhash_bands(sig: DataFrame, nb: int) -> DataFrame:
+    """(doc_id, band, bkey): ``nb`` bands of 2 rows each, a band's key the
+    md5 of its two hashes, exploded map-side from the signature row."""
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.md5(F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"))).alias(
+                            "bkey"
+                        ),
+                    )
+                    for b in range(nb)
+                ]
+            )
+        ).alias("bk"),
+    ).select("doc_id", "bk.band", "bk.bkey")
+
+
+def _band_candidates(bands: DataFrame, da: str, db: str) -> DataFrame:
+    """(da, db): distinct ordered pairs that collide in at least one band."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(b, ["band", "bkey"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias(da), F.col("b.doc_id").alias(db))
+        .distinct()
+    )
+
+
+def _rescore(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(da, db, jaccard): the (da, db) candidate pairs whose exact
+    shingle Jaccard reaches 0.5, unrounded. Candidate-driven: postings are joined per
+    candidate pair only, never all pairs. sizes stay a groupBy over the
+    (cached) sh (r17 measured: a map-side bigram_sizes rebuild is 5 s
+    SLOWER — the cache read is cheaper than re-splitting text, and the
+    aggregate's small stats keep the final sizes joins broadcast)."""
+    da, db = cand.columns
+    sizes = _counts(sh)
+    x = sh.select(F.col("doc_id").alias(da), "s")
+    y = sh.select(F.col("doc_id").alias(db), "s")
+    inter = cand.join(x, da).join(y, [db, "s"]).groupBy(da, db).agg(
+        F.count("*").alias("i")
+    )
+    sa = sizes.select(F.col("doc_id").alias(da), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias(db), F.col("n").alias("nb"))
+    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
+    pairs = inter.join(sa, da).join(sb, db).where(jac >= 0.5)
+    return pairs.select(da, db, jac.alias("jaccard"))
 
 
 @register(
     "t_minhash_lsh",
     f"""
     WITH sh AS ({SHINGLES_FULL_SQL}),
-    sig AS (SELECT doc_id,
-           {_MINHASH_SIG_COLS}
-           FROM sh GROUP BY doc_id),
-    bands AS ({_MINHASH_BANDS_SQL}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
-              FROM cand c
-              JOIN sh x ON x.doc_id = c.doc_a
-              JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-              GROUP BY 1, 2)
-    SELECT doc_a, doc_b, round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
-    FROM inter JOIN sizes sa ON sa.doc_id = doc_a
-               JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5
+    {_SIG_BANDS_SQL},
+    {_band_cand_sql("doc_a", "doc_b")},
+    {_rescore_sql("c", "doc_a", "doc_b")}
+    {_jaccard_select_sql(0.5)}
     """,
 )
 def t_minhash_lsh(spark, sf_dir):
@@ -911,71 +966,13 @@ def t_minhash_lsh(spark, sf_dir):
     # the shingle set feeds three consumers (signatures, sizes, rescoring);
     # Spark does not share repeated subtrees, so cache it once
     sh = shingles(spark, sf_dir, bounded=False, wide=True).cache()
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("s")))).alias(f"h{j}")
-            for j in range(8)
-        ]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"))).alias(
-                            "bkey"
-                        ),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # sizes stay a groupBy over the CACHED sh (r17 measured: a map-side
-    # bigram_sizes rebuild here is 5 s SLOWER — the cache read is cheaper
-    # than re-splitting text, and the aggregate's small stats keep the
-    # final sizes joins broadcast)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # candidate-driven exact verify: postings joined per candidate pair only
-    x = sh.select(F.col("doc_id").alias("doc_a"), "s")
-    y = sh.select(F.col("doc_id").alias("doc_b"), "s")
-    inter = (
-        cand.join(x, "doc_a").join(y, ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(jac >= 0.5)
-        .select("doc_a", "doc_b", (F.round(jac, 6) + 0.0).alias("jaccard"))
-    )
+    cand = _band_candidates(_minhash_bands(_minhash_sig(sh, 8), 4), "doc_a", "doc_b")
+    pairs = _rescore(cand, sh)
+    return pairs.select("doc_a", "doc_b", f6(F.col("jaccard")).alias("jaccard"))
 
 
-_E2E_FRONT_SQL = r"""
-    scored AS (
-        SELECT doc_id, lang, text,
-               len(string_split_regex(lower(text), '\s+')) AS n_tokens,
-               len(list_distinct(string_split_regex(lower(text), '\s+'))) * 1.0
-                   / len(string_split_regex(lower(text), '\s+')) AS distinct_ratio
-        FROM documents
-    ),
-    quality AS (SELECT * FROM scored WHERE n_tokens >= 20 AND distinct_ratio > 0.3),
-    canon AS (SELECT md5(text) AS d, min(doc_id) AS keep FROM quality GROUP BY 1),
-    exact AS (SELECT q.* FROM quality q
-              JOIN canon c ON md5(q.text) = c.d AND q.doc_id = c.keep),
+_E2E_FRONT_SQL = rf"""
+    {_DIGEST_FRONT_SQL},
     sh AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i + 1] AS s
            FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
                  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
@@ -987,25 +984,11 @@ _E2E_FRONT_SQL = r"""
     "t_pipeline_e2e_lsh",
     f"""
     WITH {_E2E_FRONT_SQL},
-    sig AS (SELECT doc_id,
-           {_MINHASH_SIG_COLS}
-           FROM sh GROUP BY doc_id),
-    bands AS ({_MINHASH_BANDS_SQL}),
-    cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-             FROM bands a JOIN bands b
-               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT c.da, c.db, count(*) AS i
-              FROM cand c
-              JOIN sh x ON x.doc_id = c.da
-              JOIN sh y ON y.doc_id = c.db AND y.s = x.s
-              GROUP BY 1, 2),
-    losers AS (SELECT DISTINCT db AS doc_id FROM inter
-               JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
-               WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5)
-    SELECT lang, count(*) AS n_docs, round(avg(n_tokens), 6) AS avg_tokens
-    FROM exact WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-    GROUP BY lang
+    {_SIG_BANDS_SQL},
+    {_band_cand_sql("da", "db")},
+    {_rescore_sql("c", "da", "db")},
+    {_losers_sql("inter")}
+    {_SURVIVOR_STATS_SQL}
     """,
 )
 def t_pipeline_e2e_lsh(spark, sf_dir):
@@ -1021,83 +1004,11 @@ def t_pipeline_e2e_lsh(spark, sf_dir):
     shingle document frequency. Same md5 arithmetic in DuckDB -> exact
     oracle for the full pipeline.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    w = F.split(F.lower("text"), r"\s+")
-    scored = docs.select(
-        "doc_id", "lang", "text",
-        F.size(w).alias("n_tokens"),
-        (F.expr("size(array_distinct(split(lower(text), '\\\\s+')))") * 1.0 / F.size(w)).alias(
-            "distinct_ratio"
-        ),
-    )
-    quality = scored.where((F.col("n_tokens") >= 20) & (F.col("distinct_ratio") > 0.3))
-    wmin = Window.partitionBy(F.md5("text"))
-    exact = (
-        quality.withColumn("min_id", F.min("doc_id").over(wmin))
-        .where(F.col("doc_id") == F.col("min_id"))
-        .drop("min_id")
-    )
-    sh = (
-        exact.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(
-                # per-doc distinct map-side (r17, guide §2.4) — one less
-                # Exchange than explode().distinct(), identical row set
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(0, size(w) - 2),"
-                        " i -> concat(w[i], ' ', w[i + 1]))"
-                    )
-                )
-            ).alias("s"),
-        )
-        .cache()  # feeds signatures, sizes, and rescoring
-    )
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("s")))).alias(f"h{j}")
-            for j in range(8)
-        ]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"))).alias("bkey"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey")
-    ba, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        ba.join(bb, ["band", "bkey"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    x = sh.select(F.col("doc_id").alias("da"), "s")
-    y = sh.select(F.col("doc_id").alias("db"), "s")
-    inter = cand.join(x, "da").join(y, ["db", "s"]).groupBy("da", "db").agg(
-        F.count("*").alias("i")
-    )
-    sa = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
-    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    losers = (
-        inter.join(sa, "da").join(sb, "db").where(jac >= 0.5)
-        .select(F.col("db").alias("doc_id")).distinct()
-    )
-    kept = exact.join(losers, "doc_id", "left_anti")
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_docs"), f6(F.avg("n_tokens")).alias("avg_tokens")
-    )
+    exact = _quality_exact(load_table(spark, sf_dir, "documents"), F.md5("text"))
+    sh = _bigram_set(exact).cache()  # feeds signatures, sizes, and rescoring
+    cand = _band_candidates(_minhash_bands(_minhash_sig(sh, 8), 4), "da", "db")
+    losers = _rescore(cand, sh).select(F.col("db").alias("doc_id")).distinct()
+    return _survivor_stats(exact, losers)
 
 
 @register(
@@ -1170,9 +1081,6 @@ def t_winnowing(spark, sf_dir):
 
 # -- dedup-quality evaluation -------------------------------------------------
 
-from ..registry import ORACLE as _ORACLE  # noqa: E402  (registered above)
-
-
 @register(
     "t_lsh_recall",
     f"""
@@ -1209,16 +1117,14 @@ def t_lsh_recall(spark, sf_dir):
     themselves. At 100 TB ground truth comes from a sampled slice exactly
     like this one.
     """
-    from ..registry import QUERIES as _Q
-
     exact = (
-        _Q["t_jaccard_neardup"](spark, sf_dir)
+        t_jaccard_neardup(spark, sf_dir)
         .where(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b")
         .cache()
     )
     lsh = (
-        _Q["t_minhash_lsh"](spark, sf_dir)
+        t_minhash_lsh(spark, sf_dir)
         .where((F.col("doc_a") < 1000) & (F.col("doc_b") < 1000))
         .select(F.col("doc_a").alias("la"), F.col("doc_b").alias("lb"))
         .cache()
@@ -1387,6 +1293,39 @@ def t_template_detect(spark, sf_dir):
     )
 
 
+def lexical_hits(spark, sf_dir, q: DataFrame) -> DataFrame:
+    """(qid, cand, score9): for each query doc of ``q`` (one ``qid``
+    column), every other document sharing a df <= 64 shingle with it,
+    scored by the sum of idf over the shared DISTINCT shingles. idf is
+    snapped to 1e-9 BIGINTs so overlap sums are reduction-order-free;
+    the df cap is _df_capped's rule (hot shingles carry no
+    discriminative signal AND quadratic join volume)."""
+    sh = shingles(spark, sf_dir, bounded=False)
+    docs = load_table(spark, sf_dir, "documents")
+    df = sh.groupBy("s").agg(F.count("*").cast("long").alias("df"))
+    n = docs.agg(F.count("*").cast("long").alias("n"))
+    idf = (
+        df.where(F.col("df") <= 64)
+        .crossJoin(F.broadcast(n))
+        .select(
+            "s",
+            F.round(F.log(F.col("n") * 1.0 / F.col("df")) * 1e9)
+            .cast("long")
+            .alias("idf9"),
+        )
+    )
+    t1 = sh.join(q, sh.doc_id == q.qid).select("qid", "s")
+    return (
+        t1.join(idf, "s")
+        .join(
+            sh.select(F.col("doc_id").alias("cand"), F.col("s").alias("s2")),
+            (F.col("s2") == F.col("s")) & (F.col("cand") != F.col("qid")),
+        )
+        .groupBy("qid", "cand")
+        .agg(F.sum("idf9").cast("long").alias("score9"))
+    )
+
+
 @register(
     "t_hard_negatives",
     f"""
@@ -1442,34 +1381,12 @@ def t_hard_negatives(spark, sf_dir):
     (query, cand) aggregate; digest anti-filter; per-query top-5
     window. Linear in corpus size at a fixed query sample rate.
     """
-    sh = shingles(spark, sf_dir, bounded=False)
     docs = load_table(spark, sf_dir, "documents")
-    df = sh.groupBy("s").agg(F.count("*").cast("long").alias("df"))
-    n = docs.agg(F.count("*").cast("long").alias("n"))
-    idf = (
-        df.where(F.col("df") <= 64)
-        .crossJoin(F.broadcast(n))
-        .select(
-            "s",
-            F.round(F.log(F.col("n") * 1.0 / F.col("df")) * 1e9)
-            .cast("long")
-            .alias("idf9"),
-        )
-    )
     dig = docs.select("doc_id", F.md5("text").alias("digest"))
     q = docs.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("qid")
     )
-    t1 = sh.join(q, sh.doc_id == q.qid).select("qid", "s")
-    hits = (
-        t1.join(idf, "s")
-        .join(
-            sh.select(F.col("doc_id").alias("cand"), F.col("s").alias("s2")),
-            (F.col("s2") == F.col("s")) & (F.col("cand") != F.col("qid")),
-        )
-        .groupBy("qid", "cand")
-        .agg(F.sum("idf9").cast("long").alias("score9"))
-    )
+    hits = lexical_hits(spark, sf_dir, q)
     dq = dig.select(F.col("doc_id").alias("qid"), F.col("digest").alias("dgq"))
     dc = dig.select(F.col("doc_id").alias("cand"), F.col("digest").alias("dgc"))
     w = Window.partitionBy("qid").orderBy(F.col("score9").desc(), "cand")
@@ -1488,9 +1405,7 @@ def t_hard_negatives(spark, sf_dir):
     "t_containment_neardup",
     f"""
     WITH sh0 AS ({SHINGLES_FULL_SQL}),
-    freq AS (SELECT s, count(*) AS df FROM sh0 GROUP BY s),
-    sh AS (SELECT sh0.doc_id, sh0.s FROM sh0 JOIN freq ON freq.s = sh0.s
-           WHERE freq.df <= 64),
+    {_CAPPED_SQL},
     sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
               FROM sh GROUP BY doc_id),
     inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1521,15 +1436,11 @@ def t_containment_neardup(spark, sf_dir):
     rows (a<>b, not a<b) but not the join work (same posting pairs,
     emitted both ways).
     """
-    sh0 = shingles(spark, sf_dir, bounded=False)
-    freq = sh0.groupBy("s").agg(F.count("*").alias("df"))
     # cached for the same 3-consumer replay reason as
     # t_jaccard_neardup_capped (s-clustered, so the self-join is
     # exchange-free).
-    sh = (
-        sh0.join(freq.where(F.col("df") <= 64).select("s"), "s").cache()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
+    sh = _df_capped(shingles(spark, sf_dir, bounded=False)).cache()
+    sizes = _counts(sh)
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -1634,20 +1545,12 @@ def t_lsh_s_curve(spark, sf_dir):
     "t_minhash_lsh_incremental",
     f"""
     WITH sh AS ({SHINGLES_FULL_SQL}),
-    sig AS (SELECT doc_id,
-           {_MINHASH_SIG_COLS}
-           FROM sh GROUP BY doc_id),
-    bands AS ({_MINHASH_BANDS_SQL}),
+    {_SIG_BANDS_SQL},
     cand AS (SELECT DISTINCT n.doc_id AS doc_new, c.doc_id AS doc_corpus
              FROM bands n JOIN bands c
                ON n.band = c.band AND n.bkey = c.bkey
              WHERE n.doc_id % 7 = 0 AND c.doc_id % 7 <> 0),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT cd.doc_new, cd.doc_corpus, count(*) AS i
-              FROM cand cd
-              JOIN sh x ON x.doc_id = cd.doc_new
-              JOIN sh y ON y.doc_id = cd.doc_corpus AND y.s = x.s
-              GROUP BY 1, 2)
+    {_rescore_sql("cd", "doc_new", "doc_corpus")}
     SELECT doc_new, doc_corpus,
            round(i * 1.0 / (sa.n + sb.n - i), 6) + 0 AS jaccard
     FROM inter JOIN sizes sa ON sa.doc_id = doc_new
@@ -1676,28 +1579,7 @@ def t_minhash_lsh_incremental(spark, sf_dir):
     rescore touches candidate posting lists only.
     """
     sh = shingles(spark, sf_dir, bounded=False, wide=True).cache()
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("s")))).alias(f"h{j}")
-            for j in range(8)
-        ]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"))
-                        ).alias("bkey"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey")
+    bands = _minhash_bands(_minhash_sig(sh, 8), 4)
     bn = bands.where(F.col("doc_id") % 7 == 0).select(
         F.col("doc_id").alias("doc_new"), "band", "bkey"
     )
@@ -1705,23 +1587,9 @@ def t_minhash_lsh_incremental(spark, sf_dir):
         F.col("doc_id").alias("doc_corpus"), "band", "bkey"
     )
     cand = bn.join(bc, ["band", "bkey"]).select("doc_new", "doc_corpus").distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    x = sh.select(F.col("doc_id").alias("doc_new"), "s")
-    y = sh.select(F.col("doc_id").alias("doc_corpus"), "s")
-    inter = (
-        cand.join(x, "doc_new")
-        .join(y, ["doc_corpus", "s"])
-        .groupBy("doc_new", "doc_corpus")
-        .agg(F.count("*").alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_new"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_corpus"), F.col("n").alias("nb"))
-    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
     return (
-        inter.join(sa, "doc_new")
-        .join(sb, "doc_corpus")
-        .where(jac >= 0.5)
-        .select("doc_new", "doc_corpus", f6(jac).alias("jaccard"))
+        _rescore(cand, sh)
+        .select("doc_new", "doc_corpus", f6(F.col("jaccard")).alias("jaccard"))
         .orderBy("doc_new", "doc_corpus")
     )
 
@@ -1729,19 +1597,7 @@ def t_minhash_lsh_incremental(spark, sf_dir):
 @register(
     "t_dup_keep_best",
     f"""
-    WITH RECURSIVE sh AS ({SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-    pairs AS (SELECT da, db FROM inter
-              JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
-              WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5),
-    e AS (SELECT da AS a, db AS b FROM pairs
-          UNION SELECT db, da FROM pairs),
-    reach AS (SELECT a, b FROM e UNION SELECT DISTINCT a, a FROM e
-              UNION SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-    asg AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
+    {_CLUSTERS_SQL},
     docs AS (SELECT doc_id, length(text) AS len FROM documents),
     best AS (
         SELECT cluster_id, doc_id AS kept_doc, len AS kept_len FROM (
@@ -1939,19 +1795,6 @@ def t_local_vs_global_dedup(spark, sf_dir):
     ).orderBy("scheme")
 
 
-_SIG16_COLS = ",\n           ".join(
-    f"min(md5('{j}:' || s)) AS h{j}" for j in range(16)
-)
-
-
-def _bands16_sql(nb: int) -> str:
-    return "\n      UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(h{2 * b} || h{2 * b + 1}) AS bkey"
-        " FROM sig16"
-        for b in range(nb)
-    )
-
-
 def _curve_row_sql(k: int, nb: int) -> str:
     return f"""
         SELECT CAST({k} AS BIGINT) AS k,
@@ -1972,21 +1815,18 @@ def _curve_row_sql(k: int, nb: int) -> str:
     f"""
     WITH sh AS ({SHINGLES_SQL}),
     sig16 AS (SELECT doc_id,
-           {_SIG16_COLS}
+           {_sig_cols_sql(16)}
            FROM sh GROUP BY doc_id),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
+    {_sizes_inter_sql("inter", "doc_a", "doc_b")},
     exact AS (
         SELECT doc_a, doc_b
         FROM inter JOIN sizes sa ON sa.doc_id = doc_a
                    JOIN sizes sb ON sb.doc_id = doc_b
         WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5
     ),
-    b4 AS ({_bands16_sql(2)}),
-    b8 AS ({_bands16_sql(4)}),
-    b16 AS ({_bands16_sql(8)}),
+    b4 AS ({_bands_sql(2, "sig16")}),
+    b8 AS ({_bands_sql(4, "sig16")}),
+    b16 AS ({_bands_sql(8, "sig16")}),
     c4 AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
            FROM b4 a JOIN b4 b
              ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
@@ -2021,14 +1861,7 @@ def t_minhash_perm_curve(spark, sf_dir):
     honesty branch, sampled at 100 TB like t_lsh_recall's.
     """
     sh = shingles(spark, sf_dir, wide=True).cache()
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{j}:"), F.col("s")))
-            ).alias(f"h{j}")
-            for j in range(16)
-        ]
-    ).cache()
+    sig = _minhash_sig(sh, 16).cache()
 
     # k=4's bands are a PREFIX of k=8's and k=16's, so the three
     # candidate sets are nested by construction: run the bucket
@@ -2037,22 +1870,7 @@ def t_minhash_perm_curve(spark, sf_dir):
     # cand(nb) (distinct pairs over bands 0..nb-1). One join + one
     # aggregate replaces three self-joins + three distincts whose
     # largest (nb=8) repeated the other two as subsets.
-    bd = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"))
-                        ).alias("bkey"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey")
+    bd = _minhash_bands(sig, 8)
     ba, bb = bd.alias("a"), bd.alias("b")
     pairs_mb = (
         ba.join(
@@ -2068,23 +1886,8 @@ def t_minhash_perm_curve(spark, sf_dir):
         .cache()
     )
 
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("i"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("i") * 1.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i"))
     exact = (
-        inter.join(F.broadcast(sa), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(F.broadcast(sb), F.col("doc_b") == F.col("sb.doc_id"))
-        .where(jac >= 0.5)
+        _jaccard_pairs(_pair_counts(sh), F.broadcast(_counts(sh)), 0.5)
         .select("doc_a", "doc_b")
         .cache()
     )
@@ -2220,14 +2023,12 @@ def t_prefix_filter_join(spark, sf_dir):
     broadcast arithmetic; the full-posting arm is computed here only
     as the measured counterfactual.
     """
-    sh0 = shingles(spark, sf_dir, bounded=False)
-    freq = sh0.groupBy("s").agg(F.count("*").alias("df"))
     sh = (
-        sh0.join(freq.where(F.col("df") <= 64), "s")
+        _df_capped(shingles(spark, sf_dir, bounded=False), "df")
         .select("doc_id", "s", "df")
         .cache()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
+    sizes = _counts(sh)
     ranked = sh.withColumn(
         "rn",
         F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "s")),
@@ -2237,17 +2038,13 @@ def t_prefix_filter_join(spark, sf_dir):
         .where(F.col("rn") <= F.expr("n - (n + 1) div 2 + 1"))
         .select("doc_id", "s", "n")
     )
-    a, b = sh.alias("a"), sh.alias("b")
-    pair_cond = (F.col("a.s") == F.col("b.s")) & (
-        F.col("a.doc_id") < F.col("b.doc_id")
-    )
     pa, pb = pref.alias("a"), pref.alias("b")
     za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     cand_pref = (
         pa.join(
             pb,
-            pair_cond
+            _shares_shingle()
             # length filter BEFORE the distinct: prunes size-incompatible
             # pairs while they are still join output, not a shuffled set
             & (2 * F.least("a.n", "b.n") >= F.greatest("a.n", "b.n")),
@@ -2258,14 +2055,8 @@ def t_prefix_filter_join(spark, sf_dir):
         .distinct()
         .cache()  # consumed by the census count AND the verp semi-join
     )
-    inter = (
-        a.join(b, pair_cond)
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").cast("long").alias("i"))
-        .cache()  # consumed by both the candidate census and ver
-    )
+    # consumed by both the candidate census and ver
+    inter = _pair_counts(sh).cache()
     ver = (
         inter.join(za, "doc_a")
         .join(zb, "doc_b")

@@ -581,19 +581,13 @@ def t_boilerplate_ngrams(spark, sf_dir):
     vocabulary-scale, not corpus-scale) so the scoring join broadcasts.
     Docs are scored independently afterward — one doc_id shuffle.
     """
+    from .dedup import bigram_array
+
     docs = load_table(spark, sf_dir, "documents")
     w = F.split(F.lower("text"), r"\s+")
     grams = (
         docs.select("doc_id", w.alias("w"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(w) - 2), "
-                    "i -> concat(w[i], ' ', w[i + 1]))"
-                )
-            ).alias("g"),
-        )
+        .select("doc_id", F.explode(bigram_array()).alias("g"))
         .distinct()
     )
     total = docs.agg(F.count("*").alias("n_docs"))
@@ -639,16 +633,13 @@ def t_repetition_filter(spark, sf_dir):
     map-side (array transform, NON-distinct — multiplicity is the signal);
     the per-doc aggregate shuffles on (doc_id, bigram) then doc_id only.
     """
+    from .dedup import bigram_array
+
     docs = load_table(spark, sf_dir, "documents")
     big = docs.select(
         "doc_id",
         F.split(F.lower("text"), r"\s+").alias("w"),
-    ).select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(0, size(w) - 2), i -> concat(w[i], ' ', w[i + 1]))")
-        ).alias("s"),
-    )
+    ).select("doc_id", F.explode(bigram_array()).alias("s"))
     freq = big.groupBy("doc_id", "s").agg(F.count("*").alias("c"))
     agg = freq.groupBy("doc_id").agg(F.max("c").alias("max_c"), F.sum("c").alias("n"))
     ratio = F.col("max_c") * 1.0 / F.col("n")
@@ -5800,27 +5791,13 @@ def t_self_bleu(spark, sf_dir):
     rollups are doc-keyed aggs. A bigram occurring in ≥2 docs answers
     "appears in another doc" without any self-exclusion pair join.
     """
+    from .dedup import bigram_array
+
     docs = load_table(spark, sf_dir, "documents")
     w = F.split(F.lower("text"), r"\s+")
     bg = (
         docs.select("doc_id", "lang", w.alias("w"))
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                # size(w) < 2 guard: two-arg sequence(0, -1) defaults to
-                # step -1 and yields [0, -1] -> w[-1] lookups, which error
-                # under ANSI mode (the q_littles_law hazard). Emit an empty
-                # array instead; explode then drops the gram-less doc, the
-                # same fate its NULL grams met at the df join before.
-                F.expr(
-                    "CASE WHEN size(w) >= 2 THEN "
-                    "transform(sequence(0, size(w) - 2, 1), "
-                    "i -> concat(w[i], ' ', w[i + 1])) "
-                    "ELSE array() END"
-                )
-            ).alias("g"),
-        )
+        .select("doc_id", "lang", F.explode(bigram_array()).alias("g"))
         .distinct()
     )
     df = bg.groupBy("g").agg(F.count("*").cast("long").alias("df"))

@@ -3259,33 +3259,13 @@ def v_hybrid_retrieval_overlap(spark, sf_dir):
     q = docs.where(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("qid")
     )
-    from .dedup import shingles
+    from .dedup import lexical_hits
 
-    sh = shingles(spark, sf_dir, bounded=False)
-    df = sh.groupBy("s").agg(F.count("*").cast("long").alias("df"))
-    n = docs.agg(F.count("*").cast("long").alias("n"))
-    idf = (
-        df.where(F.col("df") <= 64)
-        .crossJoin(F.broadcast(n))
-        .select(
-            "s",
-            F.round(F.log(F.col("n") * 1.0 / F.col("df")) * 1e9)
-            .cast("long")
-            .alias("idf9"),
-        )
-    )
-    t1 = sh.join(q, sh.doc_id == q.qid).select("qid", "s")
     w_lex = Window.partitionBy("qid").orderBy(
         F.col("score9").desc(), "cand"
     )
     lex = (
-        t1.join(idf, "s")
-        .join(
-            sh.select(F.col("doc_id").alias("cand"), F.col("s").alias("s2")),
-            (F.col("s2") == F.col("s")) & (F.col("cand") != F.col("qid")),
-        )
-        .groupBy("qid", "cand")
-        .agg(F.sum("idf9").cast("long").alias("score9"))
+        lexical_hits(spark, sf_dir, q)
         .withColumn("rn", F.row_number().over(w_lex))
         .where(F.col("rn") <= 5)
         .select("qid", "cand")

@@ -9421,7 +9421,6 @@ def a_brier_decomposition(spark, sf_dir):
         * (F.col("ybar_k") - F.col("ybar"))
         * (F.col("ybar_k") - F.col("ybar"))
     ) / F.first("n")
-    unc = F.first("ybar") * (1 - F.first("ybar"))
     return (
         g.crossJoin(F.broadcast(tot))
         .groupBy("n", "ybar", "brier")
