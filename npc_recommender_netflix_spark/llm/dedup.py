@@ -16,7 +16,8 @@ Scale story (the whole point of the ladder):
 
 Each near-dup stage several keys share has one owner here, and the keys
 build on it (tests/test_dedup_owners.py fails when a copy comes back):
-- the bigram array: `bigram_array` (also text.py's plain bigram keys),
+- the bigram array: `bigram_array` (also t_winnowing's hashed grams and
+  text.py's bigram keys, each with its own pair element),
   with the per-doc distinct set `_bigram_set` under `shingles` and the
   map-side sizes `bigram_sizes`;
 - the pipeline front, quality filter + canonical exact dedup:
@@ -67,10 +68,12 @@ SHINGLES_FULL_SQL = r"""
 """
 
 
-def bigram_array() -> Column:
+def bigram_array(pair: str = "concat(w[i], ' ', w[i + 1])") -> Column:
     """The positional 2-word shingles of the token-array column ``w``,
     in order and with repeats — the one spelling of the bigram transform
-    every dedup key (and text.py's plain bigram keys) builds on.
+    every dedup key (and text.py's bigram keys) builds on. ``pair`` is
+    the SQL element built from ``w[i]`` and ``w[i + 1]``; the default is
+    the space-joined shingle string.
 
     A document of fewer than 2 tokens has none, as in the oracles'
     ``range(1, len(w))``: the two-arg sequence(0, -1) would step -1 and
@@ -79,7 +82,7 @@ def bigram_array() -> Column:
     return F.expr(
         "CASE WHEN size(w) >= 2 THEN "
         "transform(sequence(0, size(w) - 2, 1),"
-        " i -> concat(w[i], ' ', w[i + 1])) "
+        f" i -> {pair}) "
         "ELSE array() END"
     )
 
@@ -128,10 +131,17 @@ def bigram_sizes(docs: DataFrame) -> DataFrame:
     size(array_distinct(...)) projection. Values are identical because the
     shingle set is per-doc-distinct by construction; only valid for sizes
     over the UNCAPPED shingle set (a df-capped set must count after the
-    cap, which is a real aggregate)."""
+    cap, which is a real aggregate).
+
+    ``n`` is non-nullable (coalesce to 0; a null-text document has no
+    shingles, so it never reaches a pair): a nullable ``n`` lets the
+    sizes join infer ``isnotnull(n)`` and push it below this projection
+    with ``w`` inlined, re-splitting the text once per bigram in the
+    transform's lambda — quadratic in document length."""
     return _words(docs).select(
         "doc_id",
-        F.size(F.array_distinct(bigram_array())).cast("long").alias("n"),
+        F.coalesce(F.size(F.array_distinct(bigram_array())), F.lit(0))
+        .cast("long").alias("n"),
     )
 
 
@@ -1056,10 +1066,7 @@ def t_winnowing(spark, sf_dir):
         .select(
             "doc_id",
             F.posexplode(
-                F.expr(
-                    "transform(sequence(0, size(w) - 2),"
-                    " i -> md5(concat(w[i], ' ', w[i + 1])))"
-                )
+                bigram_array("md5(concat(w[i], ' ', w[i + 1]))")
             ).alias("i", "h"),
         )
     )

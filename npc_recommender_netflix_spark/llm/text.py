@@ -209,6 +209,21 @@ def t_tfidf(spark, sf_dir):
     )
 
 
+def _bigram_pairs(spark, sf_dir):
+    """(w1, w2): every positional word bigram of every document, with
+    repeats — map-side via array transform, no self-join shuffle."""
+    from .dedup import bigram_array
+
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select(F.split(F.lower("text"), r"\s+").alias("w"))
+        .select(
+            F.explode(bigram_array("struct(w[i] AS w1, w[i + 1] AS w2)")).alias("p")
+        )
+        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+    )
+
+
 @register(
     "t_ngram_bigram",
     r"""
@@ -221,19 +236,7 @@ def t_tfidf(spark, sf_dir):
     """,
 )
 def t_ngram_bigram(spark, sf_dir):
-    # bigrams via array transform — no self-join shuffle (cf. dedup.shingles)
-    docs = load_table(spark, sf_dir, "documents")
-    bg = (
-        docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(w) - 2), i -> struct(w[i] AS w1, w[i + 1] AS w2))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
+    bg = _bigram_pairs(spark, sf_dir)
     return (
         bg.groupBy("w1", "w2")
         .agg(F.count("*").alias("cnt"))
@@ -777,16 +780,15 @@ def t_bigram_nll(spark, sf_dir):
     integers inside a single avg (same association both engines — the
     `t_unigram_nll` precedent).
     """
+    from .dedup import bigram_array
+
     docs = load_table(spark, sf_dir, "documents")
     bigr = docs.select(
         "doc_id", F.split(F.lower("text"), r"\s+").alias("w")
     ).select(
         "doc_id",
         F.explode(
-            F.expr(
-                "transform(sequence(0, size(w) - 2),"
-                " i -> struct(w[i] AS prev, concat(w[i], ' ', w[i + 1]) AS bg))"
-            )
+            bigram_array("struct(w[i] AS prev, concat(w[i], ' ', w[i + 1]) AS bg)")
         ).alias("p"),
     ).select("doc_id", F.col("p.prev").alias("prev"), F.col("p.bg").alias("bg"))
     cb = bigr.groupBy("bg").agg(F.count("*").alias("cb"))
@@ -2463,19 +2465,7 @@ def t_kneser_ney(spark, sf_dir):
     count tables shuffle on vocabulary keys (corpus-sublinear) and the
     probability join is vocabulary-sized — never token-stream-sized.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    bg = (
-        docs.select("doc_id", F.split(F.lower("text"), r"\s+").alias("w"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(w) - 2),"
-                    " i -> struct(w[i] AS w1, w[i + 1] AS w2))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
+    bg = _bigram_pairs(spark, sf_dir)
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c")).cache()
     c1 = c12.groupBy("w1").agg(
         F.sum("c").cast("long").alias("tot"),

@@ -8,6 +8,9 @@ ONE lazy Catalyst plan instead of N disk-materialized MR jobs.
 
 Ratings proxy on the TPC-H-ish fixtures (SURVEY §2.8): implicit rating =
 sum(l_quantity) per (o_custkey "user", l_partkey "item") via orders⋈lineitem.
+`ratings_matrix` is that matrix, computed once per session and input
+(MR Job 1's one write, read by every later job); a `max_item` slice of it
+is a filter over the one memoized frame, never a second build.
 `interactions` is the one definition of a rating interaction and `split`
 the one holdout policy (orders with l_orderkey % 5 == 0 are held out);
 every evaluation key reads its train/holdout rows from them. The
@@ -29,10 +32,14 @@ from ..registry import register
 from ..session import (f6, load_table, money2, shared_frame, tables,
                        widen_narrow_scan)
 
-# Shared intermediates. Without the memo the ratings-matrix subplan (an
-# orders⋈lineitem join + groupBy) is replicated up to 10x inside one
-# prediction plan (measured: 10 lineitem scans, 0 ReusedExchange at sf0.01).
 def _cached(spark, sf_dir: str, name: str, build) -> DataFrame:
+    """Session memo for a shared intermediate of the CF chain: the ratings
+    matrix ("matrix", MR Job 1's output, built once per session and input)
+    and the item-cosine table. Without it the matrix subplan (an
+    orders⋈lineitem join + groupBy) is replicated up to 10x inside one
+    prediction plan (measured: 10 lineitem scans, 0 ReusedExchange at
+    sf0.01), and every consumer key rebuilds it.
+    """
     # recache=False (round-12 bisect): these frames are cheap to rebuild
     # (~0.3 s) and feed 1-3 consumers per key, so re-registering after an
     # external clearCache() made every post-clearCache key pay a cache
@@ -68,21 +75,28 @@ def ratings_matrix(spark, sf_dir, max_item: int | None = None) -> DataFrame:
 
     rating = sum(l_quantity) per (customer, part). Quantities are small
     integers stored as double -> FP-exact sums, deterministic across engines.
+
+    Like MR Job 1's one HDFS write that every later job reads, the matrix
+    is built once per session and input (``_cached`` memo "matrix") and
+    every CF key reads that frame. A ``max_item`` slice is a filter over
+    it with no memo of its own: while the matrix is cached the filter
+    reads the cached columns; after a ``clearCache()`` Catalyst pushes it
+    below the aggregate into the lineitem scan, as a filtered build would.
+    One memo also means one cached physical plan holds an orders
+    broadcast, not one per sliced or derived cached frame.
     """
     def build():
         orders, li = tables(spark, sf_dir, "orders", "lineitem")
-        filtered = li.where(F.col("l_partkey") < max_item) if max_item is not None else li
         return (
-            orders.join(filtered, orders.o_orderkey == filtered.l_orderkey)
+            orders.join(li, orders.o_orderkey == li.l_orderkey)
             .groupBy(
                 F.col("o_custkey").alias("user_id"), F.col("l_partkey").alias("item_id")
             )
             .agg(F.sum("l_quantity").alias("rating"))
         )
 
-    if max_item is None:
-        return build()  # used once per query; not worth pinning
-    return _cached(spark, sf_dir, f"matrix_{max_item}", build)
+    m = _cached(spark, sf_dir, "matrix", build)
+    return m if max_item is None else m.where(F.col("item_id") < max_item)
 
 
 _M_SQL = """
@@ -2461,6 +2475,48 @@ def r_map_at_k(spark, sf_dir):
     )
 
 
+def _slope_one_dev(m: DataFrame) -> DataFrame:
+    """Slope One's deviation table (item_j, item_i, diffsum, c) over a
+    (user_id, item_id, rating BIGINT) matrix: diffsum = Σ(r_j − r_i) and
+    c = co-raters, for every ordered pair with c >= 2.
+
+    The pair join builds each unordered pair once (item_j < item_i) and
+    one map-side explode emits its mirror (item_i, item_j, −diffsum, c),
+    the shape `_jaccard05_edges` uses: half the pair-join rows and half
+    the pair shuffle of an ``item_j != item_i`` join. Exact: diffsum is a
+    BIGINT sum, so Σ(r_i − r_j) = −Σ(r_j − r_i), and c is symmetric.
+    """
+    a = m.select(
+        "user_id", F.col("item_id").alias("item_j"), F.col("rating").alias("rj")
+    )
+    b = m.select(
+        "user_id", F.col("item_id").alias("item_i"), F.col("rating").alias("ri")
+    )
+    half = (
+        a.join(b, "user_id")
+        .where(F.col("item_j") < F.col("item_i"))
+        .groupBy("item_j", "item_i")
+        .agg(
+            F.sum(F.col("rj") - F.col("ri")).cast("long").alias("diffsum"),
+            F.count("*").cast("long").alias("c"),
+        )
+        .where(F.col("c") >= 2)
+    )
+    return half.select(
+        F.explode(
+            F.array(
+                F.struct("item_j", "item_i", "diffsum", "c"),
+                F.struct(
+                    F.col("item_i").alias("item_j"),
+                    F.col("item_j").alias("item_i"),
+                    (-F.col("diffsum")).alias("diffsum"),
+                    "c",
+                ),
+            )
+        ).alias("e")
+    ).select("e.item_j", "e.item_i", "e.diffsum", "e.c")
+
+
 @register(
     "r_slope_one_capped",
     f"""
@@ -2534,22 +2590,7 @@ def r_slope_one_capped(spark, sf_dir):
         .repartition(spark.sparkContext.defaultParallelism)
         .cache()
     )
-    a = m.select(
-        "user_id", F.col("item_id").alias("item_j"), F.col("rating").alias("rj")
-    )
-    b = m.select(
-        "user_id", F.col("item_id").alias("item_i"), F.col("rating").alias("ri")
-    )
-    dev = (
-        a.join(b, "user_id")
-        .where(F.col("item_j") != F.col("item_i"))
-        .groupBy("item_j", "item_i")
-        .agg(
-            F.sum(F.col("rj") - F.col("ri")).cast("long").alias("diffsum"),
-            F.count("*").cast("long").alias("c"),
-        )
-        .where(F.col("c") >= 2)
-    )
+    dev = _slope_one_dev(m)
     tgt = m.where(F.col("user_id") % 199 == 0)
     rated = m.select("user_id", F.col("item_id").alias("item_j"))
     scored = (

@@ -8,7 +8,7 @@ one function or oracle constant, and each key builds on it. A signature
 of the sub-plan found outside its owner is a copy: build it from the
 owner instead. Signatures are matched over the whole file, so they may
 span lines. The bigram array's signature is also matched in text.py,
-whose plain bigram keys import the owner.
+whose bigram keys import the owner.
 """
 
 import ast
@@ -22,7 +22,7 @@ DEDUP = LLM / "dedup.py"
 OWNERS = {
     "bigram array": (
         "bigram_array",
-        re.compile(r'sequence\(0, size\(w\) - 2[^)]*\),[\s"]*i -> concat\(w\[i\]'),
+        re.compile(r"sequence\(0, size\(w\) - 2"),
     ),
     "per-doc distinct bigram set": (
         "_bigram_set",

@@ -1565,3 +1565,17 @@ def test_theil_sen_median_sorts_the_slope_set(spark):
     plan = _plan(spark, "a_theil_sen")
     assert "percentile(" not in plan
     assert plan.count("NestedLoopJoin") + plan.count("CartesianProduct") == 1
+
+
+def test_bigram_sizes_filter_does_not_resplit_text(spark):
+    """bigram_sizes' n is non-nullable, so no sizes join infers
+    isnotnull(n) and pushes it below the projection, where the inlined
+    lambda would split the text again once per bigram."""
+    from npc_recommender_netflix_spark.llm.dedup import _jaccard05_edges
+
+    frames = {key: registry.QUERIES[key](spark, SF_SMALL)
+              for key in ("t_jaccard_neardup", "t_pipeline_e2e")}
+    frames["_jaccard05_edges"] = _jaccard05_edges(spark, SF_SMALL)
+    for name, df in frames.items():
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "isnotnull(size(" not in optimized, name

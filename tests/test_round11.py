@@ -206,13 +206,12 @@ def test_shared_caches_reregister_after_clearcache(spark):
     # frames unregistered, and core._cached deliberately does NOT
     # re-register them (the round-12 policy below) — so the "cached on
     # first build" phase only holds if this test builds first.
-    forget("matrix_200", "cosine_sims", "qcos_012")
+    forget("matrix", "cosine_sims", "qcos_012")
 
     q = _qcos_012(spark, SF_SMALL)
     q.count()
-    # max_item=200: the memoized (_cached) path — the plain matrix is
-    # deliberately unmemoized ("used once per query; not worth pinning")
-    m = ratings_matrix(spark, SF_SMALL, max_item=200)
+    # the memoized (_cached) matrix; a max_item slice is a filter over it
+    m = ratings_matrix(spark, SF_SMALL)
     m.count()
     assert q.storageLevel.useMemory and m.storageLevel.useMemory
 
@@ -221,7 +220,7 @@ def test_shared_caches_reregister_after_clearcache(spark):
     assert not m.storageLevel.useMemory
 
     q2 = _qcos_012(spark, SF_SMALL)
-    m2 = ratings_matrix(spark, SF_SMALL, max_item=200)
+    m2 = ratings_matrix(spark, SF_SMALL)
     assert q2.storageLevel.useMemory, "_qcos_012 must re-register"
     assert not m2.storageLevel.useMemory, (
         "_cached must NOT re-register (round-12: unamortized cache-write)"

@@ -243,13 +243,13 @@ def test_memo_evicts_superseded_sf_dir(spark):
     assert len(memo("textrank_edges")) == 1
     assert next(iter(memo("textrank_edges")))[1] == alt
     assert not old_tr.storageLevel.useMemory
-    # --- recommender _cached (max_item=200 is the memoized matrix)
-    forget("matrix_200")
-    m_old = C.ratings_matrix(spark, SF_SMALL, max_item=200)
+    # --- recommender _cached (the memoized matrix)
+    forget("matrix")
+    m_old = C.ratings_matrix(spark, SF_SMALL)
     m_old.count()
-    C.ratings_matrix(spark, alt, max_item=200).count()
-    assert len(memo("matrix_200")) == 1
-    assert next(iter(memo("matrix_200")))[1] == alt
+    C.ratings_matrix(spark, alt).count()
+    assert len(memo("matrix")) == 1
+    assert next(iter(memo("matrix")))[1] == alt
     assert not m_old.storageLevel.useMemory
     # --- LPA label memo (nested: also looks up the co-purchase edges)
     forget("lpa_labels", "copurchase_edges")

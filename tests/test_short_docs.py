@@ -48,7 +48,10 @@ def short_sf(tmp_path_factory):
     return str(out), con
 
 
-@pytest.mark.parametrize("key", ["t_fingerprint", "t_jaccard_neardup", "t_dup_clusters"])
+@pytest.mark.parametrize("key", [
+    "t_fingerprint", "t_jaccard_neardup", "t_dup_clusters",
+    "t_ngram_bigram", "t_bigram_nll", "t_kneser_ney",
+])
 def test_short_docs_match_oracle(spark, short_sf, key):
     sf_dir, con = short_sf
     status, _, problems, _, _ = run_one(spark, con, key, sf_dir)
