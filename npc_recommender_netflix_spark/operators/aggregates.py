@@ -11164,15 +11164,25 @@ def a_cooks_distance(spark, sf_dir):
     aux AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                regr_r2(CAST(e AS DOUBLE) * e, t) AS r2,
-               regr_slope(CAST(e AS DOUBLE) * e, t) AS e2_slope
+               CAST(sum(t) AS BIGINT) AS st,
+               CAST(sum(t * t) AS BIGINT) AS stt,
+               sum(CAST(e AS HUGEINT) * e) AS sy,
+               sum(t * CAST(e AS HUGEINT) * e) AS sty
         FROM resid
+    ),
+    ls AS (
+        SELECT n, r2, n * sty - st * sy AS num, n * stt - st * st AS den
+        FROM aux
     )
     SELECT n,
-           round(e2_slope, 6) + 0 AS e2_trend_slope,
+           CAST(CASE WHEN den <> 0 THEN
+                    (CASE WHEN num < 0 THEN -1 ELSE 1 END)
+                    * ((abs(num) * 2000000 + den) // (2 * den)) END
+                AS DOUBLE) / 1000000 AS e2_trend_slope,
            round(n * r2, 6) + 0 AS lm_stat,
            CAST(CASE WHEN n * r2 > 3.841459 THEN 1 ELSE 0 END AS BIGINT)
                AS heteroscedastic_95
-    FROM aux
+    FROM ls
     """,
 )
 def a_breusch_pagan(spark, sf_dir):
@@ -11187,9 +11197,17 @@ def a_breusch_pagan(spark, sf_dir):
     confidence interval a dashboard prints.
 
     Scale: same daily rollup + closed-form fit; the auxiliary
-    regression is the engines' own regr_slope/regr_r2 aggregate over
-    the bounded calendar axis (whole-dollar residuals squared — exact
-    integers into the aggregate on both engines). Two shuffles total.
+    regression's R² is the engines' own regr_r2 aggregate over the
+    bounded calendar axis. Two shuffles total.
+
+    The e² trend slope is exact: its moment sums are DECIMAL(38,0)
+    (HUGEINT in the oracle), so num = n·Σte² − Σt·Σe² and
+    den = n·Σt² − (Σt)² are exact integers, and the slope rounded half
+    away from zero to 6dp is the integer (2·|num|·10⁶ + den) div 2·den,
+    signed, over one final division by 10⁶. A double ``regr_slope`` over
+    e² (about 10¹³ at sf0.1) kept fewer digits than the 15 significant
+    ones a 6dp slope of about −6.2e8 shows, and its last digit moved
+    with the summation order.
     """
     tx, fit = _daily_fit(spark, sf_dir)
     resid = tx.crossJoin(F.broadcast(fit)).select(
@@ -11200,14 +11218,26 @@ def a_breusch_pagan(spark, sf_dir):
         .cast("long")
         .alias("e"),
     )
+    e2 = F.col("e").cast("decimal(38,0)") * F.col("e")
     aux = resid.agg(
         F.count("*").cast("long").alias("n"),
         F.expr("regr_r2(CAST(e AS DOUBLE) * e, t)").alias("r2"),
-        F.expr("regr_slope(CAST(e AS DOUBLE) * e, t)").alias("e2_slope"),
+        F.sum("t").cast("long").alias("st"),
+        F.sum(F.col("t") * F.col("t")).cast("long").alias("stt"),
+        F.sum(e2).alias("sy"),
+        F.sum(F.col("t") * e2).alias("sty"),
+    ).select(
+        "n", "r2",
+        F.expr("n * sty - st * sy").alias("num"),
+        F.expr("n * stt - st * st").alias("den"),
+    )
+    slope6 = F.expr(
+        "CASE WHEN den <> 0 THEN (CASE WHEN num < 0 THEN -1 ELSE 1 END)"
+        " * ((abs(num) * 2000000 + den) div (2 * den)) END"
     )
     return aux.select(
         "n",
-        f6(F.col("e2_slope")).alias("e2_trend_slope"),
+        (slope6.cast("double") / 1000000).alias("e2_trend_slope"),
         f6(F.col("n") * F.col("r2")).alias("lm_stat"),
         F.when(F.col("n") * F.col("r2") > 3.841459, 1)
         .otherwise(0)

@@ -39,6 +39,15 @@ def _cached(spark, sf_dir: str, name: str, build) -> DataFrame:
     orders⋈lineitem join + groupBy) is replicated up to 10x inside one
     prediction plan (measured: 10 lineitem scans, 0 ReusedExchange at
     sf0.01), and every consumer key rebuilds it.
+
+    A cached frame keeps its physical plan, and every broadcast relation
+    in it stays in the JVM heap until ``clearCache()``. So a cached CF
+    plan may hold only the broadcasts its result needs: the matrix's one
+    orders join, and the item-cosine pair self-join where AQE measures
+    the 200-item slice small. A degree cap is a window count
+    (``_degree_capped``) and a cosine norm a window column
+    (``_item_pairs``), never an aggregate joined back: the capped keys'
+    cached frames hold no broadcast, and the cosine memo no norm one.
     """
     # recache=False (round-12 bisect): these frames are cheap to rebuild
     # (~0.3 s) and feed 1-3 consumers per key, so re-registering after an
@@ -112,6 +121,26 @@ _M200_SQL = """
 """
 
 
+def _degree_capped(m0: DataFrame, key: str, cap: int, width: int) -> DataFrame:
+    """The rows of a ratings matrix whose ``key`` (user or item) has at
+    most ``cap`` ratings: the degree cap a capped CF key applies before
+    its pair self-join, so no key value fans out past cap² pair rows.
+
+    One hash exchange on ``key`` into ``width`` partitions, and the degree
+    is a window count over it: no aggregate, join or broadcast. The
+    group-and-join-back form (``groupBy(key).count()`` joined to ``m0``)
+    broadcasts the degree table, and a cached capped frame keeps its
+    physical plan, so that broadcast stayed in the JVM heap until
+    ``clearCache()``.
+    """
+    return (
+        m0.repartition(width, key)
+        .withColumn("deg", F.count("*").over(Window.partitionBy(key)))
+        .where(F.col("deg") <= cap)
+        .drop("deg")
+    )
+
+
 def item_cosine(spark, sf_dir) -> DataFrame:
     """Item-item cosine over user-rating vectors (MR Jobs 3-4), rounded 6dp.
 
@@ -124,12 +153,25 @@ def item_cosine(spark, sf_dir) -> DataFrame:
 
 def _item_cosine_build(spark, sf_dir) -> DataFrame:
     m = ratings_matrix(spark, sf_dir, max_item=200)
-    norms = m.groupBy("item_id").agg(
-        F.sqrt(F.sum(F.col("rating") * F.col("rating"))).alias("nrm")
-    )
+    return _item_pairs(m).select("item_a", "item_b", f6("cos").alias("cosine"))
+
+
+def _item_pairs(m: DataFrame) -> DataFrame:
+    """Item-item cosine over a ratings matrix's user-rating vectors:
+    (item_a < item_b, n_common co-raters, unrounded cos) for every
+    co-rated pair, from one self-join on user_id.
+
+    Each item's norm sqrt(Σ rating²) rides along as a window column and
+    the pair aggregate keeps it as ``max``, so no norm aggregate is joined
+    back onto either side. Exact: ratings are integral, so Σ rating² is an
+    exact double in any summation order, and ``max`` of a per-item
+    constant is that constant.
+    """
+    sq = F.col("rating") * F.col("rating")
+    m = m.withColumn("nrm", F.sqrt(F.sum(sq).over(Window.partitionBy("item_id"))))
     a = m.alias("a")
     b = m.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.user_id") == F.col("b.user_id"))
@@ -138,17 +180,17 @@ def _item_cosine_build(spark, sf_dir) -> DataFrame:
         .groupBy(
             F.col("a.item_id").alias("item_a"), F.col("b.item_id").alias("item_b")
         )
-        .agg(F.sum(F.col("a.rating") * F.col("b.rating")).alias("dot"))
-    )
-    na = norms.alias("na")
-    nb = norms.alias("nb")
-    return (
-        pairs.join(na, F.col("item_a") == F.col("na.item_id"))
-        .join(nb, F.col("item_b") == F.col("nb.item_id"))
+        .agg(
+            F.sum(F.col("a.rating") * F.col("b.rating")).alias("dot"),
+            F.count("*").alias("n_common"),
+            F.max("a.nrm").alias("na"),
+            F.max("b.nrm").alias("nb"),
+        )
         .select(
             "item_a",
             "item_b",
-            f6(F.col("dot") / (F.col("na.nrm") * F.col("nb.nrm"))).alias("cosine"),
+            "n_common",
+            (F.col("dot") / (F.col("na") * F.col("nb"))).alias("cos"),
         )
     )
 
@@ -221,9 +263,17 @@ def predictions(spark, sf_dir) -> DataFrame:
         "rating", money2(F.col("rating"))
     )
     nb = topk_neighbors(spark, sf_dir)
-    # join: user's rated item j -> candidate i where j ∈ N(i)
+    # join: user's rated item j -> candidate i where j ∈ N(i). The slice
+    # broadcasts and the neighbor table streams, so the join keeps nb's
+    # item_id partitioning and the (user_id, cand_item) aggregate needs no
+    # exchange. Without the hint the slice is planned at the size of the
+    # whole cached matrix, nb broadcasts instead, and the pass gains an
+    # aggregate exchange: on the sf0.01 fixture r_predict ran 5 jobs and
+    # wrote 0.546 MB of shuffle, against 4 jobs and 0.015 MB with it. The
+    # slice is bounded by the item_id < 200 test bound, and the anti join
+    # below broadcasts the same rows as ``seen``.
     scored = (
-        m.join(nb, m.item_id == nb.neighbor_id)
+        F.broadcast(m).join(nb, m.item_id == nb.neighbor_id)
         .groupBy("user_id", nb.item_id.alias("cand_item"))
         .agg(
             F.sum(F.col("cosine") * F.col("rating")).alias("num"),
@@ -1056,37 +1106,19 @@ def r_cosine_sim_capped(spark, sf_dir):
     an id tiebreak (bounded |items|×3, collect-safe at any scale), and
     a support floor n_common>=3 drops single-co-rating noise pairs.
     """
-    m0 = ratings_matrix(spark, sf_dir)
-    deg = m0.groupBy("user_id").agg(F.count("*").alias("df"))
-    m = m0.join(deg.where(F.col("df") <= 48).select("user_id"), "user_id").cache()
-    n = m.groupBy("item_id").agg(
-        F.sqrt(F.sum(F.col("rating") * F.col("rating"))).alias("nrm")
+    # No .cache(): the capped matrix is read by the pair join's two sides
+    # only, and caching the capped, normed frame measured no win. At sf0.1
+    # (4 cores, cache cleared per run, 8 alternating pairs) it ran 8.38 s
+    # median cached and 8.58 s uncached, inside the noise; the
+    # group-and-join cap with its own cache ran 10.5 s (5 runs).
+    m = _degree_capped(
+        ratings_matrix(spark, sf_dir), "user_id", 48,
+        spark.sparkContext.defaultParallelism,
     )
-    a = m.select("user_id", F.col("item_id").alias("item_a"), F.col("rating").alias("ra"))
-    # b_uid alias: both sides descend from the cached m, and a same-name
-    # user_id == user_id predicate trips Spark's trivially-true-equals
-    # lineage warning (round-11 logcap tripwire).
-    b = m.select(F.col("user_id").alias("b_uid"), F.col("item_id").alias("item_b"), F.col("rating").alias("rb"))
-    p = (
-        a.join(b, (a.user_id == F.col("b_uid")) & (F.col("item_a") < F.col("item_b")))
-        .groupBy("item_a", "item_b")
-        .agg(
-            F.sum(F.col("ra") * F.col("rb")).alias("dot"),
-            F.count("*").alias("n_common"),
-        )
-    )
-    na = n.select(F.col("item_id").alias("item_a"), F.col("nrm").alias("na"))
-    nb = n.select(F.col("item_id").alias("item_b"), F.col("nrm").alias("nb"))
-    # no broadcast hint on the norm tables: one row per item — unbounded
-    # at corpus scale. AQE picks broadcast when it measures small.
     sims = (
-        p.where(F.col("n_common") >= 3)
-        .join(na, "item_a")
-        .join(nb, "item_b")
-        .select(
-            "item_a", "item_b",
-            f6(F.col("dot") / (F.col("na") * F.col("nb"))).alias("cosine"),
-        )
+        _item_pairs(m)
+        .where(F.col("n_common") >= 3)
+        .select("item_a", "item_b", f6("cos").alias("cosine"))
     )
     # One map-side explode for both orientations, not sims UNION sims
     # (r17, guide §2.4): the union re-ran the whole uncached pair
@@ -1168,8 +1200,6 @@ def r_user_cosine_capped(spark, sf_dir):
     engines (exact oracle); support floor n_common>=3; output top-5
     per user by rounded cosine, id tiebreak — |users|×5, never pairs.
     """
-    m0 = ratings_matrix(spark, sf_dir)
-    deg = m0.groupBy("item_id").agg(F.count("*").alias("df"))
     # Half-core width for the CPU-heavy pair stage (r18, guide §2.6).
     # AQE's size-based coalesce left this cache at 6 partitions, so the
     # pair-generation + partial-aggregate stage (~10 s CPU, the key's
@@ -1179,17 +1209,24 @@ def r_user_cosine_capped(spark, sf_dir):
     # AQE-6 med 4.24 s with a 9.06 s outlier; 8 -> 3.89; 12 -> 3.14;
     # 16 -> 3.06; 24 -> 3.31; r17 had measured FULL defaultParallelism
     # (32) at 15-50% slower. Half the cores is the sweet spot and is
-    # cores-scaled, not a constant; hash on item_id keeps the self-join
-    # co-partitioned so the repartition is the join's only exchange.
-    # Values exact: per-pair dot partials merge in arbitrary order at ANY
-    # width (incl. the old 6); result equality verified exceptAll-empty
-    # both ways and oracle hash-match at 3 SFs.
+    # cores-scaled, not a constant. The width is the pair stage's: at
+    # sf0.01 the executed pair join is a BroadcastHashJoin of the whole
+    # capped matrix, streamed from this cache's `width` partitions, not a
+    # co-partitioned self-join. Values exact: per-pair dot partials merge
+    # in arbitrary order at ANY width (incl. the old 6); result equality
+    # verified exceptAll-empty both ways and oracle hash-match at 3 SFs.
+    #
+    # The cache is read three times (the pair join's two sides and the
+    # user norms), and Spark reuses no exchange between reads of one
+    # cached frame, so uncached the cap's exchange and window would run
+    # once per read. Measured, 4 cores: on cf_pipeline (7 alternating
+    # pairs) dropping both capped caches held 1.5 MB less heap and left
+    # this key flat (median 3.0 vs 3.1 s, then 3.9 vs 3.7 s); at sf0.1
+    # with the cache cleared per run it read 10.0 s cached vs 9.4 s
+    # uncached (4 pairs). No win measured yet: kept for the three reads,
+    # a candidate for removal under ROADMAP item 2.
     width = max(4, spark.sparkContext.defaultParallelism // 2)
-    m = (
-        m0.join(deg.where(F.col("df") <= 40).select("item_id"), "item_id")
-        .repartition(width, "item_id")
-        .cache()
-    )
+    m = _degree_capped(ratings_matrix(spark, sf_dir), "item_id", 40, width).cache()
     n = m.groupBy("user_id").agg(
         F.sqrt(F.sum(F.col("rating") * F.col("rating"))).alias("nrm")
     )
@@ -1828,43 +1865,20 @@ def r_shrunk_cosine(spark, sf_dir):
     them raw; every deployed neighborhood model shrinks).
 
     Rides the SAME user-keyed pair self-join and norms as r_cosine_sim
-    (one extra count per pair — free in the existing aggregate); the
+    (``_item_pairs``, whose per-pair count is the support); the
     shrink factor multiplies exact-integer support into the rounded
     cosine once per PAIR, so the cost delta at 100 TB is zero and the
     ranking change is pure statistics. Top-25 is TakeOrdered with an
     (item_a, item_b) tiebreak.
     """
-    m = ratings_matrix(spark, sf_dir, max_item=200)
-    norms = m.groupBy("item_id").agg(
-        F.sqrt(F.sum(F.col("rating") * F.col("rating"))).alias("nrm")
-    )
-    a, b = m.alias("a"), m.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.item_id") < F.col("b.item_id")),
-        )
-        .groupBy(
-            F.col("a.item_id").alias("item_a"), F.col("b.item_id").alias("item_b")
-        )
-        .agg(
-            F.sum(F.col("a.rating") * F.col("b.rating")).alias("dot"),
-            F.count("*").cast("long").alias("support"),
-        )
-    )
-    na, nb = norms.alias("na"), norms.alias("nb")
-    shrink = F.col("support") / (F.col("support") + F.lit(25.0))
+    pairs = _item_pairs(ratings_matrix(spark, sf_dir, max_item=200))
+    shrink = F.col("n_common") / (F.col("n_common") + F.lit(25.0))
     return (
-        pairs.join(na, F.col("item_a") == F.col("na.item_id"))
-        .join(nb, F.col("item_b") == F.col("nb.item_id"))
-        .select(
+        pairs.select(
             "item_a",
             "item_b",
-            "support",
-            f6(F.col("dot") / (F.col("na.nrm") * F.col("nb.nrm")) * shrink).alias(
-                "shrunk_cosine"
-            ),
+            F.col("n_common").alias("support"),
+            f6(F.col("cos") * shrink).alias("shrunk_cosine"),
         )
         .orderBy(F.col("shrunk_cosine").desc(), "item_a", "item_b")
         .limit(25)
@@ -2580,14 +2594,20 @@ def r_slope_one_capped(spark, sf_dir):
     anti-join keeps already-rated items out of the recommendation
     set, as the paper specifies.
     """
-    m0 = ratings_matrix(spark, sf_dir)
-    deg = m0.groupBy("user_id").agg(F.count("*").alias("df"))
     # Width restoration before the pair stage (r17, guide §2.5/§2.6):
     # see r_user_cosine_capped — cores-scaled, value-exact (BIGINTs).
+    # The cache is read four times (the deviation pair join's two sides,
+    # the targets and the rated anti join), with no exchange reused
+    # between them. Measured, 4 cores: without it this key ran slower,
+    # median 2.46 -> 2.66 s and 3.18 -> 3.27 s on cf_pipeline (two
+    # batches, 7 alternating pairs), 7.57 -> 8.02 s at sf0.1 with the
+    # cache cleared per run (4 pairs).
     m = (
-        m0.join(deg.where(F.col("df") <= 48).select("user_id"), "user_id")
+        _degree_capped(
+            ratings_matrix(spark, sf_dir), "user_id", 48,
+            spark.sparkContext.defaultParallelism,
+        )
         .select("user_id", "item_id", F.col("rating").cast("long").alias("rating"))
-        .repartition(spark.sparkContext.defaultParallelism)
         .cache()
     )
     dev = _slope_one_dev(m)
