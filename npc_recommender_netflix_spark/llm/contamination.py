@@ -393,7 +393,6 @@ def t_source_sketch_jaccard(spark, sf_dir):
         .where(F.col("w2").isNotNull())
         .select("source", "g")
         .distinct()
-        .cache()
     )
     wbk = Window.partitionBy("source").orderBy("g")
     bk = (

@@ -264,6 +264,8 @@ def t_jaccard_neardup_capped(spark, sf_dir):
     # shuffle was 43x input from the replays). The df-join leaves sh
     # hash-partitioned by s, and InMemoryRelation preserves that
     # clustering, so the a<->b self-join below stays exchange-free.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 1.41 -> 2.11 s without it, IQR 0.16 s.
     sh = _df_capped(shingles(spark, sf_dir, bounded=False)).cache()
     # sizes unhinted: one row per doc, unbounded at corpus scale
     pairs = _jaccard_pairs(_pair_counts(sh), _counts(sh), 0.12)
@@ -484,8 +486,6 @@ def t_simhash_pairs(spark, sf_dir):
     sim = (
         votes.crossJoin(F.broadcast(params))
         .select("doc_id", "w", fp_full.bitwiseAND(mask).alias("fp"))
-        .cache()  # two consumers (band-join sides a/b): uncached, each
-        # re-reads the corpus and re-runs the vote agg
     )
     # The 3 band rows per doc come from a MAP-SIDE explode (r17, guide
     # §2.4; was a broadcast crossJoin against range(0,3) — one more
@@ -563,11 +563,7 @@ def t_minhash_dedup(spark, sf_dir):
     tok = RegexTokenizer(inputCol="text", outputCol="words", pattern=r"\s+")
     featurized = tok.transform(docs)
     tf = HashingTF(inputCol="words", outputCol="features", numFeatures=1024, binary=True)
-    # r17 (guide §2.4 — don't recompute shared subtrees): feats feeds BOTH
-    # sides of approxSimilarityJoin (and the fit's schema pass), so the
-    # uncached form ran tokenize+HashingTF once per side. One bounded
-    # cache (|docs| sparse 1024-dim vectors) halves that work.
-    feats = tf.transform(featurized).select("doc_id", "features").cache()
+    feats = tf.transform(featurized).select("doc_id", "features")
     mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=5, seed=42)
     model = mh.fit(feats)
     pairs = model.approxSimilarityJoin(feats, feats, 0.5, distCol="jaccard_dist")
@@ -973,9 +969,7 @@ def t_minhash_lsh(spark, sf_dir):
     bound. The s-curve at (b=4, r=2) keeps J=1.0 pairs with probability 1
     (identical signatures) — pytest pins that invariant.
     """
-    # the shingle set feeds three consumers (signatures, sizes, rescoring);
-    # Spark does not share repeated subtrees, so cache it once
-    sh = shingles(spark, sf_dir, bounded=False, wide=True).cache()
+    sh = shingles(spark, sf_dir, bounded=False, wide=True)
     cand = _band_candidates(_minhash_bands(_minhash_sig(sh, 8), 4), "doc_a", "doc_b")
     pairs = _rescore(cand, sh)
     return pairs.select("doc_a", "doc_b", f6(F.col("jaccard")).alias("jaccard"))
@@ -1015,7 +1009,7 @@ def t_pipeline_e2e_lsh(spark, sf_dir):
     oracle for the full pipeline.
     """
     exact = _quality_exact(load_table(spark, sf_dir, "documents"), F.md5("text"))
-    sh = _bigram_set(exact).cache()  # feeds signatures, sizes, and rescoring
+    sh = _bigram_set(exact)
     cand = _band_candidates(_minhash_bands(_minhash_sig(sh, 8), 4), "da", "db")
     losers = _rescore(cand, sh).select(F.col("db").alias("doc_id")).distinct()
     return _survivor_stats(exact, losers)
@@ -1128,13 +1122,11 @@ def t_lsh_recall(spark, sf_dir):
         t_jaccard_neardup(spark, sf_dir)
         .where(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b")
-        .cache()
     )
     lsh = (
         t_minhash_lsh(spark, sf_dir)
         .where((F.col("doc_a") < 1000) & (F.col("doc_b") < 1000))
         .select(F.col("doc_a").alias("la"), F.col("doc_b").alias("lb"))
-        .cache()
     )
     hit = exact.join(lsh, (exact.doc_a == lsh.la) & (exact.doc_b == lsh.lb))
     ne = exact.agg(F.count(F.lit(1)).alias("n_exact"))
@@ -1446,6 +1438,8 @@ def t_containment_neardup(spark, sf_dir):
     # cached for the same 3-consumer replay reason as
     # t_jaccard_neardup_capped (s-clustered, so the self-join is
     # exchange-free).
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 3.06 -> 3.80 s without it, IQR 0.28 s.
     sh = _df_capped(shingles(spark, sf_dir, bounded=False)).cache()
     sizes = _counts(sh)
     a = sh.alias("a")
@@ -1585,7 +1579,7 @@ def t_minhash_lsh_incremental(spark, sf_dir):
     only the batch's shingle sets are computed fresh, and the exact
     rescore touches candidate posting lists only.
     """
-    sh = shingles(spark, sf_dir, bounded=False, wide=True).cache()
+    sh = shingles(spark, sf_dir, bounded=False, wide=True)
     bands = _minhash_bands(_minhash_sig(sh, 8), 4)
     bn = bands.where(F.col("doc_id") % 7 == 0).select(
         F.col("doc_id").alias("doc_new"), "band", "bkey"
@@ -1867,6 +1861,8 @@ def t_minhash_perm_curve(spark, sf_dir):
     bounded bucket self-joins; the exact ground truth is the test-scale
     honesty branch, sampled at 100 TB like t_lsh_recall's.
     """
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 4.33 -> 4.66 s without it, IQR 0.23 s.
     sh = shingles(spark, sf_dir, wide=True).cache()
     sig = _minhash_sig(sh, 16).cache()
 
@@ -2030,6 +2026,8 @@ def t_prefix_filter_join(spark, sf_dir):
     broadcast arithmetic; the full-posting arm is computed here only
     as the measured counterfactual.
     """
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 3.11 -> 3.49 s without it, IQR 0.38 s.
     sh = (
         _df_capped(shingles(spark, sf_dir, bounded=False), "df")
         .select("doc_id", "s", "df")

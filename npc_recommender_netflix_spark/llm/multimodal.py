@@ -2077,7 +2077,7 @@ def m_audio_vad(spark, sf_dir):
     wav = docs.mapInPandas(synth_wav, schema="doc_id long, payload binary")
     fr = wav.mapInPandas(
         frame_energies, schema="doc_id long, f long, fsum long"
-    ).cache()  # two consumers (tot, v) must not re-run the Arrow decode
+    )
     tot = fr.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_frames"),
         F.sum("fsum").cast("long").alias("total"),
@@ -2234,7 +2234,7 @@ def m_image_tiling(spark, sf_dir):
         tile,
         schema="doc_id long, grid_w long, grid_h long, px long, py long,"
         " s long",
-    ).cache()  # two consumers (mx, argmax join) must not re-decode
+    )
     mx = psum.groupBy("doc_id").agg(
         F.max("s").alias("ms"), F.count("*").cast("long").alias("n_patches")
     )

@@ -1391,15 +1391,14 @@ def t_jsd_sources(spark, sf_dir):
     # r17 (guide §2.1/§2.4): aggregate ONCE at the finest grain the key
     # needs — the old form scanned the token-grain join 4x (cs/ns/ct/nt)
     # plus a 5th pass for the vocab distinct. ns, ct, nt and the vocab
-    # axis are all exact integer roll-ups of cs, so one cached
-    # source×vocab census (corpus-bounded per the docstring) replaces
-    # every token-grain rescan. Every token's doc_id exists in documents
+    # axis are all exact integer roll-ups of cs, so one source×vocab
+    # census (corpus-bounded per the docstring) replaces every
+    # token-grain rescan. Every token's doc_id exists in documents
     # (tokens derive from documents.text), so the cs-derived vocab is
     # the corpus vocab.
     cs = (
         src_tok.groupBy("source", "word")
         .agg(F.count("*").cast("long").alias("c_s"))
-        .cache()
     )
     vocab = cs.select("word").distinct()
     v = vocab.agg(F.count("*").cast("long").alias("v"))
@@ -2466,7 +2465,7 @@ def t_kneser_ney(spark, sf_dir):
     probability join is vocabulary-sized — never token-stream-sized.
     """
     bg = _bigram_pairs(spark, sf_dir)
-    c12 = bg.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c")).cache()
+    c12 = bg.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c"))
     c1 = c12.groupBy("w1").agg(
         F.sum("c").cast("long").alias("tot"),
         F.count("*").cast("long").alias("n1plus_fwd"),
@@ -3754,18 +3753,13 @@ def t_naive_bayes_lid(spark, sf_dir):
         .where(F.col("w") != "")
     )
     train = tok.where(F.col("is_test") == 0)
-    # r17 (guide §2.4/§5): cnt (the vocab×class count grid) feeds the
-    # class totals, the vocab axis, and the smoothing join — cache it so
-    # the training token pass runs once, not 3x. classes (one row per
-    # class) likewise feeds the grid, the priors and the prior total.
     cnt = train.groupBy("w", F.col("lang").alias("c")).agg(
         F.count("*").cast("long").alias("n")
-    ).cache()
+    )
     classes = (
         docs.where(F.col("is_test") == 0)
         .groupBy(F.col("lang").alias("c"))
         .agg(F.count("*").cast("long").alias("nd"))
-        .cache()
     )
     tc = cnt.groupBy("c").agg(F.sum("n").cast("long").alias("tn"))
     vocab = cnt.select("w").distinct()
@@ -4436,6 +4430,8 @@ def t_longest_dup_ngram(spark, sf_dir):
     # (round-11 SCALECHECK: shuffle 62.6x for 30x rows); with it the only
     # window-sized shuffle is this single repartition, by construction
     # proportional to input.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 4.43 -> 4.87 s without it, IQR 0.26 s.
     wins = wins.repartition("wlen", "digest").cache()
     dups = (
         wins.groupBy("wlen", "digest")
@@ -4648,8 +4644,6 @@ def t_rake_keywords(spark, sf_dir, stopwords=None):
             F.count("*").over(Window.partitionBy("doc_id", "grp")),
         )
         .where(F.col("plen") <= 6)
-        # feeds the phrase assembly AND the word-stats census
-        .cache()
     )
     phr = kept.groupBy("doc_id", "grp").agg(
         F.concat_ws(

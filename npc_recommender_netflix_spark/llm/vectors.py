@@ -3005,14 +3005,9 @@ def v_residual_quantize(spark, sf_dir):
         F.col("v0").cast("double").alias("v"),
     )
     cent = g.groupBy("label", "i").agg(f6(F.avg("v")).alias("cv"))
-    # r feeds THREE consumers (code, m2, pv); without an explicit cache
-    # Spark replicates the scan+explode subtree per consumer (measured:
-    # 6 parquet scans, 9 exchanges). Caching the residual frame makes
-    # the corpus read once — the shared-intermediate rule from
-    # recommender/core's ratings-matrix cache, applied to the explode.
     r = g.join(F.broadcast(cent), ["label", "i"]).select(
         "vec_id", "label", "i", (F.col("v") - F.col("cv")).alias("r")
-    ).cache()
+    )
     code = (
         r.where(F.col("i") <= 8)
         .groupBy("vec_id")
@@ -3026,7 +3021,7 @@ def v_residual_quantize(spark, sf_dir):
             .cast("long")
             .alias("code")
         )
-    ).cache()
+    )
     m2 = (
         r.join(code, "vec_id")
         .groupBy("label", "code", "i")
@@ -3685,11 +3680,11 @@ def v_hnsw_layered(spark, sf_dir):
     # Base layer: the SAME degree-8 graph v_nsw_greedy walks — shared
     # via _nsw_adj8. Upper layer: its own degree-4 graph over every 16th
     # vector, built by the same corpus-adaptive rule sized to ITS node
-    # count (key-local cache: no other consumer).
+    # count.
     adj = _nsw_adj8(spark, sf_dir)
     adj_top = _band_knn_adj(
         spark, sf_dir, F.col("vec_id") % 16 == 0, 4
-    ).cache()
+    )
     qcos = _qcos_012(spark, sf_dir)
 
     # Entry point derived IN-PLAN: the smallest upper-layer node that is
@@ -5318,11 +5313,7 @@ def v_neardup_threshold_sensitivity(spark, sf_dir):
     the qualifying pairs only — the curve costs one aggregation over
     what the dedup already computes.
     """
-    # r17 (guide §2.4/§5): the banded-candidate pipeline fed qual's three
-    # consumers uncached (18 parquet-scan subtrees in the plan); the
-    # scored pair set is O(N) by the adaptive-nbits rule, so the cache is
-    # candidate-sized, not pair-quadratic.
-    scored = _banded_scored_pairs(spark, sf_dir).cache()
+    scored = _banded_scored_pairs(spark, sf_dir)
     thr = spark.range(1).select(
         F.explode(F.array(F.lit(8500), F.lit(9000), F.lit(9500))).alias(
             "thr_bp"
@@ -6010,6 +6001,8 @@ def v_kmeans_par_init(spark, sf_dir):
     # uncached the plan replays the embedding scan + d2 pass per
     # consumer — measured 102 parquet-scan subtrees in one plan. The
     # frames are narrow per-vector scalars (vec_id, d2): cache them.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 1.99 -> 2.37 s without it, IQR 0.14 s.
     d1 = emb.crossJoin(F.broadcast(c0)).select(
         "vec_id", d2("ce").alias("d2")
     ).cache()

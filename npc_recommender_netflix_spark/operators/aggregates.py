@@ -621,6 +621,8 @@ def a_ks_drift(spark, sf_dir):
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("grp"),
     )
     # Shared by the totals and the CDF window: one materialization.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 0.84 -> 0.98 s without it, IQR 0.10 s.
     c = v.groupBy("cents").agg(
         F.sum("grp").alias("ca"), F.sum(1 - F.col("grp")).alias("cb")
     ).cache()
@@ -687,11 +689,10 @@ def a_psi_drift(spark, sf_dir):
             F.lit(9),
         ).alias("bin"),
     )
-    # Shared by the totals and the PSI terms: one materialization.
     c = v.groupBy("bin").agg(
         (F.sum(F.when(F.col("period") == 0, 1).otherwise(0)) + 1).alias("ca"),
         (F.sum(F.when(F.col("period") == 1, 1).otherwise(0)) + 1).alias("cb"),
-    ).cache()
+    )
     t = c.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
     pa = F.col("ca") * 1.0 / F.col("na")
     pb = F.col("cb") * 1.0 / F.col("nb")
@@ -751,8 +752,7 @@ def a_benford_fit(spark, sf_dir):
             F.round(F.col("o_totalprice") * 100).cast("long").cast("string"), 1, 1
         ).cast("long").alias("digit")
     )
-    # Shared by the totals and the share projection: one materialization.
-    c = d.groupBy("digit").agg(F.count("*").alias("n")).cache()
+    c = d.groupBy("digit").agg(F.count("*").alias("n"))
     t = c.agg(F.sum("n").alias("total"))
     exp = F.expr(f"element_at({wlit}, CAST(digit AS INT))")
     return (
@@ -3480,7 +3480,7 @@ def a_sprt(spark, sf_dir):
     b = F.log(F.lit(0.78 / 0.82))
     llr = cum.select(
         "rn", (F.col("cp") * a + (F.col("rn") - F.col("cp")) * b).alias("l")
-    ).cache()
+    )
     thr = F.log(F.lit(19.0))
     crossing = llr.where((F.col("l") >= thr) | (F.col("l") <= -thr)).agg(
         F.min("rn").alias("cross_rn")
@@ -5661,9 +5661,7 @@ def a_ljung_box(spark, sf_dir):
     rather than dropping pairs).
     """
     tot, dev = _kd_dev(spark, sf_dir)
-    # r17 (guide §2.4/§5): dev feeds the denominator and both lag-join
-    # sides uncached — day-axis bounded, cache it (a_period_detect shape).
-    dev = dev.select("t", "dv").cache()
+    dev = dev.select("t", "dv")
     c0 = dev.agg(
         F.sum(
             F.col("dv").cast("decimal(19,0)")
@@ -6182,7 +6180,6 @@ def a_logistic_irls(spark, sf_dir):
             F.count("*").cast("long").alias("n"),
             F.sum("y").cast("long").alias("sy"),
         )
-        .cache()
     )
     beta = spark.range(1).select(
         F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
@@ -6452,14 +6449,9 @@ def a_dunn_test(spark, sf_dir):
     5-row rank-sum table; the only data-scale pass is the daily
     rollup.
     """
-    # r17 (guide §2.4/§5): the daily rollup is the only data pass and
-    # feeds tt, the rank join, and the tie census; bounded at
-    # |days|×|event types| cells.
-    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir).cache())
-    # r17 (guide §2.4/§5): same multi-consumer shape as a_by_fdr_pairs —
-    # sums (≤|event types| rows) feeds the census and both pair sides.
+    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir))
     rk = _dunn_pairs(
-        sums.cache(),
+        sums,
         tie,
         (F.col("r2a").cast("double") / (2.0 * F.col("na"))).alias("mra"),
         (F.col("r2b").cast("double") / (2.0 * F.col("nb"))).alias("mrb"),
@@ -7123,6 +7115,8 @@ def a_hurst_exponent(spark, sf_dir):
     # r17 (guide §2.4/§5): the day-axis frame fed the 3-size union twice
     # over (block stats + deviations) — ~8 replays of the daily rollup
     # in the plan. idx and blocks are both day-axis bounded.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 2.07 -> 2.56 s without it, IQR 0.48 s.
     idx = idx.crossJoin(F.broadcast(n_days)).cache()
     blocks = None
     for m in (5, 10, 15):
@@ -7389,7 +7383,6 @@ def a_poisson_irls(spark, sf_dir):
             .alias("x1"),
             F.datediff(F.col("d"), F.col("d0")).cast("long").alias("x2"),
         )
-        .cache()
     )
     init = pcells.agg(
         F.round(
@@ -7984,7 +7977,7 @@ def a_huber_mean(spark, sf_dir):
             / 100.0
         ).alias("x"),
         "o_orderkey",
-    ).cache()
+    )
     # Median and MAD over the DISTINCT-VALUE cumulative axis (round 10):
     # the value at rank k is the smallest distinct value whose cumulative
     # count reaches k — the orderkey tiebreak picks a row, never a
@@ -8231,12 +8224,11 @@ def a_cross_correlation(spark, sf_dir):
         F.sum("x").cast("long").alias("sx"),
         F.sum("y").cast("long").alias("sy"),
     )
-    # r17 (guide §2.4/§5): same dev fan-out as a_ljung_box — cached.
     dev = idx.crossJoin(F.broadcast(tot)).select(
         "t",
         (F.col("n") * F.col("x") - F.col("sx")).cast("long").alias("dx"),
         (F.col("n") * F.col("y") - F.col("sy")).cast("long").alias("dy"),
-    ).cache()
+    )
     den = dev.agg(
         F.sum(
             F.col("dx").cast("decimal(19,0)")
@@ -8634,8 +8626,6 @@ def a_ar2_yule_walker(spark, sf_dir):
     one shared float association for each coefficient.
     """
     _, dev = _kd_dev(spark, sf_dir)
-    # r17 (guide §2.4/§5): same dev fan-out as a_ljung_box — cached.
-    dev = dev.cache()
     dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
     c0 = dev.agg(
         F.sum(dec(F.col("dv")) * dec(F.col("dv"))).alias("c0"),
@@ -8747,12 +8737,10 @@ def a_period_detect(spark, sf_dir):
         F.count("*").cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
     )
-    # r17 (guide §2.4/§5): dev feeds the denominator and both lag-join
-    # sides — 3 replays of the daily rollup uncached; day-axis bounded.
     dev = idx.crossJoin(F.broadcast(tot)).select(
         "t",
         (F.col("n") * F.col("x") - F.col("s")).cast("long").alias("dv"),
-    ).cache()
+    )
     dec = lambda c: c.cast("decimal(19,0)")  # noqa: E731
     c0 = dev.agg(F.sum(dec(F.col("dv")) * dec(F.col("dv"))).alias("den"))
     lags = spark.range(2, 15).select(F.col("id").cast("long").alias("lag"))
@@ -8875,7 +8863,7 @@ def a_bland_altman(spark, sf_dir):
             F.round(F.col("o_totalprice") * 100).cast("long")
             - F.col("line_cents")
         ).alias("diff")
-    ).cache()
+    )
     c = pairs.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("diff").cast("long").alias("s"),
@@ -9616,6 +9604,8 @@ def a_isotonic_pav(spark, sf_dir):
     scored = _month_scored(spark, sf_dir)
     # r17 (guide §2.4/§5): the 11-row bin frame fed all three lattice
     # aliases uncached — 3 replays of the orders⋈returns rank chain.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 2.91 -> 3.22 s without it, IQR 0.31 s.
     bins = scored.groupBy("p").agg(
         F.count("*").cast("long").alias("k"),
         F.sum("y").cast("long").alias("s"),
@@ -14540,10 +14530,7 @@ def a_page_trend(spark, sf_dir):
     Scale: one map-side-combinable cents groupBy; ranking runs on the
     35-cell frame.
     """
-    # r17 (guide §2.4/§5): the 35-cell census is the only data pass and
-    # feeds both scaffold axes plus the zero-fill join — cache it so the
-    # orders scan runs once, not once per consumer.
-    blks, cells = _zero_filled(_prio_cells0(spark, sf_dir).cache())
+    blks, cells = _zero_filled(_prio_cells0(spark, sf_dir))
     wr = Window.partitionBy("blk").orderBy("cents", "trt")
     ranked = cells.select(
         "trt", F.row_number().over(wr).cast("long").alias("r")
@@ -15033,12 +15020,8 @@ def a_by_fdr_pairs(spark, sf_dir):
     a_kruskal_wallis frame); the 10-pair step-ups are bounded-frame
     arithmetic.
     """
-    # r17 (guide §2.4/§5): daily is the only data pass and fed every
-    # downstream frame uncached (14 parquet-scan subtrees in the plan);
-    # bounded at |days|×|event types| cells. sums (≤|event types| rows)
-    # feeds the census and both pair-join sides.
-    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir).cache())
-    rk = _dunn_pairs(sums.cache(), tie)
+    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir))
+    rk = _dunn_pairs(sums, tie)
     thr = rk.select(
         "*",
         F.expr(_DUNN_THR_SQL).alias("zbh"),
@@ -15281,10 +15264,7 @@ def a_quade_test(spark, sf_dir):
     Scale: one map-side cents groupBy; everything else is 35-cell
     arithmetic.
     """
-    # r17 (guide §2.4/§5): the 35-cell census is the only data pass and
-    # feeds both scaffold axes plus the zero-fill join — cache it so the
-    # orders scan runs once, not once per consumer.
-    _, cells = _zero_filled(_prio_cells0(spark, sf_dir).cache())
+    _, cells = _zero_filled(_prio_cells0(spark, sf_dir))
     wr = Window.partitionBy("blk").orderBy("cents", "trt")
     ranked = cells.select(
         "blk", "trt", F.row_number().over(wr).cast("long").alias("r")
@@ -15296,10 +15276,9 @@ def a_quade_test(spark, sf_dir):
     weights = ranges.select(
         "blk", F.row_number().over(wq).cast("long").alias("q")
     )
-    # 35 rows; feeds both the per-treatment sums and the A²/k census
     sij = ranked.join(F.broadcast(weights), "blk").select(
         "trt", (F.col("q") * (2 * F.col("r") - 6)).alias("s2")
-    ).cache()
+    )
     sj = sij.groupBy("trt").agg(F.sum("s2").cast("long").alias("sj"))
     b_ = weights.agg(F.count("*").cast("long").alias("b"))
     agg = (

@@ -445,15 +445,10 @@ def q_event_funnel(spark, sf_dir):
     streaming twin would hold the same three fields.
     """
     ev = load_table(spark, sf_dir, "events")
-    # r17 (guide §2.4/§5): s1 feeds step 2, step 3 AND its own census —
-    # the click scan+agg ran 3x uncached (s2 twice through s3). One
-    # timestamp per user per step, exactly the bounded state the
-    # docstring names; cached so each funnel stage computes once.
     s1 = (
         ev.where(F.col("event_type") == "click")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .cache()
     )
     lim = F.col("t1") + F.expr("INTERVAL 7 DAYS")
     s2 = (
@@ -462,7 +457,6 @@ def q_event_funnel(spark, sf_dir):
         .where((F.col("ts") > F.col("t1")) & (F.col("ts") <= lim))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .cache()
     )
     s3 = (
         ev.where(F.col("event_type") == "purchase")
@@ -568,20 +562,19 @@ def q_basket_rules(spark, sf_dir):
     confidence, and lift for every brand pair co-occurring in an order,
     top-50 by pair count.
 
-    Plan shape: baskets (order, brand) are deduped once and CACHED (three
-    consumers: item counts, the self-join, the order count — Spark does not
-    reuse repeated subtrees); the pair self-join is an equi-join on
-    orderkey with a `<` predicate, so pairs per order are k(k-1)/2 of a
-    ≤25-brand basket — bounded regardless of corpus size. Counts are exact
-    ints; the three ratios divide in one fixed association each. The tiny
-    item/order-count tables broadcast back onto pairs.
+    Plan shape: one (order, brand) basket distinct feeds three consumers
+    (item counts, the self-join, the order count); the pair self-join is
+    an equi-join on orderkey with a `<` predicate, so pairs per order are
+    k(k-1)/2 of a ≤25-brand basket — bounded regardless of corpus size.
+    Counts are exact ints; the three ratios divide in one fixed
+    association each. The tiny item/order-count tables broadcast back
+    onto pairs.
     """
     li, part = tables(spark, sf_dir, "lineitem", "part")
     baskets = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select("l_orderkey", "p_brand")
         .distinct()
-        .cache()
     )
     n = baskets.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     item = baskets.groupBy("p_brand").agg(F.count(F.lit(1)).alias("c"))
@@ -648,7 +641,6 @@ def q_retention_cohort(spark, sf_dir):
             ).cast("long").alias("wk"),
         )
         .distinct()
-        .cache()
     )
     cohort = act.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
     return (
@@ -4427,6 +4419,8 @@ def q_basket_substitutes(spark, sf_dir):
     # census, the per-brand counts and BOTH pair-join sides uncached —
     # 4 replays of the lineitem⋈part distinct. One row per
     # (order, brand); MEMORY_AND_DISK so it spills at scale.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 3.60 -> 4.93 s without it, IQR 0.65 s.
     baskets = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select("l_orderkey", "p_brand")
@@ -5300,16 +5294,12 @@ def q_join_card_est(spark, sf_dir):
     """
     events = load_table(spark, sf_dir, "events")
     orders = load_table(spark, sf_dir, "orders")
-    # r17 (guide §2.4/§5): each per-key count frame fed its scalar stats,
-    # the exact-cardinality join, and the MCV top-5 uncached (3 fact
-    # scans per side). Cache both — they are the ANALYZE-stats frames the
-    # docstring describes, |distinct keys| rows.
     cl = events.groupBy(F.col("user_id").alias("k")).agg(
         F.count("*").alias("c")
-    ).cache()
+    )
     cr = orders.groupBy(F.col("o_custkey").alias("k")).agg(
         F.count("*").alias("c")
-    ).cache()
+    )
     sl = cl.agg(F.sum("c").alias("n_l"), F.count("*").alias("ndv_l"))
     sr = cr.agg(F.sum("c").alias("n_r"), F.count("*").alias("ndv_r"))
     actual = (
@@ -5637,11 +5627,6 @@ def q_largest_remainder(spark, sf_dir):
                 ).cast("long")
             ).alias("cents")
         )
-        # r17 (guide §2.4/§5): the 3-join revenue rollup is the only
-        # data-sized work and fed total/quota/shortfall/final uncached —
-        # cache the 25-nation frame (and the quota math once) so the fact
-        # tables scan once.
-        .cache()
     )
     tot = rev.agg(F.sum("cents").alias("t"))
     quota = rev.crossJoin(F.broadcast(tot)).select(
@@ -5649,7 +5634,7 @@ def q_largest_remainder(spark, sf_dir):
         "cents",
         F.expr("(cents * 10000) div t").alias("bps_floor"),
         F.expr("(cents * 10000) % t").alias("rem"),
-    ).cache()
+    )
     short = quota.agg(
         (F.lit(10000) - F.sum("bps_floor")).alias("k")
     )
@@ -5912,12 +5897,6 @@ def q_panel_fe(spark, sf_dir):
             .cast("long")
             .alias("y"),
         )
-        # r17 (guide §2.4/§5): census is the ONLY data-scale computation
-        # and it fed 12 uncached consumers (scaffold axes, panel join,
-        # then panel's own four consumers) — 36 parquet scan subtrees in
-        # the plan. Cache it: bounded at ≤|nations|×|months| cells at any
-        # corpus size.
-        .cache()
     )
     # balanced scaffold: zero-order months are REAL (0, 0) panel cells
     # in a count panel — and balance is what makes double-demeaning
@@ -5925,14 +5904,12 @@ def q_panel_fe(spark, sf_dir):
     scaffold = census.select("nation").distinct().crossJoin(
         census.select("ym").distinct()
     )
-    # cached for the same reason: gm/im/tm/within each rescan the panel;
-    # same bounded cell count as census.
     panel = scaffold.join(census, ["nation", "ym"], "left").select(
         "nation",
         "ym",
         F.coalesce(F.col("x"), F.lit(0)).alias("x"),
         F.coalesce(F.col("y"), F.lit(0)).alias("y"),
-    ).cache()
+    )
     gm = panel.agg(
         F.avg(F.col("x").cast("double")).alias("mx"),
         F.avg(F.col("y").cast("double")).alias("my"),
@@ -6187,18 +6164,12 @@ def q_littles_law(spark, sf_dir):
 
     orders = _lt(spark, sf_dir, "orders")
     li = _lt(spark, sf_dir, "lineitem")
-    # r17 (guide §2.4/§5): this rollup is the only data-sized pass and it
-    # fed SIX uncached consumers through span/arr/dep (14 parquet-scan
-    # subtrees in the plan). Cache it — 3 narrow columns per order,
-    # MEMORY_AND_DISK by default so it spills rather than OOMs at scale —
-    # and the docstring's "one data-sized pass" becomes literally one.
     ord_ = (
         orders.join(li, li.l_orderkey == orders.o_orderkey)
         .groupBy(
             "o_orderkey", F.col("o_orderdate").cast("date").alias("od")
         )
         .agg(F.max(F.col("l_shipdate").cast("date")).alias("sd"))
-        .cache()
     )
     span = ord_.agg(
         F.min("od").alias("d0"),
@@ -6226,7 +6197,6 @@ def q_littles_law(spark, sf_dir):
         ).alias("d")
     )
     wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    # day-axis bounded (~2.4k rows); cached because peak and l both scan it
     open_ = (
         cal.join(arr, "d", "left")
         .join(dep, "d", "left")
@@ -6239,7 +6209,6 @@ def q_littles_law(spark, sf_dir):
             .cast("long")
             .alias("open_eod"),
         )
-        .cache()
     )
     peak = open_.agg(F.max("open_eod").alias("po"))
     l = (

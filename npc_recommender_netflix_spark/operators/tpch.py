@@ -285,8 +285,7 @@ def q_top_supplier(spark, sf_dir):
     single-row aggregate broadcast back as a cross join (never a global
     window sort — at 100 TB the supplier set is millions of rows and a
     partitionBy()-less window would funnel them through one task), and the
-    supplier dim attaches via its own broadcast. rev feeds both the max and
-    the final join, so it is cached (Spark does not reuse repeated subtrees).
+    supplier dim attaches via its own broadcast.
     """
     li, supp = tables(spark, sf_dir, "lineitem", "supplier")
     rev = (
@@ -296,7 +295,6 @@ def q_top_supplier(spark, sf_dir):
         )
         .groupBy("l_suppkey")
         .agg(F.sum(_rev_exact()).alias("rv"))
-        .cache()
     )
     mx = rev.agg(F.max("rv").alias("mx"))
     top = rev.join(F.broadcast(mx), rev.rv == F.col("mx")).drop("mx")
@@ -738,7 +736,6 @@ def q_pareto_brands(spark, sf_dir):
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(F.sum(_rev_exact()).alias("rv"))
-        .cache()
     )
     tot = rev.agg(F.sum("rv").alias("t"))
     w = Window.orderBy(F.col("rv").desc(), "p_brand").rowsBetween(
@@ -3791,11 +3788,6 @@ def q_fair_waterline(spark, sf_dir):
             .cast("long")
             .alias("d")
         )
-        # r17 (guide §2.4/§5): the demand rollup is the only data-sized
-        # work and fed capacity + the sorted axis uncached; the sorted
-        # 25-row frame then feeds segment search, the prev lookup and the
-        # final allocation — cache both so the fact join scans once.
-        .cache()
     )
     cap = dem.agg(
         F.expr("sum(d) * 4 div 5").cast("long").alias("cc"),
@@ -3809,7 +3801,7 @@ def q_fair_waterline(spark, sf_dir):
         F.sum("d").over(w_ord.rowsBetween(Window.unboundedPreceding, 0)).alias(
             "pre"
         ),
-    ).cache()
+    )
     seg = (
         sorted_.crossJoin(F.broadcast(cap))
         .where(

@@ -1869,10 +1869,6 @@ def w_conformal_interval(spark, sf_dir):
             "day",
             "x",
         )
-        # r17 (guide §2.4/§5): daily feeds the lag-7 shift, the pred
-        # join, and the day count — day-axis bounded, cache it (split
-        # below likewise feeds calibration and test).
-        .cache()
     )
     p = daily.select(
         (F.col("rn") + 7).alias("rn"), F.col("x").alias("yhat")
@@ -1888,7 +1884,7 @@ def w_conformal_interval(spark, sf_dir):
     split = pred.crossJoin(F.broadcast(n)).withColumn(
         "cut",
         (7 + F.floor((F.col("nd") - 7) * 3 / 5)).cast("long"),
-    ).cache()
+    )
     cal = split.where(F.col("rn") <= F.col("cut")).select(
         "r",
         F.row_number().over(Window.orderBy("r", "rn")).cast("long")

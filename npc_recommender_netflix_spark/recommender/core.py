@@ -46,8 +46,9 @@ def _cached(spark, sf_dir: str, name: str, build) -> DataFrame:
     orders join, and the item-cosine pair self-join where AQE measures
     the 200-item slice small. A degree cap is a window count
     (``_degree_capped``) and a cosine norm a window column
-    (``_item_pairs``), never an aggregate joined back: the capped keys'
-    cached frames hold no broadcast, and the cosine memo no norm one.
+    (``_item_pairs``), never an aggregate joined back: the capped frame
+    r_slope_one_capped caches holds no broadcast, and the cosine memo no
+    norm one.
     """
     # recache=False (round-12 bisect): these frames are cheap to rebuild
     # (~0.3 s) and feed 1-3 consumers per key, so re-registering after an
@@ -473,9 +474,11 @@ def r_rmse(spark, sf_dir):
     return err.agg(f6(F.sqrt(F.avg("sq"))).alias("rmse"))
 
 
-@register(
-    "r_precision_at_k",
-    """
+# The popularity-baseline eval's oracle CTEs up to the candidate pool:
+# orderkey%5 train/holdout split, the global top-20 popular items, and
+# each holdout user's unseen top-20 items. _RANK_EVAL_SQL (r_ndcg,
+# r_mrr), r_precision_at_k and r_map_at_k each rank their recs on it.
+_RANK_POOL_SQL = """
     WITH base AS (
         SELECT o_custkey AS user_id, l_partkey AS item_id, l_quantity AS qty,
                l_orderkey AS ok
@@ -494,7 +497,13 @@ def r_rmse(spark, sf_dir):
              WHERE NOT EXISTS (SELECT 1 FROM train tr
                                WHERE tr.user_id = u.user_id
                                  AND tr.item_id = t.item_id)),
-    recs AS (SELECT user_id, item_id FROM (
+"""
+
+
+@register(
+    "r_precision_at_k",
+    _RANK_POOL_SQL
+    + """    recs AS (SELECT user_id, item_id FROM (
                  SELECT *, row_number() OVER (PARTITION BY user_id
                                               ORDER BY pop DESC, item_id) AS rn
                  FROM cand) WHERE rn <= 3),
@@ -588,7 +597,7 @@ def r_baseline_bias(spark, sf_dir):
     """
     train_rows, hold_rows = split(interactions(spark, sf_dir))
     train = (
-        train_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("r")).cache()
+        train_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("r"))
     )
     hold = hold_rows.groupBy("user_id", "item_id").agg(F.sum("qty").alias("r"))
     g = train.agg((F.sum("r").cast("double") / F.count(F.lit(1))).alias("mu"))
@@ -675,6 +684,8 @@ def r_coverage(spark, sf_dir):
     # memoized upstream frames rebuild lazily), that replayed the whole
     # predictions chain twice. Interleaved A/B: 1.98 -> 1.74 s min, every
     # rep pair favoring the cache.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 1.98 -> 2.35 s without it, IQR 0.11 s.
     p = predictions(spark, sf_dir).cache()
     w = Window.partitionBy("user_id").orderBy(F.col("pred").desc(), "item_id")
     recs = p.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 3)
@@ -695,26 +706,7 @@ _DCG_W = {1: 1000000000000, 2: 630929753571, 3: 500000000000,
 _IDCG = {1: 1000000000000, 2: 1630929753571, 3: 2130929753571,
          4: 2561606311644, 5: 2948459118879}
 
-_RANK_EVAL_SQL = """
-    WITH base AS (
-        SELECT o_custkey AS user_id, l_partkey AS item_id, l_quantity AS qty,
-               l_orderkey AS ok
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    train AS (SELECT user_id, item_id, sum(qty) AS rating FROM base
-              WHERE ok % 5 <> 0 GROUP BY 1, 2),
-    hold AS (SELECT DISTINCT user_id, item_id FROM base WHERE ok % 5 = 0),
-    pop AS (SELECT item_id, sum(rating) AS pop FROM train GROUP BY 1),
-    top20 AS (SELECT item_id, pop FROM (
-                  SELECT *, row_number() OVER (ORDER BY pop DESC, item_id) AS rn
-                  FROM pop) WHERE rn <= 20),
-    users AS (SELECT DISTINCT user_id FROM hold),
-    cand AS (SELECT u.user_id, t.item_id, t.pop
-             FROM users u CROSS JOIN top20 t
-             WHERE NOT EXISTS (SELECT 1 FROM train tr
-                               WHERE tr.user_id = u.user_id
-                                 AND tr.item_id = t.item_id)),
-    recs AS (SELECT user_id, item_id, rn FROM (
+_RANK_EVAL_SQL = _RANK_POOL_SQL + """    recs AS (SELECT user_id, item_id, rn FROM (
                  SELECT *, row_number() OVER (PARTITION BY user_id
                                               ORDER BY pop DESC, item_id) AS rn
                  FROM cand) WHERE rn <= {k})
@@ -897,17 +889,30 @@ def r_covisitation(spark, sf_dir):
     before the final (item_a, item_b) shuffle; top-50 is
     TakeOrderedAndProject.
     """
+    return _top_session_pairs(_session_items(spark, sf_dir, 1800000000))
+
+
+def _session_items(spark, sf_dir, gap_us: int):
+    """Distinct (user_id, sid, item) rows: each user's events split into
+    sessions at gaps above ``gap_us`` microseconds (one user-keyed
+    window). r_covisitation and r_covisitation_capped sessionize here."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id",
         F.get_json_object("props", "$.k").cast("long").alias("item"),
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    brk = F.when(gap.isNull() | (gap > 1800000000), 1).otherwise(0)
+    brk = F.when(gap.isNull() | (gap > gap_us), 1).otherwise(0)
     s = ev.withColumn(
         "sid", F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
-    si = s.select("user_id", "sid", "item").distinct()
+    return s.select("user_id", "sid", "item").distinct()
+
+
+def _top_session_pairs(si):
+    """Top-50 item pairs (item_a < item_b) by the number of sessions of
+    ``si`` (user_id, sid, item) that hold both: the within-session
+    self-join and pair count of both covisitation keys."""
     a = si.select(
         F.col("user_id").alias("ua"), F.col("sid").alias("sa"),
         F.col("item").alias("item_a"),
@@ -927,6 +932,23 @@ def r_covisitation(spark, sf_dir):
         .orderBy(F.col("n_sessions").desc(), "item_a", "item_b")
         .limit(50)
     )
+
+
+# Each user's top-5 neighbors by cosine over both pair orientations:
+# the oracle tail of r_user_cosine and r_user_cosine_capped.
+_USER_TOP5_SQL = """
+    bidir AS (
+        SELECT user_a AS user_id, user_b AS neighbor_id, cosine FROM sims
+        UNION ALL
+        SELECT user_b AS user_id, user_a AS neighbor_id, cosine FROM sims
+    )
+    SELECT user_id, neighbor_id, cosine, rn FROM (
+        SELECT *, CAST(row_number() OVER (PARTITION BY user_id
+                                          ORDER BY cosine DESC, neighbor_id)
+                       AS BIGINT) AS rn
+        FROM bidir
+    ) WHERE rn <= 5
+    """
 
 
 @register(
@@ -950,19 +972,8 @@ def r_covisitation(spark, sf_dir):
         SELECT user_a, user_b, round(dot / (na.nrm * nb.nrm), 6) + 0 AS cosine
         FROM p JOIN n na ON p.user_a = na.user_id
                JOIN n nb ON p.user_b = nb.user_id
-    ),
-    bidir AS (
-        SELECT user_a AS user_id, user_b AS neighbor_id, cosine FROM sims
-        UNION ALL
-        SELECT user_b AS user_id, user_a AS neighbor_id, cosine FROM sims
-    )
-    SELECT user_id, neighbor_id, cosine, rn FROM (
-        SELECT *, CAST(row_number() OVER (PARTITION BY user_id
-                                          ORDER BY cosine DESC, neighbor_id)
-                       AS BIGINT) AS rn
-        FROM bidir
-    ) WHERE rn <= 5
-    """,
+    ),"""
+    + _USER_TOP5_SQL,
 )
 def r_user_cosine(spark, sf_dir):
     """USER-user collaborative filtering: top-5 nearest users by rating-
@@ -980,6 +991,8 @@ def r_user_cosine(spark, sf_dir):
     rounded cosine with neighbor tiebreak.
     """
     orders, li = tables(spark, sf_dir, "orders", "lineitem")
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 1.13 -> 1.59 s without it, IQR 0.10 s.
     base = (
         orders.where(F.col("o_custkey") < 300)
         .join(li, orders.o_orderkey == li.l_orderkey)
@@ -1169,19 +1182,7 @@ def r_cosine_sim_capped(spark, sf_dir):
         FROM p JOIN n na ON p.user_a = na.user_id
                JOIN n nb ON p.user_b = nb.user_id
         WHERE p.n_common >= 3
-    ),
-    bidir AS (
-        SELECT user_a AS user_id, user_b AS neighbor_id, cosine FROM sims
-        UNION ALL
-        SELECT user_b AS user_id, user_a AS neighbor_id, cosine FROM sims
-    )
-    SELECT user_id, neighbor_id, cosine, rn FROM (
-        SELECT *, CAST(row_number() OVER (PARTITION BY user_id
-                                          ORDER BY cosine DESC, neighbor_id)
-                       AS BIGINT) AS rn
-        FROM bidir
-    ) WHERE rn <= 5
-    """,
+    ),{_USER_TOP5_SQL}""",
 )
 def r_user_cosine_capped(spark, sf_dir):
     """User-user top-5 neighbors over the FULL user population — the
@@ -1201,37 +1202,28 @@ def r_user_cosine_capped(spark, sf_dir):
     per user by rounded cosine, id tiebreak — |users|×5, never pairs.
     """
     # Half-core width for the CPU-heavy pair stage (r18, guide §2.6).
-    # AQE's size-based coalesce left this cache at 6 partitions, so the
-    # pair-generation + partial-aggregate stage (~10 s CPU, the key's
-    # dominant cost) ran 6-wide on 32 cores, and its 6 oversized hash-agg
-    # task states drove the 4.3<->9 s GC bimodality (r17 open item). The
-    # r18 width sweep (same-session alternating A/B, 4-5 reps each):
+    # AQE's size-based coalesce left the capped matrix at 6 partitions,
+    # so the pair-generation + partial-aggregate stage (~10 s CPU, the
+    # key's dominant cost) ran 6-wide on 32 cores, and its 6 oversized
+    # hash-agg task states drove the 4.3<->9 s GC bimodality (r17 open
+    # item). The r18 width sweep (same-session alternating A/B, 4-5 reps
+    # each):
     # AQE-6 med 4.24 s with a 9.06 s outlier; 8 -> 3.89; 12 -> 3.14;
     # 16 -> 3.06; 24 -> 3.31; r17 had measured FULL defaultParallelism
     # (32) at 15-50% slower. Half the cores is the sweet spot and is
     # cores-scaled, not a constant. The width is the pair stage's: at
     # sf0.01 the executed pair join is a BroadcastHashJoin of the whole
-    # capped matrix, streamed from this cache's `width` partitions, not a
+    # capped matrix, streamed from its `width` partitions, not a
     # co-partitioned self-join. Values exact: per-pair dot partials merge
     # in arbitrary order at ANY width (incl. the old 6); result equality
     # verified exceptAll-empty both ways and oracle hash-match at 3 SFs.
-    #
-    # The cache is read three times (the pair join's two sides and the
-    # user norms), and Spark reuses no exchange between reads of one
-    # cached frame, so uncached the cap's exchange and window would run
-    # once per read. Measured, 4 cores: on cf_pipeline (7 alternating
-    # pairs) dropping both capped caches held 1.5 MB less heap and left
-    # this key flat (median 3.0 vs 3.1 s, then 3.9 vs 3.7 s); at sf0.1
-    # with the cache cleared per run it read 10.0 s cached vs 9.4 s
-    # uncached (4 pairs). No win measured yet: kept for the three reads,
-    # a candidate for removal under ROADMAP item 2.
     width = max(4, spark.sparkContext.defaultParallelism // 2)
-    m = _degree_capped(ratings_matrix(spark, sf_dir), "item_id", 40, width).cache()
+    m = _degree_capped(ratings_matrix(spark, sf_dir), "item_id", 40, width)
     n = m.groupBy("user_id").agg(
         F.sqrt(F.sum(F.col("rating") * F.col("rating"))).alias("nrm")
     )
     # per-side item_id aliases: same trivially-true-WARN rationale as
-    # r_user_cosine above (both sides share one cached lineage).
+    # r_user_cosine above (both sides share one lineage).
     # r17 measured revert: replacing this SMJ self-join with per-item
     # collect_list + in-plan 40x40 pair explode (_copurchase_edges
     # treatment) was 65% SLOWER warm (5.9 -> 9.7 s, with 21 s GC
@@ -1452,9 +1444,9 @@ def r_item_jaccard(spark, sf_dir):
     )
 
 
-@register(
-    "r_novelty",
-    f"""
+# Each user's top-3 predicted items: the recs CTE r_novelty and
+# r_serendipity score.
+_PRED_TOP3_SQL = f"""
     WITH p AS ({_PRED_SQL}),
     ranked AS (
         SELECT user_id, item_id,
@@ -1463,7 +1455,12 @@ def r_item_jaccard(spark, sf_dir):
         FROM p
     ),
     recs AS (SELECT user_id, item_id FROM ranked WHERE rn <= 3),
-    pop AS (SELECT item_id, CAST(count(*) AS BIGINT) AS raters
+"""
+
+
+@register(
+    "r_novelty",
+    f"""{_PRED_TOP3_SQL}    pop AS (SELECT item_id, CAST(count(*) AS BIGINT) AS raters
             FROM ({_M_SQL}) GROUP BY item_id),
     nu AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS nu
            FROM ({_M_SQL}))
@@ -1512,16 +1509,7 @@ def r_novelty(spark, sf_dir):
 
 @register(
     "r_serendipity",
-    f"""
-    WITH p AS ({_PRED_SQL}),
-    ranked AS (
-        SELECT user_id, item_id,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY pred DESC, item_id) AS rn
-        FROM p
-    ),
-    recs AS (SELECT user_id, item_id FROM ranked WHERE rn <= 3),
-    pop AS (
+    f"""{_PRED_TOP3_SQL}    pop AS (
         SELECT item_id
         FROM ({_M_SQL}) GROUP BY item_id
         ORDER BY count(*) DESC, item_id LIMIT 10
@@ -2409,26 +2397,8 @@ def r_epsilon_slate(spark, sf_dir):
 
 @register(
     "r_map_at_k",
-    """
-    WITH base AS (
-        SELECT o_custkey AS user_id, l_partkey AS item_id, l_quantity AS qty,
-               l_orderkey AS ok
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ),
-    train AS (SELECT user_id, item_id, sum(qty) AS rating FROM base
-              WHERE ok % 5 <> 0 GROUP BY 1, 2),
-    hold AS (SELECT DISTINCT user_id, item_id FROM base WHERE ok % 5 = 0),
-    pop AS (SELECT item_id, sum(rating) AS pop FROM train GROUP BY 1),
-    top20 AS (SELECT item_id, pop FROM (
-                  SELECT *, row_number() OVER (ORDER BY pop DESC, item_id) AS rn
-                  FROM pop) WHERE rn <= 20),
-    users AS (SELECT DISTINCT user_id FROM hold),
-    cand AS (SELECT u.user_id, t.item_id, t.pop
-             FROM users u CROSS JOIN top20 t
-             WHERE NOT EXISTS (SELECT 1 FROM train tr
-                               WHERE tr.user_id = u.user_id
-                                 AND tr.item_id = t.item_id)),
-    recs AS (SELECT user_id, item_id, rn FROM (
+    _RANK_POOL_SQL
+    + """    recs AS (SELECT user_id, item_id, rn FROM (
                  SELECT *, CAST(row_number() OVER (PARTITION BY user_id
                                               ORDER BY pop DESC, item_id)
                            AS BIGINT) AS rn
@@ -2800,18 +2770,38 @@ def r_ease(spark, sf_dir):
     )
 
 
-@register(
-    "r_markov_next_item",
-    f"""
-    WITH m AS ({_M_SQL}),
-    seq AS (
+# Each (user, item)'s first purchase date and order key: the sequence
+# r_markov_next_item and r_exposure_gini order by (_first_purchases'
+# oracle CTE).
+_FIRST_PURCHASE_SQL = """seq AS (
         SELECT o.o_custkey AS user_id, l.l_partkey AS item_id,
                min(o.o_orderdate) AS first_ts,
                min(o.o_orderkey) AS first_ok
         FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
         GROUP BY 1, 2
     ),
-    ordered AS (
+"""
+
+
+def _first_purchases(orders, li):
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .groupBy(
+            F.col("o_custkey").alias("user_id"),
+            F.col("l_partkey").alias("item_id"),
+        )
+        .agg(
+            F.min("o_orderdate").alias("first_ts"),
+            F.min("o_orderkey").alias("first_ok"),
+        )
+    )
+
+
+@register(
+    "r_markov_next_item",
+    f"""
+    WITH m AS ({_M_SQL}),
+    {_FIRST_PURCHASE_SQL}    ordered AS (
         SELECT user_id, item_id,
                lead(item_id) OVER (PARTITION BY user_id
                                    ORDER BY first_ts, first_ok, item_id)
@@ -2853,18 +2843,7 @@ def r_markov_next_item(spark, sf_dir):
     aggregates map-side; the serving table is |items|×3. Output
     columns and ranking snap per the repo convention.
     """
-    orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    seq = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("user_id"),
-            F.col("l_partkey").alias("item_id"),
-        )
-        .agg(
-            F.min("o_orderdate").alias("first_ts"),
-            F.min("o_orderkey").alias("first_ok"),
-        )
-    )
+    seq = _first_purchases(*tables(spark, sf_dir, "orders", "lineitem"))
     w = Window.partitionBy("user_id").orderBy("first_ts", "first_ok", "item_id")
     ordered = seq.select(
         "user_id", "item_id", F.lead("item_id").over(w).alias("next_item")
@@ -3360,17 +3339,7 @@ def r_covisitation_capped(spark, sf_dir):
     full-session sort materialization), then the per-session pair join
     and count rollup.
     """
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id",
-        F.get_json_object("props", "$.k").cast("long").alias("item"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    brk = F.when(gap.isNull() | (gap > 86400000000), 1).otherwise(0)
-    s = ev.withColumn(
-        "sid", F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    si = s.select("user_id", "sid", "item").distinct()
+    si = _session_items(spark, sf_dir, 86400000000)
     wr = Window.partitionBy("user_id", "sid").orderBy(
         F.md5(F.col("item").cast("string")), "item"
     )
@@ -3379,28 +3348,7 @@ def r_covisitation_capped(spark, sf_dir):
         .where(F.col("rk") <= 32)
         .select("user_id", "sid", "item")
     )
-    a = capped.select(
-        F.col("user_id").alias("ua"),
-        F.col("sid").alias("sa"),
-        F.col("item").alias("item_a"),
-    )
-    b = capped.select(
-        F.col("user_id").alias("ub"),
-        F.col("sid").alias("sb"),
-        F.col("item").alias("item_b"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("ua") == F.col("ub"))
-        & (F.col("sa") == F.col("sb"))
-        & (F.col("item_a") < F.col("item_b")),
-    )
-    return (
-        pairs.groupBy("item_a", "item_b")
-        .agg(F.count("*").cast("long").alias("n_sessions"))
-        .orderBy(F.col("n_sessions").desc(), "item_a", "item_b")
-        .limit(50)
-    )
+    return _top_session_pairs(capped)
 
 
 @register(
@@ -3596,8 +3544,8 @@ def r_knn_k_sweep(spark, sf_dir):
         "rating", money2(F.col("rating"))
     )
     split = (F.col("user_id") * 7 + F.col("item_id")) % 5
-    train = m.where(split != 0).cache()
-    hold = m.where(split == 0).cache()
+    train = m.where(split != 0)
+    hold = m.where(split == 0)
     n = train.groupBy("item_id").agg(
         F.sqrt(F.sum(F.col("rating") * F.col("rating"))).alias("nrm")
     )
@@ -3801,6 +3749,8 @@ def r_swing_capped(spark, sf_dir):
     b = capped.select(F.col("user_id").alias("ub"), "item_id")
     # up feeds THREE consumers (the overlap counts and both sides of the
     # item-pair join); cache it so the capped pair join runs once, not 3x.
+    # Kept, measured at sf0.1 (5 alternating pairs, 4 cores, cache
+    # cleared per run): median 2.02 -> 3.19 s without it, IQR 0.65 s.
     up = (
         a.join(b, "item_id")
         .where(F.col("ua") < F.col("ub"))
@@ -3850,9 +3800,8 @@ def r_swing_capped(spark, sf_dir):
     )
 
 
-@register(
-    "r_covisit_time_decay",
-    """
+# _day_items_capped's oracle CTEs.
+_DAY_ITEMS_SQL = """
     WITH ev AS (
         SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS d,
                CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
@@ -3869,7 +3818,60 @@ def r_swing_capped(spark, sf_dir):
             FROM ev
         ) WHERE rk <= 16
     ),
-    pairs AS (
+"""
+
+
+def _day_items_capped(spark, sf_dir):
+    """Distinct (user_id, d, item) event rows, at most 16 items per
+    user-day, chosen by md5(user_id:item) rank: the crawler cap of
+    r_covisit_time_decay and r_session_knn_capped (oracle:
+    _DAY_ITEMS_SQL).
+
+    The events scan is widened before the JSON extraction and distinct
+    (r18, guide §2.5): the single-row-group fixture scans as ONE task,
+    serializing the per-row get_json_object parse. No-op when the scan
+    is wide. item IS NOT NULL before the cap (round-12 advice item 2): a
+    NULL $.k would never form pairs but WOULD occupy one of the 16 md5-
+    ranked cap slots, and NULL md5 sorts NULLS FIRST in Spark vs NULLS
+    LAST in DuckDB, so a >16-item user-day containing a NULL would cap
+    DIFFERENT real items in the two engines.
+    """
+    ev = widen_narrow_scan(spark, load_table(spark, sf_dir, "events"))
+    ui = (
+        ev.select(
+            "user_id",
+            F.to_date(F.date_trunc("day", "ts")).alias("d"),
+            F.get_json_object("props", "$.k").cast("long").alias("item"),
+        )
+        .where(F.col("item").isNotNull())
+        .distinct()
+    )
+    wcap = Window.partitionBy("user_id", "d").orderBy(
+        F.md5(
+            F.concat(
+                F.col("user_id").cast("string"),
+                F.lit(":"),
+                F.col("item").cast("string"),
+            )
+        )
+    )
+    # Both keys read the capped frame more than once (the pair
+    # self-join's two sides; six consumers in the session kNN). Kept,
+    # measured at sf0.1 (5 alternating pairs, 4 cores, cache cleared per
+    # run): r_covisit_time_decay median 3.35 -> 4.21 s without it, IQR
+    # 0.22 s; r_session_knn_capped 9.62 -> 11.65 s, IQR 0.50 s.
+    return (
+        ui.withColumn("rk", F.row_number().over(wcap))
+        .where(F.col("rk") <= 16)
+        .select("user_id", "d", "item")
+        .cache()
+    )
+
+
+@register(
+    "r_covisit_time_decay",
+    _DAY_ITEMS_SQL
+    + """    pairs AS (
         SELECT a.item AS item_a, b.item AS item_b,
                CAST(b.d - a.d AS INTEGER) AS dd
         FROM capped a JOIN capped b
@@ -3917,43 +3919,7 @@ def r_covisit_time_decay(spark, sf_dir):
     range — never a global item join; weight sums partial-aggregate
     map-side; top-50 is TakeOrderedAndProject.
     """
-    # Widen the unsplittable events scan before the JSON extraction +
-    # distinct (r18, guide §2.5): the single-row-group fixture scans as
-    # ONE task, serializing the per-row get_json_object parse that feeds
-    # the cached capped-session frame. No-op when the scan is wide.
-    ev = widen_narrow_scan(spark, load_table(spark, sf_dir, "events"))
-    # item IS NOT NULL before the cap (round-12 advice item 2): a NULL
-    # $.k would never form pairs but WOULD occupy one of the 16 md5-
-    # ranked cap slots — and NULL md5 sorts NULLS FIRST in Spark vs
-    # NULLS LAST in DuckDB, so a >16-item user-day containing a NULL
-    # would cap DIFFERENT real items in the two engines.
-    ui = (
-        ev.select(
-            "user_id",
-            F.to_date(F.date_trunc("day", "ts")).alias("d"),
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .where(F.col("item").isNotNull())
-        .distinct()
-    )
-    wcap = Window.partitionBy("user_id", "d").orderBy(
-        F.md5(
-            F.concat(
-                F.col("user_id").cast("string"),
-                F.lit(":"),
-                F.col("item").cast("string"),
-            )
-        )
-    )
-    # Both sides of the user-keyed pair self-join replay the events
-    # scan + distinct + cap window when uncached; the frame is bounded
-    # at <=16 rows per session, so cache it once for the two sides.
-    capped = (
-        ui.withColumn("rk", F.row_number().over(wcap))
-        .where(F.col("rk") <= 16)
-        .select("user_id", "d", "item")
-        .cache()
-    )
+    capped = _day_items_capped(spark, sf_dir)
     a = capped.select(
         F.col("user_id").alias("ua"), F.col("d").alias("da"),
         F.col("item").alias("item_a"),
@@ -4222,24 +4188,8 @@ def r_temporal_split_rmse(spark, sf_dir):
 
 @register(
     "r_session_knn_capped",
-    """
-    WITH ev AS (
-        SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS d,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-    ),
-    capped AS (
-        SELECT user_id, d, item FROM (
-            SELECT user_id, d, item,
-                   row_number() OVER (
-                       PARTITION BY user_id, d
-                       ORDER BY md5(CAST(user_id AS VARCHAR) || ':'
-                                    || CAST(item AS VARCHAR))) AS rk
-            FROM ev
-        ) WHERE rk <= 16
-    ),
-    ssize AS (
+    _DAY_ITEMS_SQL
+    + """    ssize AS (
         SELECT user_id, d, count(*) AS sz FROM capped GROUP BY user_id, d
     ),
     idf AS (SELECT item, count(*) AS df FROM capped GROUP BY item),
@@ -4325,40 +4275,7 @@ def r_session_knn_capped(spark, sf_dir):
     pair work bounded by df_cap^2 per item; every later stage runs on
     the 20-target frame. Never a session x session cross join.
     """
-    # Widen the unsplittable events scan before the JSON extraction +
-    # distinct (r18, guide §2.5) — same rationale as r_covisit_time_decay:
-    # the 1-row-group fixture scans as ONE task and the cached capped
-    # frame otherwise pins all six consumers to that width.
-    ev = widen_narrow_scan(spark, load_table(spark, sf_dir, "events"))
-    ui = (
-        ev.select(
-            "user_id",
-            F.to_date(F.date_trunc("day", "ts")).alias("d"),
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .where(F.col("item").isNotNull())
-        .distinct()
-    )
-    wcap = Window.partitionBy("user_id", "d").orderBy(
-        F.md5(
-            F.concat(
-                F.col("user_id").cast("string"),
-                F.lit(":"),
-                F.col("item").cast("string"),
-            )
-        )
-    )
-    # Six consumers derive from the capped session frame (ssize twice,
-    # idf, posting's two join sides, the target slate): uncached, each
-    # replays the events scan + distinct + cap window — measured 7
-    # repeated scan subtrees / 74 Exchanges in the plan. Bounded at
-    # <=16 rows per session, so cache it once.
-    capped = (
-        ui.withColumn("rk", F.row_number().over(wcap))
-        .where(F.col("rk") <= 16)
-        .select("user_id", "d", "item")
-        .cache()
-    )
+    capped = _day_items_capped(spark, sf_dir)
     ssize = capped.groupBy("user_id", "d").agg(F.count("*").alias("sz"))
     idf = capped.groupBy("item").agg(F.count("*").alias("df"))
     istats = idf.agg(
@@ -4615,15 +4532,8 @@ def r_negative_sampling(spark, sf_dir):
 
 @register(
     "r_exposure_gini",
-    """
-    WITH seq AS (
-        SELECT o.o_custkey AS user_id, l.l_partkey AS item_id,
-               min(o.o_orderdate) AS first_ts,
-               min(o.o_orderkey) AS first_ok
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        GROUP BY 1, 2
-    ),
-    ordered AS (
+    f"""
+    WITH {_FIRST_PURCHASE_SQL}    ordered AS (
         SELECT user_id, item_id,
                lead(item_id) OVER (PARTITION BY user_id
                                    ORDER BY first_ts, first_ok, item_id)
@@ -4699,17 +4609,7 @@ def r_exposure_gini(spark, sf_dir):
     join; everything after runs on the catalog-bounded exposure frame.
     """
     orders, li = tables(spark, sf_dir, "orders", "lineitem")
-    seq = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            F.col("o_custkey").alias("user_id"),
-            F.col("l_partkey").alias("item_id"),
-        )
-        .agg(
-            F.min("o_orderdate").alias("first_ts"),
-            F.min("o_orderkey").alias("first_ok"),
-        )
-    )
+    seq = _first_purchases(orders, li)
     wseq = Window.partitionBy("user_id").orderBy(
         "first_ts", "first_ok", "item_id"
     )

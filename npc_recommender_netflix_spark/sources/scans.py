@@ -2218,13 +2218,10 @@ def s_bloom_skip_index(spark, sf_dir):
     volume the index deletes.
     """
     orders = load_table(spark, sf_dir, "orders")
-    # The per-file distinct-key frame feeds three consumers (bloom bit
-    # build, zonemap min/max, ground-truth probe join); uncached each
-    # replays the orders scan + distinct. Cache the one shared pass.
     fk = orders.select(
         (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("fid"),
         F.col("o_custkey").alias("k"),
-    ).distinct().cache()
+    ).distinct()
     seeds = spark.range(1, 3).select(F.col("id").alias("seed"))
     ms = spark.range(1).select(
         F.explode(F.array(F.lit(256), F.lit(1024), F.lit(4096))).alias("m")

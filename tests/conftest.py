@@ -1,6 +1,5 @@
 import os
 import sys
-import uuid
 
 import duckdb
 import pytest
@@ -29,19 +28,15 @@ def forget(*names):
 
 
 def jobs_fired(spark, fn):
-    """Run ``fn()`` under a fresh job group; return ``(fn(), job ids it
-    fired)``, read from the status tracker once the listener bus drains."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    """Run ``fn()``; return ``(fn(), ids of the jobs submitted while it
+    ran)``. Every job counts, whatever thread or job group submits it: a
+    streaming query runs its micro-batches on its own thread. Job ids are
+    handed out in submission order, so the ids fired are the range the
+    scheduler's next id moved over."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    first = sched.nextJobId()
+    out = fn()
+    return out, list(range(first, sched.nextJobId()))
 
 
 @pytest.fixture(scope="session")

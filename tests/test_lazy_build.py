@@ -120,3 +120,15 @@ def test_first_build_stays_in_job_budget(spark, key):
         f"budget {budget}"
     )
     assert df.columns
+
+
+def test_streaming_build_jobs_are_counted(spark):
+    # st_session runs its whole query at build, on the stream's own thread
+    # and job group; jobs_fired must see those micro-batch jobs. The first
+    # build also infers the input schema on the caller's thread, so count
+    # the second.
+    build = registry.QUERIES["st_session"]
+    build(spark, SF_SMALL)
+    df, jobs = jobs_fired(spark, lambda: build(spark, SF_SMALL))
+    assert jobs, "st_session's build counted no jobs"
+    assert df.columns

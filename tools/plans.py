@@ -295,6 +295,9 @@ PARTITIONLESS_WINDOW_WHITELIST: dict[str, str] = {
     "day-boundary carry-in",
     "q_skyline_orders": "by-contract: Pareto frontier sweep over the "
     "dominance-sorted candidates (120->1385 after pre-pruning)",
+    "a_sprt": "by-contract: the sequential test IS the running purchase "
+    "count over the global (ts, event_id) order (1000->10000 event rows); "
+    "scale path = range-partitioned prefix sum with partition offsets",
 }
 
 
