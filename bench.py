@@ -17,6 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from npc_recommender_netflix_spark import registry
+from npc_recommender_netflix_spark.metrics import drain_listeners, shuffle_written
 from npc_recommender_netflix_spark.session import build_session
 
 registry.load_all()
@@ -224,43 +225,13 @@ _SHUFFLE_BASELINE = os.path.join(
 )
 
 
-def _shuffle_written(spark):
-    """Total shuffle-write bytes across all completed stages (monotone)."""
-    try:
-        jvm = spark._jvm
-        gw = spark.sparkContext._gateway
-        store = spark.sparkContext._jsc.sc().statusStore()
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),  # no status filter: all stages
-            False, False,
-            gw.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        )
-        total = 0
-        it = stages.iterator()
-        while it.hasNext():
-            total += it.next().shuffleWriteBytes()
-        return total
-    except Exception:
-        return None  # metrics are best-effort; never fail the bench
-
-
-def _drain_listeners(spark) -> None:
-    """Stage metrics reach AppStatusStore via the async listener bus; drain
-    it so the post-query reading includes this query's final stages."""
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    except Exception:
-        time.sleep(0.2)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
     t0 = time.time()
     # retainedStages default (1000) is below the ~1500+ stages a 73-key
-    # suite submits, so the AppStatusStore snapshot that _shuffle_written
+    # suite submits, so the AppStatusStore snapshot that shuffle_written
     # diffs could evict stages counted in `before` mid-key and corrupt the
     # delta even when it stays positive (round-11 advice). Retain enough
     # stages that nothing is evicted for the life of the bench session.
@@ -283,13 +254,13 @@ def main() -> None:
     times: dict[str, float] = {}
     shuffle_bytes: dict[str, int] = {}
     for key in HEADLINE:
-        before = _shuffle_written(spark)
+        before = shuffle_written(spark)
         t0 = time.time()
         registry.QUERIES[key](spark, sf_dir).count()
         times[key] = round(time.time() - t0, 3)
         spark.catalog.clearCache()  # keys that cache() must not leak storage into the next key's timing
-        _drain_listeners(spark)
-        after = _shuffle_written(spark)
+        drain_listeners(spark)
+        after = shuffle_written(spark)
         if before is not None and after is not None and after >= before:
             # after < before happens when the AppStatusStore's bounded
             # stage retention evicts stages counted in `before` mid-run —

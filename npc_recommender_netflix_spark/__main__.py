@@ -9,7 +9,7 @@
 `run` prints the first N rows (default 20) and the row count; `explain`
 prints the formatted physical plan (the artifact every scale review
 reads); `profile` executes the key and prints wall time, shuffle-write
-bytes (the bench.py AppStatusStore probe), output rows, and the
+bytes (the `metrics` AppStatusStore probe), output rows, and the
 executed-plan shape summary — the one-command version of the
 explain-until-it's-the-plan-you-want loop; `oracle` prints the
 registered DuckDB SQL so users can verify a result against an
@@ -23,6 +23,7 @@ import sys
 import time
 
 from . import registry
+from .metrics import drain_listeners, shape_summary, shuffle_written
 from .session import DEFAULT_SF_DIR, build_session
 
 registry.load_all()
@@ -72,21 +73,12 @@ def main(argv: list[str] | None = None) -> int:
         df.explain("formatted")
         return 0
     if args.cmd == "profile":
-        import os
-        import sys as _sys
-
-        _sys.path.insert(
-            0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        from bench import _drain_listeners, _shuffle_written  # noqa: PLC0415
-        from tools.plans import shape_summary  # noqa: PLC0415
-
-        before = _shuffle_written(spark)
+        before = shuffle_written(spark)
         t0 = time.time()
         n = df.count()
         wall = time.time() - t0
-        _drain_listeners(spark)
-        after = _shuffle_written(spark)
+        drain_listeners(spark)
+        after = shuffle_written(spark)
         sb = (
             after - before
             if before is not None and after is not None and after >= before

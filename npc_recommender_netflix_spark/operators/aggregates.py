@@ -19,17 +19,17 @@ each owner, and repeated oracle CTEs are built from it byte for byte):
   `_KD_DEV_SQL` (a_ljung_box, a_hurst_exponent, a_ar2_yule_walker);
 - per-event-type cent moments: `_type_moments` / `_TYPE_MOMENTS_SQL`
   (a_anova_f, a_power_sample_size, a_tukey_hsd, a_welch_anova);
-- day x event-type mid-rank sums: `_type_daily` -> `_mid_rank_sums` ->
-  `_dunn_pairs`, with `_tie_census` / `_MID_RANKS_SQL`, `_RANK_SUMS_SQL`,
-  `_TIE_SQL` (a_kruskal_wallis, a_dunn_test, a_by_fdr_pairs; the tie
+- day x event-type mid-rank sums: `_mid_rank_sums` -> `_dunn_pairs`,
+  with `_tie_census` / `_MID_RANKS_SQL`, `_RANK_SUMS_SQL`, `_TIE_SQL`
+  (a_kruskal_wallis, a_dunn_test, a_by_fdr_pairs; the tie
   census also in a_wilcoxon_signed_rank);
 - the R/N returnflag quantity census: `_rn_census` / `_RN_CENSUS_SQL`
   (a_cliffs_delta, a_cvm_twosample, a_ansari_bradley, a_brunner_munzel);
 - per-nation order-price moments: `_by_nation`, `_nation_moments` /
   `_NATION_MOMENTS_SQL` (a_meta_fixed_effect, a_james_stein,
   a_neyman_allocation);
-- zero-filled weekday x priority cells: `_prio_cells0` -> `_zero_filled`
-  / `_PRIO_CELLS_SQL` (a_page_trend, a_quade_test);
+- zero-filled weekday x priority cells: `_zero_filled` /
+  `_PRIO_CELLS_SQL` (a_page_trend, a_quade_test);
 - purchase/view moments and daily purchase/click pairs:
   `_purchase_view_moments` / `_PV_MOMENTS_SQL` (a_cohens_d,
   a_ttest_welch) and `_purchase_click_days` / `_PC_DAILY_SQL`
@@ -5443,9 +5443,13 @@ def _tie_census(tt):
     )
 
 
-def _type_daily(spark, sf_dir):
-    """Exact daily cents per (day, event type): (day, event_type, x)."""
-    return (
+def _mid_rank_sums(spark, sf_dir):
+    """(sums, tie) over the exact daily cents x per (day, event type),
+    pooled across event types (the `_MID_RANKS_SQL` + `_RANK_SUMS_SQL` +
+    `_TIE_SQL` twin): doubled midranks mr2 = 2·rank + t − 1 stay
+    integral, sums = (event_type, r2 = Σmr2, nj), and tie is the census
+    of tied x values."""
+    daily = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.to_date("ts").alias("day"), "event_type")
         .agg(
@@ -5454,13 +5458,6 @@ def _type_daily(spark, sf_dir):
             .alias("x")
         )
     )
-
-
-def _mid_rank_sums(daily):
-    """(sums, tie) over `_type_daily` cells pooled across event types (the
-    `_MID_RANKS_SQL` + `_RANK_SUMS_SQL` + `_TIE_SQL` twin): doubled
-    midranks mr2 = 2·rank + t − 1 stay integral, sums = (event_type,
-    r2 = Σmr2, nj), and tie is the census of tied x values."""
     tt = daily.groupBy("x").agg(F.count("*").cast("long").alias("t"))
     ranked = daily.join(tt, "x").select(
         "event_type",
@@ -5520,7 +5517,7 @@ def a_kruskal_wallis(spark, sf_dir):
     reduction-order-free.  The data-scale pass is the daily rollup
     (map-side combined); ranking runs on the bounded day×type axis.
     """
-    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir))
+    sums, tie = _mid_rank_sums(spark, sf_dir)
     c = sums.agg(
         F.sum("nj").cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
@@ -6449,7 +6446,7 @@ def a_dunn_test(spark, sf_dir):
     5-row rank-sum table; the only data-scale pass is the daily
     rollup.
     """
-    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir))
+    sums, tie = _mid_rank_sums(spark, sf_dir)
     rk = _dunn_pairs(
         sums,
         tie,
@@ -8804,13 +8801,14 @@ def a_period_detect(spark, sf_dir):
     c AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(diff) AS BIGINT) AS s,
-               CAST(sum(diff * diff) AS BIGINT) AS q
+               sum(CAST(diff AS HUGEINT) * diff) AS q
         FROM pairs
     ),
     band AS (
         SELECT n,
                CAST(s AS DOUBLE) / n AS bias,
-               sqrt((q - CAST(s AS DOUBLE) * s / n) / (n - 1.0)) AS sd
+               sqrt((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n)
+                    / (n - 1.0)) AS sd
         FROM c
     )
     SELECT b.n AS n_orders,
@@ -8839,9 +8837,10 @@ def a_bland_altman(spark, sf_dir):
     instruments agree', which is exactly what dual-sourced warehouse
     columns are.
 
-    Exact cent differences from one join, exact BIGINT moments, two
+    Exact cent differences from one join, exact integer moments, two
     float associations and the shared 1.959964; the band breach count
-    re-scans the bounded pair table against the computed limits.
+    re-scans the bounded pair table against the computed limits. The
+    squared-difference sum is DECIMAL(38,0): at sf0.1 it passes 2^63.
     """
     orders, li = tables(spark, sf_dir, "orders", "lineitem")
     line_sums = li.groupBy("l_orderkey").agg(
@@ -8867,12 +8866,15 @@ def a_bland_altman(spark, sf_dir):
     c = pairs.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("diff").cast("long").alias("s"),
-        F.sum(F.col("diff") * F.col("diff")).cast("long").alias("q"),
+        F.sum(F.col("diff").cast("decimal(38,0)") * F.col("diff")).alias("q"),
     )
     n = F.col("n")
     bias = F.col("s").cast("double") / n
     sd = F.sqrt(
-        (F.col("q") - F.col("s").cast("double") * F.col("s") / n)
+        (
+            F.col("q").cast("double")
+            - F.col("s").cast("double") * F.col("s") / n
+        )
         / (n - 1.0)
     )
     band = c.select(
@@ -14449,10 +14451,12 @@ _PRIO_CELLS_SQL = """cells0 AS (
     )"""
 
 
-def _prio_cells0(spark, sf_dir):
-    """Exact order cents per (weekday block, priority treatment):
-    (blk, trt, cents), at most 7 x 5 cells."""
-    return (
+def _zero_filled(spark, sf_dir):
+    """(blks, cells): the distinct weekday blocks, and the exact order
+    cents per (weekday block, priority treatment) on the full block x
+    treatment scaffold, at most 7 x 5 cells, with quiet cells at 0 cents
+    (the `_PRIO_CELLS_SQL` twin)."""
+    cells0 = (
         load_table(spark, sf_dir, "orders")
         .groupBy(
             F.dayofweek("o_orderdate").cast("long").alias("blk"),
@@ -14464,12 +14468,6 @@ def _prio_cells0(spark, sf_dir):
             .alias("cents")
         )
     )
-
-
-def _zero_filled(cells0):
-    """(blks, cells): the distinct blocks of `_prio_cells0`, and its cells
-    on the full block x treatment scaffold with quiet cells at 0 cents
-    (the `_PRIO_CELLS_SQL` twin)."""
     blks = cells0.select("blk").distinct()
     trts = cells0.select("trt").distinct()
     cells = (
@@ -14530,7 +14528,7 @@ def a_page_trend(spark, sf_dir):
     Scale: one map-side-combinable cents groupBy; ranking runs on the
     35-cell frame.
     """
-    blks, cells = _zero_filled(_prio_cells0(spark, sf_dir))
+    blks, cells = _zero_filled(spark, sf_dir)
     wr = Window.partitionBy("blk").orderBy("cents", "trt")
     ranked = cells.select(
         "trt", F.row_number().over(wr).cast("long").alias("r")
@@ -15020,7 +15018,7 @@ def a_by_fdr_pairs(spark, sf_dir):
     a_kruskal_wallis frame); the 10-pair step-ups are bounded-frame
     arithmetic.
     """
-    sums, tie = _mid_rank_sums(_type_daily(spark, sf_dir))
+    sums, tie = _mid_rank_sums(spark, sf_dir)
     rk = _dunn_pairs(sums, tie)
     thr = rk.select(
         "*",
@@ -15264,7 +15262,7 @@ def a_quade_test(spark, sf_dir):
     Scale: one map-side cents groupBy; everything else is 35-cell
     arithmetic.
     """
-    _, cells = _zero_filled(_prio_cells0(spark, sf_dir))
+    _, cells = _zero_filled(spark, sf_dir)
     wr = Window.partitionBy("blk").orderBy("cents", "trt")
     ranked = cells.select(
         "blk", "trt", F.row_number().over(wr).cast("long").alias("r")

@@ -11,6 +11,10 @@ Design notes (100 TB scale):
   with integer division (``ts DIV 1000`` — float division would round-trip
   through double and can flip a microsecond at ~1.7e18 ns); a native
   timestamp passes through untouched.
+- Scratch state has one owner: ``scratch_dir`` hands out fresh paths
+  under one per-process root that is removed at interpreter exit, the
+  way a MapReduce job's intermediate directories belong to the framework
+  rather than to each job.
 - Session defaults favor a local[32] dev box; on a cluster the same code
   runs with whatever master/conf the deployment provides. Every config we
   set is also settable at runtime on an externally provided session, which
@@ -19,8 +23,12 @@ Design notes (100 TB scale):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import stat
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -200,24 +208,29 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def events_ts(df: DataFrame) -> DataFrame:
+    """The events ns-timestamp recipe, for batch and streaming reads alike.
+
+    Dtype-adaptive: parquet fixtures have shipped ts as both
+    TIMESTAMP(NANOS) (read as long under nanosAsLong) and native
+    timestamp[us]. A long is rebuilt to a microsecond timestamp; a native
+    timestamp passes through. Session TZ is UTC, so NTZ->LTZ is a
+    value-identical reinterpretation; downstream ops (unix_micros, window)
+    want TIMESTAMP.
+    """
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table; applies the events ns-timestamp recipe."""
     prepare(spark)
     df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # Dtype-adaptive: parquet fixtures have shipped ts as both
-        # TIMESTAMP(NANOS) (read as long under nanosAsLong) and native
-        # timestamp[us]. Rebuild a microsecond timestamp only when the scan
-        # actually surfaces a long; a native timestamp passes through.
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif ts_type == "timestamp_ntz":
-            # Session TZ is UTC, so NTZ->LTZ is a value-identical
-            # reinterpretation; downstream ops (unix_micros, window) want
-            # TIMESTAMP.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return events_ts(df) if name == "events" else df
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
@@ -228,6 +241,25 @@ def views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     """Register each table as temp view ``v_<name>`` for SQL-text keys."""
     for n in names:
         load_table(spark, sf_dir, n).createOrReplaceTempView(f"v_{n}")
+
+
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh scratch path, not yet created, under one per-process root.
+
+    Sinks, checkpoints and stream feeds write here; the root is removed at
+    interpreter exit, so no key leaves a directory behind. The path does
+    not exist yet because default-mode writes fail on an existing path;
+    a caller that needs the directory itself creates it. Each call gets
+    a new unique name, so re-running a key is independent and idempotent.
+    """
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="npc_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return f"{_SCRATCH_ROOT}/{prefix}{uuid.uuid4().hex[:8]}"
 
 
 # The one cross-key memo of cached frames, keyed (applicationId, sf_dir,

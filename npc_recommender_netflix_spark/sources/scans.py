@@ -7,41 +7,21 @@ Scale notes:
   the difference between reading 2 columns' row groups and reading the table.
 - `s_partitioned_write` demonstrates hive-style partitioning, the layout
   that enables partition pruning for downstream readers.
-- Round-trips write to a session-lifetime scratch root (cleaned at exit)
-  and return the LAZY read-back — no collect() in any query path; sinks at
-  scale would target object storage with the same API.
+- Round-trips write to fresh `session.scratch_dir` paths (one per-process
+  root, removed at exit) and return the LAZY read-back — no collect() in
+  any query path; sinks at scale would target object storage with the
+  same API.
 """
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import f6, load_table, money2, tables
-
-_TMP_ROOT: str | None = None
-
-
-def _scratch(prefix: str) -> str:
-    """Session-lifetime scratch path (cleaned at interpreter exit).
-
-    Roundtrip sinks write here and return LAZY read-back DataFrames — no
-    driver materialization in any query path (round 1 collect()ed each
-    read-back so it could rmtree eagerly, which the judge flagged: it is a
-    full-table collect in a declared query). Each call gets a fresh unique
-    subdir, so re-running a key is independent and idempotent.
-    """
-    global _TMP_ROOT
-    if _TMP_ROOT is None:
-        _TMP_ROOT = tempfile.mkdtemp(prefix="npc_scratch_")
-        atexit.register(shutil.rmtree, _TMP_ROOT, True)
-    return f"{_TMP_ROOT}/{prefix}{uuid.uuid4().hex[:8]}"
+from ..session import f6, load_table, money2, scratch_dir, tables
 
 
 @register("s_parquet_scan", "SELECT r_regionkey, r_name FROM region")
@@ -80,7 +60,7 @@ def s_pushdown_scan(spark, sf_dir):
 )
 def s_csv_roundtrip(spark, sf_dir):
     cust = load_table(spark, sf_dir, "customer")
-    path = _scratch("csv_")
+    path = scratch_dir("csv_")
     cust.write.mode("overwrite").option("header", "true").csv(path)
     schema = "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING"
     back = spark.read.schema(schema).option("header", "true").csv(path)
@@ -99,7 +79,7 @@ def s_csv_roundtrip(spark, sf_dir):
 )
 def s_json_roundtrip(spark, sf_dir):
     nation = load_table(spark, sf_dir, "nation")
-    path = _scratch("json_")
+    path = scratch_dir("json_")
     nation.write.mode("overwrite").json(path)
     return spark.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(path)
 
@@ -110,7 +90,7 @@ def s_json_roundtrip(spark, sf_dir):
 )
 def s_partitioned_write(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
-    path = _scratch("part_")
+    path = scratch_dir("part_")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(F.count("*").alias("cnt"))
@@ -131,7 +111,7 @@ def s_orc_roundtrip(spark, sf_dir):
     """ORC sink+source (columnar alternative to parquet; same DSv2 path).
     DuckDB cannot read ORC, so the oracle is the roundtrip identity."""
     supp = load_table(spark, sf_dir, "supplier")
-    path = _scratch("orc_")
+    path = scratch_dir("orc_")
     supp.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.select(
@@ -147,7 +127,7 @@ def s_text_source(spark, sf_dir):
     """Plain-text sink+source (one line per doc; corpus texts contain no
     newlines). The reference's native format is exactly line-oriented text."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch("text_")
+    path = scratch_dir("text_")
     docs.select(F.col("text").alias("value")).write.mode("overwrite").text(path)
     return spark.read.text(path)
 
@@ -163,7 +143,7 @@ def s_save_as_table(spark, sf_dir):
     external table lives for the session (in-memory catalog); its files sit
     under the scratch root and are cleaned at exit."""
     nation = load_table(spark, sf_dir, "nation")
-    path = _scratch("tbl_")
+    path = scratch_dir("tbl_")
     name = "npc_nation_" + uuid.uuid4().hex[:8]
     nation.write.mode("overwrite").option("path", path).saveAsTable(name)
     return spark.table(name)
@@ -180,7 +160,7 @@ def s_bucketed_table(spark, sf_dir):
     tests/test_plans.py (no Exchange before the aggregate). This is the
     persisted-layout answer to repeated 100 TB joins on one key."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _scratch("bkt_")
+    path = scratch_dir("bkt_")
     name = "npc_orders_bkt_" + uuid.uuid4().hex[:8]
     (
         orders.write.mode("overwrite")
@@ -221,7 +201,7 @@ def j_bucketed_colocated(spark, sf_dir):
     (
         orders.select("o_orderkey", "o_orderpriority")
         .write.mode("overwrite")
-        .option("path", _scratch("bco_"))
+        .option("path", scratch_dir("bco_"))
         .bucketBy(16, "o_orderkey")
         .sortBy("o_orderkey")
         .saveAsTable(t_orders)
@@ -229,7 +209,7 @@ def j_bucketed_colocated(spark, sf_dir):
     (
         li.select("l_orderkey", "l_quantity")
         .write.mode("overwrite")
-        .option("path", _scratch("bcl_"))
+        .option("path", scratch_dir("bcl_"))
         .bucketBy(16, "l_orderkey")
         .sortBy("l_orderkey")
         .saveAsTable(t_li)
@@ -267,7 +247,7 @@ def j_dpp_partitioned(spark, sf_dir):
     unpartitioned — layout never changes results.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    path = _scratch("dpp_")
+    path = scratch_dir("dpp_")
     (
         li.select("l_orderkey", "l_extendedprice", "l_returnflag")
         .write.mode("overwrite")
@@ -336,7 +316,7 @@ def s_schema_merge(spark, sf_dir):
     the equivalent NULL-padded UNION ALL.
     """
     orders = load_table(spark, sf_dir, "orders")
-    root = _scratch("smerge_")
+    root = scratch_dir("smerge_")
     (
         orders.where(F.col("o_orderkey") % 2 == 0)
         .select("o_orderkey", (F.round("o_totalprice", 2) + 0.0).alias("o_totalprice"),
@@ -378,7 +358,7 @@ def s_csv_malformed(spark, sf_dir):
     column) is exactly the cluster configuration.
     """
     cust = load_table(spark, sf_dir, "customer")
-    path = _scratch("csvbad_")
+    path = scratch_dir("csvbad_")
     line = F.when(
         F.col("c_custkey") % 7 == 0,
         F.concat_ws(
@@ -444,9 +424,9 @@ def s_compaction(spark, sf_dir):
         return sum(1 for f in os.listdir(path) if f.startswith("part-"))
 
     docs = load_table(spark, sf_dir, "documents")
-    frag = _scratch("frag_")
+    frag = scratch_dir("frag_")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
-    compacted = _scratch("compact_")
+    compacted = scratch_dir("compact_")
     frag_df = spark.read.parquet(frag)
     n_before = _parquet_files(frag)
     # NB: the fragmented READ already coalesces small files into fewer
@@ -493,7 +473,7 @@ def s_json_nested(spark, sf_dir):
         ).alias("meta"),
         F.array(F.round(F.col("o_totalprice"), 2)).alias("amounts"),
     )
-    path = _scratch("json_nested_")
+    path = scratch_dir("json_nested_")
     nested.write.mode("overwrite").json(path)
     schema = (
         "o_orderkey LONG, "
@@ -617,7 +597,7 @@ def s_dynamic_overwrite(spark, sf_dir):
     """
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     orders = load_table(spark, sf_dir, "orders")
-    path = _scratch("dynpart_")
+    path = scratch_dir("dynpart_")
     orders.select("o_orderkey", "o_totalprice", "o_orderstatus").write.partitionBy(
         "o_orderstatus"
     ).parquet(path)
@@ -679,7 +659,7 @@ def s_analyze_stats(spark, sf_dir):
 
     orders = load_table(spark, sf_dir, "orders")
     name = "npc_stats_" + _uuid.uuid4().hex[:8]
-    path = _scratch("stats_tbl_")
+    path = scratch_dir("stats_tbl_")
     try:
         orders.write.option("path", path).saveAsTable(name)
         spark.sql(
@@ -733,7 +713,7 @@ def s_glob_read(spark, sf_dir):
     import os as _os
 
     orders = load_table(spark, sf_dir, "orders")
-    root = _scratch("glob_tree_")
+    root = scratch_dir("glob_tree_")
     for sub, status in (("a/F", "F"), ("b/O", "O"), ("b/P", "P")):
         orders.where(F.col("o_orderstatus") == status).coalesce(1).write.mode(
             "overwrite"
@@ -777,7 +757,7 @@ def s_file_metadata(spark, sf_dir):
     file in one query instead of a re-crawl.
     """
     orders = load_table(spark, sf_dir, "orders")
-    root = _scratch("meta_cols_")
+    root = scratch_dir("meta_cols_")
     orders.select("o_orderkey", "o_orderstatus").write.partitionBy(
         "o_orderstatus"
     ).parquet(root)
@@ -890,8 +870,8 @@ def s_manifest_diff(spark, sf_dir):
     the cost — and THAT is the argument for a real table format.
     """
     orders = load_table(spark, sf_dir, "orders")
-    v1 = _scratch("manifest_v1_")
-    v2 = _scratch("manifest_v2_")
+    v1 = scratch_dir("manifest_v1_")
+    v2 = scratch_dir("manifest_v2_")
     orders.select("o_orderkey", "o_orderstatus").write.partitionBy(
         "o_orderstatus"
     ).parquet(v1)
@@ -1087,7 +1067,7 @@ def s_write_audit_publish(spark, sf_dir):
     import os
 
     cust = load_table(spark, sf_dir, "customer")
-    root = _scratch("wap")
+    root = scratch_dir("wap")
     versions = os.path.join(root, "versions")
     os.makedirs(versions, exist_ok=True)
     pointer = os.path.join(root, "_current")
@@ -1258,7 +1238,7 @@ def u_py_datasink(spark, sf_dir):
 
     from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
-    out_root = _scratch("pysink")
+    out_root = scratch_dir("pysink")
     data_dir = os.path.join(out_root, "data")
     os.makedirs(data_dir, exist_ok=True)
     manifest = os.path.join(out_root, "manifest.json")
@@ -1453,7 +1433,7 @@ def s_xml_roundtrip(spark, sf_dir):
     JSON lines at scale.
     """
     nation = load_table(spark, sf_dir, "nation")
-    path = _scratch("xml_")
+    path = scratch_dir("xml_")
     nation.select("n_nationkey", "n_name", "n_regionkey").write.mode(
         "overwrite"
     ).format("xml").option("rootTag", "nations").option("rowTag", "nation").save(
@@ -1623,8 +1603,8 @@ def s_time_travel(spark, sf_dir):
     listing — the argument for a real table format's metadata layer.
     """
     orders = load_table(spark, sf_dir, "orders")
-    v0_dir = _scratch("tt_v0_")
-    d1_dir = _scratch("tt_d1_")
+    v0_dir = scratch_dir("tt_v0_")
+    d1_dir = scratch_dir("tt_d1_")
     base = orders.where(F.year("o_orderdate") <= 1996)
     delta = orders.where(F.year("o_orderdate") > 1996)
     base.write.parquet(v0_dir)
@@ -1678,7 +1658,7 @@ def s_zonemap_skip(spark, sf_dir):
     time-partitioned data lakes.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    path = _scratch("zonemap_")
+    path = scratch_dir("zonemap_")
     li.repartitionByRange(16, "l_shipdate").write.mode("overwrite").parquet(path)
     cut = F.lit("2001-01-01").cast("timestamp")
     manifest = (

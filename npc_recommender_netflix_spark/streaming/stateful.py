@@ -44,8 +44,7 @@ def st_stateful(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = run_to_memory(counts, "update")
-    return spark.table(name)
+    return spark.table(run_to_memory(counts, "update").name)
 
 
 @register("st_funnel_stateful")  # rows-only: custom stateful streaming op
@@ -92,8 +91,7 @@ def st_funnel_stateful(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = run_to_memory(funnel, "update")
-    return spark.table(name)
+    return spark.table(run_to_memory(funnel, "update").name)
 
 # NOTE: Spark 4's transformWithStateInPandas (SPARK-49564) is the successor
 # stateful API to applyInPandasWithState above. It is NOT registered here:
@@ -232,8 +230,7 @@ def st_page_hinkley(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = run_to_memory(out, "update")
-    return spark.table(name).orderBy("event_type")
+    return spark.table(run_to_memory(out, "update").name).orderBy("event_type")
 
 
 @register("st_hll_distinct")  # rows-only: custom stateful streaming op
@@ -302,8 +299,7 @@ def st_hll_distinct(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = run_to_memory(out, "update")
-    return spark.table(name).orderBy("event_type")
+    return spark.table(run_to_memory(out, "update").name).orderBy("event_type")
 
 
 @register("st_reservoir_sample")  # rows-only: custom stateful streaming op
@@ -412,5 +408,4 @@ def st_reservoir_sample(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = run_to_memory(out, "update")
-    return spark.table(name).orderBy("event_type")
+    return spark.table(run_to_memory(out, "update").name).orderBy("event_type")

@@ -2,9 +2,19 @@
 
 Each query runs a REAL stream: file source over the events parquet (with
 the §1.3 ns-timestamp recipe applied in-stream), availableNow trigger, and
-a uniquely-named memory sink; the returned DataFrame reads the sink. The
-oracle checks the batch-equivalent semantics, exact for complete in-order
-replay (SURVEY §2.10).
+a memory sink; the returned DataFrame reads the sink. The oracle checks the
+batch-equivalent semantics, exact for complete in-order replay (SURVEY
+§2.10).
+
+Each streaming concern has one owner, and every key goes through it:
+- scratch paths (stream feeds, file sinks, checkpoints):
+  `session.scratch_dir`, under one per-process root removed at exit;
+- the availableNow run: `drain` sets the checkpoint (a fresh scratch path
+  unless the caller restarts one), triggers, starts and awaits, and
+  returns the finished query so its progress stays readable;
+- the memory sink: `run_to_memory`, named after its checkpoint, so a
+  restart from the same checkpoint refills the same table;
+- the events `ts` recipe: `session.events_ts`, on every feed.
 
 Scale: windowed aggs shuffle on (window, key) with partial aggregation;
 state lives in the state store keyed the same way. Watermarks bound state
@@ -15,19 +25,18 @@ product, which is why st_watermark is the production shape.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import prepare, read_parquet
+from ..session import events_ts, prepare, read_parquet, scratch_dir
+
 
 def read_events_stream(spark, sf_dir):
     """Streaming file source over the events parquet; dtype-adaptive ts.
 
     The file source monitors a DIRECTORY; the fixture is a single file, so
-    expose it via a symlink in a temp dir (testdata stays untouched).
+    expose it via a symlink in a scratch dir (testdata stays untouched).
 
     The stream schema is the file's batch schema (``read_parquet``: one
     inference per file per process), so the fixture's ts dtype
@@ -38,33 +47,39 @@ def read_events_stream(spark, sf_dir):
     prepare(spark)
     path = f"{sf_dir}/events.parquet"
     schema = read_parquet(spark, path).schema
-    stream_dir = tempfile.mkdtemp(prefix="npc_stream_")
+    stream_dir = scratch_dir("stream_")
+    os.makedirs(stream_dir)
     os.symlink(path, f"{stream_dir}/events.parquet")
-    raw = spark.readStream.schema(schema).parquet(stream_dir)
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif ts_type == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return events_ts(spark.readStream.schema(schema).parquet(stream_dir))
 
 
-def run_to_memory(df, output_mode: str) -> str:
-    """Run a streaming DataFrame to completion into a memory sink."""
-    name = "snk_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="npc_ckpt_")
-    # expose for tools/scalecheck.py's state-size column (du of ckpt/state)
-    df.sparkSession.conf.set("spark.npc.lastStateCkpt", ckpt)
+def drain(writer, ckpt: str | None = None):
+    """Run a stream writer with the availableNow trigger until its input
+    is drained; return the finished query (``recentProgress`` stays
+    readable). ``ckpt`` defaults to a fresh scratch path; passing an
+    earlier run's ``ckpt`` restarts where that run stopped."""
     q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
+        writer.option("checkpointLocation", ckpt or scratch_dir("ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return name
+    return q
+
+
+def run_to_memory(df, output_mode: str, ckpt: str | None = None):
+    """`drain` a streaming DataFrame into a memory sink; return the
+    finished query, whose name is the sink table. The sink is named after
+    its checkpoint, so a restart from the same ``ckpt`` refills it."""
+    ckpt = ckpt or scratch_dir("ckpt_")
+    # expose for tools/scalecheck.py's state-size column (du of ckpt/state)
+    df.sparkSession.conf.set("spark.npc.lastStateCkpt", ckpt)
+    writer = (
+        df.writeStream.format("memory")
+        .queryName("snk_" + os.path.basename(ckpt))
+        .outputMode(output_mode)
+    )
+    return drain(writer, ckpt)
 
 
 @register(
@@ -80,8 +95,7 @@ def st_tumbling(spark, sf_dir):
         F.count("*").alias("cnt")
     )
     out = agg.select(F.col("window.start").alias("wstart"), "event_type", "cnt")
-    name = run_to_memory(out, "complete")
-    return spark.table(name)
+    return spark.table(run_to_memory(out, "complete").name)
 
 
 @register(
@@ -102,8 +116,7 @@ def st_sliding(spark, sf_dir):
         F.count("*").alias("cnt")
     )
     out = agg.select(F.col("window.start").alias("wstart"), "cnt")
-    name = run_to_memory(out, "complete")
-    return spark.table(name)
+    return spark.table(run_to_memory(out, "complete").name)
 
 
 @register(
@@ -145,8 +158,7 @@ def st_session(spark, sf_dir):
         F.col("session_window.end").alias("session_end"),
         "cnt",
     )
-    name = run_to_memory(out, "complete")
-    return spark.table(name)
+    return spark.table(run_to_memory(out, "complete").name)
 
 
 @register("st_watermark")  # rows-only: late-data drop is runtime behavior
@@ -160,8 +172,7 @@ def st_watermark(spark, sf_dir):
         .agg(F.count("*").alias("cnt"))
     )
     out = agg.select(F.col("window.start").alias("wstart"), "event_type", "cnt")
-    name = run_to_memory(out, "append")
-    return spark.table(name)
+    return spark.table(run_to_memory(out, "append").name)
 
 
 @register(
@@ -175,8 +186,7 @@ def st_dedup(spark, sf_dir):
     s2 = read_events_stream(spark, sf_dir)
     dedup = s1.unionByName(s2).dropDuplicates(["event_id"])
     agg = dedup.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    name = run_to_memory(agg, "complete")
-    return spark.table(name)
+    return spark.table(run_to_memory(agg, "complete").name)
 
 
 @register(
@@ -205,8 +215,7 @@ def st_dedup_within_watermark(spark, sf_dir):
     both = s1.unionByName(s2).withWatermark("ts", "1 hour")
     dedup = both.dropDuplicatesWithinWatermark(["event_id"])
     agg = dedup.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    name = run_to_memory(agg, "complete")
-    return spark.table(name)
+    return spark.table(run_to_memory(agg, "complete").name)
 
 
 @register(
@@ -229,8 +238,7 @@ def st_static_join(spark, sf_dir):
     agg = j.groupBy("c_mktsegment").agg(
         F.count("*").alias("cnt"), (F.round(F.sum("value"), 2) + 0.0).alias("total_value")
     )
-    name = run_to_memory(agg, "complete")
-    return spark.table(name)
+    return spark.table(run_to_memory(agg, "complete").name)
 
 
 @register(
@@ -241,7 +249,7 @@ def st_foreach_batch(spark, sf_dir):
     """foreachBatch sink: per-micro-batch custom write (here: parquet append
     of per-type partial counts), then a batch read-back + final combine.
     The availableNow replay makes the partials sum to the exact counts."""
-    out_dir = tempfile.mkdtemp(prefix="npc_fb_") + "/out"
+    out_dir = scratch_dir("fb_out_")
     ev = read_events_stream(spark, sf_dir)
 
     def write_batch(batch_df, batch_id):
@@ -252,13 +260,7 @@ def st_foreach_batch(spark, sf_dir):
             .parquet(out_dir)
         )
 
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="npc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev.writeStream.foreachBatch(write_batch))
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("cnt"))
 
@@ -278,9 +280,19 @@ def st_stream_join(spark, sf_dir):
     within 10 minutes. Watermarks on both sides bound the join state (views
     retained only until no purchase can still match). availableNow replays
     everything in order, so the result equals the batch interval join."""
+    j = _view_purchase_join(
+        read_events_stream(spark, sf_dir),
+        read_events_stream(spark, sf_dir),
+        "inner",
+    )
+    return spark.table(run_to_memory(j, "append").name)
+
+
+def _view_purchase_join(views_src, purchases_src, how: str):
+    """(view_id, purchase_id, user_id): views joined to the same user's
+    purchases within 10 minutes, each side watermarked by 1 hour."""
     views = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "view")
+        views_src.where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
             F.col("user_id"),
@@ -289,8 +301,7 @@ def st_stream_join(spark, sf_dir):
         .withWatermark("v_ts", "1 hour")
     )
     purchases = (
-        read_events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
+        purchases_src.where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
@@ -298,14 +309,13 @@ def st_stream_join(spark, sf_dir):
         )
         .withWatermark("p_ts", "1 hour")
     )
-    j = views.join(
+    return views.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTE")),
+        how,
     ).select("view_id", "purchase_id", "user_id")
-    name = run_to_memory(j, "append")
-    return spark.table(name)
 
 
 @register(
@@ -354,14 +364,14 @@ def st_stream_join_outer(spark, sf_dir):
     """
     prepare(spark)
     batch = read_parquet(spark, f"{sf_dir}/events.parquet")
-    feed_dir = tempfile.mkdtemp(prefix="npc_outer_feed_")
-    ckpt = tempfile.mkdtemp(prefix="npc_outer_ckpt_")
+    feed_dir = scratch_dir("outer_feed_")
+    ckpt = scratch_dir("ckpt_")
     # expose the checkpoint for state-size measurement (tools/scalecheck.py
     # records du(ckpt/state) per ladder scale — round-9 verdict item 5)
     spark.conf.set("spark.npc.lastStateCkpt", ckpt)
     # append-mode memory sinks cannot recover a checkpoint; the restartable
     # append sink is the FILE sink (exactly-once via its own commit log)
-    out_dir = tempfile.mkdtemp(prefix="npc_outer_out_")
+    out_dir = scratch_dir("outer_out_")
     batch.coalesce(1).write.mode("append").parquet(feed_dir)
 
     ts_type = dict(batch.dtypes).get("ts")
@@ -399,58 +409,28 @@ def st_stream_join_outer(spark, sf_dir):
         )
         return view_row.unionByName(purchase_row)
 
-    def run_once():
-        ev = spark.readStream.schema(batch.schema).parquet(feed_dir)
-        st = dict(ev.dtypes).get("ts")
-        if st == "bigint":
-            ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif st == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        views = (
-            ev.where(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("vid"),
-                "user_id",
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "1 hour")
-        )
-        purchases = (
-            ev.where(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("pid"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "1 hour")
-        )
-        j = views.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTE")),
-            "leftOuter",
-        ).select("vid", "pid", "user_id")
-        q = (
+    # run 1, real data: inner matches emit, unmatched state held;
+    # run 2, sentinel -1: the watermark advances past every real window;
+    # run 3, sentinel -2: the eviction batch emits withheld unmatched views
+    for uid in (None, -1, -2):
+        if uid is not None:
+            sentinel(uid).coalesce(1).write.mode("append").parquet(feed_dir)
+        ev = events_ts(spark.readStream.schema(batch.schema).parquet(feed_dir))
+        j = _view_purchase_join(ev, ev, "leftOuter")
+        drain(
             j.writeStream.format("parquet")
             .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            ckpt,
         )
-        q.awaitTermination()
-
-    run_once()  # real data: inner matches emit, unmatched state held
-    sentinel(-1).coalesce(1).write.mode("append").parquet(feed_dir)
-    run_once()  # watermark advances past every real window
-    sentinel(-2).coalesce(1).write.mode("append").parquet(feed_dir)
-    run_once()  # eviction batch: withheld unmatched views emit
     return (
         spark.read.parquet(out_dir)
         .where(F.col("user_id") >= 0)
         .groupBy(
-            F.when(F.col("pid").isNull(), 0).otherwise(1).cast("long").alias("matched")
+            F.when(F.col("purchase_id").isNull(), 0)
+            .otherwise(1)
+            .cast("long")
+            .alias("matched")
         )
         .agg(F.count("*").cast("long").alias("n_rows"))
         .orderBy("matched")
@@ -492,10 +472,9 @@ def st_topk_per_window(spark, sf_dir):
         F.count("*").cast("long").alias("cnt")
     )
     out = agg.select(F.col("window.start").alias("wstart"), "event_type", "cnt")
-    name = run_to_memory(out, "complete")
     from pyspark.sql import Window as W
 
-    sink = spark.table(name)
+    sink = spark.table(run_to_memory(out, "complete").name)
     w = W.partitionBy("wstart").orderBy(F.col("cnt").desc(), "event_type")
     return (
         sink.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -525,37 +504,25 @@ def st_incremental_checkpoint(spark, sf_dir):
     scale this is RocksDB + a real table sink instead of the memory
     sink.
     """
+    return _restarted_type_counts(spark, sf_dir, scratch_dir("ckpt_"))
+
+
+def _restarted_type_counts(spark, sf_dir, ckpt: str):
+    """Per-type event counts over a feed delivered in two halves (by
+    event_id parity). The memory-sink query runs after each delivery,
+    restarted from ``ckpt``: the second run reads only the new file and
+    folds it into the recovered state."""
     prepare(spark)
     batch = read_parquet(spark, f"{sf_dir}/events.parquet")
-    feed_dir = tempfile.mkdtemp(prefix="npc_incr_feed_")
-    ckpt = tempfile.mkdtemp(prefix="npc_incr_ckpt_")
-    name = "snk_incr_" + uuid.uuid4().hex[:12]
-    half_a = batch.where(F.col("event_id") % 2 == 0)
-    half_b = batch.where(F.col("event_id") % 2 == 1)
-    half_a.coalesce(1).write.mode("append").parquet(feed_dir)
-
-    def run_once():
-        ev = spark.readStream.schema(batch.schema).parquet(feed_dir)
-        ts_type = dict(ev.dtypes).get("ts")
-        if ts_type == "bigint":
-            ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif ts_type == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    feed_dir = scratch_dir("feed_")
+    for parity in (0, 1):
+        batch.where(F.col("event_id") % 2 == parity).coalesce(1).write.mode(
+            "append"
+        ).parquet(feed_dir)
+        ev = events_ts(spark.readStream.schema(batch.schema).parquet(feed_dir))
         agg = ev.groupBy("event_type").agg(F.count("*").alias("cnt"))
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()  # processes file(s) of delivery A
-    half_b.coalesce(1).write.mode("append").parquet(feed_dir)
-    run_once()  # restart from checkpoint: reads ONLY delivery B files
-    return spark.table(name)
+        q = run_to_memory(agg, "complete", ckpt)
+    return spark.table(q.name)
 
 
 @register(
@@ -581,16 +548,10 @@ def st_idempotent_sink(spark, sf_dir):
     """
     prepare(spark)
     batch = read_parquet(spark, f"{sf_dir}/events.parquet")
-    feed_dir = tempfile.mkdtemp(prefix="npc_idem_feed_")
-    out_dir = tempfile.mkdtemp(prefix="npc_idem_out_")
+    feed_dir = scratch_dir("idem_feed_")
+    out_dir = scratch_dir("idem_out_")
     batch.coalesce(1).write.mode("append").parquet(feed_dir)
-
-    ev = spark.readStream.schema(batch.schema).parquet(feed_dir)
-    ts_type = dict(ev.dtypes).get("ts")
-    if ts_type == "bigint":
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif ts_type == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    ev = events_ts(spark.readStream.schema(batch.schema).parquet(feed_dir))
 
     def write_batch(bdf, batch_id):
         target = f"{out_dir}/batch={batch_id}"
@@ -604,13 +565,7 @@ def st_idempotent_sink(spark, sf_dir):
             "overwrite"
         ).parquet(target)
 
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="npc_idem_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev.writeStream.foreachBatch(write_batch))
     sunk = spark.read.parquet(out_dir)
     return sunk.groupBy("event_type").agg(F.count("*").cast("long").alias("cnt"))
 
@@ -641,50 +596,19 @@ def st_rocksdb_state(spark, sf_dir):
     runs and restored afterwards so co-resident streaming queries keep
     their configured store.
     """
-    prepare(spark)
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(conf_key, None)
-    batch = read_parquet(spark, f"{sf_dir}/events.parquet")
-    feed_dir = tempfile.mkdtemp(prefix="npc_rocks_feed_")
-    ckpt = tempfile.mkdtemp(prefix="npc_rocks_ckpt_")
-    # expose the checkpoint path for the artifact-level pytest and for
-    # tools/scalecheck.py's state-size column
+    ckpt = scratch_dir("ckpt_")
+    # expose the checkpoint path for the artifact-level pytest
     spark.conf.set("spark.npc.lastRocksCkpt", ckpt)
-    spark.conf.set("spark.npc.lastStateCkpt", ckpt)
-    name = "snk_rocks_" + uuid.uuid4().hex[:12]
-    half_a = batch.where(F.col("event_id") % 2 == 0)
-    half_b = batch.where(F.col("event_id") % 2 == 1)
-    half_a.coalesce(1).write.mode("append").parquet(feed_dir)
-
-    def run_once():
-        ev = spark.readStream.schema(batch.schema).parquet(feed_dir)
-        ts_type = dict(ev.dtypes).get("ts")
-        if ts_type == "bigint":
-            ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif ts_type == "timestamp_ntz":
-            ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        agg = ev.groupBy("event_type").agg(F.count("*").alias("cnt"))
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
     try:
-        run_once()  # delivery A -> RocksDB state
-        half_b.coalesce(1).write.mode("append").parquet(feed_dir)
-        run_once()  # restart: recover RocksDB state, fold delivery B
+        return _restarted_type_counts(spark, sf_dir, ckpt)
     finally:
         if prev is None:
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prev)
-    return spark.table(name)
 
 
 @register(
@@ -749,8 +673,7 @@ def st_session_dynamic(spark, sf_dir):
         F.col("session_window.end").alias("session_end"),
         "cnt",
     )
-    name = run_to_memory(out, "complete")
-    return spark.table(name)
+    return spark.table(run_to_memory(out, "complete").name)
 
 
 @register(
@@ -778,21 +701,10 @@ def st_state_reader(spark, sf_dir):
     state store exists to maintain. At scale the reader parallelizes
     per state-store partition like any DSv2 source.
     """
-    import tempfile
-
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    ckpt = tempfile.mkdtemp(prefix="npc_stateck_")
-    name = "snk_" + __import__("uuid").uuid4().hex[:12]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ckpt = scratch_dir("ckpt_")
+    run_to_memory(agg, "complete", ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return (
         state.select(
@@ -839,8 +751,7 @@ def st_batch_stream_parity(spark, sf_dir):
     out = agg.select(
         F.col("window.start").alias("wstart"), "event_type", "n_stream"
     )
-    name = run_to_memory(out, "complete")
-    stream_df = spark.table(name)
+    stream_df = spark.table(run_to_memory(out, "complete").name)
 
     from ..session import load_table as _lt
 
@@ -897,8 +808,6 @@ def st_observed_metrics(spark, sf_dir):
     payload rows never leave the executors.  Driver-side work is one
     progress-list fold (metadata-scale: one struct per micro-batch).
     """
-    import uuid as _uuid
-
     ev = read_events_stream(spark, sf_dir)
     obs = ev.observe(
         "m",
@@ -908,17 +817,7 @@ def st_observed_metrics(spark, sf_dir):
         ).alias("n_purchases"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    name = "snk_" + _uuid.uuid4().hex[:12]
-    q = (
-        obs.select("event_id")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="npc_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_to_memory(obs.select("event_id"), "append")
     n_rows = n_purch = cents = 0
     for p in q.recentProgress:
         m = (p.get("observedMetrics") or {}).get("m")
@@ -1062,38 +961,25 @@ def st_rate_limited_backfill(spark, sf_dir):
     """
     prepare(spark)
     batch = read_parquet(spark, f"{sf_dir}/events.parquet")
-    ts_is_long = dict(batch.dtypes).get("ts") == "bigint"
-    feed_dir = tempfile.mkdtemp(prefix="npc_backfill_feed_")
+    feed_dir = scratch_dir("backfill_feed_")
     for part in range(4):
         batch.where(F.col("event_id") % 4 == part).coalesce(1).write.mode(
             "append"
         ).parquet(feed_dir)
-    ev = (
+    ev = events_ts(
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    if ts_is_long:
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     agg = ev.groupBy("event_type").agg(F.count("*").cast("long").alias("cnt"))
-    name = "snk_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="npc_backfill_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_to_memory(agg, "complete")
     # expose the micro-batch count for the pytest tripwire (complete-mode
     # progress events with numInputRows > 0 == throttled batches taken)
     n_batches = sum(
         1 for p in q.recentProgress if (p["numInputRows"] or 0) > 0
     )
     spark.conf.set("spark.npc.lastBackfillBatches", str(n_batches))
-    return spark.table(name)
+    return spark.table(q.name)
 
 
 @register(
@@ -1154,14 +1040,14 @@ def st_cdc_apply(spark, sf_dir):
     # parity split — deliberately interleaves sequence numbers across the
     # two files, so the max-seq-wins/tombstone semantics are exercised
     # against genuinely out-of-order batches (no driver-side constants)
-    feed_dir = tempfile.mkdtemp(prefix="npc_cdc_feed_")
+    feed_dir = scratch_dir("cdc_feed_")
     ch.where(F.col("seq") % 2 == 0).coalesce(1).write.mode("append").parquet(
         feed_dir
     )
     ch.where(F.col("seq") % 2 == 1).coalesce(1).write.mode("append").parquet(
         feed_dir
     )
-    state_root = tempfile.mkdtemp(prefix="npc_cdc_state_")
+    state_root = scratch_dir("cdc_state_")
     state_ptr: list[str] = []
 
     def apply_batch(bdf, batch_id):
@@ -1189,15 +1075,7 @@ def st_cdc_apply(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="npc_cdc_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(apply_batch))
     final = spark.read.parquet(state_ptr[-1])
     return (
         final.groupBy((F.col("k") % 10).cast("long").alias("bucket"))

@@ -78,7 +78,7 @@ OWNERS = {
         re.compile(r"avg\(o\.o_totalprice\) AS xbar"),
     ),
     "block x priority cells": (
-        "_prio_cells0",
+        "_zero_filled",
         re.compile(r'F\.dayofweek\("o_orderdate"\)\.cast\("long"\)\.alias\("blk"\)'),
     ),
     "block x priority zero fill": (

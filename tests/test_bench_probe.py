@@ -4,14 +4,17 @@ signature before (stageList grew parameters in Spark 4)."""
 
 
 def test_shuffle_probe_monotone_and_nonnull(spark):
-    from bench import _drain_listeners, _shuffle_written
+    from npc_recommender_netflix_spark.metrics import (
+        drain_listeners,
+        shuffle_written,
+    )
 
-    before = _shuffle_written(spark)
+    before = shuffle_written(spark)
     assert before is not None, "probe returned None: AppStatusStore API drift"
     spark.range(0, 200_000).selectExpr("id % 13 AS k", "id AS v").groupBy(
         "k"
     ).sum("v").count()
-    _drain_listeners(spark)
-    after = _shuffle_written(spark)
+    drain_listeners(spark)
+    after = shuffle_written(spark)
     assert after is not None
     assert after > before, "groupBy must add shuffle-write bytes"

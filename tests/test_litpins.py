@@ -1020,6 +1020,36 @@ def test_litpin_mantel_haenszel(spark, tmp_path):
     assert r["assoc_flag"] == 0
 
 
+def test_litpin_bland_altman_squares_past_int64(spark, tmp_path):
+    """Bland & Altman (1986) limits bias +- 1.96 sd over header-minus-
+    lines differences of +$30M, -$30M and $0: bias 0, sample sd
+    sqrt((3e7^2 + 3e7^2) / 2) = $3e7, nobody outside the band. In cents
+    the squared differences sum to 1.8e19, past 2^63 - 1, so a BIGINT
+    sum overflows."""
+    _orders(
+        spark,
+        tmp_path,
+        [
+            (1, 1, "2000-01-01", 30_000_000.0, "1-URGENT"),
+            (2, 1, "2000-01-01", 0.0, "1-URGENT"),
+            (3, 1, "2000-01-01", 5.0, "1-URGENT"),
+        ],
+    )
+    spark.createDataFrame(
+        [(1, 0.0, 0.0, 0.0), (2, 30_000_000.0, 0.0, 0.0), (3, 5.0, 0.0, 0.0)],
+        "l_orderkey long, l_extendedprice double, l_discount double,"
+        " l_tax double",
+    ).write.parquet(f"{tmp_path}/lineitem.parquet")
+    assert 2 * (3 * 10**9) ** 2 > 2**63 - 1
+    (r,) = _run(spark, tmp_path, "a_bland_altman")
+    assert r["n_orders"] == 3
+    assert r["bias_usd"] == 0.0
+    assert r["sd_usd"] == pytest.approx(3e7, abs=1e-4)
+    assert r["loa_lo_usd"] == pytest.approx(-1.959964 * 3e7, abs=1e-3)
+    assert r["loa_hi_usd"] == pytest.approx(1.959964 * 3e7, abs=1e-3)
+    assert r["n_outside"] == 0
+
+
 def test_litpin_kuiper_balanced_lattice_minimum(spark, tmp_path):
     """Discrete-lattice property: equal weekday counts put the
     empirical CDF exactly ON the uniform lattice, so D+ = 0 and

@@ -2,7 +2,6 @@
 withholding, late-data behavior on crafted input."""
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -55,7 +54,7 @@ def test_streaming_dedup_restores_exact_counts(spark):
     assert stream == batch
 
 
-def test_late_data_dropped_beyond_watermark(spark):
+def test_late_data_dropped_beyond_watermark(spark, tmp_path):
     """Three deterministic micro-batches: b1 sets max event time 12:00 (so
     watermark reaches 11:00), b2 is a fresh row keeping the stream moving,
     b3 carries a 09:00 straggler that must be dropped.
@@ -69,7 +68,7 @@ def test_late_data_dropped_beyond_watermark(spark):
     straggler needs a batch BETWEEN it and the watermark-setting rows —
     with only two batches Spark admits the late row and flushes its
     window on the final availableNow tick."""
-    tmp = tempfile.mkdtemp(prefix="npc_late_")
+    tmp = str(tmp_path)
     src = os.path.join(tmp, "src")
     os.makedirs(src)
 

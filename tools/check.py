@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from npc_recommender_netflix_spark import registry
+from npc_recommender_netflix_spark.metrics import drain_listeners
 from npc_recommender_netflix_spark.session import TABLES, build_session
 from tools.logcap import WarningCapture
 from tools.plans import PARTITIONLESS_WINDOW_WHITELIST, partitionless_windows
@@ -335,16 +336,6 @@ def main():
         print("NOTE: log tripwire INACTIVE (log4j2 appender attach failed);"
               " ambiguous-self-join warnings will NOT fail keys this sweep")
 
-    def _drain_listener_bus():
-        # Async JVM threads (listener bus, lazy job cleanup) can log after
-        # run_one returns; wait for the bus so their warnings land in THIS
-        # key's drain window instead of the next key's (round-11 advice:
-        # positional attribution dropped or mis-attributed late warnings).
-        try:
-            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        except Exception:
-            pass
-
     n_ok = n_fail = 0
     try:
         for key in keys:
@@ -354,7 +345,10 @@ def main():
                 status, nrows, problems = "ERROR", -1, [traceback.format_exc(limit=8)]
                 t_s = t_d = None
             if logcap.active:
-                _drain_listener_bus()
+                # Async JVM threads (listener bus, lazy job cleanup) can
+                # log after run_one returns; wait for the bus so their
+                # warnings land in THIS key's drain window, not the next.
+                drain_listeners(spark)
                 dirty = logcap.dirty_lines()
             else:
                 dirty = []

@@ -22,28 +22,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from npc_recommender_netflix_spark import registry
+from npc_recommender_netflix_spark.metrics import shape_summary
 from npc_recommender_netflix_spark.session import build_session
 
 registry.load_all()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-
-
-def shape_summary(plan: str) -> str:
-    n_shuffle = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    n_bcast = plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
-    n_smj = plan.count("SortMergeJoin")
-    n_codegen = len(set(re.findall(r"\*\((\d+)\)", plan)))
-    pushed = "yes" if re.search(r"PushedFilters: \[[^\]]", plan) else "no"
-    arrow = plan.count("FlatMapGroupsInPandas") + plan.count("MapInPandas") + plan.count(
-        "ArrowEvalPython"
-    )
-    return (
-        f"shuffles={n_shuffle} broadcast_joins={n_bcast} smj={n_smj} "
-        f"codegen_spans={n_codegen} pushed_filters={pushed} arrow_ops={arrow}"
-    )
 
 
 def partitionless_windows(df) -> list[str]:

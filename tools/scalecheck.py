@@ -41,8 +41,11 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import _drain_listeners, _shuffle_written  # noqa: E402
 from npc_recommender_netflix_spark import registry  # noqa: E402
+from npc_recommender_netflix_spark.metrics import (  # noqa: E402
+    drain_listeners,
+    shuffle_written,
+)
 from npc_recommender_netflix_spark.session import TABLES, build_session  # noqa: E402
 
 registry.load_all()
@@ -1044,7 +1047,7 @@ def run(dirs: dict[str, str], only: list[str] | None = None) -> dict:
                     spark.conf.unset("spark.npc.lastStateCkpt")
                 except Exception:
                     pass
-            before = _shuffle_written(spark)
+            before = shuffle_written(spark)
             t0 = time.time()
             n_out = fn(spark, sf_dir).count()
             wall = time.time() - t0
@@ -1058,8 +1061,8 @@ def run(dirs: dict[str, str], only: list[str] | None = None) -> dict:
                         for r, _dd, fs in os.walk(state_dir)
                         for f in fs
                     )
-            _drain_listeners(spark)
-            after = _shuffle_written(spark)
+            drain_listeners(spark)
+            after = shuffle_written(spark)
             # AppStatusStore caps retained stages; a long multi-stage run
             # can evict stages counted in `before`, making the delta
             # negative — record null rather than a nonsense number.
